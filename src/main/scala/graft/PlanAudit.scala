@@ -2,9 +2,10 @@ package graft
 
 object PlanAudit {
 
-  /** Per-query physical-plan census over the EXECUTED plan (AQE final).
-    * wscg = distinct WholeStageCodegen spans; noncg = physical-operator
-    * lines running outside every span — the row-based residue. Pure
+  /** Per-query physical-plan census over the EXECUTED plan (AQE final),
+    * walked with [[flatten]]: final plans only, session artifacts' build
+    * plans included. wscg = WholeStageCodegen spans; noncg = physical
+    * operators running outside every span — the row-based residue. Pure
     * wrapper nodes (InputAdapter, ReusedExchange, AQEShuffleRead, …) are
     * excluded from noncg (r8 advice item 4): they are plumbing that
     * appears/disappears with plan shape, not operators leaving codegen,
@@ -21,27 +22,28 @@ object PlanAudit {
     "ColumnarToRow", "RowToColumnar", "WholeStageCodegen")
 
   def census(qe: org.apache.spark.sql.execution.QueryExecution): Census = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.joins._
     // Materialize first: with AQE the pre-execution plan still shows
     // estimate-based joins (e.g. SMJ) that the runtime re-plans to
     // broadcast — the census must reflect the plan that actually ran.
     qe.toRdd.count()
-    // AdaptiveSparkPlan.toString prints the final plan followed by the
-    // initial (estimate-based) one — census only what actually ran.
-    val p = qe.executedPlan.toString.split("== Initial Plan ==").head
-    def c(s: String) = p.sliding(s.length).count(_ == s)
-    val wscg = "\\*\\((\\d+)\\)".r.findAllMatchIn(p).map(_.group(1)).toSet.size
-    val opLine = "^[\\s:+*-]*([A-Z][A-Za-z]+)".r
-    val nonCg = p.linesIterator.count { l =>
-      opLine.findFirstMatchIn(l) match {
-        case Some(m) =>
-          !l.contains("*(") && !l.contains("== ") &&
-            !wrapperNodes.contains(m.group(1))
-        case None => false
-      }
+    val nodes = walk(qe.executedPlan, inSpan = false)
+    def c(f: PartialFunction[SparkPlan, Boolean]) =
+      nodes.count { case (n, _) => f.applyOrElse(n, (_: SparkPlan) => false) }
+    val nonCg = nodes.count { case (n, inSpan) =>
+      !inSpan && !wrapperNodes.contains(n.nodeName.takeWhile(_.isLetterOrDigit))
     }
-    Census(c("Exchange hashpartitioning"), c("CartesianProduct"),
-      c("BroadcastNestedLoopJoin"), c("SortMergeJoin"),
-      c("BroadcastHashJoin"), c("FileScan"), wscg, nonCg)
+    Census(
+      c { case e: exchange.ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] },
+      c { case _: CartesianProductExec => true },
+      c { case _: BroadcastNestedLoopJoinExec => true },
+      c { case _: SortMergeJoinExec => true },
+      c { case _: BroadcastHashJoinExec => true },
+      c { case _: FileSourceScanExec => true },
+      c { case _: WholeStageCodegenExec => true }, nonCg)
   }
 
   /** Flatten a physical plan including the subtrees the default
@@ -50,82 +52,29 @@ object PlanAudit {
     * must see through all of them — a single-partition window inside a
     * persisted intermediate is exactly as serial as one at top level. */
   private def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    walk(p, inSpan = false).map(_._1)
+
+  /** [[flatten]]'s walk, with whether each node runs inside a
+    * WholeStageCodegen span (below the span node, above its
+    * InputAdapters). An AdaptiveSparkPlan contributes only its current
+    * (after execution: final) plan, never the initial one. */
+  private def walk(p: org.apache.spark.sql.execution.SparkPlan, inSpan: Boolean)
+      : Seq[(org.apache.spark.sql.execution.SparkPlan, Boolean)] = {
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
-      case _ => p.children
+    val (kids, kidsInSpan) = p match {
+      case a: AdaptiveSparkPlanExec => (Seq(a.executedPlan), false)
+      case q: QueryStageExec => (Seq(q.plan), false)
+      case s: InMemoryTableScanExec => (Seq(s.relation.cachedPlan), false)
+      case _: WholeStageCodegenExec => (p.children, true)
+      case _: InputAdapter => (p.children, false)
+      case _ => (p.children, inSpan)
     }
-    p +: (kids ++ p.subqueries).flatMap(flatten)
+    (p, inSpan) +: (kids.flatMap(walk(_, kidsInSpan)) ++
+      p.subqueries.flatMap(walk(_, inSpan = false)))
   }
-
-  /** Plan facts of session artifacts whose lineage a localCheckpoint
-    * truncated (SessionCache builds, r13), keyed by the checkpointed
-    * RDD id: (bounded-below-ness, window shapes) of the BUILD plan.
-    * The census used to read both straight off the cached artifact's
-    * lineage (`InMemoryTableScanExec → relation.cachedPlan`); with the
-    * checkpoint that subtree is a bare RDD scan, so the facts are
-    * recorded once at build time instead — exactly what a table
-    * catalog persists about a stored table's grain. Both census
-    * traversals below consult the registry at RDD-scan leaves, so a
-    * serial window INSIDE an artifact build still fails the census of
-    * every consumer, and an aggregate-grain artifact still counts as
-    * a bounded input. */
-  private val pendingArtifacts =
-    scala.collection.concurrent.TrieMap.empty[Int, org.apache.spark.sql.execution.SparkPlan]
-  private val artifactFacts =
-    scala.collection.concurrent.TrieMap.empty[Int, (Boolean, Seq[WindowShape], String)]
-
-  /** LAZY registration: the facts (bounded-ness, window shapes, plan
-    * text) are computed on first census ACCESS, not at build time —
-    * computing them eagerly walked + stringified the multi-thousand-node
-    * build plan inside the first consumer query's timed wall (measured
-    * as part of a ~27 s pass-1 inflation on the full bench). Only the
-    * structural specs ever ask; bench/verify runs never pay. */
-  def registerArtifact(rddId: Int,
-                       buildPlan: org.apache.spark.sql.execution.SparkPlan): Unit =
-    pendingArtifacts.put(rddId, buildPlan)
-
-  private def factsFor(rddId: Int): Option[(Boolean, Seq[WindowShape], String)] =
-    artifactFacts.get(rddId).orElse(pendingArtifacts.remove(rddId).map { plan =>
-      val f = (boundedBelow(plan), windowShapes(plan), planText(plan))
-      artifactFacts.putIfAbsent(rddId, f).getOrElse(f)
-    })
-
-  /** Drop a dead artifact's registration (SessionCache.clear calls this
-    * per evicted entry) — a cold bench pass rebuilds every artifact per
-    * query, and the pending plan objects would otherwise accumulate for
-    * the session. */
-  def unregisterArtifact(rddId: Int): Unit = {
-    pendingArtifacts.remove(rddId)
-    artifactFacts.remove(rddId)
-  }
-
-  /** `plan.toString` plus the registered BUILD plans of every truncated
-    * artifact the plan reads (distinct RDD ids; nested artifacts are
-    * pre-spliced at registration). The text the plan-shape specs assert
-    * against: a structural pin on something that lives inside an
-    * artifact build (the BM25 TakeOrdered, a dimension broadcast, the
-    * absence of a cartesian) keeps seeing it after the checkpoint
-    * truncates the consumer's lineage to a bare RDD scan. */
-  def planText(plan: org.apache.spark.sql.execution.SparkPlan): String = {
-    val ids = flatten(plan).flatMap(rddScanId).distinct
-    val arts = ids.flatMap(id => factsFor(id).map(f =>
-      s"\n== artifact build plan (rdd $id) ==\n" + f._3))
-    plan.toString + arts.mkString
-  }
-
-  /** The RDD id under an `RDDScanExec` (private[sql] — reflective), or
-    * None for any other node. */
-  private def rddScanId(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-    if (p.getClass.getSimpleName != "RDDScanExec") None
-    else
-      try Some(p.getClass.getMethod("rdd").invoke(p)
-        .asInstanceOf[org.apache.spark.rdd.RDD[_]].id)
-      catch { case _: Throwable => None }
 
   /** One WindowExec's census coordinates: partition-spec arity, whether
     * its input is BOUNDED below — by an aggregate (bucket-grain offset
@@ -140,9 +89,8 @@ object PlanAudit {
                                parts: Seq[String])
 
   def windowShapes(plan: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[WindowShape] = {
-    val nodes = flatten(plan)
-    val direct = nodes.collect {
+      : Seq[WindowShape] =
+    flatten(plan).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec =>
         val parts = w.partitionSpec.map {
           case a: org.apache.spark.sql.catalyst.expressions.AttributeReference => a.name
@@ -150,13 +98,6 @@ object PlanAudit {
         }
         WindowShape(w.partitionSpec.size, boundedBelow(w.child), parts)
     }
-    // Windows INSIDE truncated artifact builds, one contribution per
-    // artifact read — the same multiplicity the cached-lineage descent
-    // used to produce.
-    val fromArtifacts = nodes.flatMap(rddScanId)
-      .flatMap(id => factsFor(id).map(_._2).getOrElse(Nil))
-    direct ++ fromArtifacts
-  }
 
   /** Does an aggregate / limit / group-limit bound the row volume on the
     * path below `p`? Broadcast-exchange subtrees are NOT descended: the
@@ -168,8 +109,6 @@ object PlanAudit {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     p match {
       case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => false
-      case r if rddScanId(r).isDefined =>
-        factsFor(rddScanId(r).get).exists(_._1)
       case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => true
       case _: org.apache.spark.sql.execution.window.WindowGroupLimitExec => true
       case _: org.apache.spark.sql.execution.GlobalLimitExec => true

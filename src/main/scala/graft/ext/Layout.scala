@@ -63,6 +63,13 @@ object Layout {
                    xLo: Long, xHi: Long, yLo: Long, yHi: Long,
                    bits: Int = 21): DataFrame = {
     require(tieCols.nonEmpty, "need a deterministic natural order")
+    // Tie columns ride through by name next to the working columns
+    // below; a same-named tie would be replaced by withColumn and
+    // silently corrupt the natural-order leg.
+    val clash = tieCols.intersect(
+      Seq("x", "y", "zkey", "lid", "__zo", "__rank", "__n", "f", "m"))
+    require(clash.isEmpty,
+      s"tie columns collide with zoneMapAudit working names: ${clash.mkString(", ")}")
     val lim = 1L << bits
     // Persisted once (transient, the query owner releases): the two
     // rank legs, their bucket statistics and the row count would

@@ -8,12 +8,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stopped sessions are evicted on access, and — unlike TransientCache —
   * nothing here is released per-query, because the cached artifact is
   * shared ACROSS queries (e.g. the simhash signature table feeding both
-  * the cluster and the Hamming-pair pass; at cluster scale it would be a
-  * persisted table on storage, not an in-memory cache). */
+  * the cluster and the Hamming-pair pass).
+  *
+  * One storage mechanism: each artifact is persisted once
+  * (`MEMORY_AND_DISK` column batches), and every consumer reads a
+  * DataFrame whose plan is only that cache entry's `InMemoryRelation`
+  * leaf ([[org.apache.spark.sql.CachedLeaf]]) — columnar scans with
+  * column pruning, one shared store for all queries. The relation keeps
+  * the build plan as its `cachedPlan`, which gives two things for free:
+  * a lost block is recomputed from that lineage instead of failing the
+  * consumer, and a consumer's `executedPlan.toString` and PlanAudit's
+  * census still see inside the build.
+  *
+  * The batches are written from a round-robin shuffle whose map output
+  * stays on local disk while the artifact is referenced: lineage
+  * recovery reads it, and the ContextCleaner (not [[clear]]) removes it
+  * once the persisted Dataset is garbage. So each artifact is held as
+  * its cached batches plus those shuffle files. `simhash_comps` also
+  * holds the checkpoint blocks of its label-propagation fixpoint, which
+  * its builder takes: [[clear]] leaves them to the ContextCleaner too,
+  * and a lost one cannot be recomputed. At cluster scale the entry would
+  * be a persisted table on storage. */
 object SessionCache {
 
+  /** (persisted Dataset, consumer leaf) per key: consumers get the
+    * leaf, [[clear]] unpersists the persisted Dataset. */
   private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** Per-session log of cache-miss build cost (key -> cumulative
     * seconds). Artifact builds are the one cross-query cost in the
@@ -36,87 +57,42 @@ object SessionCache {
   def drainBuildLog(spark: SparkSession): Map[String, Double] =
     buildLog.remove(spark).map(_.toMap).getOrElse(Map.empty)
 
-  /** The materialized row blocks behind each artifact, so [[clear]] can
-    * free them deterministically: `Dataset.unpersist` is a no-op on a
-    * localCheckpoint'd Dataset (its blocks belong to the checkpointed
-    * RDD, not the CacheManager), and waiting for the ContextCleaner to
-    * GC them would let a 278-query cold pass (clear per query, rebuild
-    * per query) pile up dead block sets. */
-  private val blocks =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.rdd.RDD[_]]
-
-  /** The checkpointed InternalRow RDD under a localCheckpoint'd Dataset
-    * (its analyzed plan is one `LogicalRDD(rdd)` leaf). Reflective read
-    * because LogicalRDD is private[sql]; best-effort — a None just means
-    * [[clear]] leaves the blocks to the ContextCleaner. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectLeaves().headOption.flatMap { leaf =>
-      try Some(leaf.getClass.getMethod("rdd").invoke(leaf)
-        .asInstanceOf[org.apache.spark.rdd.RDD[_]])
-      catch { case _: Throwable => None }
-    }
-
   def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
     cache.get((spark, key)) match {
-      case Some(df) => df
+      case Some((_, leaf)) => leaf
       case None =>
         // Not getOrElseUpdate: TrieMap may evaluate the builder in two
-        // racing threads and only store one. A race loser's build is
-        // self-contained (its own checkpoint blocks), so dropping the
-        // reference leaks nothing beyond blocks the ContextCleaner
-        // reclaims on GC.
+        // racing threads and only store one. The loser must NOT
+        // unpersist its build: Spark's CacheManager registers cache
+        // entries by logical-plan equality, so unpersisting the loser's
+        // (identical) plan would evict the WINNER's entry. The loser's
+        // persist was a no-op on the already-cached plan, so dropping
+        // its reference leaks nothing.
         //
-        // Eager localCheckpoint, not persist+count (r13 optimization,
-        // guide §5 "localCheckpoint is a cheaper way to cut lineage"):
-        // the artifact is a session-lifetime TABLE, and a persisted
-        // plan drags its full build lineage into every consumer — each
-        // consumer re-analyzes the multi-thousand-node build tree
-        // (q206: 3.8k plan lines) and every consumer STAGE ships the
-        // build plan inside its task binary (the bench tail's recurring
-        // "Broadcasting large task binary with size 2 MiB"; ~30-90 ms
-        // of measured fixed CPU per task on 32-task artifact-scan
-        // stages with KB-sized inputs). The checkpoint truncates the
-        // plan to one LogicalRDD leaf — small analysis trees, small
-        // task binaries — and skips the columnar encode/decode of
-        // InMemoryRelation (measured: artifact first-pass ledger
-        // 34.3 → 26.1 s, subset cold 59.8 → 47.3 s, warm −8%).
-        // Statistics and output partitioning survive: LogicalRDD
-        // .fromDataset propagates originStats/originConstraints, so
-        // broadcast-join decisions on artifact consumers are unchanged.
+        // Stored once: persist + count writes the column batches, and
+        // the eager count lands the full build cost inside this timed
+        // window instead of in whichever consumer touches the artifact
+        // first. Consumers get the cache entry's InMemoryRelation leaf,
+        // not the build plan: a one-node tree to analyze, pruned
+        // columnar reads, and the actual materialized size driving
+        // broadcast decisions.
+        //
+        // The batches are written from a round-robin shuffle. Every
+        // consumer task carries the cached RDD's lineage back to its
+        // last shuffle, which is what lets it recompute a lost block;
+        // without the shuffle that lineage is the build's whole final
+        // stage, generated code included (measured on the sf0.01
+        // pre-aggregate: a 117 KB serialized scan RDD instead of 16 KB,
+        // and pivot requests about 15 % slower on 4 cores).
         val t0 = System.nanoTime()
-        val src = build
-        // BUILD exactly as before r13 (persist + count: the cache build
-        // preserves the plan's final partitioning and AQE-coalesces its
-        // INTERMEDIATE stages), then checkpoint FROM the cache — one
-        // cheap extra pass over MB-scale rows — and drop the columnar
-        // copy. Two checkpoint-the-plan-directly variants were measured
-        // WORSE before landing here: with AQE coalescing on, MB-scale
-        // artifacts materialize at 1-5 partitions and every
-        // artifact-over-artifact build's map side goes near-serial
-        // (full-suite ledger 40 → 52 s: nb_scored 2.1→5.8,
-        // ppjoin_verified 2.0→4.6, lsh_pairs 1.8→3.6); with coalescing
-        // disabled for the build, long chains pay full-width
-        // intermediate stages instead (NB-family cold A/B: 15.7 → 19.1 s
-        // ledger). Cache-then-checkpoint keeps the measured build cost
-        // AND the truncated consumer lineage; originStats come from the
-        // cache's ACTUAL materialized size, the best estimate available.
-        val cached = src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cached.count()
-        val built = cached.localCheckpoint(true)
-        cached.unpersist(blocking = false)
-        val winner = cache.putIfAbsent((spark, key), built).getOrElse(built)
-        if (winner eq built) {
-          recordBuild(spark, key, (System.nanoTime() - t0) / 1e9)
-          checkpointRdd(built).foreach { r =>
-            blocks.put((spark, key), r)
-            // Record the build plan's census facts before the lineage
-            // is out of reach (PlanAudit scaladoc) — the executed plan
-            // is final here, the checkpoint already ran it.
-            graft.PlanAudit.registerArtifact(r.id, src.queryExecution.executedPlan)
-          }
-        }
-        winner
+        val persisted = build.repartition()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        persisted.count()
+        val entry = (persisted, org.apache.spark.sql.CachedLeaf.of(persisted))
+        val winner = cache.putIfAbsent((spark, key), entry).getOrElse(entry)
+        if (winner eq entry) recordBuild(spark, key, (System.nanoTime() - t0) / 1e9)
+        winner._2
     }
   }
 
@@ -166,14 +142,7 @@ object SessionCache {
     * `spark.catalog.clearCache()` (Bench's cold pass does). */
   def clear(spark: SparkSession): Unit = {
     cache.keys.filter(_._1 eq spark).foreach { k =>
-      cache.remove(k).foreach(_.unpersist(blocking = false))
-      // Free the checkpoint blocks too (unpersist above is a no-op on
-      // a localCheckpoint'd Dataset — see [[blocks]]), and drop the
-      // census registration with them.
-      blocks.remove(k).foreach { r =>
-        try r.unpersist(blocking = false) catch { case _: Throwable => () }
-        graft.PlanAudit.unregisterArtifact(r.id)
-      }
+      cache.remove(k).foreach(_._1.unpersist(blocking = false))
     }
     values.keys.filter(_._1 eq spark).foreach(values.remove)
   }

@@ -1929,7 +1929,7 @@ object AnalyticsQueries {
           .as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n"))
       val tot = obs.agg(sum(col("n")).as("total"))
-      broadcast(expDf).join(obs, Seq("digit"), "left")
+      expDf.join(obs, Seq("digit"), "left")
         .crossJoin(tot)
         .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
           expr("(1000000 * coalesce(n, 0)) div total").as("obs_ppm"),

@@ -736,6 +736,18 @@ class ExtSpec extends AnyFunSuite {
     assert(div == Seq(1L, 3L, 2L),
       s"λ=0.7 should pull the diverse vec 3 ahead of exact-dup 2, got $div")
   }
+
+  test("zoneMapAudit rejects a tie column named like one of its working columns") {
+    val df = Seq((1L, 2L, 10L), (3L, 4L, 11L)).toDF("px", "py", "f")
+    val err = intercept[IllegalArgumentException] {
+      graft.ext.Layout.zoneMapAudit(df, "px", "py", Seq("f"), 2, 0L, 5L, 0L, 5L)
+    }
+    assert(err.getMessage.endsWith("working names: f"), err.getMessage)
+    // A non-colliding tie still audits both layouts.
+    val ok = graft.ext.Layout.zoneMapAudit(df.withColumnRenamed("f", "tie"),
+      "px", "py", Seq("tie"), 2, 0L, 5L, 0L, 5L)
+    assert(ok.collect().map(_.getString(0)).toSeq == Seq("natural", "zorder"))
+  }
 }
 
 /** Cross-strategy equivalence: alternate implementations of the same

@@ -11,22 +11,15 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  // planText, not executedPlan.toString: session artifacts are
-  // localCheckpoint'd (r13), so a consumer's own plan reads them as
-  // bare RDD scans — the registered build plans are spliced back in so
-  // every structural pin still audits the full construction.
-  private def plan(name: String): String = {
-    val qe = SparkEntry.queries(name)(spark, sf).queryExecution
-    PlanAudit.planText(qe.executedPlan)
-  }
+  // A session artifact reads as an InMemoryTableScan whose relation
+  // prints the artifact's build plan as an inner child, so every
+  // structural pin below still audits the full construction.
+  private def plan(name: String): String =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
-  /** Does the plan read a session-materialized artifact? Before r13 the
-    * marker was the persisted InMemoryRelation; checkpointed artifacts
-    * read as RDD scans whose registered build plan planText splices in
-    * under an "== artifact build plan" header. */
+  /** Does the plan read a session-materialized artifact? */
   private def readsArtifact(p: String): Boolean =
-    p.contains("== artifact build plan") ||
-      p.contains("InMemoryRelation") || p.contains("InMemoryTableScan")
+    p.contains("InMemoryRelation") || p.contains("InMemoryTableScan")
 
   test("q01: shipdate filter is pushed to the parquet scan") {
     val p = plan("q01_pricing_summary")
@@ -43,6 +36,18 @@ class PlanSpec extends AnyFunSuite {
       s"q02 not served from the pre-aggregate:\n$p")
     assert(p.contains("partial_"), s"no partial (map-side) aggregation:\n$p")
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("q02: the artifact scan reads only the 3 columns q02 uses, not all 11") {
+    val p = plan("q02_revenue_by_nation")
+    // The consumer's own scan prints first; the artifact's build plan
+    // follows as the InMemoryRelation's inner child.
+    val scan = p.linesIterator.find(_.contains("InMemoryTableScan"))
+      .getOrElse(fail(s"q02 reads no session artifact:\n$p"))
+    val cols = "\\[([^\\]]*)\\]".r.findFirstMatchIn(scan).get.group(1)
+      .split(",").map(_.trim.replaceAll("#\\d+L?$", "")).toSet
+    assert(cols == Set("r_name", "n_name", "sum_disc_price"),
+      s"artifact scan is not pruned to q02's columns:\n$p")
   }
 
   test("q01/q16: column pruning reaches the scan (no full-width read)") {
@@ -88,11 +93,15 @@ class PlanSpec extends AnyFunSuite {
   test("q124 stemmed index: one scan, no joins, map-side partial aggregate") {
     // The lexeme index is a typed flatMap over the corpus scan + one
     // aggregate: stemming must add NO exchanges beyond the groupBy's.
-    val p = plan("q124_fts_stemmed_index")
+    // The scan count comes from the census, which walks only the plans
+    // that ran: the plan text prints the artifact build's FileScan again
+    // under its AQE "== Initial Plan ==".
+    val qe = SparkEntry.queries("q124_fts_stemmed_index")(spark, sf).queryExecution
+    val scans = PlanAudit.census(qe).scans
+    val p = qe.executedPlan.toString
     assert(!p.contains("Join"), s"stemmed postings must not join:\n$p")
     assert(p.contains("partial_"), s"no map-side combine:\n$p")
-    assert(p.sliding("FileScan".length).count(_ == "FileScan") == 1,
-      s"lexeme index should read the corpus exactly once:\n$p")
+    assert(scans == 1, s"lexeme index should read the corpus exactly once:\n$p")
   }
 
   test("q123 stemmed search: postings lookup joins doc attrs broadcast, stems filter before the aggregate") {
@@ -341,8 +350,7 @@ class PlanSpec extends AnyFunSuite {
     // printed inside the InMemoryRelation node); the pin guards the
     // QUERY above the cached artifact, so assert on the truncated plan.
     val p = plan("q89_gopher_rules")
-    val aboveArtifact =
-      p.split("== artifact build plan", 2)(0).split("InMemoryRelation", 2)(0)
+    val aboveArtifact = p.split("InMemoryRelation", 2)(0)
     assert(!aboveArtifact.contains("Exchange hashpartitioning"),
       s"quality flags should not shuffle:\n$p")
   }

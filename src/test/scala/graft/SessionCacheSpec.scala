@@ -1,11 +1,17 @@
 package graft
 
 import graft.ops.SessionCache
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract tests for the session-lifetime cache: build-once sharing,
-  * the clear() cold-measurement hook, and memo's single-build race
-  * semantics.
+  * the clear() cold-measurement hook, memo's single-build race
+  * semantics, recovery of lost artifact blocks, and census visibility
+  * into artifact builds.
   *
   * Runs against a PRIVATE `newSession()` (SessionCache keys by session
   * instance): sbt runs suites in parallel in one JVM, and a clear() of
@@ -39,5 +45,50 @@ class SessionCacheSpec extends AnyFunSuite {
     SessionCache.clear(spark)
     assert(v() == 42 && builds == 2, "clear() must evict memo values")
     SessionCache.clear(spark)
+  }
+
+  test("a consumer recomputes an artifact whose cached blocks were lost") {
+    val key = "sessioncachespec:recover"
+    val art = SessionCache.getOrBuild(spark, key)(
+      spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS k"))
+    def read() = art.where(col("k") === 3).select("id").collect().map(_.getLong(0)).toSet
+    val want = read()
+    assert(want.size == 143)
+    // The artifact's own cached RDDs, not every persisted RDD in the
+    // shared SparkContext: other suites' blocks must stay untouched.
+    val ids = art.queryExecution.analyzed.collect {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+    }
+    assert(ids.nonEmpty, "consumer plan is not the cached leaf")
+    val master = SparkEnv.get.blockManager.master
+    def blocks() = master.getMatchingBlockIds({
+      case RDDBlockId(id, _) => ids.contains(id)
+      case _ => false
+    }, askStorageEndpoints = true)
+    assert(blocks().nonEmpty, "artifact was not materialized")
+    ids.foreach(id => master.removeRdd(id, blocking = true))
+    assert(blocks().isEmpty, "blocks were not removed")
+    assert(read() == want, "lost blocks must be recomputed from lineage")
+    SessionCache.clear(spark)
+  }
+
+  test("the census sees a cartesian product and a serial window inside an artifact build") {
+    // Own session: auto-broadcast off keeps the cross join a
+    // CartesianProduct instead of a broadcast nested-loop join.
+    val s = SparkTestSession.spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val art = SessionCache.getOrBuild(s, "sessioncachespec:census") {
+      val a = s.range(0, 40, 1, 2).toDF("a")
+      val b = s.range(0, 3, 1, 1).toDF("b")
+      a.crossJoin(b).withColumn("rn", row_number().over(Window.orderBy(col("a"), col("b"))))
+    }
+    val consumer = art.where(col("rn") > 3).select("a")
+    assert(consumer.count() == 117)
+    val plan = consumer.queryExecution.executedPlan
+    assert(plan.toString.contains("CartesianProduct"),
+      s"artifact build plan not visible to the consumer:\n$plan")
+    assert(PlanAudit.globalWindowCount(plan) >= 1,
+      s"serial window inside the artifact not counted:\n$plan")
+    SessionCache.clear(s)
   }
 }

@@ -150,7 +150,7 @@ class ShardedRankSpec extends AnyFunSuite {
     def rangeExchanges(p: String): Int =
       "rangepartitioning".r.findAllIn(p.toLowerCase).size
 
-    // Default threshold (64 MiB): a 300-row input dispatches to the
+    // Default threshold (4 MiB): a 300-row input dispatches to the
     // plain window — no range shuffle, no broadcast offset join.
     val small = ShardedRank.withRank(df, Seq("grp"), col("key"), col("tie"), "rn")
     val smallPlan = small.queryExecution.executedPlan.toString
