@@ -1,8 +1,191 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
+/** The registry runner: every selected query, every pass, one record
+  * each — wall time split into construction / planning / execution,
+  * exclusive artifact builds, the jobs and stages it ran, and the
+  * census of its final plan. `main` writes them to bench.json and prints
+  * the driver's BENCH_SUMMARY and final JSON lines; [[runPass]] is
+  * factored out so a spec can drive it.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ITERS
+  * (warm passes, default 2), SPARK_GRAFT_BENCH_COLD=1 (cold pass only),
+  * SPARK_GRAFT_BENCH_JSON (output file), SPARK_GRAFT_BENCH_ONLY (query
+  * filter, [[SparkEntry.selected]]). */
 object Bench {
+  type Query = (String, (SparkSession, String) => DataFrame)
+
+  /** bench.json layout version: 2 adds `schema_version`, `cpus` and the
+    * per-query `records` of every pass (`warm_passes[].records`,
+    * `cold_records`). */
+  val schemaVersion = 2
+
+  /** One completed stage; bytes are executor task-metric totals. `site`
+    * is the first engine frame of the job's call site (an artifact build
+    * or a builder's driver-side action); empty when the only engine
+    * frame is Bench's own timed action. */
+  final case class Stage(id: Int, wallMs: Long, taskMs: Long, tasks: Int, shufReadB: Long,
+                         shufWriteB: Long, spillB: Long, inputB: Long, site: String)
+
+  /** The one listener. Block-level counters: `toDisk` counts RDD blocks
+    * whose updated status is disk-only — for MEMORY_AND_DISK persists
+    * exactly "evicted from memory under pressure" — and `removed` counts
+    * blocks dropped entirely (unpersist or eviction; releaseAll's
+    * unpersists are async, so a query's `rm` may include the previous
+    * query's release tail). Jobs and completed stages are keyed by the
+    * job group [[runPass]] sets per query. The bus is asynchronous: read
+    * [[stats]] once it has drained (`spark.stop()` drains it). */
+  final class Recorder extends SparkListener {
+    val toDisk = new AtomicLong
+    val removed = new AtomicLong
+    private val groupOf = mutable.Map.empty[Int, String]
+    private val jobs = mutable.Map.empty[String, Int].withDefaultValue(0)
+    private val stages = mutable.Map.empty[String, Vector[Stage]].withDefaultValue(Vector.empty)
+
+    override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
+      val info = b.blockUpdatedInfo
+      if (info.blockId.isRDD) {
+        val lvl = info.storageLevel
+        if (!lvl.isValid) removed.incrementAndGet()
+        else if (lvl.useDisk && !lvl.useMemory) toDisk.incrementAndGet()
+      }
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+        jobs(g) += 1
+        j.stageIds.foreach(groupOf(_) = g)
+      }
+    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val i = sc.stageInfo
+      groupOf.get(i.stageId).foreach { g =>
+        val m = i.taskMetrics
+        val wall = (for { s <- i.submissionTime; c <- i.completionTime } yield c - s).getOrElse(-1L)
+        stages(g) :+= Stage(i.stageId, wall, m.executorRunTime, i.numTasks,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+          m.diskBytesSpilled, m.inputMetrics.bytesRead,
+          i.details.linesIterator.find(l => l.contains("graft") && !l.contains("graft.Bench"))
+            .getOrElse("").trim)
+      }
+    }
+    def stats(group: String): (Int, Vector[Stage]) = synchronized((jobs(group), stages(group)))
+  }
+
+  /** One query in one pass. The three segments are back to back, so
+    * they sum to the timed wall exactly; everything else is read after
+    * the clock stops. `built` is the exclusive artifact-build ledger
+    * drained for this query alone. */
+  final case class Rec(name: String, group: String, constructNs: Long, planNs: Long, execNs: Long,
+                       built: Map[String, Double], gcMs: Long, cpuMs: Long, toDisk: Long,
+                       removed: Long, memMb: Double, miss: Long, diskMb: Double,
+                       census: PlanAudit.Census) {
+    def wallS: Double = (constructNs + planNs + execNs) / 1e9
+  }
+
+  /** A thrown query must never masquerade as a timing (round-5 verdict
+    * item 3: two analysis-time crashes looked like 15x speedups): it is
+    * listed in `failed` and has no record. Failures are tracked PER PASS
+    * so a cold-only failure is distinguishable from a warm one. */
+  final case class Pass(order: String, recs: Seq[Rec], failed: Seq[String]) {
+    def times: Seq[(String, Double)] = recs.map(r => r.name -> r.wallS)
+    def artifacts: Map[String, Double] =
+      recs.flatMap(_.built).groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  private val groups = new AtomicLong
+
+  // Single-JVM local mode: driver GC time IS the suite's GC time.
+  private def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+  }
+  // Process CPU time separates "slow because the plan does real work"
+  // from "slow because the host stole cycles".
+  private def cpuNs: Long = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+
+  /** Run `queries` once in the given order. Cold = no cross-query
+    * amortization: the session artifacts AND their CacheManager entries
+    * are evicted before each query, so each query pays its own builds.
+    * The timed region is `Parity.outputDoubles(fn)` (the wrap Verify
+    * dumps, so the benched plan is the verified plan) → `executedPlan` →
+    * a count of the physical plan's InternalRow RDD, which executes every
+    * operator as written (`.count()` would let Catalyst prune). */
+  def runPass(spark: SparkSession, sfDir: String, queries: Seq[Query], cold: Boolean,
+              order: String, rec: Recorder): Pass = {
+    val failed = mutable.ArrayBuffer.empty[String]
+    val recs = queries.flatMap { case (name, fn) =>
+      if (cold) {
+        graft.ops.SessionCache.clear(spark)
+        spark.catalog.clearCache()
+      }
+      val group = s"graft-bench-${groups.incrementAndGet()}"
+      spark.sparkContext.setJobGroup(group, name)
+      graft.ops.SessionCache.drainBuildLog(spark)
+      val gc0 = gcMs; val d0 = rec.toDisk.get; val rm0 = rec.removed.get
+      val cpu0 = cpuNs
+      try {
+        val t0 = System.nanoTime()
+        val qe = graft.queries.Parity.outputDoubles(fn(spark, sfDir)).queryExecution
+        val t1 = System.nanoTime()
+        val plan = qe.executedPlan
+        val t2 = System.nanoTime()
+        qe.toRdd.count()
+        val t3 = System.nanoTime()
+        val cpu1 = cpuNs
+        // Post-query storage residency: storage memory in use, cached
+        // partitions missing (partial eviction), bytes on the disk tier.
+        val sc = spark.sparkContext
+        val memMb = sc.getExecutorMemoryStatus.values.map { case (max, rem) => max - rem }.sum / 1e6
+        val infos = sc.getRDDStorageInfo
+        Some(Rec(name, group, t1 - t0, t2 - t1, t3 - t2,
+          graft.ops.SessionCache.drainBuildLog(spark), gcMs - gc0, (cpu1 - cpu0) / 1000000L,
+          rec.toDisk.get - d0, rec.removed.get - rm0, memMb,
+          infos.map(i => (i.numPartitions - i.numCachedPartitions).toLong).sum,
+          infos.map(_.diskSize).sum / 1e6, PlanAudit.census(plan)))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        failed += name
+        None
+      } finally {
+        graft.ops.TransientCache.releaseAll()
+        spark.sparkContext.clearJobGroup()
+      }
+    }
+    Pass(order, recs, failed.toSeq)
+  }
+
+  private def r3(v: Double): String = f"$v%.3f"
+  private def jmap(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+  private def jarr(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+  private def jtele(p: Pass): String = p.recs.map { t =>
+    "\"" + t.name + "\":{\"gc_ms\":" + t.gcMs + ",\"cpu_ms\":" + t.cpuMs + ",\"disk\":" + t.toDisk +
+      ",\"rm\":" + t.removed + ",\"mem_mb\":" + r3(t.memMb) + ",\"miss\":" + t.miss +
+      ",\"disk_mb\":" + r3(t.diskMb) + "}"
+  }.mkString("{", ",", "}")
+
+  /** Per-query records of a pass, with the listener's jobs and stages. */
+  def jrecords(p: Pass, rec: Recorder): String = p.recs.map { r =>
+    val (jobs, st) = rec.stats(r.group)
+    val c = r.census
+    val top = st.sortBy(-_.wallMs).take(3).map { s =>
+      s"""{"stage":${s.id},"wall_ms":${s.wallMs},"task_ms":${s.taskMs},"tasks":${s.tasks},"site":${Verify.q(s.site)}}"""
+    }.mkString("[", ",", "]")
+    s""""${r.name}":{"wall_ms":${r3(r.wallS * 1e3)},"construct_ms":${r3(r.constructNs / 1e6)},""" +
+      s""""plan_ms":${r3(r.planNs / 1e6)},"exec_ms":${r3(r.execNs / 1e6)},""" +
+      s""""artifact_ms":${r3(r.built.values.sum * 1e3)},"built":${jmap(r.built)},""" +
+      s""""jobs":$jobs,"stages":${st.size},"tasks":${st.map(_.tasks).sum},"task_ms":${st.map(_.taskMs).sum},""" +
+      s""""shuffle_read_bytes":${st.map(_.shufReadB).sum},"shuffle_write_bytes":${st.map(_.shufWriteB).sum},""" +
+      s""""spill_bytes":${st.map(_.spillB).sum},"input_bytes":${st.map(_.inputB).sum},"top_stages":$top,""" +
+      s""""census":{"exch":${c.exch},"cart":${c.cart},"bnlj":${c.bnlj},"smj":${c.smj},"bhj":${c.bhj},""" +
+      s""""scans":${c.scans},"wscg":${c.wscg},"noncg":${c.noncg}}}"""
+  }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -14,181 +197,29 @@ object Bench {
       SparkEntry.entry(spark).count()
       graft.model.MemberCatalog.members(spark, sfDir).count()
     } catch { case _: Throwable => () }
-    // Honest full-plan materialization: `.count()` would let Catalyst prune
-    // aggregates/projections for some plans; counting the physical plan's
-    // InternalRow RDD executes every operator as written. n>=2 iterations
-    // make first-run JIT/codegen noise visible; the headline per-query
-    // map quotes a cross-pass robust statistic (min of 2 warm passes,
-    // median at >=3 — r9 verdict item 2), never one pass's noise.
-    // Since r9 passes 2..n run in DIFFERENT (seeded-shuffled) registry
-    // orders, so >=2 warm orders land in bench.json and order-dependent
-    // contamination (r8's q01 warm anomaly) shows up as cross-order
-    // variance instead of landing forever on one victim. Default stays
-    // 2 (registry + shuffled:2) so the driver's unattended run keeps
-    // its r8 wall-time envelope; the committed bench.json is produced
-    // with SPARK_GRAFT_BENCH_ITERS=3 for a third order.
+    // n>=2 warm passes: pass 1 runs registry order (comparable with every
+    // prior round), passes 2..n seeded Fisher-Yates shuffles (no wall-
+    // clock seeds), so order-dependent contamination shows up as
+    // cross-order variance instead of landing forever on one victim.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // Optional comma-separated substring filter for iterating on a hot
-    // query without paying the full suite (dev-only; the driver ignores it).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
-    val selected = only match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-
-    // ---- telemetry (r8 verdict item 1: make eviction/recompute pressure
-    // observable instead of inferred from timing shape) -----------------
-    // Block-level counters from the listener bus: `toDisk` counts RDD
-    // blocks whose updated status is disk-only — for our MEMORY_AND_DISK
-    // persists that is exactly "evicted from memory under pressure,
-    // spilled to the disk tier" (initial stores report useMemory=true).
-    // `removed` counts blocks dropped entirely (unpersist OR a true
-    // eviction-without-disk). releaseAll's unpersists are async, so a
-    // query's `rm` may include the PREVIOUS query's release tail; the
-    // pressure signal of interest is `disk` spikes, which unpersist never
-    // produces.
-    val toDiskCtr = new java.util.concurrent.atomic.AtomicLong
-    val removedCtr = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit = {
-        val info = b.blockUpdatedInfo
-        if (info.blockId.isRDD) {
-          val lvl = info.storageLevel
-          if (!lvl.isValid) removedCtr.incrementAndGet()
-          else if (lvl.useDisk && !lvl.useMemory) toDiskCtr.incrementAndGet()
-        }
-      }
-    })
-    // Single-JVM local mode: driver GC time IS the suite's GC time. An
-    // 8-second scan+groupBy (q01, r8) with gc_ms ~= wall time is a heap-
-    // pressure pause, not a plan problem — the counter settles it.
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    // Process CPU time (r9 verdict item 1: the instrument that separates
-    // "slow because the plan does real work" from "slow because the host
-    // stole cycles"): with 32 local threads, cpu_ms >> wall_ms means the
-    // query genuinely burned cores (plan problem if wall regressed);
-    // cpu_ms ~= a flat multiple of the FAST pass's cpu_ms while wall
-    // blew up means the work was constant and the wall gap is scheduling
-    // noise / co-tenancy — adjudicable from counters, not narrative.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuNs: Long = osBean.getProcessCpuTime
-    // Post-query storage residency: blockmanager storage memory in use,
-    // persisted-RDD partitions missing from cache (partial eviction), and
-    // cached bytes resident on the disk tier.
-    def storageSnap(): (Double, Long, Double) = {
-      val memUsed = spark.sparkContext.getExecutorMemoryStatus.values
-        .map { case (max, rem) => max - rem }.sum / 1e6
-      val infos = spark.sparkContext.getRDDStorageInfo
-      val missing = infos.map(i => (i.numPartitions - i.numCachedPartitions).toLong).sum
-      val diskMb = infos.map(_.diskSize).sum / 1e6
-      (memUsed, missing, diskMb)
-    }
-    final case class QTele(gcMs: Long, cpuMs: Long, toDisk: Long, removed: Long,
-                           storeMb: Double, missParts: Long, diskMb: Double)
-
-    // A thrown query must never masquerade as a timing (round-5 verdict
-    // item 3: two analysis-time crashes looked like 15x speedups).
-    // Failures are tracked PER PASS (r6 advice: a query that throws in
-    // an early warm iteration but recovers by the reported pass must not
-    // contaminate the reported pass's failed list, and a cold-only
-    // failure must be distinguishable from a warm one), reported in
-    // BENCH_SUMMARY, and excluded from every total.
-    final case class Pass(order: String, times: Seq[(String, Double)],
-                          failed: Seq[String], artifacts: Map[String, Double],
-                          tele: Seq[(String, QTele)])
-    def runPass(cold: Boolean, order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                orderLabel: String): Pass = {
-      val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-      val tele = scala.collection.mutable.ArrayBuffer.empty[(String, QTele)]
-      graft.ops.SessionCache.drainBuildLog(spark) // attribute builds to this pass only
-      val times = order.flatMap { case (name, fn) =>
-        if (cold) {
-          // Cold = no cross-query amortization: evict the session-shared
-          // artifacts (signature tables, kNN graph, PQ model, member
-          // catalog) AND their CacheManager entries, so each query pays
-          // its own full build. Measures the "built once per session"
-          // claim instead of asserting it.
-          graft.ops.SessionCache.clear(spark)
-          spark.catalog.clearCache()
-        }
-        val gc0 = gcMs; val d0 = toDiskCtr.get; val rm0 = removedCtr.get
-        val cpu0 = cpuNs
-        val t0 = System.nanoTime()
-        // Same Parity.outputDoubles wrap as Verify.dumpAll so the benched
-        // plan is the verified plan (the cast is a final projection; cost
-        // is noise-level).
-        var elapsed = 0.0
-        val ok =
-          try {
-            graft.queries.Parity.outputDoubles(fn(spark, sfDir))
-              .queryExecution.toRdd.count()
-            // Stop the clock IMMEDIATELY after the action (r9 advice:
-            // the MXBean + RDD-storage-info snapshot used to execute
-            // inside the timed region, a small additive bias on every
-            // quoted time); all telemetry reads happen after t1.
-            val t1 = System.nanoTime()
-            elapsed = (t1 - t0) / 1e9
-            val cpu1 = cpuNs
-            val (memMb, miss, dMb) = storageSnap()
-            tele += name -> QTele(gcMs - gc0, (cpu1 - cpu0) / 1000000L,
-              toDiskCtr.get - d0, removedCtr.get - rm0, memMb, miss, dMb)
-            true
-          }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            failed += name
-            false
-          }
-          finally graft.ops.TransientCache.releaseAll()
-        if (ok) Some(name -> elapsed) else None
-      }
-      Pass(orderLabel, times, failed.toSeq,
-        graft.ops.SessionCache.drainBuildLog(spark), tele.toSeq)
-    }
-    val registryOrder = selected.toSeq.sortBy(_._1)
-    // Deterministic per-pass orders (no wall-clock seeds — resume-safe):
-    // pass 1 runs registry order (comparable with every prior round);
-    // passes 2..n run seeded Fisher-Yates shuffles so each query's
-    // neighborhood differs across passes.
-    def orderFor(pass: Int): (String, Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      if (pass <= 1) ("registry", registryOrder)
-      else (s"shuffled:$pass", new scala.util.Random(pass.toLong).shuffle(registryOrder))
+    val registryOrder = SparkEntry.selected
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
     // SPARK_GRAFT_BENCH_COLD=1 -> cold-only (dev loop); default runs the
-    // warm iterations first (headline, comparable across rounds) and then
-    // ONE cold pass so both numbers land in every round's output.
+    // warm iterations first and then ONE cold pass.
     val coldOnly = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
     val perIter = if (coldOnly) Seq.empty else (1 to iters).map { i =>
-      val (lbl, ord) = orderFor(i); runPass(cold = false, ord, lbl)
+      if (i <= 1) runPass(spark, sfDir, registryOrder, cold = false, "registry", rec)
+      else runPass(spark, sfDir, new scala.util.Random(i.toLong).shuffle(registryOrder),
+        cold = false, s"shuffled:$i", rec)
     }
-    val cold = runPass(cold = true, registryOrder, "registry")
+    val cold = runPass(spark, sfDir, registryOrder, cold = true, "registry", rec)
+    spark.stop() // drains the listener bus: `rec` holds every stage from here on
     val warmed = if (coldOnly) cold else perIter.last
-    def r3(v: Double): String = f"$v%.3f"
-    def jmap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    def jarr(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def jtele(xs: Iterable[(String, QTele)]): String =
-      xs.map { case (k, t) =>
-        "\"" + k + "\":{\"gc_ms\":" + t.gcMs + ",\"cpu_ms\":" + t.cpuMs +
-          ",\"disk\":" + t.toDisk +
-          ",\"rm\":" + t.removed + ",\"mem_mb\":" + r3(t.storeMb) +
-          ",\"miss\":" + t.missParts + ",\"disk_mb\":" + r3(t.diskMb) + "}"
-      }.mkString("{", ",", "}")
-    // Robust per-query warm statistic across ALL warm passes (r9 verdict
-    // item 2: quoting the LAST pass alone made the headline the shuffled
-    // pass's noise — q83 read 5.04 s with a 1.20 s other pass). With 2
-    // passes the MIN is the defensible cost (both passes fully executed
-    // the plan; the larger one carries that order's neighborhood noise);
-    // with >=3 observations the MEDIAN. The per-pass maps stay in
-    // warm_passes for anyone who wants a specific order.
-    // In cold-only mode the "warm" fields carry the cold pass's times;
-    // label the statistic so downstream tooling (readme_bench.py,
-    // scaling_curve.py quote `queries` as the warm robust stat) can
-    // tell the regimes apart instead of silently reporting cold as warm.
+    // The headline per-query statistic across ALL warm passes: MIN of 2
+    // (the larger carries its order's neighborhood noise), MEDIAN at
+    // >=3, never one pass alone; `warm_stat` names it, and labels a
+    // cold-only run so tools cannot report cold as warm.
     val warmStat =
       if (coldOnly) "cold_only"
       else if (perIter.size >= 3) "median_warm"
@@ -201,56 +232,49 @@ object Bench {
           k -> (if (xs.size >= 3) xs(xs.size / 2) else xs.head)
       }
     }
-    // failed_warm = selected queries that succeeded in NO warm pass (a
-    // query that recovered in another order has a real measured time).
+    // failed_warm = selected queries that succeeded in NO warm pass.
     val robustNames = robust.map(_._1).toSet
     val failedWarm =
       if (coldOnly) cold.failed
-      else selected.keys.toSeq.sorted.filterNot(robustNames.contains)
+      else registryOrder.map(_._1).filterNot(robustNames.contains)
     val total = robust.map(_._2).sum
-    val coldTotal = if (cold.times.nonEmpty) cold.times.map(_._2).sum else 0.0
+    val coldTotal = cold.times.map(_._2).sum
     val iterTotals = (perIter.map(_.times.map(_._2).sum) :+ coldTotal).map(r3).mkString("[", ",", "]")
-    // Artifact builds are charged to whichever query misses first, so the
-    // warm total decomposes as: query work + artifact_build_s (the builds
-    // the reported pass paid; on a fully-warmed pass this is ~0 because
-    // iteration 1 already built everything). first_pass_artifact_build_s
-    // is the real once-per-session amortized cost.
+    // Builds are charged to whichever query misses first: on a warmed
+    // pass artifact_build_s is ~0; first_pass_artifact_build_s is the
+    // real once-per-session cost.
     val firstPassArtifacts = perIter.headOption.map(_.artifacts.values.sum).getOrElse(0.0)
     val slowest = robust.sortBy(-_._2).take(20)
-    val warmGcS = warmed.tele.map(_._2.gcMs).sum / 1e3
-    val warmDisk = warmed.tele.map(_._2.toDisk).sum
-    // Full machine-readable dump -> file (137-entry stdout lines were the
-    // likely cause of two rounds of "parsed": null in the driver
-    // artifact); stdout keeps only a compact line.
+    val warmGcS = warmed.recs.map(_.gcMs).sum / 1e3
+    val warmDisk = warmed.recs.map(_.toDisk).sum
+    // Full machine-readable dump -> file; stdout keeps compact lines.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench.json")
     val warmPassesJson = perIter.map { p =>
-      s"""{"order":"${p.order}","total":${r3(p.times.map(_._2).sum)},"times":${jmap(p.times)},"tele":${jtele(p.tele)}}"""
+      s"""{"order":"${p.order}","total":${r3(p.times.map(_._2).sum)},"times":${jmap(p.times)},"tele":${jtele(p)},"records":${jrecords(p, rec)}}"""
     }.mkString("[", ",", "]")
     val full =
-      s"""{"sf":"$sfDir","total":${r3(total)},"cold_total":${r3(coldTotal)},"n_queries":${robust.size},
+      s"""{"schema_version":$schemaVersion,"cpus":$cpus,
+         |"sf":"$sfDir","total":${r3(total)},"cold_total":${r3(coldTotal)},"n_queries":${robust.size},
          |"warm_stat":"$warmStat",
          |"iteration_totals":$iterTotals,
          |"failed_warm":${jarr(failedWarm)},"failed_cold":${jarr(cold.failed)},
          |"artifact_build_s":${r3(warmed.artifacts.values.sum)},
          |"first_pass_artifact_build_s":${r3(firstPassArtifacts)},
-         |"artifacts_first_pass":${jmap(perIter.headOption.map(_.artifacts).getOrElse(cold.artifacts))},
+         |"artifacts_first_pass":${jmap(perIter.headOption.getOrElse(cold).artifacts)},
          |"artifacts_cold":${jmap(cold.artifacts)},
          |"warm_passes":$warmPassesJson,
-         |"telemetry_warm":${jtele(warmed.tele)},
-         |"telemetry_cold":${jtele(cold.tele)},
+         |"telemetry_warm":${jtele(warmed)},
+         |"telemetry_cold":${jtele(cold)},
          |"gc_s_warm":${r3(warmGcS)},"evict_to_disk_warm":$warmDisk,
          |"queries":${jmap(robust)},
-         |"queries_cold":${jmap(cold.times)}}""".stripMargin
+         |"queries_cold":${jmap(cold.times)},
+         |"cold_records":${jrecords(cold, rec)}}""".stripMargin
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath), full.getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     println(s"""BENCH_SUMMARY {"total":${r3(total)},"warm_stat":"$warmStat","cold_total":${r3(coldTotal)},"n_queries":${robust.size},"failed_warm":${jarr(failedWarm)},"failed_cold":${jarr(cold.failed)},"artifact_build_s":${r3(warmed.artifacts.values.sum)},"first_pass_artifact_build_s":${r3(firstPassArtifacts)},"gc_s_warm":${r3(warmGcS)},"evict_to_disk_warm":$warmDisk,"full_json":"$outPath"}""")
     // Machine-readable line LAST, pure JSON, and SMALL: totals + the 20
-    // slowest warm queries only (the full per-query map lives in the
-    // file above; both use the cross-pass robust statistic). "failed"
-    // keeps the legacy union meaning for the driver; per-pass splits
-    // are in BENCH_SUMMARY and the file.
+    // slowest warm queries. "failed" keeps the legacy union meaning.
     val failedUnion = (failedWarm ++ cold.failed).distinct
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmap(slowest)},"n_queries":${robust.size},"cold_total":${r3(coldTotal)},"artifact_build_s":${r3(warmed.artifacts.values.sum)},"first_pass_artifact_build_s":${r3(firstPassArtifacts)},"gc_s_warm":${r3(warmGcS)},"evict_to_disk_warm":$warmDisk,"failed":${jarr(failedUnion)},"full_json":"$outPath","sf":"$sfDir"}""")
-    spark.stop()
   }
 }

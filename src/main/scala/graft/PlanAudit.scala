@@ -22,13 +22,19 @@ object PlanAudit {
     "ColumnarToRow", "RowToColumnar", "WholeStageCodegen")
 
   def census(qe: org.apache.spark.sql.execution.QueryExecution): Census = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.joins._
     // Materialize first: with AQE the pre-execution plan still shows
     // estimate-based joins (e.g. SMJ) that the runtime re-plans to
     // broadcast — the census must reflect the plan that actually ran.
     qe.toRdd.count()
-    val nodes = walk(qe.executedPlan, inSpan = false)
+    census(qe.executedPlan)
+  }
+
+  /** The census of a plan that has ALREADY executed (Bench reads it
+    * after its timed action instead of running the query again). */
+  def census(plan: org.apache.spark.sql.execution.SparkPlan): Census = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.joins._
+    val nodes = walk(plan, inSpan = false)
     def c(f: PartialFunction[SparkPlan, Boolean]) =
       nodes.count { case (n, _) => f.applyOrElse(n, (_: SparkPlan) => false) }
     val nonCg = nodes.count { case (n, inSpan) =>
@@ -147,18 +153,4 @@ object PlanAudit {
     * universal bounded-input rule (WindowCensusSpec). */
   def globalWindowCount(plan: org.apache.spark.sql.execution.SparkPlan): Int =
     windowShapes(plan).count(_.arity == 0)
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, "audit")
-    val d = "/root/testdata/sf0.001"
-    println(f"AUDIT ${"query"}%-28s exch cart bnlj smj bhj scans wscg noncg")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val cs = census(fn(spark, d).queryExecution)
-        println(f"AUDIT $name%-28s ${cs.exch}%4d ${cs.cart}%4d ${cs.bnlj}%4d ${cs.smj}%4d ${cs.bhj}%4d ${cs.scans}%5d ${cs.wscg}%4d ${cs.noncg}%5d")
-      } catch { case e: Throwable => println(s"AUDIT $name ERROR ${e.getMessage.take(60)}") }
-      finally graft.ops.TransientCache.releaseAll()
-    }
-    spark.stop()
-  }
 }

@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   *   SPARK_GRAFT_SF_DIR      data dir (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_CPUS        local core count (default 32)
   *   SPARK_GRAFT_PLANS_DIR   output dir (default plans/r12)
-  *   SPARK_GRAFT_PLANS_ONLY  comma-separated name-substring filter
+  *   SPARK_GRAFT_BENCH_ONLY  query filter ([[SparkEntry.selected]])
   *   SPARK_GRAFT_PLANS_SUFFIX  file suffix, e.g. "before"/"after"
   *
   * Only builds plans (analysis + physical planning) — no query executes,
@@ -25,14 +25,9 @@ object Plans {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r12")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
-    val only = sys.env.get("SPARK_GRAFT_PLANS_ONLY").map(_.split(",").toSeq)
     val spark = GraftSession.local(cpus, "graft-plans")
     Files.createDirectories(Paths.get(outDir))
-    val selected = only match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try {
         val df = graft.queries.Parity.outputDoubles(fn(spark, sfDir))
         val plan = df.queryExecution.explainString(

@@ -33,6 +33,14 @@ object SparkEntry {
       graft.queries.AnalyticsQueries.defs ++
       graft.queries.StemmedFtsQueries.defs
 
+  /** The registry in name order, narrowed by `SPARK_GRAFT_BENCH_ONLY`
+    * (comma-separated name substrings; unset or empty = every query) —
+    * the one query filter of Bench, Verify and Plans. */
+  def selected: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val pats = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(",").map(_.trim).filter(_.nonEmpty)
+    queries.toSeq.filter { case (n, _) => pats.isEmpty || pats.exists(n.contains) }.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =

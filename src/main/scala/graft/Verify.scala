@@ -68,15 +68,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus, "graft-verify")
-    // Dev-only subset filter (same contract as SPARK_GRAFT_BENCH_ONLY):
-    // comma-separated query-name prefixes. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None     => SparkEntry.queries
-    }
-    dumpAll(spark, sfDir, outDir, selected)
+    dumpAll(spark, sfDir, outDir, SparkEntry.selected)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

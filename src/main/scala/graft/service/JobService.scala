@@ -31,7 +31,10 @@ object JobService {
       error_message: String, duration_seconds: Double,
       created_at: java.sql.Timestamp, updated_at: java.sql.Timestamp)
 
-  private final case class JobEvent(
+  /** One immutable event of the log. Not `private`: Spark's generated
+    * encoder for a private case class fails to compile and falls back
+    * to the interpreter on every append. */
+  final case class JobEvent(
       id: String, catalog_code: String, mdx_query: String, status: String,
       error_message: String, duration_seconds: Double,
       event_at: java.sql.Timestamp, seq: Long)

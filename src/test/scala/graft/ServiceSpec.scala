@@ -51,6 +51,43 @@ class ServiceSpec extends AnyFunSuite {
     assert(b.status == JobService.Failed && b.error_message.contains("unknown measure"))
   }
 
+  test("job events encode through generated code: no interpreter fallback on submit or run") {
+    // Every event append encodes a JobEvent; an encoder Janino cannot
+    // compile (a private case class) is retried — and logged as a
+    // fallback — on each append, since a failed compile is not cached.
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("servicespec-warn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          lines.add(String.valueOf(e.getMessage.getFormattedMessage))
+    }
+    app.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    // Non-additive loggers do not pass their events on to the root.
+    val loggers = ctx.getConfiguration.getRootLogger +:
+      ctx.getConfiguration.getLoggers.asScala.values.filterNot(_.isAdditive).toSeq
+    loggers.foreach(_.addAppender(app, null, null))
+    ctx.updateLoggers()
+    try {
+      val root = java.nio.file.Files.createTempDirectory("graft_jobs_codegen").toString
+      val id = JobService.submit(spark, root, "SALES",
+        "SELECT {[Measures].[count_order]} ON COLUMNS, NON EMPTY [Customer].[Geo].[Region].MEMBERS ON ROWS FROM [Sales]")
+      assert(JobService.runPending(spark, root, sf) == 1)
+      assert(JobService.status(spark, root, id).get.status == JobService.Completed)
+    } finally {
+      loggers.foreach(_.removeAppender(app.getName))
+      ctx.updateLoggers()
+      app.stop()
+    }
+    val fallbacks = lines.asScala.filter(_.contains("falling back to interpreter mode"))
+    assert(fallbacks.isEmpty, fallbacks.mkString("\n"))
+  }
+
   test("member search is case/accent-insensitive") {
     import spark.implicits._
     val m = Seq(("Águila Real", "[D].[H].&[1]"), ("zorro", "[D].[H].&[2]"))

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract tests for the session-lifetime cache: build-once sharing,
   * the clear() cold-measurement hook, memo's single-build race
-  * semantics, recovery of lost artifact blocks, and census visibility
-  * into artifact builds.
+  * semantics, the exclusive build ledger, recovery of lost artifact
+  * blocks, and census visibility into artifact builds.
   *
   * Runs against a PRIVATE `newSession()` (SessionCache keys by session
   * instance): sbt runs suites in parallel in one JVM, and a clear() of
@@ -45,6 +45,28 @@ class SessionCacheSpec extends AnyFunSuite {
     SessionCache.clear(spark)
     assert(v() == 42 && builds == 2, "clear() must evict memo values")
     SessionCache.clear(spark)
+  }
+
+  test("a nested build's time is charged once, to its own key") {
+    // Own session: drainBuildLog is per session, so no other suite's
+    // builds land in this ledger.
+    val s = SparkTestSession.spark.newSession()
+    SessionCache.drainBuildLog(s)
+    val t0 = System.nanoTime()
+    SessionCache.getOrBuild(s, "sessioncachespec:outer") {
+      Thread.sleep(200)
+      val inner = SessionCache.getOrBuild(s, "sessioncachespec:inner") {
+        Thread.sleep(400)
+        s.range(3).toDF("n")
+      }
+      inner.select((col("n") + 1).as("n"))
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val log = SessionCache.drainBuildLog(s)
+    assert(log.keySet == Set("sessioncachespec:outer", "sessioncachespec:inner"))
+    assert(log("sessioncachespec:inner") >= 0.4 && log("sessioncachespec:outer") >= 0.2)
+    assert(log.values.sum <= wall, s"the nested build was charged twice: $log within $wall s")
+    SessionCache.clear(s)
   }
 
   test("a consumer recomputes an artifact whose cached blocks were lost") {

@@ -99,9 +99,28 @@ for rnd in sorted(_cands, reverse=True):
                        f"warm {tot:.1f} s, cold {cold:.1f} s.")
         break
 
+# Bench records its core count since schema 2; older files name none.
+cores = f"local[{b['cpus']}]" if "cpus" in b else "core count not recorded"
+
+# Per-layer split of each pass (schema 2 records): the share of the wall
+# spent building DataFrames, planning and executing, plus exclusive
+# artifact-build time (inside construction).
+def _split(label, recs):
+    s = {f: sum(r[f] for r in recs.values()) / 1e3
+         for f in ("construct_ms", "plan_ms", "exec_ms", "artifact_ms")}
+    return (f"{label}: construct {s['construct_ms']:.1f} s (artifact builds "
+            f"{s['artifact_ms']:.1f} s), plan {s['plan_ms']:.1f} s, "
+            f"exec {s['exec_ms']:.1f} s")
+
+layer_parts = [_split(f"warm pass {i + 1} ({p['order']})", p["records"])
+               for i, p in enumerate(b.get("warm_passes", [])) if "records" in p]
+if "cold_records" in b:
+    layer_parts.append(_split("cold", b["cold_records"]))
+layer_lines = ["Per-layer split: " + "; ".join(layer_parts) + "."] if layer_parts else []
+
 lines = [
     f"Latest full bench (`bench.json`, **builder-host**, sf `{b['sf']}`, "
-    f"local[32], {b['n_queries']} queries): warm total {b['total']:.1f} s, "
+    f"{cores}, {b['n_queries']} queries): warm total {b['total']:.1f} s, "
     f"cold total {b['cold_total']:.1f} s (session caches cleared before "
     f"every query); failed_warm={b['failed_warm']}, "
     f"failed_cold={b['failed_cold']}; first-pass session-artifact builds "
@@ -110,6 +129,7 @@ lines = [
     f"order{'s' if orders != 1 else ''}): median {med:.2f} s, {under2}/{n} "
     f"queries under 2 s; slowest three: "
     + ", ".join(f"{k} {v:.1f} s" for k, v in slowest) + ".",
+] + layer_lines + [
     "Totals vary ~±10–20% run-to-run with page-cache state and ~1.3–1.5×",
     "between hosts; the full per-query map is the committed `bench.json`.",
 ]
