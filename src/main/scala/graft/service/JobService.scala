@@ -1,7 +1,7 @@
 package graft.service
 
 import graft.mdx.MdxLowerer
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,13 +12,27 @@ import org.apache.spark.sql.streaming.Trigger
   * error, created/updated timestamps) and its runner state machine
   * (`backend/db_runner.py:26-103`).
   *
-  * Storage is an APPEND-ONLY event log: submissions and status
-  * transitions are immutable parquet appends; the current state of a job
-  * is its latest event (window-latest per id). This is the scalable
-  * twin of the reference's `UPDATE jobs SET status=...` — at 100 TB
-  * concurrency you never rewrite a state file, you append and compact
-  * (Delta MERGE being the managed form). Results are per-job parquet,
-  * keyed like the reference's request-id-keyed relay files.
+  * Storage is an APPEND-ONLY event log, and the log is the only job
+  * state: submissions and status transitions are immutable parquet
+  * files; the current state of a job is its latest event (window-latest
+  * per id, [[readJobs]]). This is the scalable twin of the reference's
+  * `UPDATE jobs SET status=...` — at 100 TB concurrency you never
+  * rewrite a state file, you append and compact (Delta MERGE being the
+  * managed form). Results are per-job parquet, keyed like the
+  * reference's request-id-keyed relay files.
+  *
+  * THE RUNNING EVENT IS THE CLAIM (the reference's one-write
+  * `UPDATE ... SET status='RUNNING' WHERE status='PENDING'`). A job's
+  * generation is its count of PENDING events (the submission plus one
+  * per requeue, `Job.attempts`). A runner claims generation g by
+  * publishing its RUNNING event under the fixed name
+  * `<id>.gen-<g>.parquet`, create-if-absent: exactly one runner per
+  * generation succeeds and executes; a loser appends nothing. A runner's
+  * snapshot may be stale, and the claim is still safe: RUNNING is only
+  * ever written by a claim, and a requeue or the sweep's "gave up"
+  * FAILED only ever follows a RUNNING event — so every non-PENDING state
+  * of generation g already holds g's claim file, and a runner acting on
+  * an out-of-date PENDING snapshot of g loses the create.
   *
   * Two runners drive PENDING jobs: the batch `runPending` loop and a
   * Structured Streaming `streamingRunner` (`readStream` over the
@@ -29,7 +43,8 @@ object JobService {
   final case class Job(
       id: String, catalog_code: String, mdx_query: String, status: String,
       error_message: String, duration_seconds: Double,
-      created_at: java.sql.Timestamp, updated_at: java.sql.Timestamp)
+      created_at: java.sql.Timestamp, updated_at: java.sql.Timestamp,
+      attempts: Long)
 
   /** One immutable event of the log. Not `private`: Spark's generated
     * encoder for a private case class fails to compile and falls back
@@ -45,68 +60,86 @@ object JobService {
   private def eventsPath(root: String) = s"$root/job_events"
   private def resultPath(root: String, id: String) = s"$root/results/$id"
   private val seqGen = new java.util.concurrent.atomic.AtomicLong()
+  private val eventSchema = Encoders.product[JobEvent].schema
 
-  private def appendEvent(spark: SparkSession, root: String, e: JobEvent): Unit = {
+  /** Publish one event into the log as the file `name`, create-if-absent;
+    * false iff `name` already exists. */
+  private def publish(spark: SparkSession, root: String, e: JobEvent,
+                      name: String): Boolean = {
     import spark.implicits._
     // Concurrent appenders must never share an output-commit directory:
     // two simultaneous FileOutputCommitter jobs on one path race on the
     // SHARED `_temporary` dir — the first to finish cleans it up and
     // deletes the other's in-flight attempt (surfaced by
     // JobsConcurrencySpec as a chmod/no-such-file task failure). Each
-    // append therefore commits into its own staging dir and publishes
-    // the finished part file into the log under a unique name — the
-    // unique-filename discipline every multi-writer log format (Delta,
-    // Iceberg) builds on; rename-within-FS is the atomic publish.
-    val id = java.util.UUID.randomUUID().toString
+    // event therefore commits into its own staging dir and the finished
+    // part file is hard-linked into the log: `createLink` is atomic and
+    // fails if the name exists (`renameTo` would silently replace it) —
+    // the local-FS twin of a storage conditional put. The stat first
+    // lets a lost claim skip the Spark write.
     val dir = new java.io.File(eventsPath(root))
+    val target = new java.io.File(dir, name)
+    if (target.exists()) return false
     dir.mkdirs()
-    val stage = new java.io.File(dir.getParentFile, s".stage-$id")
-    Seq(e).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.getPath)
-    val part = Option(stage.listFiles()).getOrElse(Array.empty)
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(throw new java.io.IOException(s"no part file in $stage"))
-    if (!part.renameTo(new java.io.File(dir, s"$id.parquet")))
-      throw new java.io.IOException(s"could not publish event $id")
-    delete(stage)
+    val stage = new java.io.File(dir.getParentFile,
+      s".stage-${java.util.UUID.randomUUID()}")
+    try {
+      Seq(e).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.getPath)
+      val part = Option(stage.listFiles()).getOrElse(Array.empty)
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(throw new java.io.IOException(s"no part file in $stage"))
+      java.nio.file.Files.createLink(target.toPath, part.toPath)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally delete(stage)
   }
 
-  private def events(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    try spark.read.parquet(eventsPath(root))
-    catch { case _: Throwable => Seq.empty[JobEvent].toDF() }
-  }
+  /** The whole log. Only an absent log is empty (the first submit has not
+    * landed); any other read failure propagates — an unreadable log must
+    * never look like a log without jobs. */
+  private def events(spark: SparkSession, root: String): DataFrame =
+    if (!new java.io.File(eventsPath(root)).exists())
+      spark.emptyDataset(Encoders.product[JobEvent]).toDF()
+    else spark.read.schema(eventSchema).parquet(eventsPath(root))
 
   /** Submit: append a PENDING event, return the job id (Q1). */
   def submit(spark: SparkSession, root: String, catalogCode: String,
              mdx: String): String = {
     val id = java.util.UUID.randomUUID().toString
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    appendEvent(spark, root,
-      JobEvent(id, catalogCode, mdx, Pending, "", 0.0, now, seqGen.incrementAndGet()))
+    publish(spark, root,
+      JobEvent(id, catalogCode, mdx, Pending, "", 0.0, now, seqGen.incrementAndGet()),
+      s"$id.parquet")
     id
   }
 
   private def transition(spark: SparkSession, root: String, job: Job,
                          status: String, error: String = "",
-                         duration: Double = 0.0): Unit = {
+                         duration: Double = 0.0,
+                         name: String = s"${java.util.UUID.randomUUID()}.parquet")
+      : Boolean = {
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    appendEvent(spark, root, JobEvent(job.id, job.catalog_code, job.mdx_query,
-      status, error, duration, now, seqGen.incrementAndGet()))
+    publish(spark, root, JobEvent(job.id, job.catalog_code, job.mdx_query,
+      status, error, duration, now, seqGen.incrementAndGet()), name)
   }
 
-  /** Current state: latest event per job id. */
+  /** Current state: latest event per job id, with `attempts` = the job's
+    * PENDING events (its claim generation and its retry count). */
   def readJobs(spark: SparkSession, root: String): DataFrame = {
     // Wall-clock first: the per-JVM seq only breaks same-millisecond ties
     // within one process — a restarted runner's counter restarts at 0, so
     // seq must never dominate cross-process ordering.
     val w = Window.partitionBy(col("id")).orderBy(desc("event_at"), desc("seq"))
+    val job = Window.partitionBy(col("id"))
     events(spark, root)
       .withColumn("rn", row_number().over(w))
-      .withColumn("created_at", min(col("event_at")).over(Window.partitionBy(col("id"))))
+      .withColumn("created_at", min(col("event_at")).over(job))
+      .withColumn("attempts", count(when(col("status") === Pending, 1)).over(job))
       .where(col("rn") === 1)
       .select(col("id"), col("catalog_code"), col("mdx_query"), col("status"),
         col("error_message"), col("duration_seconds"), col("created_at"),
-        col("event_at").as("updated_at"))
+        col("event_at").as("updated_at"), col("attempts"))
   }
 
   /** Poll (Q3): current status row for a job id. */
@@ -115,47 +148,16 @@ object JobService {
     readJobs(spark, root).where(col("id") === id).as[Job].collect().headOption
   }
 
-  /** One claim token per (job, generation); generation = number of
-    * PENDING events so far (submission + each requeue), so a requeued
-    * job is claimable again while a live generation stays exclusive. */
-  private def claimFile(root: String, id: String, gen: Long): java.io.File =
-    new java.io.File(s"$root/claims/$id.gen-$gen")
-
   private def executeOne(spark: SparkSession, root: String, sfDir: String,
                          job: Job): Unit = {
-    // Two-stage claim (ref `backend/db_runner.py`'s atomic
-    // `UPDATE ... WHERE status='PENDING'`):
-    //  1. re-read the job's CURRENT events right before running — a
-    //     runner that already wrote a terminal state (or holds a live
-    //     RUNNING claim) turns this call into a no-op. One filtered log
-    //     read per claim; a deployment partitioning job_events by id
-    //     makes it partition-pruned.
-    //  2. an ATOMIC conditional write decides ties the read can't see:
-    //     `createNewFile` on a per-(job, generation) token is the
-    //     local-FS twin of the reference's UPDATE..WHERE (at cluster
-    //     scale: a Delta txn or any storage conditional put). The token
-    //     comes BEFORE the RUNNING append, so a losing drainer appends
-    //     NOTHING — a loser's late RUNNING row could otherwise land
-    //     after the winner's COMPLETED and leave the job looking
-    //     claimed forever. Only the token winner writes RUNNING and
-    //     executes — double-COMPLETE is impossible within a generation
-    //     (JobsConcurrencySpec drives this under real thread
-    //     contention). A claimant dying between token and RUNNING is
-    //     recovered by requeueStale's pending-with-burned-token sweep.
-    //     Across generations the sweep's liveness contract still
-    //     applies: requeueing a slow-but-alive claimant re-opens the
-    //     window by design.
-    val evs = events(spark, root).where(col("id") === job.id)
-      .select(col("status"), col("event_at"), col("seq")).collect()
-    if (evs.isEmpty) return
-    val latest = evs.maxBy(r => (r.getTimestamp(1).getTime, r.getLong(2)))
-      .getString(0)
-    if (latest != Pending) return
-    val gen = evs.count(_.getString(0) == Pending)
-    val token = claimFile(root, job.id, gen)
-    token.getParentFile.mkdirs()
-    if (!token.createNewFile()) return // lost the tie: the winner executes
-    transition(spark, root, job, Running)
+    // Claim this snapshot's generation (see the object doc): only the
+    // runner whose RUNNING event lands under the generation's name
+    // executes, so COMPLETED is written at most once per generation
+    // (JobsConcurrencySpec drives this under real thread contention).
+    // Across generations the sweep's liveness contract applies:
+    // requeueing a slow-but-alive claimant re-opens the job by design.
+    if (!transition(spark, root, job, Running,
+        name = s"${job.id}.gen-${job.attempts}.parquet")) return
     val t0 = System.nanoTime()
     try {
       job.mdx_query match {
@@ -299,77 +301,46 @@ object JobService {
   }
 
   /** Crash recovery sweep: a runner that died mid-execution leaves its
-    * claim as an orphaned RUNNING event (the claim narrows the
-    * double-execution race; it cannot survive its claimant). Requeue any
-    * RUNNING job whose last transition is older than `staleAfterSeconds`
-    * by appending a fresh PENDING event — the append-only twin of the
-    * reference runner's stale-job reset (`backend/db_runner.py`'s
-    * status-machine recovery), after which any runner completes it
-    * normally. Also sweeps the narrower claim-token crash window: a job
-    * still PENDING past the horizon whose current generation's token is
-    * burned (claimant died after `createNewFile`, before its RUNNING
-    * append) — the fresh PENDING bumps the generation, freeing a new
-    * token. Returns the requeued ids.
+    * claim as an orphaned RUNNING event (the claim cannot survive its
+    * claimant). Requeue any RUNNING job whose last transition is older
+    * than `staleAfterSeconds` by appending a fresh PENDING event — the
+    * append-only twin of the reference runner's stale-job reset
+    * (`backend/db_runner.py`'s status-machine recovery). The PENDING
+    * event opens the next generation, whose claim name is still free,
+    * so any runner then completes the job normally. Returns the
+    * requeued ids.
     *
     * Liveness contract: `staleAfterSeconds` must exceed the longest
     * legitimate job runtime — requeueing a claim whose owner is merely
-    * SLOW (not dead) re-opens the double-execution window that the claim
-    * narrowed. Timeout-based recovery cannot distinguish the two without
-    * owner heartbeats; deployments running jobs longer than the sweep
-    * threshold should have runners heartbeat by re-appending RUNNING.
+    * SLOW (not dead) re-opens the job to a second execution. Timeout-
+    * based recovery cannot distinguish the two without owner heartbeats;
+    * deployments running jobs longer than the sweep threshold should
+    * have runners heartbeat by re-appending RUNNING. Run one sweep at a
+    * time: two sweeps requeueing the same claim append two PENDING
+    * events, and a runner that saw only the first claims a generation
+    * the second has already passed.
     *
     * BOUNDED RETRY (ref `scanner/DGIS_SCAN_2_stable.py:152-167` — 3
     * tries, exponential spacing): a job that keeps killing its runner
-    * would otherwise requeue forever. Attempt count = PENDING events in
-    * the log (the submission plus one per requeue — the log IS the retry
-    * counter, no schema change; RUNNING events no longer work as the
-    * counter because tied claimants may append duplicate RUNNING rows
-    * for one generation). A stale claim with `maxAttempts` tries transitions
-    * FAILED instead of PENDING; below the cap, attempt k is only swept
-    * after `staleAfterSeconds * 2^(k-1)` — the reference's 2^n backoff
-    * re-expressed on the sweep horizon. */
+    * would otherwise requeue forever. The attempt count is
+    * `Job.attempts` — the log IS the retry counter. A stale claim with
+    * `maxAttempts` tries transitions FAILED instead of PENDING; below the
+    * cap, attempt k is only swept after `staleAfterSeconds * 2^(k-1)` —
+    * the reference's 2^n backoff re-expressed on the sweep horizon. */
   def requeueStale(spark: SparkSession, root: String,
                    staleAfterSeconds: Long, maxAttempts: Int = 3): Seq[String] = {
     import spark.implicits._
     val now = System.currentTimeMillis()
-    val latest = readJobs(spark, root)
-      .where(col("status") === Running || col("status") === Pending)
-      .as[Job].collect()
-    if (latest.isEmpty) return Seq.empty
-    val attempts = events(spark, root).where(col("status") === Pending)
-      .groupBy(col("id")).agg(count(lit(1)).as("n"))
-      .as[(String, Long)].collect().toMap
-    latest.toSeq.flatMap { j =>
-      val n = attempts.getOrElse(j.id, 1L)
-      // A job whose latest event is still PENDING is only stuck if its
-      // generation's claim token was burned without a RUNNING follow-up
-      // (claimant died between token and append); an unclaimed PENDING
-      // job is just waiting for a runner and must not be touched.
-      // ONE stat, not exists()-then-lastModified() on separate handles:
-      // if the token vanishes between the two calls (terminal-append
-      // cleanup racing the sweep), lastModified() returns 0 ⇒ instant-
-      // stale ⇒ a spurious requeue of a just-completed job (r10 verdict
-      // item 6). mtime 0 — absent either way — reads as not-stuck.
-      val tokenMtime =
-        if (j.status == Pending) claimFile(root, j.id, n).lastModified()
-        else 0L
-      val stuck = j.status == Running || tokenMtime > 0L
-      val horizonMs =
-        staleAfterSeconds * 1000L * (1L << math.min(n - 1, 16L).toInt)
-      // Staleness anchor: RUNNING jobs age from their last transition,
-      // but a PENDING job with a burned token ages from the TOKEN's
-      // mtime (the claim instant), not the PENDING append — under a
-      // deep backlog the PENDING event can already be past the horizon
-      // the moment a live drainer finally claims it, and anchoring on
-      // updated_at would requeue (or FAIL) a job whose claimant is
-      // alive inside the token-to-RUNNING window (r9 advice).
-      val anchorMs =
-        if (j.status == Pending) tokenMtime
-        else j.updated_at.getTime
-      if (!stuck || anchorMs >= now - horizonMs) None
-      else if (n >= maxAttempts) {
+    val stale = readJobs(spark, root).where(col("status") === Running)
+      .as[Job].collect().toSeq.filter { j =>
+        val horizonMs =
+          staleAfterSeconds * 1000L * (1L << math.min(j.attempts - 1, 16L).toInt)
+        j.updated_at.getTime < now - horizonMs
+      }
+    stale.flatMap { j =>
+      if (j.attempts >= maxAttempts) {
         transition(spark, root, j, Failed,
-          error = s"gave up after $n attempts (max $maxAttempts)")
+          error = s"gave up after ${j.attempts} attempts (max $maxAttempts)")
         None
       } else {
         transition(spark, root, j, Pending)
@@ -389,17 +360,14 @@ object JobService {
 
   /** Streaming runner (Q2, streaming form): watches the submission log
     * and executes each new PENDING job via foreachBatch. Returns the
-    * started query; AvailableNow drains the backlog and stops. */
-  def streamingRunner(spark: SparkSession, root: String, sfDir: String,
-                      availableNow: Boolean = true)
+    * started query; its AvailableNow trigger drains the backlog and
+    * stops. */
+  def streamingRunner(spark: SparkSession, root: String, sfDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    val schema = {
-      Seq.empty[JobEvent].toDF().schema
-    }
-    val stream = spark.readStream.schema(schema).parquet(eventsPath(root))
+    val stream = spark.readStream.schema(eventSchema).parquet(eventsPath(root))
       .where(col("status") === Pending)
-    val writer = stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // Re-check current state: an already-driven job is not re-run even
         // if its PENDING event arrives late in this microbatch.
@@ -413,7 +381,8 @@ object JobService {
         ()
       }
       .option("checkpointLocation", s"$root/runner_checkpoint")
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      .trigger(Trigger.AvailableNow())
+      .start()
   }
 
   /** Completed-job result (the JSONB payload analogue). */

@@ -45,14 +45,12 @@ final class PreAggMaintainer(spark: SparkSession, sfDir: String,
     current = Some(cp)
   }
 
-  /** Drive the maintainer from a streaming fact source; AvailableNow
-    * drains the backlog and stops (the backfill shape — leave a
-    * continuous trigger for live ingest). */
-  def runner(factStream: DataFrame, checkpointDir: String,
-             availableNow: Boolean = true): StreamingQuery = {
-    val w = factStream.writeStream
+  /** Drive the maintainer from a streaming fact source; its
+    * AvailableNow trigger drains the backlog and stops. */
+  def runner(factStream: DataFrame, checkpointDir: String): StreamingQuery =
+    factStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
       .option("checkpointLocation", checkpointDir)
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      .trigger(Trigger.AvailableNow())
+      .start()
 }

@@ -51,6 +51,20 @@ class ServiceSpec extends AnyFunSuite {
     assert(b.status == JobService.Failed && b.error_message.contains("unknown measure"))
   }
 
+  test("an unreadable job log is an error, not a log without jobs") {
+    // A status of None reads as "not submitted yet" to a poller, and an
+    // empty log gives runPending nothing to drain: only an absent log may
+    // read as empty.
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_garbage").toString
+    val id = JobService.submit(spark, root, "SALES",
+      "SELECT {[Measures].[count_order]} ON COLUMNS FROM [Sales]")
+    val files = new java.io.File(s"$root/job_events").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1)
+    java.nio.file.Files.write(files.head.toPath, "not a parquet file".getBytes)
+    intercept[Exception](JobService.status(spark, root, id))
+  }
+
   test("job events encode through generated code: no interpreter fallback on submit or run") {
     // Every event append encodes a JobEvent; an encoder Janino cannot
     // compile (a private case class) is retried — and logged as a
@@ -367,7 +381,8 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
     // Runner died AFTER executing but BEFORE its checkpoint commit: wipe
     // the checkpoint, so the restarted runner replays every event from
     // offset zero — the worst-case at-least-once redelivery. The
-    // claim-before-execute re-read must turn the replay into a no-op.
+    // foreachBatch state check finds the job COMPLETED, and its
+    // generation's claim is already taken: the replay is a no-op.
     def rmrf(p: java.nio.file.Path): Unit = {
       import scala.jdk.CollectionConverters._
       if (java.nio.file.Files.exists(p)) {
@@ -418,31 +433,6 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
       .toDF("id", "catalog_code", "mdx_query", "status", "error_message",
         "duration_seconds", "event_at", "seq")
       .coalesce(1).write.mode("append").parquet(s"$root/job_events")
-  }
-
-  test("claim-token removal mid-sweep: mtime 0 reads as not-stuck, never a spurious requeue") {
-    // r10 verdict item 6: the sweep used to call exists() then
-    // lastModified() on separate handles — a token deleted between the
-    // two (terminal-append cleanup racing the sweep) read as mtime 0 ⇒
-    // instant-stale ⇒ spurious requeue of a just-completed job. The fix
-    // reads the mtime ONCE and treats 0 (absent either way) as
-    // not-stuck. Pin the observable contract: a PENDING job whose
-    // token mtime reads 0 is untouched; a genuinely burned stale token
-    // still requeues.
-    val root = java.nio.file.Files.createTempDirectory("graft_jobs_toctou").toString
-    val mdx = "SELECT {[Measures].[sum_qty]} ON COLUMNS FROM [Sales]"
-    val id = JobService.submit(spark, root, "SALES", mdx)
-    val token = new java.io.File(s"$root/claims/$id.gen-1")
-    token.getParentFile.mkdirs()
-    assert(token.createNewFile())
-    assume(token.setLastModified(0L), "filesystem refuses epoch mtime")
-    assert(JobService.requeueStale(spark, root, 0).isEmpty,
-      "mtime 0 (token vanishing mid-sweep) must read as not-stuck")
-    assert(JobService.status(spark, root, id).get.status == JobService.Pending)
-    // The burned-token recovery path is intact: a real (positive) stale
-    // mtime still requeues exactly this job.
-    assert(token.setLastModified(System.currentTimeMillis() - 60000L))
-    assert(JobService.requeueStale(spark, root, 0) == Seq(id))
   }
 
   test("bounded retry: a job that keeps killing its runner lands FAILED after maxAttempts, never loops") {
