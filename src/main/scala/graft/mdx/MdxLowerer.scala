@@ -67,32 +67,22 @@ object MdxLowerer {
     val wantedUnits = (axisDims.map(_.h) ++ slicer.map(_._1) ++ props.map(_.h))
       .flatMap(_.units).distinct
 
-    // Aggregate navigation: when every referenced column fits one of the
-    // cube's pre-aggregated grains and every measure re-aggregates (SUM /
-    // COUNT partials sum exactly), serve the query by rolling up that
-    // session-materialized pre-agg instead of re-scanning the fact —
-    // the pivot cost becomes dimension-bounded, invariant to fact size.
-    // Among covering aggregates the NARROWEST grain wins (fewest grain
-    // columns ⇒ fewest rows to roll up), the SSAS navigator rule.
+    // Aggregate navigation ([[navigate]]): serve the query by rolling up
+    // the narrowest covering session-materialized pre-agg instead of
+    // re-scanning the fact — the pivot cost becomes dimension-bounded,
+    // invariant to fact size.
     val referencedCols = (
       axisDims.flatMap(ad => ad.level.keyCols :+ ad.level.captionCol) ++
         slicer.toSeq.flatMap(_._2.keyCols) ++
         props.flatMap(p => p.level.keyCols :+ p.level.captionCol)).distinct
-    val navigated = cube.preAggs.filter { pa =>
-      wantedUnits.forall(pa.units.contains) &&
-        referencedCols.forall(pa.grainCols.contains) &&
-        measures.forall(m => m.aggregator == "SUM" || m.aggregator == "COUNT")
-    }.sortBy(_.grainCols.size).headOption
+    val navigated = navigate(cube, wantedUnits, referencedCols, measures)
     val fact0 = navigated match {
       case Some(pa) => preAggTable(spark, sfDir, cube, pa)
-      case None     => attachUnits(spark, sfDir, cube, wantedUnits)
+      case None     => attachUnits(spark, sfDir, cube, wantedUnits, cube.fact(spark, sfDir))
     }
     // Measure expressions over the chosen source: raw-fact aggregators,
     // or exact partial re-aggregation over the pre-agg's measure columns.
-    val mAgg: MeasureDef => Column = navigated match {
-      case Some(_) => m => sum(col(m.name))
-      case None    => m => m.agg
-    }
+    val mAgg: MeasureDef => Column = if (navigated.isDefined) reAggregate else _.agg
 
     // Slicer + axis member-set predicates (filter before join/agg — Catalyst
     // pushes these to the scan where possible).
@@ -101,8 +91,7 @@ object MdxLowerer {
     val fact = preds.foldLeft(fact0)(_.where(_))
 
     if (axisDims.isEmpty) // measures-only: single global totals row
-      return fact.groupBy().agg(mAgg(measures.head).as(measures.head.name),
-        measures.tail.map(m => mAgg(m).as(m.name)): _*)
+      return aggregate(fact, Nil, measures, mAgg)
 
     val propsFor: Map[String, Seq[PropRef]] =
       props.groupBy(_.h.hier).view.mapValues(_.sortBy(_.level.number)).toMap.withDefaultValue(Nil)
@@ -118,13 +107,8 @@ object MdxLowerer {
     } ++ measures.map(m => col(m.name))
 
     if (sel.nonEmpty || sel.rows.isEmpty) {
-      val grouped =
-        if (measures.nonEmpty)
-          fact.groupBy(groupCols.map(col): _*)
-            .agg(mAgg(measures.head).as(measures.head.name),
-              measures.tail.map(m => mAgg(m).as(m.name)): _*)
-        else fact.select(groupCols.map(col): _*).distinct()
-      grouped.orderBy(keyCols.map(col): _*).select(outCols: _*)
+      aggregate(fact, groupCols, measures, mAgg)
+        .orderBy(keyCols.map(col): _*).select(outCols: _*)
     } else {
       // NON EMPTY off: full member cross product, LEFT JOIN aggregated fact.
       val memberSides = axisDims.map { ad =>
@@ -134,13 +118,7 @@ object MdxLowerer {
         ad.filter.map(m.where).getOrElse(m)
       }
       val cross = memberSides.reduce(_.crossJoin(_))
-      val aggd =
-        if (measures.nonEmpty)
-          fact.groupBy(keyCols.map(col): _*)
-            .agg(mAgg(measures.head).as(measures.head.name),
-              measures.tail.map(m => mAgg(m).as(m.name)): _*)
-        else fact.select(keyCols.map(col): _*).distinct()
-      cross.join(aggd, keyCols, "left")
+      cross.join(aggregate(fact, keyCols, measures, mAgg), keyCols, "left")
         .orderBy(keyCols.map(col): _*)
         .select(outCols: _*)
     }
@@ -255,20 +233,31 @@ object MdxLowerer {
     PropRef(h, lvl)
   }
 
-  /** Materialized-aggregate rewrite for RELATIONAL queries — the same
-    * navigator [[lower]] applies to MDX pivots, exposed for SQL-shaped
-    * callers: when every column a query filters or groups on sits in a
-    * declared grain, serve it from the narrowest covering
-    * session-materialized pre-aggregate (measures re-aggregate with
+  /** The SSAS navigator rule, written once: among the cube's
+    * pre-aggregates whose join units include `units` and whose grain
+    * holds every column in `cols` — and only when every measure
+    * re-aggregates (SUM / COUNT partials sum exactly) — the NARROWEST
+    * grain wins (fewest grain columns ⇒ fewest rows to roll up). */
+  private def navigate(cube: CubeDef, units: Seq[String], cols: Seq[String],
+                       measures: Seq[MeasureDef]): Option[PreAggDef] =
+    cube.preAggs.filter { pa =>
+      units.forall(pa.units.contains) &&
+        cols.forall(pa.grainCols.contains) &&
+        measures.forall(m => m.aggregator == "SUM" || m.aggregator == "COUNT")
+    }.sortBy(_.grainCols.size).headOption
+
+  /** Materialized-aggregate rewrite for RELATIONAL queries — the
+    * [[navigate]] rule [[lower]] applies to MDX pivots, exposed for
+    * SQL-shaped callers: when every column a query filters or groups on
+    * sits in a declared grain, serve it from the narrowest covering
+    * session-materialized pre-aggregate (the caller re-aggregates with
     * `sum` over the partial columns — exact for SUM/COUNT partials).
     * Returns None when no aggregate covers, and the caller scans the
     * fact as usual. This is what keeps a covered query's cost
     * dimension-bounded — invariant to fact growth. */
   def coveringAggregate(spark: SparkSession, sfDir: String, cube: CubeDef,
                         referencedCols: Seq[String]): Option[DataFrame] =
-    cube.preAggs.filter(pa => referencedCols.forall(pa.grainCols.contains))
-      .sortBy(_.grainCols.size).headOption
-      .map(pa => preAggTable(spark, sfDir, cube, pa))
+    navigate(cube, Nil, referencedCols, Nil).map(preAggTable(spark, sfDir, cube, _))
 
   /** Session-materialized pre-aggregate of the cube's fact at one of its
     * declared grains (one fact scan per session per aggregate; every
@@ -286,8 +275,8 @@ object MdxLowerer {
     * re-scanning the whole fact. */
   def preAggregateSlice(spark: SparkSession, sfDir: String, cube: CubeDef,
                         pa: PreAggDef, fact: DataFrame): DataFrame =
-    preAggregateAttached(cube, pa,
-      attachForPreAgg(spark, sfDir, cube, pa,
+    aggregate(
+      attachUnits(spark, sfDir, cube, pa.units,
         // r12: fan the fact out before the star join + aggregate (guide
         // §2.5 — the single-row-group fact scan otherwise runs the whole
         // build in one task; ~3.5 s serial, paid per MDX query in the
@@ -295,62 +284,37 @@ object MdxLowerer {
         // order key in this schema); no-op once the fact is a real
         // partitioned table. Build path only — direct pivots keep their
         // broadcast-join-on-scan shape.
-        graft.ops.Fanout.byKey(fact, col(fact.columns.head))))
-
-  /** The dimension-attach half of [[preAggregateSlice]], exposed so a
-    * caller building SEVERAL slice partials from the same fact rows
-    * (q126's maintenance demo, a historical backfill) can pay the star
-    * join once. */
-  def attachForPreAgg(spark: SparkSession, sfDir: String, cube: CubeDef,
-                      pa: PreAggDef, fact: DataFrame): DataFrame =
-    attachUnits(spark, sfDir, cube, pa.units, fact)
-
-  /** The aggregation half of [[preAggregateSlice]]. */
-  def preAggregateAttached(cube: CubeDef, pa: PreAggDef,
-                           attached: DataFrame): DataFrame =
-    attached.groupBy(pa.grainCols.map(col): _*)
-      .agg(cube.measures.head.agg.as(cube.measures.head.name),
-        cube.measures.tail.map(m => m.agg.as(m.name)): _*)
-
-  /** Build MANY slice partials in ONE fact scan: aggregate at
-    * (grain, `slice`) — each `__slice` group folds exactly the rows of
-    * its slice, so filtering the result on `__slice = v` yields the
-    * identical partial [[preAggregateSlice]] would build from
-    * `fact.where(slice = v)` (MdxLowererSpec pins it). A backfill of N
-    * historical partials costs one scan + one shuffle instead of N.
-    *
-    * When to use which (measured, sf0.1): at N=2 the per-slice builds
-    * win (~2.3 s vs ~3.5 s) — the persist barrier needed to split the
-    * sliced table outweighs one saved scan. Use this form when N is
-    * large (a month/year of daily partials), where one scan amortizes
-    * over N partials; use [[preAggregateSlice]] per arriving delta. */
-  def preAggregateSliced(cube: CubeDef, pa: PreAggDef, attached: DataFrame,
-                         slice: Column): DataFrame =
-    attached.groupBy(pa.grainCols.map(col) :+ slice.as("__slice"): _*)
-      .agg(cube.measures.head.agg.as(cube.measures.head.name),
-        cube.measures.tail.map(m => m.agg.as(m.name)): _*)
+        graft.ops.Fanout.byKey(fact, col(fact.columns.head))),
+      pa.grainCols, cube.measures, _.agg)
 
   /** Merge partial pre-aggregates (SSAS incremental processing): every
     * navigable measure re-aggregates by SUMMATION (decimal sums of sums,
     * counts sum), so merge ≡ recompute EXACTLY — bit-identical, not
     * approximately (MdxLowererSpec pins it; q126 oracle-gates it). This
     * is what makes the aggregate maintainable: a fact delta folds in at
-    * the cost of the delta, and the navigator's own roll-up (`sum` over
-    * measure columns) is this same merge, so a query can even read the
-    * un-compacted union directly. */
+    * the cost of the delta, and the navigator's own roll-up
+    * ([[reAggregate]] over measure columns) is this same merge, so a
+    * query can even read the un-compacted union directly. */
   def mergePreAggs(cube: CubeDef, pa: PreAggDef, parts: Seq[DataFrame]): DataFrame = {
     require(parts.nonEmpty, "mergePreAggs needs at least one partial")
-    parts.reduce(_.unionByName(_))
-      .groupBy(pa.grainCols.map(col): _*)
-      .agg(sum(col(cube.measures.head.name)).as(cube.measures.head.name),
-        cube.measures.tail.map(m => sum(col(m.name)).as(m.name)): _*)
+    aggregate(parts.reduce(_.unionByName(_)), pa.grainCols, cube.measures, reAggregate)
   }
 
-  /** Attach join units once each, honoring `requires` ordering. */
-  private def attachUnits(spark: SparkSession, sfDir: String, cube: CubeDef,
-                          wanted: Seq[String]): DataFrame =
-    attachUnits(spark, sfDir, cube, wanted, cube.fact(spark, sfDir))
+  /** A measure's partial column re-aggregated: the navigator's roll-up
+    * and the pre-aggregate merge. */
+  private val reAggregate: MeasureDef => Column = m => sum(col(m.name))
 
+  /** Every measure aggregation: `measures` over `df` grouped by `keys`
+    * (no keys = one totals row; no measures = the distinct keys), each
+    * output column named after its measure. */
+  private def aggregate(df: DataFrame, keys: Seq[String], measures: Seq[MeasureDef],
+                        agg: MeasureDef => Column): DataFrame =
+    if (measures.isEmpty) df.select(keys.map(col): _*).distinct()
+    else df.groupBy(keys.map(col): _*)
+      .agg(agg(measures.head).as(measures.head.name),
+        measures.tail.map(m => agg(m).as(m.name)): _*)
+
+  /** Attach join units to `fact` once each, honoring `requires` ordering. */
   private def attachUnits(spark: SparkSession, sfDir: String, cube: CubeDef,
                           wanted: Seq[String], fact: DataFrame): DataFrame = {
     val done = scala.collection.mutable.LinkedHashSet.empty[String]

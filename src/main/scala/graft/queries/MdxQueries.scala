@@ -102,11 +102,9 @@ object MdxQueries {
       // incremental processing the prior aggregate is stored state — a
       // maintenance run pays only its delta slice + the merge, never a
       // rebuild of history (the cold bench pass charges the full build;
-      // MdxLowererSpec pins merge ≡ recompute bit-exactly). Per-slice
-      // builds, not the one-pass (grain, slice) split: measured at N=2
-      // the persist barrier the split needs costs more than the saved
-      // scan (~2.3 s vs ~3.5 s sf0.1); preAggregateSliced is for
-      // many-slice backfills.
+      // MdxLowererSpec pins merge ≡ recompute bit-exactly). The stored
+      // form of this fold, durable across restarts, is
+      // PreAggMaintainer.fold.
       val hist = graft.ops.SessionCache.getOrBuild(s,
         s"preagg_hist:${cube.name}:${pa.name}:$d")(
         MdxLowerer.preAggregateSlice(s, d, cube, pa,

@@ -1,6 +1,7 @@
 package graft.service
 
 import graft.mdx.MdxLowerer
+import graft.streaming.PreAggMaintainer
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -92,7 +93,7 @@ object JobService {
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
-    } finally delete(stage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(stage)
   }
 
   /** The whole log. Only an absent log is empty (the first submit has not
@@ -186,32 +187,16 @@ object JobService {
   private val MaintainRe =
     """(?s)\s*MAINTAIN\s+PREAGG\s+(\w+)\.(\w+)\s+WHERE\s+(.+?)\s*""".r
 
-  private def aggStatePath(root: String, cube: String, pa: String) =
-    s"$root/preagg_state/$cube.$pa"
-
-  /** One maintenance run: pre-aggregate ONLY the delta slice at the
-    * declared grain, merge it into the stored aggregate, swap the state
-    * dir, and publish the merged aggregate as the job result. Work is
-    * delta-sized + one merge shuffle bounded by the grain cardinality —
-    * never a history rebuild ([[graft.streaming.PreAggMaintainer]] is the
-    * continuous form of the same fold; this is its queued, claim-guarded
-    * form). The write-new-then-rename swap is the local-FS stand-in for a
-    * table-format transactional commit (Delta/Iceberg).
-    *
-    * CRASH SAFETY under the at-least-once requeue machine: the merge is
-    * not idempotent (folding the same delta twice double-counts SUM/COUNT
-    * partials), and the two renames are not atomic together — so the run
-    * is made recoverable instead:
-    *   - every published state dir carries `_maintained_by-<jobId>`
-    *     marker files (underscore-prefixed → invisible to parquet
-    *     readers), carried forward across merges. A requeued job whose id
-    *     is already marked in the live state skips the merge and only
-    *     (re)publishes its result — the crash happened after the swap.
-    *   - [[recoverState]] runs before the merge: a live dir missing
-    *     because a prior attempt died between retire and publish is
-    *     restored from the surviving complete `.next-*` (preferred: it
-    *     holds the finished merge) or `.old-*` (pre-merge state) dir —
-    *     never treated as "no history". */
+  /** One maintenance run: fold ONLY the delta slice into the stored
+    * aggregate ([[graft.streaming.PreAggMaintainer.fold]] — the one
+    * maintained-state store, shared with the streaming maintainer) and
+    * publish the state it left as the job result. The job id is the
+    * fold's token: a requeued job whose fold was already published before
+    * its runner died (crash between publish and COMPLETED) only
+    * republishes its result, never folds its delta twice. The fold and
+    * the result copy hold the state path's lock, so two drainers' jobs on
+    * one aggregate run one after the other and each result is the state
+    * its own fold published. */
   private def runMaintenance(spark: SparkSession, root: String, sfDir: String,
                              jobId: String, cubeName: String, paName: String,
                              predicate: String): Unit = {
@@ -219,85 +204,13 @@ object JobService {
       throw new IllegalArgumentException(s"unknown cube $cubeName"))
     val pa = cube.preAggs.find(_.name == paName).getOrElse(
       throw new IllegalArgumentException(s"unknown preagg $cubeName.$paName"))
-    val statePath = aggStatePath(root, cubeName, paName)
-    recoverState(statePath)
-    val live = new java.io.File(statePath)
-    val haveState = live.exists()
-    val priorMarkers = if (haveState) markerNames(live) else Seq.empty
-    if (priorMarkers.contains(markerName(jobId))) {
-      // This job's merge is already in the published state (crash between
-      // publish and the COMPLETED transition): idempotent completion.
+    val statePath = s"$root/preagg_state/$cubeName.$paName"
+    PreAggMaintainer.locked(statePath) {
+      PreAggMaintainer.fold(spark, sfDir, cube, pa, statePath,
+        cube.fact(spark, sfDir).where(expr(predicate)), jobId)
       spark.read.parquet(statePath)
         .write.mode(SaveMode.Overwrite).parquet(resultPath(root, jobId))
-      return
     }
-    val delta = cube.fact(spark, sfDir).where(expr(predicate))
-    val part = MdxLowerer.preAggregateSlice(spark, sfDir, cube, pa, delta)
-    val merged =
-      if (haveState)
-        MdxLowerer.mergePreAggs(cube, pa,
-          Seq(spark.read.parquet(statePath), part))
-      else part
-    val next = new java.io.File(s"$statePath.next-$jobId")
-    merged.write.mode(SaveMode.Overwrite).parquet(next.getPath)
-    (priorMarkers :+ markerName(jobId)).distinct.foreach { n =>
-      new java.io.File(next, n).createNewFile()
-    }
-    val retired = new java.io.File(s"$statePath.old-$jobId")
-    if (haveState && !live.renameTo(retired))
-      throw new java.io.IOException(s"could not retire $statePath")
-    if (!next.renameTo(live)) {
-      if (haveState) retired.renameTo(live) // undo the retire; state survives
-      throw new java.io.IOException(s"could not publish $statePath")
-    }
-    delete(retired)
-    spark.read.parquet(statePath)
-      .write.mode(SaveMode.Overwrite).parquet(resultPath(root, jobId))
-  }
-
-  private def markerName(jobId: String) = s"_maintained_by-$jobId"
-
-  private def markerNames(dir: java.io.File): Seq[String] =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .map(_.getName).filter(_.startsWith("_maintained_by-")).toSeq
-
-  /** Restore a maintenance state dir left torn by a crashed swap, then
-    * sweep swap leftovers. If the live dir is missing, a prior attempt
-    * died between retiring the old state and publishing the new one: the
-    * finished merge survives as a complete `.next-<jobId>` dir (parquet
-    * commit protocol wrote its `_SUCCESS`) — rename it into place, so the
-    * claiming job's marker check then turns the re-run into an idempotent
-    * republish. With no complete next, the retired `.old-<jobId>` dir IS
-    * the pre-merge state — restore it and let the re-run merge normally.
-    * Either way a requeued job can never observe "no state" and rebuild
-    * from the delta alone. */
-  private def recoverState(statePath: String): Unit = {
-    val live = new java.io.File(statePath)
-    val parent = live.getParentFile
-    val name = live.getName
-    val siblings = Option(parent.listFiles()).getOrElse(Array.empty[java.io.File])
-    val nexts = siblings.filter(_.getName.startsWith(s"$name.next-"))
-    val olds = siblings.filter(_.getName.startsWith(s"$name.old-"))
-    if (!live.exists()) {
-      val completeNext =
-        nexts.find(n => new java.io.File(n, "_SUCCESS").exists())
-      val restored = completeNext.orElse(olds.headOption)
-      restored.foreach { d =>
-        if (!d.renameTo(live))
-          throw new java.io.IOException(s"could not restore $statePath from ${d.getName}")
-      }
-    }
-    // Leftovers from a crash after publish (orphaned .old-*) or before
-    // retire (incomplete .next-*) are garbage once live exists.
-    if (live.exists()) {
-      nexts.filter(_.exists()).foreach(delete)
-      olds.filter(_.exists()).foreach(delete)
-    }
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete(); ()
   }
 
   /** Crash recovery sweep: a runner that died mid-execution leaves its

@@ -1,5 +1,6 @@
 package graft.sink
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -77,10 +78,11 @@ object Sinks {
 
   /** Partitioned parquet append with upsert-by-key semantics (S8: the
     * Postgres ON CONFLICT analogue — existing keys are replaced by the
-    * incoming batch; at scale this is a Delta MERGE). */
+    * incoming batch; at scale this is a Delta MERGE). The merged dataset
+    * is written once, to `<path>_tmp`, and published by [[swap]]. */
   def upsertParquet(df: DataFrame, path: String, keyCols: Seq[String]): Unit = {
     val spark = df.sparkSession
-    val target = new org.apache.hadoop.fs.Path(path)
+    val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Only a genuinely absent target means "first write": any OTHER read
     // failure must propagate — swallowing it would overwrite (lose) the
@@ -90,10 +92,9 @@ object Sinks {
       else spark.read.parquet(path)
         .join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
         .unionByName(df)
-    val tmp = path + "_tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    val tmp = new Path(path + "_tmp")
+    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    swap(fs, tmp, target)
   }
 
   /** Small-file compaction: rewrite a parquet dataset into
@@ -102,32 +103,38 @@ object Sinks {
     * micro-batches or per-key upserts degrades into millions of KB-sized
     * files whose open/footer cost dominates scans; compaction restores
     * scan-speed reads without touching a single row). Same
-    * write-tmp-then-swap publish as [[upsertParquet]]; rows and schema
-    * are asserted unchanged by ServiceSpec. Returns the file count. */
+    * write-tmp-then-[[swap]] publish as [[upsertParquet]]; rows and
+    * schema are asserted unchanged by ServiceSpec. Returns the file
+    * count. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
                      targetRows: Long): Int = {
     require(targetRows > 0, "targetRows must be positive")
     val df = spark.read.parquet(path)
     val n = df.count()
     val nFiles = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-    val tmp = path + "_compact_tmp"
-    df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
+    val tmp = new Path(path + "_compact_tmp")
+    df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // Publish by RENAME, not rewrite: a read-back rewrite would re-split
     // on maxPartitionBytes and undo the very file layout being built.
-    // retire-then-swap keeps the old generation until the new one is
-    // in place (the JobService .old discipline, minus its job marker).
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "_compact_old")
+    swap(tmp.getFileSystem(spark.sparkContext.hadoopConfiguration), tmp, new Path(path))
+    nFiles
+  }
+
+  /** Publish the finished dataset `staged` at `target` by rename:
+    * retire the live generation to `<target>_old`, rename `staged` into
+    * place, then drop the retired one. The old generation survives until
+    * the new one is in place, and a failed publish renames it back, so
+    * the dataset never vanishes. */
+  private def swap(fs: FileSystem, staged: Path, target: Path): Unit = {
+    val old = new Path(target.toString + "_old")
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: could not retire $path")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p)) {
-      fs.rename(old, p) // roll back so the dataset never vanishes
-      throw new java.io.IOException(s"compact: could not publish $tmp")
+    val hadLive = fs.exists(target)
+    if (hadLive && !fs.rename(target, old))
+      throw new java.io.IOException(s"could not retire $target")
+    if (!fs.rename(staged, target)) {
+      if (hadLive) fs.rename(old, target) // roll back
+      throw new java.io.IOException(s"could not publish $staged")
     }
     fs.delete(old, true)
-    nFiles
   }
 }

@@ -131,4 +131,32 @@ class JobsConcurrencySpec extends AnyFunSuite {
     // the orphan's RUNNING row plus generation 2's one claim
     assertExactlyOnce(root, id, Seq(2L), 2L, "requeued")
   }
+
+  test("two concurrent drainers fold two maintenance jobs into one pre-aggregate: " +
+    "both COMPLETED, no delta lost") {
+    warmed
+    import org.apache.spark.sql.functions.col
+    val cube = graft.mdx.SalesCube.cube
+    val pa = cube.preAggs.find(_.name == "base").get
+    def maintain(root: String, slice: Int) = JobService.submit(spark, root, "SALES",
+      s"MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 = $slice")
+    // Warm the fold's codegen on the main thread too (see `warmed`).
+    val warmRoot = java.nio.file.Files
+      .createTempDirectory("graft_jobs_conc_maint_warm").toString
+    maintain(warmRoot, 2)
+    JobService.runPending(spark, warmRoot, sf)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_jobs_conc_maint").toString
+    // Disjoint slices: each drainer claims one job, and both fold into
+    // Sales.base from the same (empty) prior state.
+    val ids = Seq(0, 1).map(maintain(root, _))
+    race(root, 0L, "maintenance")
+    ids.foreach(assertExactlyOnce(root, _, Seq(1L), 1L, "maintenance"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(pa.grainCols.map(col): _*).collect().map(_.toSeq).toSeq
+    val union = graft.mdx.MdxLowerer.preAggregateSlice(spark, sf, cube, pa,
+      cube.fact(spark, sf).where(col("l_orderkey") % 7 < 2))
+    assert(rows(spark.read.parquet(s"$root/preagg_state/Sales.base")) == rows(union),
+      "a concurrent fold lost the other job's delta")
+  }
 }

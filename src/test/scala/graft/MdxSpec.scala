@@ -145,22 +145,58 @@ class MdxLowererSpec extends AnyFunSuite {
     assert(rows(merged) == rows(full))
   }
 
-  test("one-pass sliced pre-aggregation equals per-slice builds") {
-    import org.apache.spark.sql.functions.{col, pmod}
+  /** The fact sources `df`'s executed plan scans: a session
+    * pre-aggregate (by name, told apart by its columns) or the lineitem
+    * file. The walk stops at cached leaves, so an artifact's own build
+    * scan does not count; dimension-file scans are not fact sources. */
+  private def factSources(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val cube = SalesCube.cube
-    val pa = cube.preAggs.head
-    val fact = cube.fact(spark, sf)
-    val attached = MdxLowerer.attachForPreAgg(spark, sf, cube, pa, fact)
-    val sliced = MdxLowerer.preAggregateSliced(cube, pa, attached,
-      pmod(col("l_orderkey"), org.apache.spark.sql.functions.lit(3)))
-    val key = pa.grainCols
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(key.map(col): _*).collect().map(_.toSeq).toSeq
-    (0 until 3).foreach { v =>
-      val fromSliced = sliced.where(col("__slice") === v).drop("__slice")
-      val independent = MdxLowerer.preAggregateSlice(spark, sf, cube, pa,
-        fact.where(pmod(col("l_orderkey"), org.apache.spark.sql.functions.lit(3)) === v))
-      assert(rows(fromSliced) == rows(independent), s"slice $v diverges")
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec =>
+        val cols = s.relation.output.map(_.name)
+        cube.preAggs.filter(pa => cols == pa.grainCols ++ cube.measures.map(_.name))
+          .map(_.name)
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") =>
+        Seq("lineitem")
+      case _ => p.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).toSet
+  }
+
+  test("the navigator serves each pivot from the narrowest covering pre-aggregate") {
+    val partLeaf = MdxLowerer.run(spark, sf,
+      """SELECT {[Measures].[sum_qty]} ON COLUMNS,
+        | NON EMPTY [Part].[ByBrand].[Part].MEMBERS ON ROWS FROM [Sales]""".stripMargin)
+    def q(name: String) = SparkEntry.queries(name)(spark, sf)
+    // (pivot, the columns it references, the source the navigator picks)
+    val geo = Seq("r_regionkey", "n_nationkey", "n_name")
+    val cases = Seq(
+      ("q30", q("q30_mdx_nation_revenue"), geo, "base"),
+      ("q31", q("q31_mdx_crossjoin_slicer"),
+        Seq("r_regionkey", "r_name", "p_brand", "order_year"), "base"),
+      ("q32", q("q32_mdx_levels_allmeasures"), Seq("r_regionkey", "r_name"), "base"),
+      ("q33", q("q33_mdx_nonempty_off"), geo :+ "p_brand", "base"),
+      ("q34", q("q34_mdx_properties"), geo :+ "r_name", "base"),
+      ("q35", q("q35_mdx_slicer_tuple"),
+        Seq("p_brand", "r_regionkey", "order_year"), "base"),
+      // Time alone fits both grains: the narrower suppgeo wins.
+      ("q36", q("q36_mdx_month_drill"), Seq("order_year", "order_month"), "suppgeo"),
+      ("q37", q("q37_mdx_supplier_nation"), Seq("sn_nationkey", "sn_name"), "suppgeo"),
+      // SalesOld declares no pre-aggregate; the part leaf fits no grain.
+      ("q38", q("q38_mdx_oldcube"), geo, "lineitem"),
+      ("part leaf", partLeaf, Seq("p_brand", "p_partkey", "p_name"), "lineitem"))
+    cases.foreach { case (label, df, cols, want) =>
+      assert(factSources(df) == Set(want), s"$label scans ${factSources(df)}")
+      val cube = if (label == "q38") SalesCube.oldCube else SalesCube.cube
+      val covering = MdxLowerer.coveringAggregate(spark, sf, cube, cols)
+      assert(covering.map(factSources).getOrElse(Set("lineitem")) == Set(want),
+        s"$label: coveringAggregate disagrees with lower")
     }
   }
 }

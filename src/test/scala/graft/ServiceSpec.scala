@@ -157,6 +157,10 @@ class ServiceSpec extends AnyFunSuite {
     val up = spark.read.parquet(s"$dir/up").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(up == Map(1L -> "v2", 2L -> "w"))
+    // Published by rename: neither the staged copy nor the retired
+    // generation is left behind.
+    val left = new java.io.File(dir).list().filter(n => n.endsWith("_tmp") || n.endsWith("_old"))
+    assert(left.isEmpty, s"upsert left ${left.toSeq}")
   }
 
   test("compactParquet: bin-packs small files, preserves rows/schema, and survives re-reads") {

@@ -665,7 +665,8 @@ class StreamingSpec extends AnyFunSuite {
         .filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(part.toPath, dir.resolve(s"slice_$i.parquet"))
     }
-    val maintainer = new PreAggMaintainer(spark, sf, cube, pa)
+    val maintainer = new PreAggMaintainer(spark, sf, cube, pa,
+      java.nio.file.Files.createTempDirectory("preagg_state").resolve("Sales.base").toString)
     val stream = spark.readStream.schema(fact.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
     val q = maintainer.runner(stream,
@@ -678,6 +679,57 @@ class StreamingSpec extends AnyFunSuite {
     // Folding three deltas must be BIT-identical to one full build.
     assert(rows(maintained) == rows(full))
   }
+  test("a restarted maintainer continues from its stored aggregate; a replayed batch is not folded twice") {
+    import graft.mdx.SalesCube
+    import graft.streaming.PreAggMaintainer
+    val cube = SalesCube.cube
+    val pa = cube.preAggs.head
+    val fact = Tables.lineitem(spark, sf)
+    def slice(i: Int) = fact.where(col("l_orderkey") % 3 === i)
+    val dir = java.nio.file.Files.createTempDirectory("preagg_restart")
+    def addSlice(i: Int): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("preagg_slice").toString
+      slice(i).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, dir.resolve(s"slice_$i.parquet"))
+    }
+    val statePath = java.nio.file.Files.createTempDirectory("preagg_state")
+      .resolve("Sales.base").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("preagg_ckpt").toString
+    def drain(): PreAggMaintainer = {
+      val m = new PreAggMaintainer(spark, sf, cube, pa, statePath)
+      val stream = spark.readStream.schema(fact.schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val q = m.runner(stream, ckpt)
+      assert(q.awaitTermination(180000), "maintainer did not drain")
+      q.exception.foreach(e => fail("maintainer failed", e))
+      m
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(pa.grainCols.map(col): _*).collect().map(_.toSeq).toSeq
+    val full = rows(graft.mdx.MdxLowerer.preAggregateSlice(spark, sf, cube, pa, fact))
+
+    // 1. Fold slices 0 and 1.
+    addSlice(0); addSlice(1)
+    drain()
+    // 2. A NEW maintainer on the same state path and checkpoint sees only
+    //    slice 2 on its stream, and must fold it into the stored
+    //    aggregate — not into an empty one.
+    addSlice(2)
+    val restarted = drain()
+    assert(rows(restarted.snapshot.get) == full,
+      "the restarted maintainer lost the folds made before the restart")
+    // 3. Redelivering a batch under a token the state already carries is
+    //    a no-op: the SUM/COUNT partials are not counted twice.
+    val marked = new java.io.File(statePath).list()
+      .filter(_.startsWith("_maintained_by-")).map(_.stripPrefix("_maintained_by-"))
+    assert(marked.length == 3, s"one marker per folded batch: ${marked.toSeq}")
+    PreAggMaintainer.fold(spark, sf, cube, pa, statePath, slice(0), marked.head)
+    assert(rows(restarted.snapshot.get) == full,
+      "a replayed batch was folded twice")
+  }
+
   test("multimodal decode runs unchanged on a stream and equals the batch q43") {
     import graft.ext.Multimodal
     // The decode stage is a stateless typed mapPartitions — the same
