@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided TPC-H-ish star schema (TESTDATA.md).
   *
@@ -14,8 +15,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Each table file's schema, per session and (path, length, mtime):
+    * inferring it runs a Spark job over the file's footer, reading with a
+    * given schema runs none. Weak in the session, so a dropped session's
+    * entries go with it. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]]())
+
+  /** Read table `name`, inferring its schema only on the first load of the
+    * file's current version in this session. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val f = new java.io.File(path)
+    val key = (path, f.length, f.lastModified)
+    val known = schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    val schema = Option(known.get(key)).getOrElse {
+      val s = spark.read.parquet(path).schema
+      known.put(key, s)
+      s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, d: String): DataFrame    = load(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = load(spark, d, "nation")

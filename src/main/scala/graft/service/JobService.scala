@@ -2,10 +2,19 @@ package graft.service
 
 import graft.mdx.MdxLowerer
 import graft.streaming.PreAggMaintainer
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Async job lifecycle mirroring the reference's jobs table
   * (`database/migrations/002_jobs_table.sql:5-14`: id, catalog_code,
@@ -14,26 +23,38 @@ import org.apache.spark.sql.streaming.Trigger
   * (`backend/db_runner.py:26-103`).
   *
   * Storage is an APPEND-ONLY event log, and the log is the only job
-  * state: submissions and status transitions are immutable parquet
-  * files; the current state of a job is its latest event (window-latest
-  * per id, [[readJobs]]). This is the scalable twin of the reference's
-  * `UPDATE jobs SET status=...` — at 100 TB concurrency you never
-  * rewrite a state file, you append and compact (Delta MERGE being the
-  * managed form). Results are per-job parquet, keyed like the
-  * reference's request-id-keyed relay files.
+  * state: every submission and status transition is an immutable
+  * one-row parquet file in `job_events/`. This is the scalable twin of
+  * the reference's `UPDATE jobs SET status=...` — you never rewrite a
+  * state file, you append and compact (Delta MERGE being the managed
+  * form). Results are per-job parquet, keyed like the reference's
+  * request-id-keyed relay files.
   *
-  * THE RUNNING EVENT IS THE CLAIM (the reference's one-write
-  * `UPDATE ... SET status='RUNNING' WHERE status='PENDING'`). A job's
-  * generation is its count of PENDING events (the submission plus one
-  * per requeue, `Job.attempts`). A runner claims generation g by
-  * publishing its RUNNING event under the fixed name
-  * `<id>.gen-<g>.parquet`, create-if-absent: exactly one runner per
-  * generation succeeds and executes; a loser appends nothing. A runner's
-  * snapshot may be stale, and the claim is still safe: RUNNING is only
-  * ever written by a claim, and a requeue or the sweep's "gave up"
-  * FAILED only ever follows a RUNNING event — so every non-PENDING state
-  * of generation g already holds g's claim file, and a runner acting on
-  * an out-of-date PENDING snapshot of g loses the create.
+  * THE LOG CONTRACT IS THE FILE NAMES. Every event of job `id` is named
+  * `<id>.<phase>-<g>.parquet`: phase `pending`, `running` or `done`, and
+  * `g` the job's generation — 1 for the submission, plus one per
+  * requeue (`Job.attempts`). Each name is created create-if-absent: the
+  * event is written to a temp file beside the log and hard-linked in,
+  * and the link fails if the name exists (the local-FS twin of a
+  * storage conditional put). So:
+  *  - `running-g` IS THE CLAIM (the reference's one-write `UPDATE ...
+  *    SET status='RUNNING' WHERE status='PENDING'`): exactly one runner
+  *    per generation links it and executes; a loser appends nothing;
+  *  - `done-g` lands COMPLETED or FAILED at most once per generation;
+  *  - `pending-(g+1)` lands a requeue at most once.
+  * A job's current state is its highest (g, phase) name ([[heads]], the
+  * one rule `status`, `runPending`, `requeueStale`, the streaming
+  * runner and [[readJobs]] share), so finding a job's state is a
+  * directory listing, and the driver reads only the files of the jobs
+  * it acts on. A runner's listing may be stale and the claim is still
+  * safe: `running-g` is only ever linked by a claim, and a requeue or a
+  * sweep's "gave up" FAILED only ever follows it — so every state past
+  * PENDING of generation g already holds g's claim name, and a runner
+  * acting on an out-of-date PENDING of g loses the link.
+  *
+  * Event files are written and read with parquet-hadoop on the driver:
+  * nothing on the job path runs a Spark job but the job's own query and
+  * its result write.
   *
   * Two runners drive PENDING jobs: the batch `runPending` loop and a
   * Structured Streaming `streamingRunner` (`readStream` over the
@@ -47,10 +68,8 @@ object JobService {
       created_at: java.sql.Timestamp, updated_at: java.sql.Timestamp,
       attempts: Long)
 
-  /** One immutable event of the log. Not `private`: Spark's generated
-    * encoder for a private case class fails to compile and falls back
-    * to the interpreter on every append. */
-  final case class JobEvent(
+  /** One immutable event of the log: the one row of one event file. */
+  private final case class JobEvent(
       id: String, catalog_code: String, mdx_query: String, status: String,
       error_message: String, duration_seconds: Double,
       event_at: java.sql.Timestamp, seq: Long)
@@ -61,104 +80,166 @@ object JobService {
   private def eventsPath(root: String) = s"$root/job_events"
   private def resultPath(root: String, id: String) = s"$root/results/$id"
   private val seqGen = new java.util.concurrent.atomic.AtomicLong()
-  private val eventSchema = Encoders.product[JobEvent].schema
+
+  /** The log's columns as Spark reads them. */
+  val eventSchema: StructType = Encoders.product[JobEvent].schema
+
+  /** One event file's parquet schema: the physical types Spark writes for
+    * [[eventSchema]] with the session's TIMESTAMP_MICROS output, so Spark
+    * and DuckDB read the log as they always have. */
+  private val eventType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary id (STRING);
+      |  optional binary catalog_code (STRING);
+      |  optional binary mdx_query (STRING);
+      |  optional binary status (STRING);
+      |  optional binary error_message (STRING);
+      |  required double duration_seconds;
+      |  optional int64 event_at (TIMESTAMP(MICROS,true));
+      |  required int64 seq;
+      |}""".stripMargin)
+
+  /** A generation's phases in order; COMPLETED and FAILED share `done`. */
+  private val phases = Vector("pending", "running", "done")
+  private val EventName = s"""(.+)\\.(${phases.mkString("|")})-(\\d+)\\.parquet""".r
+
+  /** The name of job `id`'s `status` event in generation `gen`. */
+  private def eventName(id: String, status: String, gen: Long): String = {
+    val phase = status match {
+      case Pending => "pending"; case Running => "running"; case _ => "done"
+    }
+    s"$id.$phase-$gen.parquet"
+  }
+
+  /** A job's current event file, and its generation and phase. */
+  private final case class Head(id: String, gen: Long, phase: Int, name: String)
+
+  /** THE RULE for current state: per job, its highest (generation, phase)
+    * among `names`; the generation is the job's `attempts`. */
+  private def heads(names: Iterable[String]): Map[String, Head] =
+    names.collect { case n @ EventName(id, p, g) => Head(id, g.toLong, phases.indexOf(p), n) }
+      .groupBy(_.id).map { case (id, hs) => id -> hs.maxBy(h => (h.gen, h.phase)) }
+
+  /** The log's file names. Only an absent log is empty (the first submit
+    * has not landed); a log that cannot be listed throws — an unreadable
+    * log must never look like a log without jobs. */
+  private def names(root: String): Seq[String] = {
+    val dir = new java.io.File(eventsPath(root))
+    if (!dir.exists()) Nil
+    else Option(dir.list()).map(_.toSeq)
+      .getOrElse(throw new java.io.IOException(s"cannot list $dir"))
+  }
 
   /** Publish one event into the log as the file `name`, create-if-absent;
-    * false iff `name` already exists. */
-  private def publish(spark: SparkSession, root: String, e: JobEvent,
-                      name: String): Boolean = {
-    import spark.implicits._
-    // Concurrent appenders must never share an output-commit directory:
-    // two simultaneous FileOutputCommitter jobs on one path race on the
-    // SHARED `_temporary` dir — the first to finish cleans it up and
-    // deletes the other's in-flight attempt (surfaced by
-    // JobsConcurrencySpec as a chmod/no-such-file task failure). Each
-    // event therefore commits into its own staging dir and the finished
-    // part file is hard-linked into the log: `createLink` is atomic and
-    // fails if the name exists (`renameTo` would silently replace it) —
-    // the local-FS twin of a storage conditional put. The stat first
-    // lets a lost claim skip the Spark write.
+    * false iff `name` already exists. The stat first lets a lost claim
+    * skip the write. */
+  private def publish(root: String, e: JobEvent, name: String): Boolean = {
     val dir = new java.io.File(eventsPath(root))
     val target = new java.io.File(dir, name)
     if (target.exists()) return false
     dir.mkdirs()
-    val stage = new java.io.File(dir.getParentFile,
-      s".stage-${java.util.UUID.randomUUID()}")
+    val tmp = new java.io.File(root, s".event-${java.util.UUID.randomUUID()}.parquet")
     try {
-      Seq(e).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.getPath)
-      val part = Option(stage.listFiles()).getOrElse(Array.empty)
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(throw new java.io.IOException(s"no part file in $stage"))
-      java.nio.file.Files.createLink(target.toPath, part.toPath)
+      val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp.toPath))
+        .withConf(new PlainParquetConfiguration()).withType(eventType).build()
+      try w.write(new SimpleGroup(eventType)
+        .append("id", e.id).append("catalog_code", e.catalog_code)
+        .append("mdx_query", e.mdx_query).append("status", e.status)
+        .append("error_message", e.error_message)
+        .append("duration_seconds", e.duration_seconds)
+        .append("event_at", e.event_at.getTime * 1000L).append("seq", e.seq))
+      finally w.close()
+      java.nio.file.Files.createLink(target.toPath, tmp.toPath)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(stage)
+    } finally tmp.delete()
   }
 
-  /** The whole log. Only an absent log is empty (the first submit has not
-    * landed); any other read failure propagates — an unreadable log must
-    * never look like a log without jobs. */
-  private def events(spark: SparkSession, root: String): DataFrame =
-    if (!new java.io.File(eventsPath(root)).exists())
-      spark.emptyDataset(Encoders.product[JobEvent]).toDF()
-    else spark.read.schema(eventSchema).parquet(eventsPath(root))
+  /** Open a local parquet file on the driver. A plain (not Hadoop)
+    * configuration, here and in [[publish]]: loading a Hadoop
+    * `Configuration` per file took ten times the read itself. */
+  private def openParquet(path: java.nio.file.Path): ParquetFileReader =
+    ParquetFileReader.open(new LocalInputFile(path),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
 
-  /** Submit: append a PENDING event, return the job id (Q1). */
+  /** Read one event file on the driver. A corrupt file throws. */
+  private def read(root: String, name: String): JobEvent = {
+    val r = openParquet(java.nio.file.Paths.get(eventsPath(root), name))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val g: Group = new ColumnIOFactory().getColumnIO(schema)
+        .getRecordReader(r.readNextRowGroup(), new GroupRecordConverter(schema)).read()
+      def str(f: String) = if (g.getFieldRepetitionCount(f) == 0) null else g.getString(f, 0)
+      JobEvent(str("id"), str("catalog_code"), str("mdx_query"), str("status"),
+        str("error_message"), g.getDouble("duration_seconds", 0),
+        new java.sql.Timestamp(g.getLong("event_at", 0) / 1000L), g.getLong("seq", 0))
+    } finally r.close()
+  }
+
+  /** The job behind a head: its current event, plus its submission for
+    * `created_at`. */
+  private def job(root: String, h: Head): Job = {
+    val e = read(root, h.name)
+    val first = eventName(h.id, Pending, 1)
+    val created = if (h.name == first) e.event_at else read(root, first).event_at
+    Job(h.id, e.catalog_code, e.mdx_query, e.status, e.error_message,
+      e.duration_seconds, created, e.event_at, h.gen)
+  }
+
+  /** Submit: append the job's `pending-1` event, return the job id (Q1). */
   def submit(spark: SparkSession, root: String, catalogCode: String,
              mdx: String): String = {
     val id = java.util.UUID.randomUUID().toString
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    publish(spark, root,
+    publish(root,
       JobEvent(id, catalogCode, mdx, Pending, "", 0.0, now, seqGen.incrementAndGet()),
-      s"$id.parquet")
+      eventName(id, Pending, 1))
     id
   }
 
-  private def transition(spark: SparkSession, root: String, job: Job,
-                         status: String, error: String = "",
-                         duration: Double = 0.0,
-                         name: String = s"${java.util.UUID.randomUUID()}.parquet")
-      : Boolean = {
+  /** Append `job`'s `status` event of generation `gen`, create-if-absent. */
+  private def transition(root: String, job: Job, status: String, gen: Long,
+                         error: String = "", duration: Double = 0.0): Boolean = {
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    publish(spark, root, JobEvent(job.id, job.catalog_code, job.mdx_query,
-      status, error, duration, now, seqGen.incrementAndGet()), name)
+    publish(root, JobEvent(job.id, job.catalog_code, job.mdx_query,
+      status, error, duration, now, seqGen.incrementAndGet()),
+      eventName(job.id, status, gen))
   }
 
-  /** Current state: latest event per job id, with `attempts` = the job's
-    * PENDING events (its claim generation and its retry count). */
+  /** Current state of every job, one row each (the columns of [[Job]]):
+    * the rule picks each job's current file from the names, and Spark
+    * reads the log's rows of those files and of the jobs' submissions. */
   def readJobs(spark: SparkSession, root: String): DataFrame = {
-    // Wall-clock first: the per-JVM seq only breaks same-millisecond ties
-    // within one process — a restarted runner's counter restarts at 0, so
-    // seq must never dominate cross-process ordering.
-    val w = Window.partitionBy(col("id")).orderBy(desc("event_at"), desc("seq"))
-    val job = Window.partitionBy(col("id"))
-    events(spark, root)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("created_at", min(col("event_at")).over(job))
-      .withColumn("attempts", count(when(col("status") === Pending, 1)).over(job))
-      .where(col("rn") === 1)
+    import spark.implicits._
+    val hs = heads(names(root)).values.toSeq
+    if (hs.isEmpty) return spark.emptyDataset[Job].toDF()
+    val ev = spark.read.schema(eventSchema).parquet(eventsPath(root))
+      .withColumn("name", regexp_extract(input_file_name(), "[^/]+$", 0))
+    val created = ev.join(hs.map(h => eventName(h.id, Pending, 1)).toDF("name"), "name")
+      .select(col("id"), col("event_at").as("created_at"))
+    ev.join(hs.map(h => (h.name, h.gen)).toDF("name", "attempts"), "name")
+      .join(created, Seq("id"), "left")
       .select(col("id"), col("catalog_code"), col("mdx_query"), col("status"),
         col("error_message"), col("duration_seconds"), col("created_at"),
         col("event_at").as("updated_at"), col("attempts"))
   }
 
-  /** Poll (Q3): current status row for a job id. */
-  def status(spark: SparkSession, root: String, id: String): Option[Job] = {
-    import spark.implicits._
-    readJobs(spark, root).where(col("id") === id).as[Job].collect().headOption
-  }
+  /** Poll (Q3): current status row for a job id. Lists the log and reads
+    * only this job's current file and its submission. */
+  def status(spark: SparkSession, root: String, id: String): Option[Job] =
+    heads(names(root).filter(_.startsWith(s"$id."))).get(id).map(job(root, _))
 
   private def executeOne(spark: SparkSession, root: String, sfDir: String,
                          job: Job): Unit = {
     // Claim this snapshot's generation (see the object doc): only the
-    // runner whose RUNNING event lands under the generation's name
-    // executes, so COMPLETED is written at most once per generation
+    // runner whose `running-g` name lands executes, and COMPLETED or
+    // FAILED lands at most once per generation under `done-g`
     // (JobsConcurrencySpec drives this under real thread contention).
     // Across generations the sweep's liveness contract applies:
     // requeueing a slow-but-alive claimant re-opens the job by design.
-    if (!transition(spark, root, job, Running,
-        name = s"${job.id}.gen-${job.attempts}.parquet")) return
+    val g = job.attempts
+    if (!transition(root, job, Running, g)) return
     val t0 = System.nanoTime()
     try {
       job.mdx_query match {
@@ -168,11 +249,11 @@ object JobService {
           MdxLowerer.run(spark, sfDir, mdx)
             .write.mode(SaveMode.Overwrite).parquet(resultPath(root, job.id))
       }
-      transition(spark, root, job, Completed,
+      transition(root, job, Completed, g,
         duration = (System.nanoTime() - t0) / 1e9)
     } catch {
       case e: Exception =>
-        transition(spark, root, job, Failed,
+        transition(root, job, Failed, g,
           error = Option(e.getMessage).getOrElse(e.getClass.getName).take(500),
           duration = (System.nanoTime() - t0) / 1e9)
     }
@@ -214,60 +295,54 @@ object JobService {
   }
 
   /** Crash recovery sweep: a runner that died mid-execution leaves its
-    * claim as an orphaned RUNNING event (the claim cannot survive its
-    * claimant). Requeue any RUNNING job whose last transition is older
-    * than `staleAfterSeconds` by appending a fresh PENDING event — the
+    * claim as an orphaned `running-g` event (the claim cannot survive its
+    * claimant). Requeue any job whose current event is a claim older than
+    * `staleAfterSeconds` by appending its `pending-(g+1)` event — the
     * append-only twin of the reference runner's stale-job reset
     * (`backend/db_runner.py`'s status-machine recovery). The PENDING
     * event opens the next generation, whose claim name is still free,
-    * so any runner then completes the job normally. Returns the
-    * requeued ids.
+    * so any runner then completes the job normally. Sweeps may run
+    * concurrently: the `pending-(g+1)` name lands once, and only the
+    * sweep that linked it returns the id. Returns the requeued ids.
     *
     * Liveness contract: `staleAfterSeconds` must exceed the longest
     * legitimate job runtime — requeueing a claim whose owner is merely
     * SLOW (not dead) re-opens the job to a second execution. Timeout-
     * based recovery cannot distinguish the two without owner heartbeats;
     * deployments running jobs longer than the sweep threshold should
-    * have runners heartbeat by re-appending RUNNING. Run one sweep at a
-    * time: two sweeps requeueing the same claim append two PENDING
-    * events, and a runner that saw only the first claims a generation
-    * the second has already passed.
+    * have runners heartbeat by re-appending RUNNING.
     *
     * BOUNDED RETRY (ref `scanner/DGIS_SCAN_2_stable.py:152-167` — 3
     * tries, exponential spacing): a job that keeps killing its runner
     * would otherwise requeue forever. The attempt count is
     * `Job.attempts` — the log IS the retry counter. A stale claim with
-    * `maxAttempts` tries transitions FAILED instead of PENDING; below the
-    * cap, attempt k is only swept after `staleAfterSeconds * 2^(k-1)` —
-    * the reference's 2^n backoff re-expressed on the sweep horizon. */
+    * `maxAttempts` tries transitions FAILED (its `done-g`) instead of
+    * PENDING; below the cap, attempt k is only swept after
+    * `staleAfterSeconds * 2^(k-1)` — the reference's 2^n backoff
+    * re-expressed on the sweep horizon. */
   def requeueStale(spark: SparkSession, root: String,
                    staleAfterSeconds: Long, maxAttempts: Int = 3): Seq[String] = {
-    import spark.implicits._
     val now = System.currentTimeMillis()
-    val stale = readJobs(spark, root).where(col("status") === Running)
-      .as[Job].collect().toSeq.filter { j =>
+    val stale = heads(names(root)).values.filter(_.phase == 1).toSeq
+      .map(job(root, _)).filter { j =>
         val horizonMs =
           staleAfterSeconds * 1000L * (1L << math.min(j.attempts - 1, 16L).toInt)
         j.updated_at.getTime < now - horizonMs
       }
     stale.flatMap { j =>
       if (j.attempts >= maxAttempts) {
-        transition(spark, root, j, Failed,
+        transition(root, j, Failed, j.attempts,
           error = s"gave up after ${j.attempts} attempts (max $maxAttempts)")
         None
-      } else {
-        transition(spark, root, j, Pending)
-        Some(j.id)
-      }
+      } else Option.when(transition(root, j, Pending, j.attempts + 1))(j.id)
     }
   }
 
-  /** Batch runner loop body (Q2): claim and execute PENDING jobs. */
+  /** Batch runner loop body (Q2): claim and execute PENDING jobs. Reads
+    * the files of the PENDING jobs only. */
   def runPending(spark: SparkSession, root: String, sfDir: String): Int = {
-    import spark.implicits._
-    val pending = readJobs(spark, root).where(col("status") === Pending)
-      .as[Job].collect()
-    pending.foreach(executeOne(spark, root, sfDir, _))
+    val pending = heads(names(root)).values.filter(_.phase == 0).toSeq
+    pending.foreach(h => executeOne(spark, root, sfDir, job(root, h)))
     pending.length
   }
 
@@ -286,10 +361,9 @@ object JobService {
         // if its PENDING event arrives late in this microbatch.
         val ids = batch.select("id").distinct().as[String].collect()
         if (ids.nonEmpty) {
-          val current = readJobs(spark, root)
-            .where(col("id").isin(ids.toSeq: _*) && col("status") === Pending)
-            .as[Job].collect()
-          current.foreach(executeOne(spark, root, sfDir, _))
+          val current = heads(names(root))
+          ids.flatMap(current.get).filter(_.phase == 0)
+            .foreach(h => executeOne(spark, root, sfDir, job(root, h)))
         }
         ()
       }
@@ -298,7 +372,19 @@ object JobService {
       .start()
   }
 
-  /** Completed-job result (the JSONB payload analogue). */
-  def result(spark: SparkSession, root: String, id: String): DataFrame =
-    spark.read.parquet(resultPath(root, id))
+  /** Completed-job result (the JSONB payload analogue), read with the
+    * schema Spark wrote into its part files' footers: inferring it would
+    * run a Spark job on every result read. */
+  def result(spark: SparkSession, root: String, id: String): DataFrame = {
+    val dir = java.nio.file.Paths.get(resultPath(root, id))
+    val stored = Option(dir.toFile.list()).getOrElse(Array.empty[String])
+      .find(n => n.startsWith("part-") && n.endsWith(".parquet")).flatMap { n =>
+        val r = openParquet(dir.resolve(n))
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      }
+    stored.fold(spark.read)(s => spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+      .parquet(dir.toString)
+  }
 }

@@ -13,15 +13,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * Repeated over rounds with varying backlog sizes and a deterministic
   * stagger so the interleaving actually varies (both drainers released
   * by a barrier), and once for a requeued job, whose generation 2 the
-  * drainers take from their snapshots of the log.
+  * drainers take from their snapshots of the log. Two requeue sweeps
+  * racing on one stale claim must open exactly one next generation.
   */
 class JobsConcurrencySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
   val mdx = "SELECT {[Measures].[sum_qty]} ON COLUMNS FROM [Sales]"
 
-  // Warm every codegen path the drainers hit (event-log append encoder,
-  // the readJobs windows, result write) on the MAIN thread first:
+  // Warm every codegen path the drainers hit (the job's query and its
+  // result write) on the MAIN thread first:
   // Janino's first compile of the same generated classes from two
   // threads at once can spuriously fail to resolve a nested-class
   // accessor (a compile-cache race, nothing to do with the claim under
@@ -87,7 +88,7 @@ class JobsConcurrencySpec extends AnyFunSuite {
     assert(completes == 1, s"$id landed COMPLETED $completes times ($label)")
     claimed.foreach { g =>
       val claims = events.where(col("status") === JobService.Running &&
-        col("file").endsWith(s"/$id.gen-$g.parquet")).count()
+        col("file").endsWith(s"/$id.running-$g.parquet")).count()
       assert(claims == 1, s"$id has $claims claim events for generation $g ($label)")
     }
     val all = events.where(col("status") === JobService.Running).count()
@@ -114,22 +115,55 @@ class JobsConcurrencySpec extends AnyFunSuite {
   test("two concurrent drainers race a requeued job's generation 2: " +
     "one claim, one COMPLETED") {
     warmed
-    import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_jobs_conc_requeued").toString
     val id = JobService.submit(spark, root, "SALES", mdx)
     // The claim a dead runner left for generation 1, written straight to
     // the public log contract (as StreamingJobRunnerSpec's orphans are).
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    Seq((id, "SALES", mdx, JobService.Running, "", 0.0, now, 0L))
-      .toDF("id", "catalog_code", "mdx_query", "status", "error_message",
-        "duration_seconds", "event_at", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$root/job_events")
+    JobLogFixture.linkEvent(spark, root, s"$id.running-1.parquet", id, mdx,
+      JobService.Running)
     assert(JobService.requeueStale(spark, root, 0) == Seq(id))
     assert(JobService.status(spark, root, id).get.attempts == 2)
     race(root, 37L, "requeued")
     // the orphan's RUNNING row plus generation 2's one claim
     assertExactlyOnce(root, id, Seq(2L), 2L, "requeued")
+  }
+
+  test("two concurrent requeue sweeps on one stale claim: one pending-(g+1), " +
+    "one sweep reports it") {
+    warmed
+    for (round <- 1 to 3) {
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft_jobs_conc_sweep_$round").toString
+      val id = JobService.submit(spark, root, "SALES", mdx)
+      JobLogFixture.linkEvent(spark, root, s"$id.running-1.parquet", id, mdx,
+        JobService.Running)
+      val requeued = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val threads = (1 to 2).map { t =>
+        new Thread(() => {
+          try {
+            gate.await()
+            JobService.requeueStale(spark, root, 0).foreach(requeued.add)
+          } catch { case e: Throwable => errs.add(e) }
+        }, s"sweeper-$t")
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(60000))
+      assert(errs.isEmpty, s"sweeper threw (round $round): ${errs.peek()}")
+      import scala.jdk.CollectionConverters._
+      assert(requeued.asScala.toSeq == Seq(id), s"round $round")
+      val pendings = new java.io.File(s"$root/job_events").list()
+        .filter(n => n.startsWith(s"$id.pending-")).sorted.toSeq
+      assert(pendings == Seq(s"$id.pending-1.parquet", s"$id.pending-2.parquet"),
+        s"round $round")
+      val events = spark.read.parquet(s"$root/job_events")
+      assert(events.where(org.apache.spark.sql.functions.col("status") ===
+        JobService.Pending).count() == 2, s"round $round")
+      val j = JobService.status(spark, root, id).get
+      assert(j.status == JobService.Pending && j.attempts == 2, s"round $round")
+    }
   }
 
   test("two concurrent drainers fold two maintenance jobs into one pre-aggregate: " +

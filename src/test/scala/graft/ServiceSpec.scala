@@ -65,10 +65,83 @@ class ServiceSpec extends AnyFunSuite {
     intercept[Exception](JobService.status(spark, root, id))
   }
 
+  test("submit, polls, an empty drain and a result read run no Spark job of their own") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_nospark").toString
+    var id = ""
+    val submitJobs = SparkJobCount(spark) {
+      assert(JobService.runPending(spark, root, sf) == 0) // an absent log
+      id = JobService.submit(spark, root, "SALES",
+        "SELECT {[Measures].[count_order]} ON COLUMNS, NON EMPTY [Customer].[Geo].[Region].MEMBERS ON ROWS FROM [Sales]")
+      (1 to 5).foreach(_ =>
+        assert(JobService.status(spark, root, id).get.status == JobService.Pending))
+    }
+    assert(submitJobs == 0, s"$submitJobs Spark jobs in submit and polls")
+    assert(JobService.runPending(spark, root, sf) == 1) // the job's query and result write
+    var result: org.apache.spark.sql.DataFrame = null
+    val readJobs = SparkJobCount(spark) {
+      assert(JobService.runPending(spark, root, sf) == 0)
+      assert(JobService.status(spark, root, id).get.status == JobService.Completed)
+      result = JobService.result(spark, root, id)
+    }
+    assert(readJobs == 0, s"$readJobs Spark jobs in an empty drain, a poll and a result read")
+    assert(result.schema == spark.read.parquet(s"$root/results/$id").schema)
+    assert(result.count() == 5)
+  }
+
+  test("a poll opens only its own job's files, whatever else the log holds") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_garbage_others").toString
+    val id = JobService.submit(spark, root, "SALES",
+      "SELECT {[Measures].[count_order]} ON COLUMNS FROM [Sales]")
+    val dir = new java.io.File(s"$root/job_events")
+    val phases = Seq("pending-1", "running-1", "done-1")
+    val others = (1 to 1000).map { i =>
+      val other = java.util.UUID.randomUUID().toString
+      java.nio.file.Files.write(new java.io.File(dir, s"$other.${phases(i % 3)}.parquet").toPath,
+        "not a parquet file".getBytes)
+      other
+    }
+    val j = JobService.status(spark, root, id).get
+    assert(j.id == id && j.status == JobService.Pending && j.attempts == 1)
+    // the other jobs' files really are unreadable
+    intercept[Exception](JobService.status(spark, root, others.head))
+  }
+
+  test("event file format: Spark's columns, types and footer schema; event_at to the millisecond") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_format").toString
+    val mdx = "SELECT {[Measures].[count_order]} ON COLUMNS FROM [Sales]"
+    val t0 = System.currentTimeMillis()
+    val id = JobService.submit(spark, root, "SALES", mdx)
+    val t1 = System.currentTimeMillis()
+    val file = s"$root/job_events/$id.pending-1.parquet"
+    def fields(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> f.dataType).toSeq
+    assert(fields(spark.read.parquet(file).schema) == fields(JobService.eventSchema))
+    val row = spark.read.schema(JobService.eventSchema).parquet(file).collect().toSeq
+    assert(row.size == 1)
+    val r = row.head
+    assert(r.getAs[String]("id") == id && r.getAs[String]("status") == JobService.Pending &&
+      r.getAs[String]("mdx_query") == mdx && r.getAs[String]("catalog_code") == "SALES" &&
+      r.getAs[String]("error_message") == "" && r.getAs[Double]("duration_seconds") == 0.0)
+    val at = r.getAs[java.sql.Timestamp]("event_at")
+    assert(at.getTime >= t0 && at.getTime <= t1 && at.getNanos % 1000000 == 0)
+    assert(JobService.status(spark, root, id).get.created_at == at)
+    // the parquet schema is the one Spark writes for the same row
+    JobLogFixture.linkEvent(spark, root, "spark.pending-1.parquet", "spark", mdx,
+      JobService.Pending)
+    def footer(f: String) = {
+      val rd = ParquetFileReader.open(new LocalInputFile(java.nio.file.Paths.get(f)))
+      try rd.getFooter.getFileMetaData.getSchema finally rd.close()
+    }
+    assert(footer(file) == footer(s"$root/job_events/spark.pending-1.parquet"))
+  }
+
   test("job events encode through generated code: no interpreter fallback on submit or run") {
-    // Every event append encodes a JobEvent; an encoder Janino cannot
-    // compile (a private case class) is retried — and logged as a
-    // fallback — on each append, since a failed compile is not cached.
+    // Events are written without Spark, so the job's own query is the
+    // only generated code here; a class Janino cannot compile is retried
+    // — and logged as a fallback — on every use, since a failed compile
+    // is not cached.
     import org.apache.logging.log4j.Level
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -406,13 +479,9 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
     // event. Simulate the orphan by appending the claim the dead runner
     // left (the log is the public storage contract), then requeue stale
     // claims and drain — COMPLETED exactly once for this job too.
-    import spark.implicits._
     val orphan = JobService.submit(spark, root, "SALES", mdx)
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    Seq((orphan, "SALES", mdx, JobService.Running, "", 0.0, now, 0L))
-      .toDF("id", "catalog_code", "mdx_query", "status", "error_message",
-        "duration_seconds", "event_at", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$root/job_events")
+    JobLogFixture.linkEvent(spark, root, s"$orphan.running-1.parquet", orphan, mdx,
+      JobService.Running)
     assert(JobService.status(spark, root, orphan).get.status == JobService.Running)
     // A drain while the claim looks live must NOT steal the job...
     assert(JobService.runPending(spark, root, sf) == 0)
@@ -425,19 +494,14 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
       .count() == 1, "orphaned job lands COMPLETED exactly once")
   }
 
-  // The dead runner's durable claim, written straight to the public log
-  // contract (same shape as the crash-recovery test above). Stamped NOW so
-  // it is the job's latest event; by the time the sweep reads the clock,
-  // the parquet append has advanced it past the claim, so staleAfter=0
-  // sees the claim as stale.
-  private def appendOrphanClaim(root: String, id: String, mdx: String): Unit = {
-    import spark.implicits._
-    val past = new java.sql.Timestamp(System.currentTimeMillis())
-    Seq((id, "SALES", mdx, JobService.Running, "", 0.0, past, 0L))
-      .toDF("id", "catalog_code", "mdx_query", "status", "error_message",
-        "duration_seconds", "event_at", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$root/job_events")
-  }
+  // The dead runner's durable claim of generation `gen`, written straight
+  // to the public log contract under its claim name (same shape as the
+  // crash-recovery test above). Stamped NOW; by the time the sweep reads
+  // the clock, the parquet write has advanced it past the claim, so
+  // staleAfter=0 sees the claim as stale.
+  private def appendOrphanClaim(root: String, id: String, mdx: String, gen: Int): Unit =
+    JobLogFixture.linkEvent(spark, root, s"$id.running-$gen.parquet", id, mdx,
+      JobService.Running)
 
   test("bounded retry: a job that keeps killing its runner lands FAILED after maxAttempts, never loops") {
     import org.apache.spark.sql.functions.col
@@ -446,11 +510,11 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
     val id = JobService.submit(spark, root, "SALES", mdx)
     // Poisoned-job loop: each cycle the runner claims (RUNNING) and dies
     // before writing any terminal state; the sweep finds the orphan.
-    appendOrphanClaim(root, id, mdx) // attempt 1
+    appendOrphanClaim(root, id, mdx, 1) // attempt 1
     assert(JobService.requeueStale(spark, root, 0) == Seq(id))
-    appendOrphanClaim(root, id, mdx) // attempt 2
+    appendOrphanClaim(root, id, mdx, 2) // attempt 2
     assert(JobService.requeueStale(spark, root, 0) == Seq(id))
-    appendOrphanClaim(root, id, mdx) // attempt 3 = maxAttempts
+    appendOrphanClaim(root, id, mdx, 3) // attempt 3 = maxAttempts
     assert(JobService.requeueStale(spark, root, 0).isEmpty,
       "at the cap the sweep must not requeue")
     val j = JobService.status(spark, root, id).get
@@ -496,13 +560,8 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
     // inside) but died before its COMPLETED transition. The at-least-once
     // requeue re-runs the SAME job id; the marker must turn the re-run
     // into an idempotent republish, not a second fold of the same delta.
-    import spark.implicits._
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    Seq((j2, "SALES", "MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 = 0",
-        JobService.Pending, "", 0.0, now, 1L))
-      .toDF("id", "catalog_code", "mdx_query", "status", "error_message",
-        "duration_seconds", "event_at", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$root/job_events")
+    JobLogFixture.linkEvent(spark, root, s"$j2.pending-2.parquet", j2,
+      "MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 = 0", JobService.Pending, seq = 1L)
     JobService.runPending(spark, root, sf)
     assert(JobService.status(spark, root, j2).get.status == JobService.Completed)
     assert(rows(spark.read.parquet(statePath)) == rows(full),

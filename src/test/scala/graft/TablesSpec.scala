@@ -87,4 +87,16 @@ class TablesSpec extends AnyFunSuite {
     assert(dtype(Tables.supplier(spark, sf), "s_acctbal") == DoubleType)
     assert(dtype(Tables.part(spark, sf), "p_retailprice") == DoubleType)
   }
+
+  test("a second load of every table runs no Spark job: the schema is resolved once") {
+    val session = spark.newSession()
+    Tables.all.foreach(Tables.load(session, sf, _))
+    val again = SparkJobCount(session) {
+      Tables.all.foreach(n => assert(Tables.load(session, sf, n).schema.nonEmpty, n))
+    }
+    assert(again == 0, s"$again Spark jobs in ${Tables.all.size} repeated loads")
+    // the resolved schema is the inferred one
+    Tables.all.foreach(n => assert(Tables.load(session, sf, n).schema ==
+      session.read.parquet(s"$sf/$n.parquet").schema, n))
+  }
 }
