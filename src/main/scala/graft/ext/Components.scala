@@ -95,7 +95,7 @@ object Components {
     labels
   }
 
-  /** Strategy dispatch (the ngramJaccardPairsAuto pattern): after
+  /** Strategy dispatch (the ngramJaccardPairsAutoFromShingles pattern): after
     * signature contraction the edge set is usually TINY relative to the
     * corpus (it only holds representative pairs), so when it fits a hard
     * driver bound the transitive closure runs as a local union-find —
@@ -150,12 +150,6 @@ object Components {
       spark.createDataset(out.toSeq).toDF("node", "comp")
     }
   }
-
-  /** Component summary: size and canonical (min) member per component of
-    * the pair graph. */
-  def componentSizes(membership: DataFrame): DataFrame =
-    membership.groupBy(col("comp"))
-      .agg(count(lit(1)).as("n_docs"), min(col("node")).as("canonical"))
 
   /** Canonical-document selection: rank every member of each near-dup
     * component by an external score (desc, id-asc tiebreak) — rank 1 is

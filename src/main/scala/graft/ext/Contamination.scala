@@ -53,55 +53,6 @@ object Contamination {
         expr("(1000000 * n_hit) div n_grams").as("hit_ppm"))
   }
 
-  /** Bloom-filter variant of [[benchmarkOverlap]] for benchmark gram sets
-    * too large to broadcast exactly: the benchmark grams are folded into
-    * a Bloom filter (distributed aggregation; only the filter's bit array
-    * reaches the driver — ~1.2 MB per million grams at 1% FP vs tens of
-    * MB for the exact set), which then broadcasts to a map-side
-    * membership probe. No false negatives, so contamination is never
-    * missed; false positives overcount `n_hit` by at most `fpp` of a
-    * doc's grams (the spec pins bloom >= exact per doc).
-    *
-    * The `mapPartitions` is the justified kind: one filter deserialize
-    * per partition, then a tight JVM probe loop. */
-  def benchmarkOverlapBloom(candidates: DataFrame, benchmark: DataFrame,
-                            textCol: String, idCol: String, n: Int,
-                            expectedGrams: Long = 1L << 20,
-                            fpp: Double = 0.01): DataFrame = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    // Emptiness is probed on the PRE-distinct shingle stream (take(1)
-    // short-circuits in codegen; above the distinct it would first build
-    // an aggregation hash table) because Spark's stat.bloomFilter NPEs
-    // on a zero-row frame. An absent filter means zero hits — the same
-    // single aggregation/select block serves both cases so the output
-    // schema cannot drift between them.
-    val bfOpt =
-      if (Dedup.shingleRows(benchmark, textCol, idCol, n).isEmpty) None
-      else Some(Dedup.shingleRows(benchmark, textCol, idCol, n)
-        .select(col("s")).distinct()
-        .stat.bloomFilter("s", expectedGrams, fpp))
-    val candGrams = Dedup.shingleRows(candidates, textCol, idCol, n)
-    val flagged = bfOpt match {
-      case Some(bf) =>
-        val bcast = spark.sparkContext.broadcast(bf)
-        candGrams.as[(Long, String)]
-          .mapPartitions { it =>
-            val f = bcast.value
-            it.map { case (doc, s) =>
-              (doc, if (f.mightContainString(s)) 1L else 0L)
-            }
-          }
-          .toDF("doc", "hit")
-      case None => candGrams.select(col("doc"), lit(0L).as("hit"))
-    }
-    flagged
-      .groupBy(col("doc"))
-      .agg(count(lit(1)).as("n_grams"), sum(col("hit")).as("n_hit"))
-      .select(col("doc").as("doc_id"), col("n_grams"), col("n_hit"),
-        expr("(1000000 * n_hit) div n_grams").as("hit_ppm"))
-  }
-
   /** Corpus-wide duplicated-text share: for every document, the fraction
     * (ppm) of its distinct word n-grams that occur in at least `minDf`
     * documents — the per-doc "how much of me exists elsewhere" signal

@@ -336,41 +336,15 @@ object Dedup {
     nonEmpty.unionByName(empties)
   }
 
-  /** SimHash near-dup clusters: signatures shared by more than one doc. */
-  def simhashClusters(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    simhashClustersFromSigs(simhashSignatures(df, textCol, idCol))
-
-  /** Cluster form over a prebuilt signature table (doc, simhash) — the
-    * production shape: signatures are computed once, persisted, and
-    * consumed by every downstream dedup pass. */
+  /** SimHash near-dup clusters — signatures shared by more than one doc
+    * — over a prebuilt signature table (doc, simhash): signatures are
+    * computed once ([[simhashSignatures]]), persisted, and consumed by
+    * every downstream dedup pass. */
   def simhashClustersFromSigs(sigs: DataFrame): DataFrame =
     sigs.groupBy(col("simhash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc")).as("min_doc"))
       .where(col("n_docs") > 1)
 
-  /** SimHash near-dup PAIRS within Hamming distance <= maxDist (the
-    * standard SimHash protocol, Manku/Jain/Sarma WWW'07): pigeonhole the
-    * 64-bit signature into maxDist+1 bands — any pair within maxDist must
-    * agree on at least one full band — candidate via band equi-join, then
-    * verify the exact bit distance. Shuffle is bounded to band keys, so
-    * the O(n²) bit comparison never materializes. The default threshold 4
-    * of 64 is the equivalent of the old family's 2 of 32 (same relative
-    * looseness) with band keys wide enough to scale — see [[simhash]]. */
-  def simhashHammingPairs(df: DataFrame, textCol: String, idCol: String,
-                          maxDist: Int = 4): DataFrame =
-    // Persisted (TransientCache: caller releases after materializing):
-    // the signature aggregation feeds both self-join sides.
-    simhashHammingPairsFromSigs(
-      graft.ops.TransientCache.persist(simhashSignatures(df, textCol, idCol)),
-      maxDist)
-
-  /** Hamming-pair form over a prebuilt (doc, simhash) signature table;
-    * the caller owns the table's persistence lifecycle. `sigBits` is the
-    * signature width (default the text SimHash's 64, which q139's
-    * 64-block media hash shares; 32 remains supported for narrow
-    * externally-built signatures — wider bands keep the bucket key space
-    * large enough that a loose threshold doesn't collapse the corpus
-    * into a handful of buckets). */
   /** Integer form of a '0'/'1' signature string — computed ONCE per doc
     * so band keys become shift+mask extractions and Hamming one
     * bit_count(xor); no string op ever reaches a candidate row (measured
@@ -404,6 +378,22 @@ object Dedup {
       .bitwiseAND(lit((1L << len) - 1))
   }
 
+  /** SimHash near-dup PAIRS within Hamming distance <= maxDist (the
+    * standard SimHash protocol, Manku/Jain/Sarma WWW'07): pigeonhole the
+    * 64-bit signature into maxDist+1 bands — any pair within maxDist must
+    * agree on at least one full band — candidate via band equi-join, then
+    * verify the exact bit distance. Shuffle is bounded to band keys, so
+    * the O(n²) bit comparison never materializes. The default threshold 4
+    * of 64 is the equivalent of the old family's 2 of 32 (same relative
+    * looseness) with band keys wide enough to scale — see [[simhash]].
+    *
+    * The input is a prebuilt (doc, simhash) signature table
+    * ([[simhashSignatures]]); the caller owns the table's persistence
+    * lifecycle. `sigBits` is the signature width (default the text
+    * SimHash's 64, which q139's 64-block media hash shares; 32 remains
+    * supported for narrow externally-built signatures — wider bands keep
+    * the bucket key space large enough that a loose threshold doesn't
+    * collapse the corpus into a handful of buckets). */
   def simhashHammingPairsFromSigs(sigs: DataFrame, maxDist: Int = 4,
                                   sigBits: Int = 64): DataFrame = {
     require(sigBits == 32 || sigBits == 64, s"unsupported width $sigBits")
@@ -610,27 +600,15 @@ object Dedup {
     lens.scanLeft(1)(_ + _).zip(lens).map { case (start, len) => (start, len) }
   }
 
-  /** Exact n-gram Jaccard pairs above a rational threshold numJ/denJ:
-    * dispatches between the two exact strategies below on dictionary
-    * size. Gram-bucketed join for sparse corpora (the 100 TB shape:
-    * pairs only form for docs sharing a gram); bitset-popcount for dense
-    * small-vocabulary corpora where every doc shares grams with every
-    * other and the bucketed join degenerates to |corpus|² × |grams|. */
-  def ngramJaccardPairsAuto(df: DataFrame, textCol: String, idCol: String,
-                            n: Int = 2, numJ: Int = 1, denJ: Int = 5,
-                            denseVocabLimit: Int = 1 << 16,
-                            denseDocLimit: Long = 1L << 16): DataFrame = {
-    // Shingle once, persist (TransientCache — caller releases), dispatch:
-    // the size probe and the chosen strategy share the same materialized
-    // (doc, shingle) rows.
-    ngramJaccardPairsAutoFromShingles(
-      graft.ops.TransientCache.persist(shingleRows(df, textCol, idCol, n)),
-      numJ, denJ, denseVocabLimit, denseDocLimit)
-  }
-
-  /** [[ngramJaccardPairsAuto]] over a prebuilt (already-persisted)
-    * `(doc, s)` shingle stream — the session-artifact form (one corpus
-    * shingle pass shared with every other bigram consumer). The dense
+  /** Exact n-gram Jaccard pairs above a rational threshold numJ/denJ
+    * over a prebuilt (already-persisted) `(doc, s)` shingle stream
+    * ([[shingleRows]]; the session-artifact form shares one corpus
+    * shingle pass with every other bigram consumer). Dispatches between
+    * the two exact strategies below on dictionary size: gram-bucketed
+    * join for sparse corpora (the 100 TB shape: pairs only form for docs
+    * sharing a gram); bitset-popcount for dense small-vocabulary corpora
+    * where every doc shares grams with every other and the bucketed join
+    * degenerates to |corpus|² × |grams|. The dense
     * path collects doc-count × vocab/8 bytes of bitsets to the driver,
     * so it is gated on BOTH dictionary size AND document count — a
     * 100 TB corpus with a tiny vocabulary must still take the sparse
@@ -653,10 +631,6 @@ object Dedup {
     * bucketed join (pairs sharing >= 1 gram). O(n²/executors) compute but
     * zero shuffle and ~20 ops per pair — for small-vocab corpora this
     * beats the join by >10×; it is NOT the path for unbounded vocab. */
-  def ngramJaccardPairsDense(df: DataFrame, textCol: String, idCol: String,
-                             n: Int = 2, numJ: Int = 1, denJ: Int = 5): DataFrame =
-    denseFromShingles(shingleRows(df, textCol, idCol, n), numJ, denJ)
-
   private def denseFromShingles(shRows: DataFrame, numJ: Int, denJ: Int): DataFrame = {
     val spark = shRows.sparkSession
     import spark.implicits._
@@ -907,49 +881,29 @@ object Dedup {
         coalesce(col("text_dedup"), lit("")).as("text_dedup"))
   }
 
-  /** Prefix-filtered candidate pairs for an exact Jaccard self-join at
-    * threshold `numJ/denJ` — the AllPairs/PPJoin pruning of Bayardo et
-    * al. 2007 ("Scaling Up All Pairs Similarity Search", WWW) / Xiao et
-    * al. 2008, the EXACT alternative to LSH banding: instead of hashing
-    * into probabilistic buckets, order every doc's grams by one global
-    * rarity order (ascending document frequency, gram string as the
-    * tiebreak) and index only each doc's first
-    * `n_d − ceil(t·n_d) + 1` grams. Two docs with J ≥ t share at least
-    * ceil(t·max(n_a, n_b)) grams (from i(1+t) ≥ t(n_a+n_b) and i ≤
-    * min(n_a, n_b)), so their prefixes under ANY single global order
-    * must intersect — every qualifying pair survives, while the join
-    * fans out only on each doc's RAREST few grams (at t = 1/2, half the
-    * postings; the hot boilerplate grams that dominate posting lists
-    * sort last and never enter the index).
+  /** The prefix index of an exact Jaccard self-join at threshold
+    * `numJ/denJ` — the AllPairs/PPJoin pruning of Bayardo et al. 2007
+    * ("Scaling Up All Pairs Similarity Search", WWW) / Xiao et al. 2008,
+    * the EXACT alternative to LSH banding: instead of hashing into
+    * probabilistic buckets, order every doc's grams by one global rarity
+    * order (ascending document frequency, gram string as the tiebreak)
+    * and index only each doc's first `n_d − ceil(t·n_d) + 1` grams. Two
+    * docs with J ≥ t share at least ceil(t·max(n_a, n_b)) grams (from
+    * i(1+t) ≥ t(n_a+n_b) and i ≤ min(n_a, n_b)), so their prefixes under
+    * ANY single global order must intersect — every qualifying pair
+    * survives, while the join fans out only on each doc's RAREST few
+    * grams (at t = 1/2, half the postings; the hot boilerplate grams that
+    * dominate posting lists sort last and never enter the index).
     *
-    * 100 TB shape: the df-rank attach is a broadcast-or-shuffle join on
-    * the gram key; prefix selection is two windows partitioned by doc
-    * (no global rank materialized — the (df, s) pair IS the order);
-    * the candidate join fans out per rare-gram posting list, which the
-    * prefix rule keeps short by construction. Integer-exact end to end.
-    */
-  def prefixFilterCandidates(shRows: DataFrame, numJ: Int, denJ: Int): DataFrame = {
-    val prefix = prefixPostings(shRows, numJ, denJ)
-    // Length filter (Arasu et al. 2006; AllPairs): J ≥ t forces
-    // t·|a| ≤ |b| ≤ |a|/t, i.e. denJ·min(n) ≥ numJ·max(n) — applied
-    // INSIDE the join so a short boilerplate doc colliding with a long
-    // one on a prefix gram never becomes a candidate at all (at t=4/5
-    // this is most of the raw collisions; lossless by the same J ≥ t
-    // algebra as the prefix itself).
-    prefix.as("a").join(prefix.as("b"),
-        col("a.s") === col("b.s") && col("a.doc") < col("b.doc") &&
-          lit(denJ) * least(col("a.nd"), col("b.nd")) >=
-            lit(numJ) * greatest(col("a.nd"), col("b.nd")))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
-  }
-
-  /** The prefix index itself: each doc's first `n_d − ceil(t·n_d) + 1`
-    * grams under the global (df asc, gram asc) rarity order, with the
-    * doc's gram count `nd` alongside (the length filter reads it in the
-    * join) — the rows [[prefixFilterCandidates]] self-joins. Public so
-    * audits can measure the index (posting sizes → collision counts)
-    * without materializing any pair. */
+    * Rows are `(doc, s, nd, i)`: the gram, the doc's gram count `nd`
+    * (the length filter reads it in the join) and the gram's rarity rank
+    * `i` (the positional filter reads it) — the rows
+    * [[ppjoinCandidatePairs]] self-joins. Public so audits can measure
+    * the index (posting sizes → collision counts) without materializing
+    * any pair. 100 TB shape: the df-rank attach is a broadcast-or-shuffle
+    * join on the gram key; prefix selection is two windows partitioned by
+    * doc (no global rank materialized — the (df, s) pair IS the order).
+    * Integer-exact end to end. */
   def prefixPostings(shRows: DataFrame, numJ: Int, denJ: Int): DataFrame = {
     val dfreq = shRows.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val byDoc = shRows.join(dfreq, "s")
@@ -964,46 +918,45 @@ object Dedup {
       .select(col("doc"), col("s"), col("nd"), col("i"))
   }
 
-  /** PPJoin positional filter (Xiao et al. 2008, §3.2) layered on the
-    * prefix+length candidates: a prefix collision on a gram at rarity
-    * ranks `(i_a, i_b)` bounds the pair's achievable overlap by
-    * `ubound = 1 + min(n_a − i_a, n_b − i_b)` (everything BEFORE the
-    * colliding gram in either prefix is already spent), and J ≥ t
-    * requires overlap ≥ ceil(t(n_a+n_b)/(1+t)) — so a collision whose
-    * ubound falls short can never produce a qualifying pair. Lossless
-    * by the same cross-multiplied algebra as the prefix rule (integer
-    * form: `(numJ+denJ)·(1 + min(…)) ≥ numJ·(n_a+n_b)`); a pair
-    * survives if ANY of its prefix collisions passes. Strictly tighter
-    * than [[prefixFilterCandidates]] at the SAME cost shape — the
-    * filter is a per-collision predicate inside the identical join, so
-    * at 100 TB it only shrinks what the verification stage reads. */
-  def ppjoinCandidates(shRows: DataFrame, numJ: Int, denJ: Int): DataFrame = {
-    val prefix = prefixPostings(shRows, numJ, denJ)
+  /** The PPJoin candidate funnel at pair grain: the [[prefixPostings]]
+    * self-join aggregated ONCE to `(doc_a, doc_b, pos_ok)`. Every row is a
+    * prefix candidate; `pos_ok = 1` marks the positional candidates.
+    *
+    *   - Length filter (Arasu et al. 2006; AllPairs): J ≥ t forces
+    *     t·|a| ≤ |b| ≤ |a|/t, i.e. denJ·min(n) ≥ numJ·max(n) — applied
+    *     INSIDE the join, so a short boilerplate doc colliding with a
+    *     long one on a prefix gram never becomes a candidate at all.
+    *   - Positional filter (Xiao et al. 2008, §3.2): a collision on a
+    *     gram at rarity ranks `(i_a, i_b)` bounds the pair's achievable
+    *     overlap by `ubound = 1 + min(n_a − i_a, n_b − i_b)` (everything
+    *     BEFORE the colliding gram in either prefix is already spent), and
+    *     J ≥ t requires overlap ≥ ceil(t(n_a+n_b)/(1+t)); integer form
+    *     `(numJ+denJ)·ubound ≥ numJ·(n_a+n_b)`. A pair is a positional
+    *     candidate if ANY of its collisions passes.
+    *
+    * Both filters are lossless by the same cross-multiplied algebra as
+    * the prefix rule: truth ⊆ positional ⊆ prefix candidates (ExtSpec
+    * pins it). Verify either set with [[verifyJaccardCandidates]].
+    * Map-side partial max collapses collision grain before the shuffle,
+    * so the output is pair-sized. */
+  def ppjoinCandidatePairs(prefix: DataFrame, numJ: Int, denJ: Int): DataFrame =
     prefix.as("a").join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc") < col("b.doc") &&
           lit(denJ) * least(col("a.nd"), col("b.nd")) >=
-            lit(numJ) * greatest(col("a.nd"), col("b.nd")) &&
-          lit(numJ + denJ) * (lit(1L) +
-            least(col("a.nd") - col("a.i"), col("b.nd") - col("b.i"))) >=
-            lit(numJ) * (col("a.nd") + col("b.nd")))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
-  }
+            lit(numJ) * greatest(col("a.nd"), col("b.nd")))
+      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
+        (lit(numJ + denJ) * (lit(1L) +
+          least(col("a.nd") - col("a.i"), col("b.nd") - col("b.i"))) >=
+          lit(numJ) * (col("a.nd") + col("b.nd"))).cast("int").as("pos_ok"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(max(col("pos_ok")).as("pos_ok"))
 
-  /** Verify prefix-filter candidates to exact Jaccard ≥ numJ/denJ pairs:
-    * join the candidate pair table against per-doc sorted gram arrays
-    * and count the intersection in one codegen'd `array_intersect` —
-    * work proportional to CANDIDATES (which the prefix rule bounds),
+  /** Verify a candidate pair table `(doc_a, doc_b)` to the exact
+    * Jaccard ≥ numJ/denJ pairs: join it against per-doc sorted gram
+    * arrays and count the intersection in one codegen'd `array_intersect`
+    * — work proportional to CANDIDATES (which the prefix rule bounds),
     * never to all gram-sharing pairs. Output schema matches
     * [[ngramJaccardPairs]] exactly; a spec pins set equality. */
-  def prefixFilterJaccardPairs(shRows: DataFrame, numJ: Int, denJ: Int): DataFrame =
-    verifyJaccardCandidates(shRows,
-      prefixFilterCandidates(shRows, numJ, denJ), numJ, denJ)
-
-  /** The verification half alone, over an externally-built candidate
-    * pair table — so a query that already materialized the candidates
-    * (for counting, for auditing) verifies THE SAME rows instead of
-    * re-deriving the prefix index per consumer. */
   def verifyJaccardCandidates(shRows: DataFrame, cands: DataFrame,
                               numJ: Int, denJ: Int): DataFrame = {
     // Gram sets are built over the FULL shingle stream, then joined to

@@ -47,7 +47,6 @@ object QDigest {
     * Invariants hold w.r.t. `n` and `k` (see object doc). */
   final case class Digest(logU: Int, k: Int, n: Long, nodes: Map[Long, Long]) {
     def errBoundRanks: Long = logU.toLong * (n / k)
-    def sizeBound: Int = 3 * k
   }
 
   private def requireParams(logU: Int, k: Int): Unit = {

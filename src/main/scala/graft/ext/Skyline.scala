@@ -53,11 +53,6 @@ object Skyline {
     else p :: pts.filterNot(q => dom(p, q))
   }
 
-  /** Fold a collection of 2-D points into its Pareto frontier via
-    * [[insert2]]. */
-  def foldFrontier2(pts: Iterable[(Long, Long)]): List[(Long, Long)] =
-    pts.foldLeft(List.empty[(Long, Long)])(insert2)
-
   /** Pareto frontier of `df` maximizing every column in `dims`
     * (non-null LongType). Non-dimension columns ride along as
     * payload. Output order is unspecified — callers sort. */

@@ -33,11 +33,6 @@ object TextAnalysis {
   def tokenizeJvm(norm: String): Array[String] =
     norm.split(" ").filter(_.nonEmpty)
 
-  /** BPE-ish subword count: runs of letters / digits each count once
-    * (a cheap proxy for byte-pair tokenizers). */
-  def regexTokenCount(text: Column): Column =
-    regexp_count(text, lit("[a-z]+|[0-9]+"))
-
   /** Stopword-list hit count for one language. */
   def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(stopwords)))

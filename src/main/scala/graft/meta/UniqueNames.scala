@@ -44,10 +44,6 @@ object UniqueNames {
     concat((lit(s"[$dim].[$hier]") +: keys.flatMap(k =>
       Seq(lit(".&["), k.cast("string"), lit("]")))): _*)
 
-  /** Build `[dim].[hier].[level].&[key]` ("new cube" style). */
-  def newCube(dim: String, hier: String, level: String, key: Column): Column =
-    concat(lit(s"[$dim].[$hier].[$level].&["), key.cast("string"), lit("]"))
-
   /** parse_ranges("1,3,5-10") -> sorted distinct ints
     * (ref `backend/utils.py:10-68`, `scanner/validators.py:10-44`).
     * Driver-side helper, not a plan operator. */

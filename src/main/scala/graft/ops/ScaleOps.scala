@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale tooling (SURVEY.md §7.4 / §4): skew salting and bucketed
-  * co-location — the two manual levers that complement AQE on a real
+/** Scale tooling (SURVEY.md §7.4 / §4): skew salting and Bloom-pruned
+  * joins — the two manual levers that complement AQE on a real
   * cluster. */
 object ScaleOps {
 
@@ -65,64 +65,4 @@ object ScaleOps {
         col(bigKey).cast("long"), lit(b64)))
       .join(small, col(bigKey) === col(smallKey))
   }
-
-  /** Persist a DataFrame bucketed+sorted on its join key: two tables
-    * bucketed the same way equi-join with NO shuffle exchange (the
-    * Spark analogue of the reference's Postgres b-tree co-location,
-    * `database/migrations/001_initial_schema.sql:81-84`). */
-  def saveBucketed(df: DataFrame, table: String, bucketCol: String,
-                   buckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    // Idempotent: drop catalog entry AND any orphaned location left by a
-    // previous process (the in-memory catalog forgets, the files don't).
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-  }
-
-  /** Morton (Z-order) interleave of two dimension columns — the
-    * multi-dimensional clustering key behind Delta/Iceberg `ZORDER BY`:
-    * rows close in (a, b) space land close in z space, so EVERY file
-    * covers a small rectangle of both dimensions and min/max file
-    * skipping prunes on either predicate, not just the leading sort key.
-    *
-    * Inputs are clamped to 16 bits (`& 0xffff`); the caller maps raw
-    * values into that domain first (mod for ids, bucketed rank for
-    * continuous values). Bit spreading uses the 4-step mask sequence
-    * (each value's bits spaced out to even positions, b shifted to odd)
-    * — a handful of codegen'd integer builtins, no UDF. Property-pinned
-    * against a driver-side bit-by-bit reference (ScaleOpsSpec). */
-  def mortonInterleave(a: org.apache.spark.sql.Column,
-                       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def spread(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val x0 = x.cast("long").bitwiseAND(lit(0xffffL))
-      val x1 = x0.bitwiseOR(shiftleft(x0, 8)).bitwiseAND(lit(0x00FF00FFL))
-      val x2 = x1.bitwiseOR(shiftleft(x1, 4)).bitwiseAND(lit(0x0F0F0F0FL))
-      val x3 = x2.bitwiseOR(shiftleft(x2, 2)).bitwiseAND(lit(0x33333333L))
-      x3.bitwiseOR(shiftleft(x3, 1)).bitwiseAND(lit(0x55555555L))
-    }
-    spread(a).bitwiseOR(shiftleft(spread(b), 1))
-  }
-
-  /** Write `df` as parquet laid out in Z-order over two dimension
-    * columns: range-partition by the Morton key into `nFiles` files,
-    * sort within each, drop the key. At 100 TB this is the LAYOUT lever
-    * (vs the per-query levers above): paid once at write time, it makes
-    * min/max file skipping effective for box/point predicates on EITHER
-    * dimension — a lexicographic (a, b) sort gives pruning on `a` only,
-    * with every file spanning the full `b` range (ScaleOpsSpec measures
-    * exactly this difference from the written files' footer stats). */
-  def writeZOrdered(df: DataFrame, path: String,
-                    colA: String, colB: String, nFiles: Int): Unit =
-    df.withColumn("__z", mortonInterleave(col(colA), col(colB)))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
 }

@@ -30,7 +30,4 @@ object Validators {
     * (ref `scanner/validators.py:47-71`). */
   def sanitizeIdentifier(s: String): String =
     s.replaceAll("[^\\w áéíóúüñÁÉÍÓÚÜÑ]", "")
-
-  /** parse_ranges re-export (X3) so the service layer has one import. */
-  def parseRanges(s: String): Seq[Int] = graft.meta.UniqueNames.parseRanges(s)
 }

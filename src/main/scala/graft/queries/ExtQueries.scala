@@ -68,32 +68,20 @@ object ExtQueries {
       Dedup.ngramJaccardPairsAutoFromShingles(bigramShingles(s, d), 1, 5))
 
   /** Shared per-session PAIR-GRAIN artifact of the t = 4/5 AllPairs/
-    * PPJoin funnel (r9 verdict item 4): the prefix+length collision
-    * self-join aggregated ONCE to (doc_a, doc_b, pos_ok) — pos_ok = 1
-    * iff ANY of the pair's prefix collisions passes Xiao et al. 2008's
-    * positional ubound. q202 and q228 previously shared only the
-    * posting index and each re-ran this join + pair aggregate — the two
-    * most expensive joins in the suite; now both read one table. Every
-    * q202/q228 output column is a projection of it: prefix-candidate
-    * count = COUNT(*), positional-candidate count = SUM(pos_ok), and
-    * verification reads the pos_ok = 1 subset (lossless: truth ⊆
-    * positional ⊆ prefix, pinned by ExtSpec + both oracles' full
-    * unpruned joins). Map-side partial max collapses collision grain
-    * before the shuffle, so the persisted footprint is pair-sized. */
+    * PPJoin funnel (r9 verdict item 4): [[Dedup.ppjoinCandidatePairs]]'s
+    * (doc_a, doc_b, pos_ok) table over the bigram prefix index. q202 and
+    * q228 previously shared only the posting index and each re-ran the
+    * collision join + pair aggregate — the two most expensive joins in
+    * the suite; now both read one table. Every q202/q228 output column
+    * is a projection of it: prefix-candidate count = COUNT(*),
+    * positional-candidate count = SUM(pos_ok), and verification reads
+    * the pos_ok = 1 subset (lossless: truth ⊆ positional ⊆ prefix,
+    * pinned by ExtSpec + both oracles' full unpruned joins). */
   private[queries] def ppjoinPairs(s: SparkSession, d: String): DataFrame =
     graft.ops.SessionCache.getOrBuild(s, s"ppjoin_pairs:4:5:$d") {
       val pre = graft.ops.SessionCache.getOrBuild(s, s"prefix_postings:4:5:$d")(
         Dedup.prefixPostings(bigramShingles(s, d), 4, 5))
-      pre.as("a").join(pre.as("b"),
-          col("a.s") === col("b.s") && col("a.doc") < col("b.doc") &&
-            lit(5) * least(col("a.nd"), col("b.nd")) >=
-              lit(4) * greatest(col("a.nd"), col("b.nd")))
-        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-          (lit(9) * (lit(1L) +
-            least(col("a.nd") - col("a.i"), col("b.nd") - col("b.i"))) >=
-            lit(4) * (col("a.nd") + col("b.nd"))).cast("int").as("pos_ok"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(max(col("pos_ok")).as("pos_ok"))
+      Dedup.ppjoinCandidatePairs(pre, 4, 5)
     }
 
   /** The verified t = 4/5 exact-Jaccard pairs from [[ppjoinPairs]]'s

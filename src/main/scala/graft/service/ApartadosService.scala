@@ -28,7 +28,7 @@ object ApartadosService {
     * display index, and return their variables via the parent-child join
     * (J1), accumulated like the reference's concat loop (U1). */
   def variablesFor(members: DataFrame, apartadoRanges: String): DataFrame = {
-    val ids = graft.ops.Validators.parseRanges(apartadoRanges)
+    val ids = graft.meta.UniqueNames.parseRanges(apartadoRanges)
     val selected = apartadoRows(members).where(col("id").isin(ids: _*))
       .select(col("unique_name").as("parent_unique"), col("caption").as("apartado"))
     MemberOps.variables(members)

@@ -26,9 +26,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * state: every submission and status transition is an immutable
   * one-row parquet file in `job_events/`. This is the scalable twin of
   * the reference's `UPDATE jobs SET status=...` — you never rewrite a
-  * state file, you append and compact (Delta MERGE being the managed
-  * form). Results are per-job parquet, keyed like the reference's
-  * request-id-keyed relay files.
+  * state file, you append. Nothing compacts the log: it only grows
+  * (three files per job, more on a requeue), and bounding it is an open
+  * residual (ROADMAP item 3). Results are per-job parquet, keyed like
+  * the reference's request-id-keyed relay files.
   *
   * THE LOG CONTRACT IS THE FILE NAMES. Every event of job `id` is named
   * `<id>.<phase>-<g>.parquet`: phase `pending`, `running` or `done`, and

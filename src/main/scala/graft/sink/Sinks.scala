@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.File
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -30,111 +31,80 @@ object Sinks {
   def jsonExport(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).json(path)
 
-  /** Hive-style partitioned parquet write — the 100 TB storage layout:
-    * a corpus partitioned by a low-cardinality column (language, date,
-    * source) turns every per-partition query into a directory-pruned
-    * scan that never opens the other partitions' files (PlanSpec asserts
-    * the pruning). Engine-path write: stays fully parallel, no
-    * coalesce. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(path)
-
-  /** Dynamic partition overwrite — the incremental-backfill write: only
-    * the partitions PRESENT in the incoming batch are replaced; every
-    * other partition's files are untouched (ServiceSpec pins this). At
-    * 100 TB this is how a daily re-process lands one date=... directory
-    * without static Overwrite's truncate-the-world semantics, and
-    * without reading a byte of the other partitions. Session-config
-    * scoped: the previous partitionOverwriteMode is restored even on
-    * failure. */
-  def overwritePartitionsDynamic(df: DataFrame, path: String,
-                                 partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  /** Bucketed managed table — the co-located-join layout: two tables
-    * bucketed by the same join key into the same bucket count join with
-    * ZERO exchange (PlanSpec asserts it). At 100 TB this is how the
-    * fact-to-fact joins (lineitem⋈orders, postings⋈postings) avoid
-    * re-shuffling terabytes per query: the shuffle is paid once at
-    * write time. Requires saveAsTable (bucket metadata lives in the
-    * catalog). */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String,
-                    nBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, keyCol).sortBy(keyCol)
-      .format("parquet").saveAsTable(table)
-
-  /** Partitioned parquet append with upsert-by-key semantics (S8: the
+  /** Parquet append with upsert-by-key semantics (S8: the
     * Postgres ON CONFLICT analogue — existing keys are replaced by the
     * incoming batch; at scale this is a Delta MERGE). The merged dataset
-    * is written once, to `<path>_tmp`, and published by [[swap]]. */
+    * is written once, to [[staging]], and [[publish]]ed by rename; a
+    * dataset left torn by a crashed publish is [[recover]]ed first, so a
+    * crash never turns the next call into a first write. One writer per
+    * path: concurrent upserts to the same path are not serialized. */
   def upsertParquet(df: DataFrame, path: String, keyCols: Seq[String]): Unit = {
     val spark = df.sparkSession
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(path)
     // Only a genuinely absent target means "first write": any OTHER read
     // failure must propagate — swallowing it would overwrite (lose) the
     // existing dataset with just the incoming batch.
     val merged =
-      if (!fs.exists(target)) df
+      if (!new File(path).exists()) df
       else spark.read.parquet(path)
         .join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
         .unionByName(df)
-    val tmp = new Path(path + "_tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swap(fs, tmp, target)
+    merged.write.mode(SaveMode.Overwrite).parquet(staging(path, "upsert").getPath)
+    publish(path, "upsert")
   }
 
-  /** Small-file compaction: rewrite a parquet dataset into
-    * ⌈rows / targetRows⌉ files (the OPTIMIZE/bin-packing maintenance
-    * pass every lakehouse runs — a 100 TB table accreted from streaming
-    * micro-batches or per-key upserts degrades into millions of KB-sized
-    * files whose open/footer cost dominates scans; compaction restores
-    * scan-speed reads without touching a single row). Same
-    * write-tmp-then-[[swap]] publish as [[upsertParquet]]; rows and
-    * schema are asserted unchanged by ServiceSpec. Returns the file
-    * count. */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
-                     targetRows: Long): Int = {
-    require(targetRows > 0, "targetRows must be positive")
-    val df = spark.read.parquet(path)
-    val n = df.count()
-    val nFiles = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-    val tmp = new Path(path + "_compact_tmp")
-    df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // Publish by RENAME, not rewrite: a read-back rewrite would re-split
-    // on maxPartitionBytes and undo the very file layout being built.
-    swap(tmp.getFileSystem(spark.sparkContext.hadoopConfiguration), tmp, new Path(path))
-    nFiles
-  }
+  /** The dir a new generation of the dataset at `live` is written to
+    * before [[publish]] renames it in under the same `tag`. */
+  def staging(live: String, tag: String): File = new File(s"$live.next-$tag")
 
-  /** Publish the finished dataset `staged` at `target` by rename:
-    * retire the live generation to `<target>_old`, rename `staged` into
-    * place, then drop the retired one. The old generation survives until
-    * the new one is in place, and a failed publish renames it back, so
-    * the dataset never vanishes. */
-  private def swap(fs: FileSystem, staged: Path, target: Path): Unit = {
-    val old = new Path(target.toString + "_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadLive = fs.exists(target)
-    if (hadLive && !fs.rename(target, old))
-      throw new java.io.IOException(s"could not retire $target")
-    if (!fs.rename(staged, target)) {
-      if (hadLive) fs.rename(old, target) // roll back
-      throw new java.io.IOException(s"could not publish $staged")
+  private def retired(live: String, tag: String): File = new File(s"$live.old-$tag")
+
+  /** Publish the complete dataset `staging(live, tag)` at `live` by
+    * rename: retire the live generation to `<live>.old-<tag>`, rename the
+    * staged dir into place, then drop the retired one. The two renames
+    * are not atomic together: a failed publish renames the retired
+    * generation back, and a process that dies between them leaves a torn
+    * state that [[recover]] restores. The write-new-then-rename swap is
+    * the local-FS stand-in for a table-format transactional commit
+    * (Delta/Iceberg). */
+  def publish(live: String, tag: String): Unit = {
+    val dir = new File(live)
+    val (next, old) = (staging(live, tag), retired(live, tag))
+    val hadLive = dir.exists()
+    if (hadLive && !dir.renameTo(old))
+      throw new java.io.IOException(s"could not retire $live")
+    if (!next.renameTo(dir)) {
+      if (hadLive) old.renameTo(dir) // roll back; the dataset survives
+      throw new java.io.IOException(s"could not publish $next")
     }
-    fs.delete(old, true)
+    FileUtils.deleteQuietly(old)
+  }
+
+  /** Restore a dataset left torn by a crashed [[publish]], then sweep
+    * publish leftovers. If `live` is missing, a prior publish died
+    * between retiring the old generation and publishing the new one: the
+    * new generation survives as a complete staging dir (the parquet
+    * commit protocol wrote its `_SUCCESS`) — rename it into place. With
+    * no complete staging dir, the retired `.old-<tag>` dir IS the prior
+    * generation — restore it. Either way a caller can never observe "no
+    * dataset" after a crash and rebuild from its new batch alone. The
+    * caller must keep other writers of `live` out: a staging dir may
+    * otherwise be a write in flight. */
+  def recover(live: String): Unit = {
+    val dir = new File(live).getAbsoluteFile
+    val name = dir.getName
+    val siblings = Option(dir.getParentFile.listFiles()).getOrElse(Array.empty[File])
+    val nexts = siblings.filter(_.getName.startsWith(s"$name.next-"))
+    val olds = siblings.filter(_.getName.startsWith(s"$name.old-"))
+    if (!dir.exists()) {
+      val completeNext = nexts.find(n => new File(n, "_SUCCESS").exists())
+      completeNext.orElse(olds.headOption).foreach { d =>
+        if (!d.renameTo(dir))
+          throw new java.io.IOException(s"could not restore $live from ${d.getName}")
+      }
+    }
+    // Leftovers from a crash after publish (orphaned .old-*) or before
+    // retire (incomplete .next-*) are garbage once live exists.
+    if (dir.exists()) (nexts ++ olds).foreach(FileUtils.deleteQuietly)
   }
 }

@@ -74,38 +74,6 @@ class ContaminationSpec extends AnyFunSuite {
     assert(got.map(_.getAs[String]("token")).toSeq == Seq("x", "y", "z"))
   }
 
-  test("benchmarkOverlapBloom: no false negatives; agrees with exact here") {
-    val cand = docs(1L -> "a b c d", 2L -> "x y x y x", 3L -> "p q r")
-    val bench = docs(10L -> "b c d e", 11L -> "x y z")
-    val exact = Contamination.benchmarkOverlap(cand, bench, "text", "doc_id", 2)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_hit")).toMap
-    val bloom = Contamination.benchmarkOverlapBloom(cand, bench, "text",
-        "doc_id", 2, expectedGrams = 1000L, fpp = 0.001)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_hit")).toMap
-    assert(bloom.keySet == exact.keySet)
-    // Bloom may only overcount (false positives), never undercount
-    exact.foreach { case (doc, hits) => assert(bloom(doc) >= hits) }
-    // at this fpp and size there are no collisions; counts are identical
-    assert(bloom == exact)
-  }
-
-  test("benchmarkOverlapBloom agrees with exact on the real sf0.001 corpus") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val cand = docs.where(col("source") =!= "src0")
-    val bench = docs.where(col("source") === "src0")
-    val exact = Contamination
-      .benchmarkOverlap(cand, bench, "text", "doc_id", 3)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_hit")).toMap
-    val bloom = Contamination
-      .benchmarkOverlapBloom(cand, bench, "text", "doc_id", 3,
-        expectedGrams = 1L << 16, fpp = 0.0001)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_hit")).toMap
-    assert(exact.nonEmpty && bloom.keySet == exact.keySet)
-    exact.foreach { case (doc, hits) => assert(bloom(doc) >= hits) }
-    // at fpp 1e-4 over a few thousand grams, zero collisions expected
-    assert(bloom == exact)
-  }
-
   test("withPiiRedaction: sequential redaction, per-stage counts, hash") {
     val d = docs(
       1L -> "mail a.user+tag@example.co.uk then call 12345678 at 10.0.0.1",

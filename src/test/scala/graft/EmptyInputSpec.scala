@@ -33,10 +33,12 @@ class EmptyInputSpec extends AnyFunSuite {
   test("dedup family returns empty on an empty corpus") {
     assert(Dedup.exactGroups(emptyDocs, "text", "doc_id").count() == 0)
     assert(Dedup.minhashSignaturesTyped(emptyDocs, "text", "doc_id").count() == 0)
-    assert(Dedup.ngramJaccardPairsAuto(emptyDocs, "text", "doc_id").count() == 0)
     val emptySh = Dedup.shingleRows(emptyDocs, "text", "doc_id", 2)
-    assert(Dedup.prefixPostings(emptySh, 4, 5).count() == 0)
-    assert(Dedup.prefixFilterJaccardPairs(emptySh, 4, 5).count() == 0)
+    assert(Dedup.ngramJaccardPairsAutoFromShingles(emptySh, 1, 5).count() == 0)
+    val emptyPrefix = Dedup.prefixPostings(emptySh, 4, 5)
+    assert(emptyPrefix.count() == 0)
+    assert(Dedup.verifyJaccardCandidates(emptySh,
+      Dedup.ppjoinCandidatePairs(emptyPrefix, 4, 5), 4, 5).count() == 0)
     assert(Dedup.simhashComponents(
       Dedup.simhashSignatures(emptyDocs, "text", "doc_id")).count() == 0)
     val noSpans = Dedup.sharedSpans(emptyDocs, "text", "doc_id")
@@ -138,8 +140,6 @@ class EmptyInputSpec extends AnyFunSuite {
     import graft.ops.Funnel
     assert(Contamination.benchmarkOverlap(emptyDocs, emptyDocs,
       "text", "doc_id", 2).count() == 0)
-    assert(Contamination.benchmarkOverlapBloom(emptyDocs, emptyDocs,
-      "text", "doc_id", 2, 100L, 0.01).count() == 0)
     assert(Contamination.duplicateGramShare(emptyDocs, "text", "doc_id", 2)
       .count() == 0)
     assert(TextAnalysis.vocabTopK(emptyDocs, "text", "doc_id", 5).count() == 0)

@@ -63,10 +63,13 @@ class ExtSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       val full = pairSet(Dedup.ngramJaccardPairs(
         Tables.documents(spark, sf), "text", "doc_id", 2, 1, 2))
-      val pref = pairSet(Dedup.prefixFilterJaccardPairs(sh, 1, 2))
+      // Every row of the PPJoin pair table is a prefix candidate.
+      val candRows = Dedup.ppjoinCandidatePairs(Dedup.prefixPostings(sh, 1, 2), 1, 2)
+        .select("doc_a", "doc_b")
+      val pref = pairSet(Dedup.verifyJaccardCandidates(sh, candRows, 1, 2))
       assert(pref == full, s"prefix path lost/added pairs: " +
         s"missing=${(full -- pref).take(3)} extra=${(pref -- full).take(3)}")
-      val cands = pairSet(Dedup.prefixFilterCandidates(sh, 1, 2))
+      val cands = pairSet(candRows)
       val sharing = sh.as("a").join(sh.as("b"),
           col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
         .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
@@ -79,7 +82,7 @@ class ExtSpec extends AnyFunSuite {
   test("prefix-filter join at t=4/5: length filter stays lossless") {
     // The q202 production threshold. The new in-join length filter
     // (denJ*min(n) >= numJ*max(n)) prunes length-incompatible collisions
-    // BEFORE the candidate distinct; it must never drop a J >= 4/5 pair.
+    // BEFORE the pair aggregate; it must never drop a J >= 4/5 pair.
     val sh = Dedup.shingleRows(Tables.documents(spark, sf), "text", "doc_id", 2)
       .cache()
     try {
@@ -88,7 +91,9 @@ class ExtSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       val full = pairSet(Dedup.ngramJaccardPairs(
         Tables.documents(spark, sf), "text", "doc_id", 2, 4, 5))
-      val pref = pairSet(Dedup.prefixFilterJaccardPairs(sh, 4, 5))
+      val pref = pairSet(Dedup.verifyJaccardCandidates(sh,
+        Dedup.ppjoinCandidatePairs(Dedup.prefixPostings(sh, 4, 5), 4, 5)
+          .select("doc_a", "doc_b"), 4, 5))
       assert(pref == full, s"t=4/5 prefix path diverged: " +
         s"missing=${(full -- pref).take(3)} extra=${(pref -- full).take(3)}")
       assert(full.nonEmpty, "sf0.001 corpus lost its planted near-dups")
@@ -153,9 +158,13 @@ class ExtSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val sh = Dedup.shingleRows(docs, "text", "doc_id", 2)
     try {
-      val prefixC = Dedup.prefixFilterCandidates(sh, 4, 5)
+      // The pair table q202/q228 read: every row is a prefix candidate,
+      // the pos_ok = 1 rows are the positional candidates.
+      val pairs = Dedup.ppjoinCandidatePairs(Dedup.prefixPostings(sh, 4, 5), 4, 5)
+      val positional = pairs.where(col("pos_ok") === 1).select("doc_a", "doc_b")
+      val prefixC = pairs
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val posC = Dedup.ppjoinCandidates(sh, 4, 5)
+      val posC = positional
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val truth = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 2, 4, 5)
         .select(col("doc_a"), col("doc_b"))
@@ -165,8 +174,7 @@ class ExtSpec extends AnyFunSuite {
         s"positional filter dropped true pairs: ${truth -- posC}")
       // End to end: verifying the positional candidates reproduces the
       // exact join's pair set.
-      val verified = Dedup.verifyJaccardCandidates(sh,
-          Dedup.ppjoinCandidates(sh, 4, 5), 4, 5)
+      val verified = Dedup.verifyJaccardCandidates(sh, positional, 4, 5)
         .select(col("doc_a"), col("doc_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(verified == truth)
@@ -762,7 +770,10 @@ class StrategyEquivalenceSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
     val sparse = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 2, 1, 5)
       .collect().map(key).sortBy(t => (t._1, t._2))
-    val dense = Dedup.ngramJaccardPairsDense(docs, "text", "doc_id", 2, 1, 5)
+    // Limits no corpus exceeds force the bitset path.
+    val dense = Dedup.ngramJaccardPairsAutoFromShingles(
+        Dedup.shingleRows(docs, "text", "doc_id", 2), 1, 5,
+        denseVocabLimit = Int.MaxValue, denseDocLimit = Long.MaxValue)
       .collect().map(key).sortBy(t => (t._1, t._2))
     assert(sparse.nonEmpty && (sparse sameElements dense))
   }
@@ -774,10 +785,11 @@ class StrategyEquivalenceSpec extends AnyFunSuite {
     // denseDocLimit=1 forces the sparse bucketed join even though the
     // fixture vocabulary is tiny — the 100-TB-with-small-vocab case must
     // never reach the dense path's driver collect.
-    val forced = Dedup.ngramJaccardPairsAuto(docs, "text", "doc_id", 2, 1, 5,
+    val sh = Dedup.shingleRows(docs, "text", "doc_id", 2)
+    val forced = Dedup.ngramJaccardPairsAutoFromShingles(sh, 1, 5,
         denseVocabLimit = 1 << 16, denseDocLimit = 1L)
       .collect().map(key).sortBy(t => (t._1, t._2))
-    val auto = Dedup.ngramJaccardPairsAuto(docs, "text", "doc_id", 2, 1, 5)
+    val auto = Dedup.ngramJaccardPairsAutoFromShingles(sh, 1, 5)
       .collect().map(key).sortBy(t => (t._1, t._2))
     assert(forced.nonEmpty && (forced sameElements auto))
     graft.ops.TransientCache.releaseAll()
@@ -909,7 +921,7 @@ class StrategyEquivalenceSpec extends AnyFunSuite {
       .select(col("doc_id"), col("n_tokens"), col("n_uniq"), col("n_stop"),
         col("s_en"), col("s_es"), col("s_de"), col("s_fr"), col("lang_detected"),
         col("quality"),
-        TextAnalysis.regexTokenCount(norm).cast("int").as("n_subword"),
+        regexp_count(norm, lit("[a-z]+|[0-9]+")).cast("int").as("n_subword"),
         length(norm).as("n_chars_norm"),
         TextAnalysis.fingerprint(col("text")).as("fingerprint"))
       .collect().map(_.toString).sorted
@@ -957,7 +969,8 @@ class StrategyEquivalenceSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf).limit(100)
     val perDoc = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val clustered = Dedup.simhashClusters(docs, "text", "doc_id").collect()
+    val clustered = Dedup.simhashClustersFromSigs(
+      Dedup.simhashSignatures(docs, "text", "doc_id")).collect()
     clustered.foreach { r =>
       val sig = r.getString(0)
       val minDoc = r.getLong(2)

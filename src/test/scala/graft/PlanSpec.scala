@@ -213,7 +213,7 @@ class PlanSpec extends AnyFunSuite {
   test("partitioned corpus layout prunes non-matching partitions at scan") {
     val dir = java.nio.file.Files.createTempDirectory("part_docs").toString
     val docs = Tables.documents(spark, sf)
-    graft.sink.Sinks.writePartitioned(docs, dir, Seq("lang"))
+    docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val read = spark.read.parquet(dir).where(col("lang") === "en")
     val p = read.queryExecution.executedPlan.toString
     // The predicate must be INSIDE the PartitionFilters list — a scan
@@ -237,7 +237,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("dpp_fact").toString
     val fact = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    graft.sink.Sinks.writePartitioned(fact, dir, Seq("lang"))
+    fact.write.mode("overwrite").partitionBy("lang").parquet(dir)
     // the dim must be a real scan (a LocalRelation's filter constant-
     // folds away, and DPP requires a selective predicate on the build
     // side to survive into the optimized plan)
@@ -269,13 +269,13 @@ class PlanSpec extends AnyFunSuite {
     }
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      graft.sink.Sinks.writeBucketed(
-        Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity")),
-        "bkt_lineitem_t", "l_orderkey", 4)
-      graft.sink.Sinks.writeBucketed(
-        Tables.orders(spark, sf)
-          .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate")),
-        "bkt_orders_t", "l_orderkey", 4)
+      Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity"))
+        .write.mode("overwrite").bucketBy(4, "l_orderkey").sortBy("l_orderkey")
+        .format("parquet").saveAsTable("bkt_lineitem_t")
+      Tables.orders(spark, sf)
+        .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate"))
+        .write.mode("overwrite").bucketBy(4, "l_orderkey").sortBy("l_orderkey")
+        .format("parquet").saveAsTable("bkt_orders_t")
       // force the shuffle-join path so the assertion is about bucketing,
       // not about a broadcast hiding the exchange
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -604,13 +604,13 @@ class PlanSpec extends AnyFunSuite {
     // AGGREGATE (ShardedRank's P-row offset table — unpartitioned but
     // bounded). An unpartitioned window over row-grain input would be
     // the one corpus-sized single-partition WindowExec in the repo —
-    // pin its absence structurally via PlanAudit.windowShapes (which
+    // pin its absence structurally via WindowAudit.windowShapes (which
     // sees through AQE wrappers, cached relations, and subqueries, and
     // ignores aggregates on broadcast build sides).
     Seq("q178_ks_drift", "q258_peak_concurrency", "q259_watermark_lateness",
         "q269_global_quantiles", "q230_zorder_skipping")
       .foreach { name =>
-        val shapes = PlanAudit.windowShapes(
+        val shapes = WindowAudit.windowShapes(
           SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
         graft.ops.TransientCache.releaseAll()
         assert(shapes.nonEmpty,

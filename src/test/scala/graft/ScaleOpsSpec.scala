@@ -53,26 +53,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     } finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("bucketed tables equi-join without a shuffle exchange") {
-    val members = MemberCatalog.members(spark, sf)
-    val children = members.where(col("PARENT_UNIQUE_NAME").isNotNull)
-      .select(col("PARENT_UNIQUE_NAME").as("jkey"), col("MIEMBRO_CAPTION").as("child"))
-    val parents = members
-      .select(col("MIEMBRO_UNIQUE_NAME").as("jkey"), col("MIEMBRO_CAPTION").as("parent"))
-    ScaleOps.saveBucketed(children, "b_children", "jkey")
-    ScaleOps.saveBucketed(parents, "b_parents", "jkey")
-    val joined = spark.table("b_children").join(spark.table("b_parents"), "jkey")
-    // disable broadcast so the co-location (not a broadcast) avoids the shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() ==
-        children.join(parents, "jkey").count())
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   test("bloom-pruned join returns exactly the plain-join rows (false positives removed)") {
     val li = Tables.lineitem(spark, sf).select("l_partkey", "l_extendedprice")
     val p = Tables.part(spark, sf).where(col("p_size") <= 2)
@@ -130,55 +110,5 @@ class ScaleOpsSpec extends AnyFunSuite {
     val approx = m.select(approx_count_distinct(col("MIEMBRO_UNIQUE_NAME")))
       .head().getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.05)
-  }
-
-  test("mortonInterleave matches a driver-side bit-by-bit reference") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val pairs = Seq.fill(200)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong)) ++
-      Seq((0L, 0L), (65535L, 65535L), (0L, 65535L), (65535L, 0L))
-    val got = pairs.toDF("a", "b")
-      .select(col("a"), col("b"),
-        ScaleOps.mortonInterleave(col("a"), col("b")).as("z"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    def ref(a: Long, b: Long): Long =
-      (0 until 16).map(i =>
-        (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1))).sum
-    pairs.foreach { case (a, b) =>
-      assert(got((a, b)) == ref(a, b), s"($a, $b)")
-    }
-  }
-
-  test("z-ordered layout prunes files on the NON-leading dimension; lexicographic cannot") {
-    import spark.implicits._
-    // 64x64 uniform grid scaled into the 16-bit domain: two independent
-    // dimensions, no correlation for a sort to exploit by luck.
-    val grid = (0 until 4096).map(i => ((i % 64).toLong * 1024, (i / 64).toLong * 1024))
-      .toDF("a", "b")
-    val zDir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val lexDir = java.nio.file.Files.createTempDirectory("lexorder").toString
-    ScaleOps.writeZOrdered(grid, zDir, "a", "b", 16)
-    grid.repartitionByRange(16, col("a")).sortWithinPartitions("a")
-      .write.mode("overwrite").parquet(lexDir)
-    // Round trip: layout changes bytes-on-disk, never the relation.
-    assert(spark.read.parquet(zDir).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      .sameElements(grid.collect().map(r => (r.getLong(0), r.getLong(1))).sorted))
-    // The file-skipping predicate every lakehouse format evaluates:
-    // which files' [min_b, max_b] intersect `b < 4096`?
-    def candidateFiles(dir: String): Int = {
-      val parts = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-      assert(parts.length == 16, s"expected 16 files in $dir")
-      parts.count { p =>
-        val r = spark.read.parquet(p).agg(min(col("b")), max(col("b"))).head()
-        r.getLong(0) < 4096L // min_b <= predicate upper bound
-      }
-    }
-    val zHit = candidateFiles(zDir)
-    val lexHit = candidateFiles(lexDir)
-    // a-sorted: every file spans the full b range -> no skipping at all.
-    assert(lexHit == 16, s"lexicographic layout skipped files unexpectedly: $lexHit")
-    // z-order: b < 4096 touches only the bottom row of z sub-squares.
-    assert(zHit <= 4, s"z-order should confine b<4096 to <=4 of 16 files, hit $zHit")
   }
 }

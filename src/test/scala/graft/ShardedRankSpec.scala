@@ -156,7 +156,7 @@ class ShardedRankSpec extends AnyFunSuite {
     val smallPlan = small.queryExecution.executedPlan.toString
     assert(rangeExchanges(smallPlan) == 0 && !smallPlan.contains("BroadcastHashJoin"),
       s"small input must take the window form:\n$smallPlan")
-    assert(PlanAudit.windowShapes(small.queryExecution.executedPlan).nonEmpty)
+    assert(WindowAudit.windowShapes(small.queryExecution.executedPlan).nonEmpty)
 
     // Threshold 0 (the at-scale posture): the same input shards.
     s2.conf.set(ShardedRank.smallInputKey, "0")
@@ -186,7 +186,7 @@ class ShardedRankSpec extends AnyFunSuite {
     val df = fixture(400, 2, 3, seed = 29)
     val plan = ShardedRank.withRank(df, Seq("grp"), col("key"), col("tie"), "rn")
       .queryExecution.executedPlan
-    val wins = PlanAudit.windowShapes(plan)
+    val wins = WindowAudit.windowShapes(plan)
     graft.ops.TransientCache.releaseAll()
     assert(wins.nonEmpty)
     wins.foreach { w =>

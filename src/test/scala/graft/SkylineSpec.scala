@@ -56,15 +56,16 @@ class SkylineSpec extends AnyFunSuite {
   test("foldFrontier2 is insertion-order- and batch-split-invariant") {
     val rnd = new scala.util.Random(11)
     val pts = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    val base = Skyline.foldFrontier2(pts).sorted
+    def fold(ps: Seq[(Long, Long)]) = ps.foldLeft(List.empty[(Long, Long)])(Skyline.insert2)
+    val base = fold(pts).sorted
     // Any permutation folds to the same frontier…
     (1 to 5).foreach { i =>
       val shuffled = new scala.util.Random(i).shuffle(pts)
-      assert(Skyline.foldFrontier2(shuffled).sorted == base)
+      assert(fold(shuffled).sorted == base)
     }
     // …and folding in splits (state carried between batches) too.
     val (b1, b2) = pts.splitAt(73)
-    val carried = b2.foldLeft(Skyline.foldFrontier2(b1))(Skyline.insert2)
+    val carried = b2.foldLeft(fold(b1))(Skyline.insert2)
     assert(carried.sorted == base)
     // And it matches the brute-force 2-D dominance filter as a set.
     val brute = pts.filter(a => !pts.exists(b =>
@@ -73,7 +74,8 @@ class SkylineSpec extends AnyFunSuite {
   }
 
   test("insert2 keeps exact-tie duplicates, like the batch operator") {
-    val f = Skyline.foldFrontier2(Seq((5L, 5L), (5L, 5L), (3L, 3L)))
+    val f = Seq((5L, 5L), (5L, 5L), (3L, 3L))
+      .foldLeft(List.empty[(Long, Long)])(Skyline.insert2)
     assert(f.sorted == List((5L, 5L), (5L, 5L)))
   }
 

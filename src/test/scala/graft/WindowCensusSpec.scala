@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with a BLANKET "those are oracle-/model-sized" claim — which failed
   * for q155, whose per-lang windows ran near-serially on the driver.
   * This pins the adjudication per query, with two UNIVERSAL rules read
-  * off PlanAudit.windowShapes (plan-construction only — no execution —
+  * off WindowAudit.windowShapes (plan-construction only — no execution —
   * so the full registry censuses in seconds):
   *
   *  1. An UNPARTITIONED window (arity 0 — the literal warning) must have
@@ -53,7 +53,7 @@ class WindowCensusSpec extends AnyFunSuite {
     val observed = scala.collection.mutable.Map.empty[String, Map[String, Int]]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val shapes =
-        try PlanAudit.windowShapes(fn(spark, sf).queryExecution.executedPlan)
+        try WindowAudit.windowShapes(fn(spark, sf).queryExecution.executedPlan)
         finally graft.ops.TransientCache.releaseAll()
       shapes.filter(w => w.arity == 0 && !w.bounded).foreach { w =>
         failures += s"$name: GLOBAL window over an unbounded row-grain input ($w)"
