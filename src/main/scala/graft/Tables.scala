@@ -27,15 +27,20 @@ object Tables {
     * file's current version in this session. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The parquet schema at `path` (a file or a dir of files), inferred
+    * once per session and version of the path. */
+  private[graft] def schema(spark: SparkSession, path: String): StructType = {
     val f = new java.io.File(path)
     val key = (path, f.length, f.lastModified)
     val known = schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
-    val schema = Option(known.get(key)).getOrElse {
+    Option(known.get(key)).getOrElse {
       val s = spark.read.parquet(path).schema
       known.put(key, s)
       s
     }
-    spark.read.schema(schema).parquet(path)
   }
 
   def region(spark: SparkSession, d: String): DataFrame    = load(spark, d, "region")
@@ -45,7 +50,10 @@ object Tables {
   def part(spark: SparkSession, d: String): DataFrame      = load(spark, d, "part")
   def orders(spark: SparkSession, d: String): DataFrame    = load(spark, d, "orders")
   def lineitem(spark: SparkSession, d: String): DataFrame  = load(spark, d, "lineitem")
-  /** Normalizes `events.ts` to session-local TimestampType regardless of
+  /** `events` with [[plainTs]]. */
+  def events(spark: SparkSession, d: String): DataFrame = plainTs(load(spark, d, "events"))
+
+  /** Normalizes a `ts` column to session-local TimestampType regardless of
     * how the parquet writer encoded it. Observed encodings across testdata
     * generations:
     *  - TIMESTAMP(NANOS): no native Spark type; with
@@ -55,15 +63,17 @@ object Tables {
     *    TimestampType. Wall-clock identity because every GraftSession pins
     *    `spark.sql.session.timeZone=UTC`.
     * Everything downstream (watermarks, `unix_micros`, window frames)
-    * assumes plain TimestampType; this loader is the single choke point. */
-  def events(spark: SparkSession, d: String): DataFrame = {
+    * assumes plain TimestampType; the batch [[events]] loader and the
+    * stream reader [[graft.streaming.TableStream.read]] both go through
+    * here. A frame without `ts`
+    * is returned as it is. */
+  private[graft] def plainTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = load(spark, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
+    raw.schema.find(_.name == "ts").map(_.dataType) match {
+      case Some(LongType) =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
+      case Some(TimestampNTZType) =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }

@@ -24,21 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Word n-gram shingles (distinct), from a pre-normalized text column.
-    * Column form for composability; hot paths use [[shingleRows]] — this
-    * expression tree (transform+slice) is interpreted and O(len²). */
-  def shingles(text: Column, n: Int = 2): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val grams = transform(
-      sequence(lit(1), size(toks) - (n - 1)),
-      i => array_join(slice(toks, i, lit(n)), " "))
-    when(size(toks) >= n, array_distinct(grams))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** (doc, shingle) rows via a typed flatMap — the fast exact twin of
-    * exploding [[shingles]]: plain string ops, whole pipeline codegen'd
-    * around a single deserialize boundary, benched ~15× faster. Same
+  /** Distinct word n-gram shingles as (doc, shingle) rows, via a typed
+    * flatMap: plain string ops, whole pipeline codegen'd around a single
+    * deserialize boundary — benched ~15× faster than the interpreted
+    * transform+slice expression tree over a token array. Same
     * normalization contract as TextAnalysis.normalize (ASCII corpus:
     * JVM and SQL lowercasing agree). */
   def shingleRows(df: DataFrame, textCol: String, idCol: String,

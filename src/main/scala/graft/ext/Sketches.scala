@@ -109,32 +109,37 @@ object Sketches {
 
   /** Count-min-sketch bucket for a token column under hash row `j`:
     * md5-derived (engine-portable, the q101/q104 conversion convention),
-    * `('0x'||hex)::BIGINT % w` on the SQL side. Shared by the batch
-    * sketch (q104) and the streaming register twin so the two hash
-    * identically. */
-  def cmsBucket(token: Column, j: Column, w: Int): Column =
+    * `('0x'||hex)::BIGINT % w` on the SQL side. */
+  private def cmsBucket(token: Column, j: Column, w: Int): Column =
     conv(substring(md5(concat(token, lit("#"), j.cast("string"))
       .cast("binary")), 1, 8), 16, 10).cast("long") % w
 
-  /** Per-occurrence CMS bucket rows `(j, bucket)` over the tokenized
-    * text — the pre-aggregation stream both the batch register table
-    * and the streaming twin fold with `+`. */
-  def cmsBucketRows(df: DataFrame, textCol: String, idCol: String,
-                    d: Int, w: Int): DataFrame = {
+  /** `df` (with a `token` column) fanned out to one row per hash row `j`
+    * in [0, d), each with the token's CMS `bucket` — the one hashing of
+    * the batch register build, q104's probe side and the streaming
+    * register twin. */
+  def cmsBuckets(df: DataFrame, d: Int, w: Int): DataFrame = {
     require(d >= 1 && d <= 8 && w >= 2, s"bad CMS shape d=$d w=$w")
-    TextAnalysis.tokenRows(df, textCol, idCol)
-      .withColumn("j", explode(array((0 until d).map(lit): _*)))
-      .select(col("j"),
-        cmsBucket(col("token"), col("j"), w).cast("int").as("bucket"))
+    df.withColumn("j", explode(array((0 until d).map(lit): _*)))
+      .withColumn("bucket", cmsBucket(col("token"), col("j"), w).cast("int"))
   }
 
-  /** The CMS register table: `(j, bucket) → Σ occurrences` — fixed d×w
-    * rows, mergeable by addition across partitions/batches/days. */
-  def cmsRegisters(df: DataFrame, textCol: String, idCol: String,
-                   d: Int = 4, w: Int = 512): DataFrame =
-    cmsBucketRows(df, textCol, idCol, d, w)
+  /** Per-occurrence CMS bucket rows `(j, bucket)` over the tokenized
+    * text — the stream the streaming register twin folds with `+`. */
+  def cmsBucketRows(df: DataFrame, textCol: String, idCol: String,
+                    d: Int, w: Int): DataFrame =
+    cmsBuckets(TextAnalysis.tokenRows(df, textCol, idCol), d, w)
+      .select(col("j"), col("bucket"))
+
+  /** The CMS register table over `(token, cnt)` rows: `(j, bucket) → Σ
+    * cnt` — fixed d×w rows, mergeable by addition across
+    * partitions/batches/days. Counts-first: it hashes the vocabulary, not
+    * every occurrence, and Σcnt per bucket equals the per-occurrence
+    * register table. */
+  def cmsRegisters(tokenCounts: DataFrame, d: Int = 4, w: Int = 512): DataFrame =
+    cmsBuckets(tokenCounts, d, w)
       .groupBy(col("j"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_sum"))
+      .agg(sum(col("cnt")).as("bucket_sum"))
 
   /** Misra–Gries k-counter heavy-hitter summary (Misra & Gries 1982),
     * merged across partitions with the prune rule of Agarwal et al. 2012

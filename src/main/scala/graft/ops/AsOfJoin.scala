@@ -26,28 +26,14 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  /** Left as-of join. Output = every left column, plus each `rightCols`
-    * column as `<prefix><name>` (NULL when no right row precedes the left
-    * row). `rightTieBreak` must be a unique right column (e.g. its id):
-    * it makes the within-timestamp winner deterministic. */
-  def asOfLeft(left: DataFrame, right: DataFrame, keyCol: String,
-               timeCol: String, rightCols: Seq[String], rightTieBreak: String,
-               prefix: String = "r_"): DataFrame =
-    build(left, right, keyCol, timeCol, rightCols, rightTieBreak, prefix,
-      innerOnly = false)
-
-  /** Inner as-of join: [[asOfLeft]] restricted to left rows that found a
-    * match (no NULL right payload reaches the output). */
+  /** Inner as-of join. Output = every left row that has a right row with
+    * its key at or before its time, with every left column plus each
+    * `rightCols` column of the latest such right row as `<prefix><name>`.
+    * `rightTieBreak` must be a unique right column (e.g. its id): it makes
+    * the within-timestamp winner deterministic. */
   def asOfInner(left: DataFrame, right: DataFrame, keyCol: String,
                 timeCol: String, rightCols: Seq[String], rightTieBreak: String,
-                prefix: String = "r_"): DataFrame =
-    build(left, right, keyCol, timeCol, rightCols, rightTieBreak, prefix,
-      innerOnly = true)
-
-  private def build(left: DataFrame, right: DataFrame, keyCol: String,
-                    timeCol: String, rightCols: Seq[String],
-                    rightTieBreak: String, prefix: String,
-                    innerOnly: Boolean): DataFrame = {
+                prefix: String = "r_"): DataFrame = {
     val payloadCols = (rightCols :+ rightTieBreak).distinct
     // SQL join semantics: a NULL key matches nothing. The window below
     // PARTITIONS null keys together (unlike an equi-join), so null-key
@@ -75,9 +61,8 @@ object AsOfJoin {
       .unionByName(leftPart)
       .withColumn("__match", last(col("__rv"), ignoreNulls = true).over(w))
       .where(col("__tag") === 1)
-    val matched = if (innerOnly) joined.where(col("__match").isNotNull) else joined
     val outLeft = left.columns.map(c => col(s"__lv.$c").as(c))
     val outRight = rightCols.map(c => col(s"__match.$c").as(s"$prefix$c"))
-    matched.select(outLeft ++ outRight: _*)
+    joined.where(col("__match").isNotNull).select(outLeft ++ outRight: _*)
   }
 }

@@ -2562,20 +2562,11 @@ object AnalyticsQueries {
     "q104_cms_heavy_hitters" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val tc = ExtQueries.docTokenCounts(s, d)
-      // counts-first register build: hash the VOCABULARY (tc), not every
-      // occurrence — Σcnt per bucket ≡ the per-occurrence register table
-      // (Sketches.cmsRegisters, the streaming twin's fold; same
-      // cmsBucket hash, StreamingSpec-pinned equal)
-      val cms = tc.withColumn("j", explode(array((0 until 4).map(lit): _*)))
-        .withColumn("bucket",
-          graft.ext.Sketches.cmsBucket(col("token"), col("j"), 512).cast("int"))
-        .groupBy(col("j"), col("bucket")).agg(sum(col("cnt")).as("bucket_sum"))
+      val cms = graft.ext.Sketches.cmsRegisters(tc, 4, 512)
       val top = tc.orderBy(col("cnt").desc, col("token")).limit(20)
         .withColumn("rank", row_number().over(
           Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-      top.withColumn("j", explode(array((0 until 4).map(lit): _*)))
-        .withColumn("bucket",
-          graft.ext.Sketches.cmsBucket(col("token"), col("j"), 512).cast("int"))
+      graft.ext.Sketches.cmsBuckets(top, 4, 512)
         .join(broadcast(cms), Seq("j", "bucket"))
         .groupBy(col("rank"), col("token"), col("cnt"))
         .agg(min(col("bucket_sum")).as("cms_est"))

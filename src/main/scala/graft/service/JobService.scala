@@ -2,6 +2,7 @@ package graft.service
 
 import graft.mdx.MdxLowerer
 import graft.streaming.PreAggMaintainer
+import org.apache.commons.io.FileUtils
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
@@ -29,7 +30,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * state file, you append. Nothing compacts the log: it only grows
   * (three files per job, more on a requeue), and bounding it is an open
   * residual (ROADMAP item 3). Results are per-job parquet, keyed like
-  * the reference's request-id-keyed relay files.
+  * the reference's request-id-keyed relay files: an MDX job writes its
+  * rows, and a maintenance job hard-links the files of the state
+  * generation its fold published.
   *
   * THE LOG CONTRACT IS THE FILE NAMES. Every event of job `id` is named
   * `<id>.<phase>-<g>.parquet`: phase `pending`, `running` or `done`, and
@@ -54,8 +57,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * acting on an out-of-date PENDING of g loses the link.
   *
   * Event files are written and read with parquet-hadoop on the driver:
-  * nothing on the job path runs a Spark job but the job's own query and
-  * its result write.
+  * nothing on the job path runs a Spark job but an MDX job's query and
+  * its result write, or a maintenance job's fold.
   *
   * Two runners drive PENDING jobs: the batch `runPending` loop and a
   * Structured Streaming `streamingRunner` (`readStream` over the
@@ -272,13 +275,15 @@ object JobService {
   /** One maintenance run: fold ONLY the delta slice into the stored
     * aggregate ([[graft.streaming.PreAggMaintainer.fold]] — the one
     * maintained-state store, shared with the streaming maintainer) and
-    * publish the state it left as the job result. The job id is the
-    * fold's token: a requeued job whose fold was already published before
-    * its runner died (crash between publish and COMPLETED) only
-    * republishes its result, never folds its delta twice. The fold and
-    * the result copy hold the state path's lock, so two drainers' jobs on
-    * one aggregate run one after the other and each result is the state
-    * its own fold published. */
+    * hard-link the files of the state it left into the job's result dir:
+    * no Spark job, no bytes copied, and the result keeps the state it
+    * names even after later folds publish newer generations. The job id
+    * is the fold's token: a requeued job whose fold was already published
+    * before its runner died (crash between publish and COMPLETED) only
+    * relinks its result, never folds its delta twice. The fold and the
+    * links hold the state path's lock, so two drainers' jobs on one
+    * aggregate run one after the other and each result is the state its
+    * own fold published. */
   private def runMaintenance(spark: SparkSession, root: String, sfDir: String,
                              jobId: String, cubeName: String, paName: String,
                              predicate: String): Unit = {
@@ -290,8 +295,13 @@ object JobService {
     PreAggMaintainer.locked(statePath) {
       PreAggMaintainer.fold(spark, sfDir, cube, pa, statePath,
         cube.fact(spark, sfDir).where(expr(predicate)), jobId)
-      spark.read.parquet(statePath)
-        .write.mode(SaveMode.Overwrite).parquet(resultPath(root, jobId))
+      val out = new java.io.File(resultPath(root, jobId))
+      FileUtils.deleteDirectory(out) // an earlier attempt's partial result
+      out.mkdirs()
+      Option(new java.io.File(statePath).listFiles())
+        .getOrElse(throw new java.io.IOException(s"cannot list $statePath"))
+        .filter(_.isFile)
+        .foreach(f => java.nio.file.Files.createLink(out.toPath.resolve(f.getName), f.toPath))
     }
   }
 

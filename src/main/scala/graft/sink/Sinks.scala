@@ -1,6 +1,8 @@
 package graft.sink
 
 import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -34,13 +36,12 @@ object Sinks {
   /** Parquet append with upsert-by-key semantics (S8: the
     * Postgres ON CONFLICT analogue — existing keys are replaced by the
     * incoming batch; at scale this is a Delta MERGE). The merged dataset
-    * is written once, to [[staging]], and [[publish]]ed by rename; a
-    * dataset left torn by a crashed publish is [[recover]]ed first, so a
-    * crash never turns the next call into a first write. One writer per
-    * path: concurrent upserts to the same path are not serialized. */
+    * is written once, to a fresh [[generation]], and [[publish]]ed by one
+    * link swap, so a crash leaves the previous dataset in place. One
+    * writer per path: concurrent upserts to the same path are not
+    * serialized. */
   def upsertParquet(df: DataFrame, path: String, keyCols: Seq[String]): Unit = {
     val spark = df.sparkSession
-    recover(path)
     // Only a genuinely absent target means "first write": any OTHER read
     // failure must propagate — swallowing it would overwrite (lose) the
     // existing dataset with just the incoming batch.
@@ -49,62 +50,39 @@ object Sinks {
       else spark.read.parquet(path)
         .join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
         .unionByName(df)
-    merged.write.mode(SaveMode.Overwrite).parquet(staging(path, "upsert").getPath)
-    publish(path, "upsert")
+    // A fresh tag: the merge reads the live generation while it writes.
+    val tag = UUID.randomUUID().toString
+    merged.write.mode(SaveMode.Overwrite).parquet(generation(path, tag).getPath)
+    publish(path, tag)
   }
 
   /** The dir a new generation of the dataset at `live` is written to
-    * before [[publish]] renames it in under the same `tag`. */
-  def staging(live: String, tag: String): File = new File(s"$live.next-$tag")
+    * before [[publish]] points `live` at it. A writer never passes the
+    * tag of the live generation. */
+  def generation(live: String, tag: String): File = new File(s"$live.gen-$tag")
 
-  private def retired(live: String, tag: String): File = new File(s"$live.old-$tag")
-
-  /** Publish the complete dataset `staging(live, tag)` at `live` by
-    * rename: retire the live generation to `<live>.old-<tag>`, rename the
-    * staged dir into place, then drop the retired one. The two renames
-    * are not atomic together: a failed publish renames the retired
-    * generation back, and a process that dies between them leaves a torn
-    * state that [[recover]] restores. The write-new-then-rename swap is
-    * the local-FS stand-in for a table-format transactional commit
+  /** Publish the complete dataset `generation(live, tag)` at `live` in one
+    * atomic step: a fresh relative symlink to the generation is renamed
+    * over `live` (one rename(2)), then every other `<live>.gen-*` and
+    * `<live>.link-*` sibling is deleted. Readers open `live` through the
+    * link and see the old generation or the new one, never a mix. A
+    * crash at any point leaves `live` whole; what it can leave beside it
+    * (a generation nothing points at, a superseded generation, a temp
+    * link) is garbage the next publish sweeps. The link swap is the
+    * local-FS stand-in for a table-format transactional commit
     * (Delta/Iceberg). */
   def publish(live: String, tag: String): Unit = {
-    val dir = new File(live)
-    val (next, old) = (staging(live, tag), retired(live, tag))
-    val hadLive = dir.exists()
-    if (hadLive && !dir.renameTo(old))
-      throw new java.io.IOException(s"could not retire $live")
-    if (!next.renameTo(dir)) {
-      if (hadLive) old.renameTo(dir) // roll back; the dataset survives
-      throw new java.io.IOException(s"could not publish $next")
+    val gen = generation(live, tag)
+    if (!gen.isDirectory) throw new java.io.IOException(s"no generation $gen to publish")
+    val dir = Paths.get(live).toAbsolutePath
+    val name = dir.getFileName.toString
+    val link = dir.resolveSibling(s"$name.link-${UUID.randomUUID()}")
+    Files.createSymbolicLink(link, Paths.get(gen.getName))
+    Files.move(link, dir, StandardCopyOption.ATOMIC_MOVE)
+    Option(dir.getParent.toFile.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
+      val n = f.getName
+      if (n.startsWith(s"$name.link-")) Files.deleteIfExists(f.toPath)
+      else if (n.startsWith(s"$name.gen-") && n != gen.getName) FileUtils.deleteQuietly(f)
     }
-    FileUtils.deleteQuietly(old)
-  }
-
-  /** Restore a dataset left torn by a crashed [[publish]], then sweep
-    * publish leftovers. If `live` is missing, a prior publish died
-    * between retiring the old generation and publishing the new one: the
-    * new generation survives as a complete staging dir (the parquet
-    * commit protocol wrote its `_SUCCESS`) — rename it into place. With
-    * no complete staging dir, the retired `.old-<tag>` dir IS the prior
-    * generation — restore it. Either way a caller can never observe "no
-    * dataset" after a crash and rebuild from its new batch alone. The
-    * caller must keep other writers of `live` out: a staging dir may
-    * otherwise be a write in flight. */
-  def recover(live: String): Unit = {
-    val dir = new File(live).getAbsoluteFile
-    val name = dir.getName
-    val siblings = Option(dir.getParentFile.listFiles()).getOrElse(Array.empty[File])
-    val nexts = siblings.filter(_.getName.startsWith(s"$name.next-"))
-    val olds = siblings.filter(_.getName.startsWith(s"$name.old-"))
-    if (!dir.exists()) {
-      val completeNext = nexts.find(n => new File(n, "_SUCCESS").exists())
-      completeNext.orElse(olds.headOption).foreach { d =>
-        if (!d.renameTo(dir))
-          throw new java.io.IOException(s"could not restore $live from ${d.getName}")
-      }
-    }
-    // Leftovers from a crash after publish (orphaned .old-*) or before
-    // retire (incomplete .next-*) are garbage once live exists.
-    if (dir.exists()) (nexts ++ olds).foreach(FileUtils.deleteQuietly)
   }
 }

@@ -89,50 +89,6 @@ object DocumentsStream {
 
   final case class CanonicalDoc(content_hash: String, canonical_id: Long)
 
-  /** File-based document stream of the driver parquet fixture (same
-    * single-file symlink shim as [[EventsStream.readEvents]]).
-    * `maxFilesPerTrigger` splits a multi-file directory into that many
-    * micro-batches (oldest file first) — the cross-batch test hook. */
-  def readDocuments(spark: SparkSession, sfDir: String,
-                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val src = new java.io.File(s"$sfDir/documents.parquet")
-    val streamDir =
-      if (!src.exists() || src.isDirectory)
-        // a directory of parquet files IS the stream dir (src missing
-        // means sfDir itself holds the files, e.g. a test fixture dir)
-        if (src.isDirectory) src.getPath else sfDir
-      else {
-        val d = java.nio.file.Files.createTempDirectory("documents_stream")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve("documents.parquet"), src.toPath.toAbsolutePath)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(streamDir)
-  }
-
-  /** File-based embeddings stream of the driver parquet fixture (same
-    * single-file symlink shim as [[readDocuments]]). */
-  def readEmbeddings(spark: SparkSession, sfDir: String,
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val src = new java.io.File(s"$sfDir/embeddings.parquet")
-    val streamDir =
-      if (!src.exists() || src.isDirectory)
-        if (src.isDirectory) src.getPath else sfDir
-      else {
-        val d = java.nio.file.Files.createTempDirectory("embeddings_stream")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve("embeddings.parquet"), src.toPath.toAbsolutePath)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(streamDir)
-  }
-
   /** Streaming centroid registers — the incremental twin of the q188
     * centroid-drift monitor: per-(label, dim) running (Σ quantized
     * component, vector count) maintained as keyed state; the centroid

@@ -26,26 +26,6 @@ final case class QcMomentUpdate(grp: Int, n: Long, n_zero: Long,
   * row ([[graft.ext.Similarity.qcStats]]) at read time. */
 object EmbeddingsStream {
 
-  /** File-based embedding stream of the driver parquet fixture (same
-    * single-file symlink shim as [[DocumentsStream.readDocuments]]). */
-  def readEmbeddings(spark: SparkSession, sfDir: String,
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val src = new java.io.File(s"$sfDir/embeddings.parquet")
-    val streamDir =
-      if (!src.exists() || src.isDirectory)
-        if (src.isDirectory) src.getPath else sfDir
-      else {
-        val d = java.nio.file.Files.createTempDirectory("embeddings_stream")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve("embeddings.parquet"), src.toPath.toAbsolutePath)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(streamDir)
-  }
-
   /** Streaming QC moment registers — the incremental twin of
     * [[graft.ext.Similarity.qcStats]] (q127). State is one fixed-size
     * register per group (O(groups·dims), no TTL needed — the same

@@ -115,34 +115,6 @@ object EventsStream {
                                click_ts: java.sql.Timestamp,
                                click_value: Double)
 
-  /** File-based event stream of the driver parquet fixture. The file
-    * source needs a directory; when the fixture is a single parquet FILE
-    * (pandas-written testdata) it is exposed through a symlinked temp dir. */
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = new java.io.File(s"$sfDir/events.parquet")
-    val streamDir =
-      if (src.isDirectory) src.getPath
-      else {
-        val d = java.nio.file.Files.createTempDirectory("events_stream")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve("events.parquet"), src.toPath.toAbsolutePath)
-        d.toString
-      }
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream.schema(batchSchema).parquet(streamDir)
-    // Same ts normalization contract as Tables.events: watermarks require
-    // plain TimestampType, so both the nanos-as-long and the NTZ parquet
-    // encodings are folded to it here (NTZ→TZ is wall-clock identity: every
-    // GraftSession pins UTC).
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
-
   /** Tumbling 1 h windowed counts/sums with a 1 h watermark — streaming
     * twin of the batch q19_events_window. */
   def windowedStats(events: DataFrame): DataFrame =

@@ -28,7 +28,6 @@ final class PreAggMaintainer(spark: SparkSession, sfDir: String,
   /** The stored aggregate after every fold so far (None before the
     * first fold). */
   def snapshot: Option[DataFrame] = PreAggMaintainer.locked(statePath) {
-    Sinks.recover(statePath)
     if (new java.io.File(statePath).exists()) Some(spark.read.parquet(statePath))
     else None
   }
@@ -51,9 +50,9 @@ object PreAggMaintainer {
 
   /** Run `body` holding the JVM-wide lock of `statePath`. Folds take it,
     * so two folds on one state path never interleave; a reader that needs
-    * the state to stay put (a job publishing the state it just folded)
-    * holds it too — the lock is reentrant. Writers in SEPARATE processes
-    * share no lock: run one maintenance runner per state path. */
+    * the state to stay put (a job linking the state it just folded as its
+    * result) holds it too — the lock is reentrant. Writers in SEPARATE
+    * processes share no lock: run one maintenance runner per state path. */
   def locked[T](statePath: String)(body: => T): T =
     locks.computeIfAbsent(
       java.nio.file.Paths.get(statePath).toAbsolutePath.normalize.toString,
@@ -61,27 +60,22 @@ object PreAggMaintainer {
 
   /** Fold one fact `delta` into the aggregate stored at `statePath`:
     * pre-aggregate ONLY the delta at the declared grain, merge it into the
-    * stored state, and swap the state dir ([[Sinks.publish]]). Work is
-    * delta-sized + one merge shuffle bounded by the grain cardinality —
-    * never a history rebuild.
+    * stored state, write the merge as the state's generation `token` and
+    * [[Sinks.publish]] it. Work is delta-sized + one merge shuffle bounded
+    * by the grain cardinality — never a history rebuild.
     *
     * CRASH SAFETY under at-least-once redelivery (a requeued job, a
     * replayed micro-batch): the merge is not idempotent (folding the same
-    * delta twice double-counts SUM/COUNT partials), and the two renames
-    * are not atomic together — so the fold is made recoverable instead:
-    *   - every published state dir carries `_maintained_by-<token>`
-    *     marker files (underscore-prefixed → invisible to parquet
-    *     readers), carried forward across merges. A fold whose token is
-    *     already marked in the live state is a no-op — it was published
-    *     before the crash.
-    *   - [[Sinks.recover]] runs before the merge: a live dir missing
-    *     because a prior fold died between retire and publish is restored
-    *     from the surviving complete `.next-*` (preferred: it holds the
-    *     finished merge) or `.old-*` (pre-merge state) dir — never
-    *     treated as "no history". */
+    * delta twice double-counts SUM/COUNT partials), so every published
+    * generation carries `_maintained_by-<token>` marker files
+    * (underscore-prefixed → invisible to parquet readers), carried
+    * forward across merges. A fold whose token is already marked in the
+    * live state is a no-op — it was published before the crash — so the
+    * token never names the live generation when a fold writes. A fold
+    * that dies before its publish leaves the live state untouched and an
+    * unpublished generation beside it, which the next publish sweeps. */
   def fold(spark: SparkSession, sfDir: String, cube: CubeDef, pa: PreAggDef,
            statePath: String, delta: DataFrame, token: String): Unit = locked(statePath) {
-    Sinks.recover(statePath)
     val live = new java.io.File(statePath)
     val haveState = live.exists()
     val priorMarkers = if (haveState) markerNames(live) else Seq.empty
@@ -90,7 +84,7 @@ object PreAggMaintainer {
       val merged =
         if (haveState) MdxLowerer.mergePreAggs(cube, pa, Seq(spark.read.parquet(statePath), part))
         else part
-      val next = Sinks.staging(statePath, token)
+      val next = Sinks.generation(statePath, token)
       merged.write.mode(SaveMode.Overwrite).parquet(next.getPath)
       (priorMarkers :+ markerName(token)).foreach { n =>
         new java.io.File(next, n).createNewFile()

@@ -10,11 +10,11 @@ class ExtSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("shingles: distinct bigrams; empty below n tokens") {
-    val df = Seq("a b c a b", "solo", "").toDF("text")
-    val got = df.select(Dedup.shingles(col("text"))).collect()
-      .map(_.getSeq[String](0).sorted)
-    assert(got(0) == Seq("a b", "b c", "c a"))
-    assert(got(1).isEmpty && got(2).isEmpty)
+    val df = Seq((0L, "a b c a b"), (1L, "solo"), (2L, "")).toDF("doc_id", "text")
+    val got = Dedup.shingleRows(df, "text", "doc_id").collect()
+      .groupBy(_.getLong(0)).map { case (doc, rs) => doc -> rs.map(_.getString(1)).toSeq.sorted }
+    assert(got(0L) == Seq("a b", "b c", "c a"))
+    assert(!got.contains(1L) && !got.contains(2L))
   }
 
   test("exact dedup groups partition the corpus") {

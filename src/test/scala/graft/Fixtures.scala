@@ -40,6 +40,12 @@ object SparkJobCount {
   }
 }
 
+/** The name a published dataset's link at `live` points at. */
+object LinkTarget {
+  def apply(live: String): String =
+    java.nio.file.Files.readSymbolicLink(java.nio.file.Paths.get(live)).toString
+}
+
 /** Writes job-log events the way another writer of the public log
   * contract would: one row written by Spark into a temp dir, its part
   * file then linked into `<root>/job_events` under `name`. */

@@ -25,22 +25,20 @@ class PipelineOpsSpec extends AnyFunSuite {
       (4L, 1L, ts(60), "after"),  // after left 100 -> never matched by it
       (5L, 3L, ts(1), "other_key"))
       .toDF("rid", "user_id", "t", "tag")
-    val got = AsOfJoin.asOfLeft(left, right, "user_id", "t",
+    val got = AsOfJoin.asOfInner(left, right, "user_id", "t",
         Seq("rid", "tag"), "rid")
       .orderBy("event_id")
       .collect()
-    assert(got.length == 3)
+    assert(got.length == 2)
     // left 100 @50: latest right <= 50 is the tie pair @40 -> rid 3 wins
-    assert(got(0).getAs[Long]("r_rid") == 3L &&
+    assert(got(0).getAs[Long]("event_id") == 100L &&
+      got(0).getAs[Long]("r_rid") == 3L &&
       got(0).getAs[String]("r_tag") == "before_dup")
     // left 101 @10: right @10 matches (at-or-before)
-    assert(got(1).getAs[Long]("r_rid") == 1L)
-    // left 102 key 2: no right rows -> NULL in left variant
-    assert(got(2).isNullAt(got(2).fieldIndex("r_rid")))
-    // inner variant drops the unmatched row
-    val inner = AsOfJoin.asOfInner(left, right, "user_id", "t",
-      Seq("rid", "tag"), "rid")
-    assert(inner.count() == 2)
+    assert(got(1).getAs[Long]("event_id") == 101L &&
+      got(1).getAs[Long]("r_rid") == 1L)
+    // left 102 key 2: no right rows -> the row is absent
+    assert(!got.exists(_.getAs[Long]("event_id") == 102L))
   }
 
   test("rangeJoin: strictly-after exclusive start, inclusive end, bucket straddle") {
@@ -170,11 +168,10 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toDF("lid", "k", "t")
     val right = Seq((10L, Option.empty[Long], ts(40)), (11L, Option(7L), ts(40)))
       .toDF("rid", "k", "t")
-    val got = AsOfJoin.asOfLeft(left, right, "k", "t", Seq("rid"), "rid")
+    val got = AsOfJoin.asOfInner(left, right, "k", "t", Seq("rid"), "rid")
       .orderBy("lid").collect()
-    assert(got(0).isNullAt(got(0).fieldIndex("r_rid"))) // null key -> no match
-    assert(got(1).getAs[Long]("r_rid") == 11L)
-    assert(AsOfJoin.asOfInner(left, right, "k", "t", Seq("rid"), "rid").count() == 1)
+    assert(!got.exists(_.getAs[Long]("lid") == 1L)) // null key -> no match
+    assert(got.length == 1 && got(0).getAs[Long]("r_rid") == 11L)
   }
 
   test("streaming attribution fold: cross-batch future click never attributes") {

@@ -37,22 +37,21 @@ class PipelinePropertySpec extends AnyFunSuite {
       .toDF("id", "key", "t")
   }
 
-  test("asOfLeft equals the naive latest-at-or-before semantics on random sets") {
+  test("asOfInner equals the naive latest-at-or-before semantics on matched rows") {
     for (seed <- 1L to 8L) {
       val left = evSet(seed, 30)
       val right = evSet(seed + 100, 30)
-      val got = AsOfJoin.asOfLeft(toDf(left), toDf(right), "key", "t",
+      val got = AsOfJoin.asOfInner(toDf(left), toDf(right), "key", "t",
           Seq("id"), "id")
         .select(col("id"), col("r_id"))
         .collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
-        .toMap
-      val expected = left.map { l =>
+        .map(r => r.getLong(0) -> r.getLong(1))
+        .toSeq
+      val expected = left.flatMap { l =>
         val cands = right.filter(r => r.key == l.key && r.t <= l.t)
-        l.id -> (if (cands.isEmpty) None
-                 else Some(cands.maxBy(r => (r.t, r.id)).id))
-      }.toMap
-      assert(got == expected, s"seed $seed diverged")
+        Option.when(cands.nonEmpty)(l.id -> cands.maxBy(r => (r.t, r.id)).id)
+      }
+      assert(got.sorted == expected.sorted, s"seed $seed diverged")
     }
   }
 

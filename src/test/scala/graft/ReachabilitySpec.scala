@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every capability has one implementation, and it is the one a product
   * path runs. A name scan over `src/main` finds each uniquely named
-  * public, non-override `def`; it passes if its name appears outside its
-  * own definition (doc comment included) in `src/main`, `perfbench/src`
-  * or `tools`, if it belongs to a `graft.streaming` object (the streaming
+  * public, non-override `def`; it passes if its name appears in code
+  * (comments do not count) outside its own definition in `src/main`,
+  * `perfbench/src` or `tools`, if it belongs to a `graft.streaming` object (the streaming
   * twins, which specs pin to their batch queries by design), or if
   * COVERAGE.md names it for a reference capability. Callers in specs do
   * not count: a def only specs reach is a second implementation of
@@ -33,6 +33,18 @@ class ReachabilitySpec extends AnyFunSuite {
   private def lines(f: File): IndexedSeq[String] = {
     val src = scala.io.Source.fromFile(f, "UTF-8")
     try src.getLines().toIndexedSeq finally src.close()
+  }
+
+  /** Line `l` without its comment text: a line of a block comment (it
+    * starts with a slash-star or a star) is all comment, and `//` (Scala)
+    * or `#` (Python) starts one. */
+  private def code(l: String, python: Boolean): String = {
+    val t = l.trim
+    if (!python && (t.startsWith("/*") || t.startsWith("*"))) ""
+    else {
+      val at = l.indexOf(if (python) "#" else "//")
+      if (at < 0) l else l.substring(0, at)
+    }
   }
 
   private val defLine =
@@ -70,6 +82,9 @@ class ReachabilitySpec extends AnyFunSuite {
       m <- defLine.findFirstMatchIn(l)
     } yield Def(f, text, i, m.group(1).length, m.group(2), m.group(3))
 
+    val codeOf = (main ++ others).map { case (f, text) =>
+      f -> text.map(code(_, f.getName.endsWith(".py")))
+    }
     def word(name: String) = ("\\b" + name + "\\b").r
     val offenders = defs.groupBy(_.name).values.collect { case Seq(d) => d }
       .filterNot(d => Seq("private", "protected", "override").exists(d.mods.contains))
@@ -78,7 +93,7 @@ class ReachabilitySpec extends AnyFunSuite {
       .filterNot { d =>
         val w = word(d.name)
         val (from, until) = span(d.text, d.line, d.ind)
-        (main ++ others).exists { case (f, text) =>
+        codeOf.exists { case (f, text) =>
           text.indices.exists(k =>
             !(f == d.file && k >= from && k < until) && w.findFirstIn(text(k)).isDefined)
         }

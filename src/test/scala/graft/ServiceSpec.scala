@@ -230,34 +230,34 @@ class ServiceSpec extends AnyFunSuite {
     val up = spark.read.parquet(s"$dir/up").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(up == Map(1L -> "v2", 2L -> "w"))
-    // Published by rename: neither the staging dir nor the retired
-    // generation is left beside the dataset.
+    // Published by one link swap: beside the dataset's link is only the
+    // generation it points at — no temp link, no superseded generation.
     val left = new java.io.File(dir).list().filter(n => n.startsWith("up") && n != "up")
-    assert(left.isEmpty, s"upsert left ${left.toSeq}")
+    assert(left.toSeq == Seq(LinkTarget(s"$dir/up")), s"upsert left ${left.toSeq}")
   }
 
-  test("upsertParquet: a crash between retire and publish loses no earlier key") {
+  test("upsertParquet: a crashed upsert's leftovers lose no key and are swept") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert_crash").toString
     val path = s"$dir/up"
     def rows() = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     Sinks.upsertParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, Seq("k"))
-    // Torn state 1: a dead upsert retired the live generation and died
-    // before its staging dir was complete (no _SUCCESS). The retired dir
-    // IS the dataset; the next upsert must restore it, not treat the
-    // call as a first write and publish its batch alone.
-    assert(new java.io.File(path).renameTo(new java.io.File(s"$path.old-dead")))
-    assert(new java.io.File(s"$path.next-dead").mkdir())
+    // A dead upsert wrote a complete generation holding different rows
+    // and died before its link swap; another died after making its temp
+    // link. Neither is the dataset: the next upsert must merge into the
+    // live generation only, and sweep both leftovers.
+    Seq((1L, "dead"), (9L, "dead")).toDF("k", "v").write.parquet(s"$path.gen-dead")
+    java.nio.file.Files.createSymbolicLink(java.nio.file.Paths.get(s"$path.link-dead"),
+      java.nio.file.Paths.get("up.gen-dead"))
     Sinks.upsertParquet(Seq((3L, "c")).toDF("k", "v"), path, Seq("k"))
     assert(rows() == Map(1L -> "a", 2L -> "b", 3L -> "c"))
-    // Torn state 2: the dead upsert's staging dir was complete (the
-    // finished merge) when it died between the renames: it is restored.
-    assert(new java.io.File(path).renameTo(new java.io.File(s"$path.next-dead2")))
+    val swept = new java.io.File(dir).list().filter(_.endsWith("-dead"))
+    assert(swept.isEmpty, s"crash leftovers not swept: ${swept.toSeq}")
     Sinks.upsertParquet(Seq((2L, "b2")).toDF("k", "v"), path, Seq("k"))
     assert(rows() == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
     val left = new java.io.File(dir).list().filter(_ != "up")
-    assert(left.isEmpty, s"recovery left ${left.toSeq}")
+    assert(left.toSeq == Seq(LinkTarget(path)), s"upsert left ${left.toSeq}")
   }
 
   test("schema evolution: mergeSchema unifies accreted generations; old rows null new columns") {
@@ -517,34 +517,47 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
       .where(col("status") === JobService.Failed).count() == 1)
   }
 
-  test("maintenance crash-safety: torn swaps recover history; post-publish replay never double-folds") {
-    val root = java.nio.file.Files.createTempDirectory("graft_maint_crash").toString
+  private def maintain(root: String, predicate: String): String = {
+    val id = JobService.submit(spark, root, "SALES", s"MAINTAIN PREAGG Sales.base WHERE $predicate")
+    JobService.runPending(spark, root, sf)
+    assert(JobService.status(spark, root, id).get.status == JobService.Completed)
+    id
+  }
+
+  private def preAggRows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy(graft.mdx.SalesCube.cube.preAggs.head.grainCols.map(col): _*)
+      .collect().map(_.toSeq).toSeq
+
+  private def preAggSlice(predicate: String) = {
     val cube = graft.mdx.SalesCube.cube
-    val pa = cube.preAggs.head
-    val statePath = s"$root/preagg_state/Sales.${pa.name}"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(pa.grainCols.map(col): _*).collect().map(_.toSeq).toSeq
-    val full = graft.mdx.MdxLowerer.preAggregateSlice(spark, sf, cube, pa,
-      cube.fact(spark, sf))
+    graft.mdx.MdxLowerer.preAggregateSlice(spark, sf, cube, cube.preAggs.head,
+      cube.fact(spark, sf).where(expr(predicate)))
+  }
+
+  /** The state's dir holds only the link and its one target. */
+  private def onlyLinkAndTarget(statePath: String): Unit = {
+    val state = new java.io.File(statePath)
+    val names = state.getParentFile.list().toSeq.sorted
+    assert(names == Seq(state.getName, LinkTarget(statePath)).sorted,
+      s"publish leftovers not swept: $names")
+  }
+
+  test("maintenance crash-safety: history survives an orphan; no double fold") {
+    val root = java.nio.file.Files.createTempDirectory("graft_maint_crash").toString
+    val statePath = s"$root/preagg_state/Sales.base"
+    val full = preAggRows(preAggSlice("true"))
 
     // History fold.
-    val j1 = JobService.submit(spark, root, "SALES",
-      "MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 != 0")
-    JobService.runPending(spark, root, sf)
-    assert(JobService.status(spark, root, j1).get.status == JobService.Completed)
+    maintain(root, "l_orderkey % 7 != 0")
 
-    // Crash window 1: a dead job retired the live dir and died before
-    // publishing (its .next never completed). The surviving .old-<id> IS
-    // the pre-merge state; the next maintenance run must restore it — not
-    // rebuild from its delta alone and silently drop all folded history.
-    assert(new java.io.File(statePath).renameTo(
-      new java.io.File(s"$statePath.old-deadjob")))
-    val j2 = JobService.submit(spark, root, "SALES",
-      "MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 = 0")
-    JobService.runPending(spark, root, sf)
-    assert(JobService.status(spark, root, j2).get.status == JobService.Completed)
-    assert(rows(JobService.result(spark, root, j2)) == rows(full),
-      "history must survive a retire-then-die swap")
+    // Crash window 1: a dead job wrote a complete generation holding only
+    // its delta and died before its link swap. Nothing points at it: the
+    // next maintenance run must fold into the live state — not adopt the
+    // orphan and silently drop all folded history.
+    preAggSlice("l_orderkey % 7 = 0").write.parquet(s"$statePath.gen-deadjob")
+    val j2 = maintain(root, "l_orderkey % 7 = 0")
+    assert(preAggRows(JobService.result(spark, root, j2)) == full,
+      "history must survive an orphan generation")
 
     // Crash window 2: the claimant published the merged state (marker
     // inside) but died before its COMPLETED transition. The at-least-once
@@ -554,25 +567,44 @@ class StreamingJobRunnerSpec extends AnyFunSuite {
       "MAINTAIN PREAGG Sales.base WHERE l_orderkey % 7 = 0", JobService.Pending, seq = 1L)
     JobService.runPending(spark, root, sf)
     assert(JobService.status(spark, root, j2).get.status == JobService.Completed)
-    assert(rows(spark.read.parquet(statePath)) == rows(full),
+    assert(preAggRows(spark.read.parquet(statePath)) == full,
       "replaying a published merge must not double-count SUM/COUNT partials")
-    assert(rows(JobService.result(spark, root, j2)) == rows(full))
+    assert(preAggRows(JobService.result(spark, root, j2)) == full)
+    onlyLinkAndTarget(statePath)
+  }
 
-    // Crash window 3: a dead job finished its merge (.next complete, with
-    // _SUCCESS) and died between retiring live and publishing. Recovery
-    // must prefer the COMPLETE next dir over treating state as missing.
-    assert(new java.io.File(statePath).renameTo(
-      new java.io.File(s"$statePath.next-deadjob2")))
-    val j3 = JobService.submit(spark, root, "SALES",
-      "MAINTAIN PREAGG Sales.base WHERE l_orderkey < 0") // empty delta
-    JobService.runPending(spark, root, sf)
-    assert(JobService.status(spark, root, j3).get.status == JobService.Completed)
-    assert(rows(spark.read.parquet(statePath)) == rows(full),
-      "a complete .next dir is the finished merge and must be restored")
-    // Swap leftovers are swept once the live dir is healthy again.
-    val leftovers = Option(new java.io.File(s"$root/preagg_state").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .map(_.getName).filter(n => n.contains(".old-") || n.contains(".next-"))
-    assert(leftovers.isEmpty, s"swap leftovers not swept: ${leftovers.toSeq}")
+  test("maintenance crash-safety: a superseded generation is swept") {
+    val root = java.nio.file.Files.createTempDirectory("graft_maint_superseded").toString
+    val statePath = s"$root/preagg_state/Sales.base"
+    maintain(root, "l_orderkey % 7 != 0")
+    // A fold swapped the link and died before sweeping the generation it
+    // replaced: a copy of the history state is left beside the live one.
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(statePath),
+      new java.io.File(s"$statePath.gen-superseded"))
+    val j2 = maintain(root, "l_orderkey % 7 = 0")
+    val full = preAggRows(preAggSlice("true"))
+    assert(preAggRows(JobService.result(spark, root, j2)) == full)
+    assert(preAggRows(spark.read.parquet(statePath)) == full)
+    onlyLinkAndTarget(statePath)
+  }
+
+  test("a maintenance job's result hard-links the state its fold published") {
+    val root = java.nio.file.Files.createTempDirectory("graft_maint_link").toString
+    val statePath = s"$root/preagg_state/Sales.base"
+    val j1 = maintain(root, "l_orderkey % 7 != 0")
+    def ino(p: java.nio.file.Path) = java.nio.file.Files.getAttribute(p, "unix:ino")
+    val parts = new java.io.File(s"$root/results/$j1").listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      assert(ino(f.toPath) == ino(java.nio.file.Paths.get(statePath, f.getName)),
+        s"${f.getName} is a copy, not a link of the state's file")
+    }
+    // A later fold publishes a new generation and sweeps this one; the
+    // first job's result still holds the state its own fold published.
+    maintain(root, "l_orderkey % 7 = 0")
+    val history = preAggRows(preAggSlice("l_orderkey % 7 != 0"))
+    assert(preAggRows(JobService.result(spark, root, j1)) == history)
   }
 }
+

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, TableStream}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -54,7 +54,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming windowed stats equal the batch aggregation (complete mode)") {
-    val stream = EventsStream.windowedStats(EventsStream.readEvents(spark, sf))
+    val stream = EventsStream.windowedStats(TableStream.read(spark, sf, "events"))
     runAvailableNow(stream, "win_stats", OutputMode.Complete())
     val streamed = spark.table("win_stats")
       .select(col("hour"), col("event_type"), col("n"), col("total_value"))
@@ -70,14 +70,14 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("dup_events").toString
     val ev = Tables.events(spark, sf).limit(50)
     ev.union(ev).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val deduped = EventsStream.dedupEvents(EventsStream.readEvents(spark, dir))
+    val deduped = EventsStream.dedupEvents(TableStream.read(spark, dir, "events"))
     runAvailableNow(deduped, "dedup_ev", OutputMode.Append())
     assert(spark.table("dedup_ev").count() == 50)
   }
 
   test("streaming as-of attribution equals the batch q53 twin (single batch)") {
     val attributed = EventsStream.attributeClicks(spark,
-      EventsStream.readEvents(spark, sf))
+      TableStream.read(spark, sf, "events"))
     runAvailableNow(attributed.toDF(), "attrib", OutputMode.Append())
     val streamed = spark.table("attrib")
       .select(col("event_id"), col("user_id"), col("ts").cast("timestamp_ntz"),
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-static interval dimension join equals the batch q102 lookup") {
     val dim = graft.queries.AnalyticsQueries.scdIntervals(spark, sf)
     val enriched = EventsStream.enrichStaticDim(
-      EventsStream.readEvents(spark, sf).where(col("user_id") < 20), dim)
+      TableStream.read(spark, sf, "events").where(col("user_id") < 20), dim)
     runAvailableNow(enriched, "dim_enriched", OutputMode.Append())
     val streamed = spark.table("dim_enriched")
       .collect().map(_.toString).toSet
@@ -111,7 +111,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming first-seen users equal the batch q118 minima (single batch)") {
     val fs = EventsStream.firstSeenUsers(spark,
-      EventsStream.readEvents(spark, sf))
+      TableStream.read(spark, sf, "events"))
     runAvailableNow(fs.toDF(), "first_seen", OutputMode.Append())
     val streamed = spark.table("first_seen")
       .select(col("user_id"), col("first_day").cast("timestamp_ntz"))
@@ -125,7 +125,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join equals the batch range-join pairs") {
-    val pairs = EventsStream.conversionPairs(EventsStream.readEvents(spark, sf))
+    val pairs = EventsStream.conversionPairs(TableStream.read(spark, sf, "events"))
     runAvailableNow(pairs, "conv_pairs", OutputMode.Append())
     val streamed = spark.table("conv_pairs")
       .select(col("click_id"), col("user_id"), col("click_ts").cast("timestamp_ntz"),
@@ -146,7 +146,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming sessionization closes every session except each user's last") {
     val sessions = EventsStream.sessionize(spark,
-      EventsStream.readEvents(spark, sf))
+      TableStream.read(spark, sf, "events"))
     runAvailableNow(sessions.toDF(), "sessions", OutputMode.Append())
     // Both sides compare in NTZ: the streamed timestamps cast here, the
     // batch twin through the same dump-boundary transform Verify
@@ -176,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming funnel equals the batch stageTimes twin (single batch)") {
     val stages = Seq("view", "click", "purchase")
     val prog = EventsStream.funnelProgress(spark,
-      EventsStream.readEvents(spark, sf), stages)
+      TableStream.read(spark, sf, "events"), stages)
     runAvailableNow(prog.toDF(), "funnel_prog", OutputMode.Append())
     val streamed = spark.table("funnel_prog")
       .select(col("user_id"), col("stage"), col("at").cast("timestamp_ntz"))
@@ -218,7 +218,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming exact dedup equals the batch q22 twin (single batch)") {
     import graft.streaming.DocumentsStream
     val dd = DocumentsStream.dedupDocuments(spark,
-      DocumentsStream.readDocuments(spark, sf))
+      TableStream.read(spark, sf, "documents"))
     runAvailableNow(dd.toDF(), "doc_dedup", OutputMode.Append())
     val streamed = spark.table("doc_dedup")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -247,7 +247,7 @@ class StreamingSpec extends AnyFunSuite {
     writeAs("b1.parquet", 1000000L, Seq(1L -> "alpha beta", 2L -> "gamma"))
     writeAs("b2.parquet", 2000000L, Seq(3L -> "alpha beta", 4L -> "delta"))
     val dd = DocumentsStream.dedupDocuments(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(dd.toDF(), "doc_dedup_2b", OutputMode.Append())
     val got = spark.table("doc_dedup_2b")
       .collect().map(r => r.getLong(1)).toSet
@@ -257,7 +257,7 @@ class StreamingSpec extends AnyFunSuite {
     // NoTimeout (dup suppressed across batches); this pins the
     // ProcessingTimeTimeout code path (state bounded at 100 TB/day ingest).
     val ddTtl = DocumentsStream.dedupDocuments(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)),
+      TableStream.read(spark, dir.toString, "documents", Some(1)),
       stateTtl = Some(java.time.Duration.ofHours(1)))
     drainAndStop(ddTtl.toDF(), "doc_dedup_ttl", OutputMode.Append(), minRows = 3)
     val gotTtl = spark.table("doc_dedup_ttl")
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.hllRegisterUpdates(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates.toDF(), "hll_regs", OutputMode.Update())
     // registers are max-monotone, so the final value per key is the max
     // over all emitted updates
@@ -318,14 +318,16 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.cmsRegisterUpdates(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)), d = 4, w = 64)
+      TableStream.read(spark, dir.toString, "documents", Some(1)), d = 4, w = 64)
     runAvailableNow(updates.toDF(), "cms_regs", OutputMode.Update())
     // counts are add-monotone, so the final value per key is the max
     // over all emitted running totals
     val streamed = spark.table("cms_regs")
       .groupBy(col("j"), col("bucket")).agg(max(col("n")).as("n"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    val batch = graft.ext.Sketches.cmsRegisters(docs, "text", "doc_id", 4, 64)
+    val tokenCounts = graft.ext.TextAnalysis.tokenRows(docs, "text", "doc_id")
+      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+    val batch = graft.ext.Sketches.cmsRegisters(tokenCounts, 4, 64)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     assert(streamed.nonEmpty && streamed == batch)
   }
@@ -348,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.bootstrapRegisterUpdates(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)), nReps = 16)
+      TableStream.read(spark, dir.toString, "documents", Some(1)), nReps = 16)
     runAvailableNow(updates.toDF(), "boot_regs", OutputMode.Update())
     // both registers are add-monotone (w >= 0, quality + 50 >= 0), so
     // the final value per key is the max over emitted running totals
@@ -391,7 +393,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.gramC12AtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates.toDF(), "c12_regs", OutputMode.Update())
     // both registers are min-monotone (c2 via the MaxValue sentinel)
     val streamed = spark.table("c12_regs")
@@ -436,7 +438,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.psiBinUpdates(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)),
+      TableStream.read(spark, dir.toString, "documents", Some(1)),
       "n_chars", gmin, w)
     runAvailableNow(updates.toDF(), "psi_regs", OutputMode.Update())
     val streamed = spark.table("psi_regs")
@@ -469,7 +471,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.postingsUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "postings_appends", OutputMode.Append())
     val streamed = spark.table("postings_appends")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -498,7 +500,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.windowPostingsUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "spanidx_appends", OutputMode.Append())
     val streamed = spark.table("spanidx_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -527,7 +529,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.winnowFingerprintUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "winnow_appends", OutputMode.Append())
     val streamed = spark.table("winnow_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -545,7 +547,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"), col("source"))
     docs.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val updates = DocumentsStream.runCollapseUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "runcollapse_appends", OutputMode.Append())
     val streamed = spark.table("runcollapse_appends")
       .collect().map(_.toSeq.toList).toSet
@@ -573,7 +575,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.minhashSignatureUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "minhash_appends", OutputMode.Append())
     val streamed = spark.table("minhash_appends")
       .collect().map(_.toSeq.toList).toSet
@@ -601,7 +603,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = DocumentsStream.dsirProfileUpdates(
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(updates, "dsir_appends", OutputMode.Append())
     val streamed = spark.table("dsir_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -629,7 +631,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, a)
     dump("b2.parquet", 2000000L, bHalf)
     val updates = EmbeddingsStream.qcMomentUpdates(spark,
-      EmbeddingsStream.readEmbeddings(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "embeddings", Some(1)))
     runAvailableNow(updates.toDF(), "qc_regs", OutputMode.Update())
     // n is add-monotone over updates, so max_by(n) per group is the
     // final register; finish it into the batch QC schema.
@@ -749,7 +751,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming LSH near-dup detection: single batch equals the bucket-min batch predicate") {
     import graft.streaming.DocumentsStream
     val matches = DocumentsStream.lshNearDupAtIngest(spark,
-      DocumentsStream.readDocuments(spark, sf))
+      TableStream.read(spark, sf, "documents"))
     runAvailableNow(matches.toDF(), "lsh_ingest_1b", OutputMode.Append())
     val got = spark.table("lsh_ingest_1b")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
@@ -792,7 +794,7 @@ class StreamingSpec extends AnyFunSuite {
     writeAs("b1.parquet", 1000000L, Seq(1L -> a, 2L -> b))
     writeAs("b2.parquet", 2000000L, Seq(3L -> a))
     val matches = DocumentsStream.lshNearDupAtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "lsh_ingest_2b", OutputMode.Append())
     val got = spark.table("lsh_ingest_2b")
       .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3))).toSet
@@ -854,7 +856,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming simhash near-dup detection: single batch equals the claimant fold (verified hamming)") {
     import graft.streaming.DocumentsStream
     val matches = DocumentsStream.simhashNearDupAtIngest(spark,
-      DocumentsStream.readDocuments(spark, sf))
+      TableStream.read(spark, sf, "documents"))
     runAvailableNow(matches.toDF(), "simhash_ingest_1b", OutputMode.Append())
     val got = spark.table("simhash_ingest_1b")
       .collect()
@@ -895,7 +897,7 @@ class StreamingSpec extends AnyFunSuite {
     writeAs("b1.parquet", 1000000L, b1)
     writeAs("b2.parquet", 2000000L, b2)
     val matches = DocumentsStream.simhashNearDupAtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "simhash_ingest_2b", OutputMode.Append())
     val got = spark.table("simhash_ingest_2b")
       .collect()
@@ -911,7 +913,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming daily registers equal the batch daily grain (q171/q209 base)") {
     import graft.streaming.EventsStream
     val updates = EventsStream.dailyRegisters(
-      spark, EventsStream.readEvents(spark, sf))
+      spark, TableStream.read(spark, sf, "events"))
     runAvailableNow(updates.toDF(), "daily_regs", OutputMode.Update())
     // both registers are add-monotone: final value per key = max update
     val got = spark.table("daily_regs")
@@ -1027,7 +1029,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     val k = 500000L
     val updates = EventsStream.cusumRegisters(
-      spark, EventsStream.readEvents(spark, sf), k)
+      spark, TableStream.read(spark, sf, "events"), k)
     runAvailableNow(updates.toDF(), "cusum_regs", OutputMode.Update())
     val got = spark.table("cusum_regs").collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
@@ -1051,7 +1053,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming HWM registers equal the ordered batch fold (q259's arrival contract)") {
     import graft.streaming.EventsStream
     val updates = EventsStream.hwmRegisters(
-      spark, EventsStream.readEvents(spark, sf))
+      spark, TableStream.read(spark, sf, "events"))
     runAvailableNow(updates.toDF(), "hwm_regs", OutputMode.Update())
     val got = spark.table("hwm_regs").collect()
       .map(r => (r.getString(0),
@@ -1124,7 +1126,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     val w = 50000L
     val updates = EventsStream.valueBucketRegisters(
-      spark, EventsStream.readEvents(spark, sf), w)
+      spark, TableStream.read(spark, sf, "events"), w)
     runAvailableNow(updates.toDF(), "vb_regs", OutputMode.Update())
     // Registers are monotone counters: if the source split into several
     // micro-batches, the FINAL register per bucket is the max update.
@@ -1186,7 +1188,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming AQP registers equal the batch q237 legs (HT estimate included)") {
     import graft.streaming.EventsStream
     val updates = EventsStream.aqpRegisters(
-      spark, EventsStream.readEvents(spark, sf))
+      spark, TableStream.read(spark, sf, "events"))
     runAvailableNow(updates.toDF(), "aqp_regs", OutputMode.Update())
     val got = spark.table("aqp_regs").collect()
       .map(r => (r.getString(0),
@@ -1215,7 +1217,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming skyline register equals the batch Pareto frontier") {
     import graft.streaming.EventsStream
     val updates = EventsStream.skylineRegister(
-      spark, EventsStream.readEvents(spark, sf))
+      spark, TableStream.read(spark, sf, "events"))
     runAvailableNow(updates.toDF(), "sky_reg", OutputMode.Update())
     val packed = spark.table("sky_reg").collect().last
       .getAs[scala.collection.Seq[Long]]("packed")
@@ -1233,7 +1235,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     val n = 1000L
     val updates = EventsStream.dgimRegister(
-      spark, EventsStream.readEvents(spark, sf), n)
+      spark, TableStream.read(spark, sf, "events"), n)
     runAvailableNow(updates.toDF(), "dgim_reg", OutputMode.Update())
     val last = spark.table("dgim_reg").collect().last
     val (nSeen, est) = (last.getAs[Long]("n_seen"), last.getAs[Long]("estimate"))
@@ -1329,7 +1331,7 @@ class StreamingSpec extends AnyFunSuite {
     writeAs("b2.parquet", 2000000L,
       Seq((3L, melody + " and a very different long outro follows", "s")))
     val matches = DocumentsStream.audioLandmarkMatchesAtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "audio_ingest_2b", OutputMode.Append())
     val got = spark.table("audio_ingest_2b")
       .collect().map(r => (r.getLong(1), r.getLong(2)))
@@ -1344,7 +1346,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming gram claims: single batch equals batch q184 first-occurrence") {
     import graft.streaming.DocumentsStream
     val claims = DocumentsStream.gramClaimsAtIngest(spark,
-      DocumentsStream.readDocuments(spark, sf))
+      TableStream.read(spark, sf, "documents"))
     runAvailableNow(claims.toDF(), "gram_claims_1b", OutputMode.Append())
     val got = spark.table("gram_claims_1b")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -1382,7 +1384,7 @@ class StreamingSpec extends AnyFunSuite {
     writeAs("b2.parquet", 2000000L,
       Seq(3L -> a, 4L -> "alpha beta gamma zeta eta theta"))
     val claims = DocumentsStream.gramClaimsAtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(claims.toDF(), "gram_claims_2b", OutputMode.Append())
     val got = spark.table("gram_claims_2b")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -1420,7 +1422,7 @@ class StreamingSpec extends AnyFunSuite {
       (5L, "alpha beta gamma", "add"),
       (2L, "beta gamma delta epsilon", "del")))
     val events = DocumentsStream.claimMaintAtIngest(spark,
-      DocumentsStream.readDocuments(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(events.toDF(), "claim_maint", OutputMode.Append())
     val got = spark.table("claim_maint")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
@@ -1457,7 +1459,7 @@ class StreamingSpec extends AnyFunSuite {
     dump("b1.parquet", 1000000L, vecs.where(col("vec_id") % 2 === 0))
     dump("b2.parquet", 2000000L, vecs.where(col("vec_id") % 2 === 1))
     val updates = DocumentsStream.centroidRegisterUpdates(spark,
-      DocumentsStream.readEmbeddings(spark, dir.toString, Some(1)))
+      TableStream.read(spark, dir.toString, "embeddings", Some(1)))
     runAvailableNow(updates.toDF(), "centroid_regs", OutputMode.Update())
     // n is monotone per key, so the row with max n is the final register
     val streamed = spark.table("centroid_regs")
@@ -1480,7 +1482,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming q-digest registers: exact n, bounded size, answers in bound") {
     val updates = EventsStream.qdigestRegisters(
-      spark, EventsStream.readEvents(spark, sf))
+      spark, TableStream.read(spark, sf, "events"))
     runAvailableNow(updates.toDF(), "qd_regs", OutputMode.Update())
     // n_seen is monotone per type; the max-n row is the final register.
     val finals = spark.table("qd_regs").collect()
@@ -1516,7 +1518,7 @@ class StreamingSpec extends AnyFunSuite {
     // must EQUAL the batch computation over the same rows — the sums
     // are order-invariant integers, so this is equality, not a bound.
     val updates = EventsStream.amsRegisters(
-      EventsStream.readEvents(spark, sf))
+      TableStream.read(spark, sf, "events"))
     runAvailableNow(updates, "ams_regs", OutputMode.Complete())
     val rows = spark.table("ams_regs").collect()
       .map(r => (r.getLong(0), r.getLong(1)))

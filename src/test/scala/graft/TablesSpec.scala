@@ -46,7 +46,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("streaming readEvents promises the same ts contract as Tables.events") {
-    val ev = graft.streaming.EventsStream.readEvents(spark, sf)
+    val ev = graft.streaming.TableStream.read(spark, sf, "events")
     assert(ev.isStreaming)
     assert(dtype(ev, "ts") == TimestampType)
   }
