@@ -66,6 +66,23 @@ object Sampling {
     }
   }
 
+  /** Poisson-bootstrap replicate registers over a doc profile
+    * `(doc_id, source, quality)`: per (source, replicate b < nReps) the
+    * shifted weighted sum Σ w·(quality + 50) and the weight sum Σ w, with
+    * w the [[poissonWeight]] of `doc_id|b` — q204's replicate sums.
+    * Both fold with `+` (w ≥ 0, quality ≥ −50), so the same function
+    * run on a document stream in Update mode keeps the registers at
+    * ingest: n_sources × nReps state-store rows, no global n, no
+    * coordination (the construction's purpose). */
+  def bootstrapRegisters(profile: DataFrame, nReps: Int): DataFrame =
+    profile
+      .withColumn("b", explode(sequence(lit(0), lit(nReps - 1))))
+      .withColumn("w", poissonWeight(
+        concat(col("doc_id").cast("string"), lit("|"), col("b").cast("string"))))
+      .groupBy(col("source"), col("b"))
+      .agg(sum(col("w") * (col("quality") + lit(50L))).as("swq50"),
+        sum(col("w")).as("sw"))
+
   /** The SQL twin of [[poissonWeight]] over a VARCHAR key expression. */
   def poissonWeightSql(keyExpr: String): String = {
     val cases = poissonCdfHex.zipWithIndex.map { case (h, k) =>

@@ -24,26 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Raw HyperLogLog distinct estimate per group, next to the exact count.
-    *
-    * Output: `<groupCol>, n_exact, n_buckets, est_milli` where `est_milli`
-    * = floor(1000 · raw HLL estimate) (milli-quantized so the single
-    * float rounding can't straddle engines) and `n_buckets` is the number
-    * of non-empty registers.
-    *
-    * `b` is the bucket-bit width (must be a multiple of 4 so the bucket is
-    * a whole hex prefix); m = 2^b registers. Applies the standard
-    * linear-counting small-range correction (Flajolet §4: when the raw
-    * estimate ≤ 2.5·m and empty registers remain, use m·ln(m/V)). The
-    * correction's ln() is engine-stable here because its input domain is
-    * the 2^b−1 rationals m/V — verified exhaustively (JVM Math.log vs
-    * DuckDB ln agree on floor(1000·m·ln(m/V)) for every V at b=8). */
   /** Per-row register inputs: `(<groupCol>, bucket, rank)` for every
-    * non-null key — the pre-aggregation stream both the batch sketch and
-    * the streaming twin ([[graft.streaming.DocumentsStream.hllRegisterUpdates]])
-    * fold with `max`. */
-  def registerRows(df: DataFrame, keyCol: String, groupCol: String,
-                   b: Int): DataFrame = {
+    * non-null key — the rows [[hllRegisters]] folds with `max`. */
+  private def registerRows(df: DataFrame, keyCol: String,
+                           groupCol: String, b: Int): DataFrame = {
     // b <= 12 keeps s_total in BIGINT: (m − n_buckets)·2^48 for an empty
     // sketch is m·2^48 = 2^(b+48), which must stay below 2^63 with head
     // room for s_seen (b=16 would overflow under ANSI mode whenever the
@@ -61,7 +45,11 @@ object Sketches {
       .select(col(groupCol), bucket.as("bucket"), rank.as("rank"))
   }
 
-  /** The register table: `(<groupCol>, bucket) → max(rank)`. */
+  /** The register table: `(<groupCol>, bucket) → max(rank)`. The same
+    * function is the streaming twin: run on a stream in Update mode, the
+    * state store keeps one running `max` per key, so the registers after
+    * any batch split equal the batch registers over the same rows
+    * (StreamingSpec-pinned) — and state is hard-capped at groups × 2^b. */
   def hllRegisters(df: DataFrame, keyCol: String, groupCol: String,
                    b: Int): DataFrame =
     registerRows(df, keyCol, groupCol, b)
@@ -95,6 +83,20 @@ object Sketches {
       floor(est * lit(1000.0)).cast("long").as("est_milli"))
   }
 
+  /** Raw HyperLogLog distinct estimate per group, next to the exact count.
+    *
+    * Output: `<groupCol>, n_exact, n_buckets, est_milli` where `est_milli`
+    * = floor(1000 · raw HLL estimate) (milli-quantized so the single
+    * float rounding can't straddle engines) and `n_buckets` is the number
+    * of non-empty registers.
+    *
+    * `b` is the bucket-bit width (must be a multiple of 4 so the bucket is
+    * a whole hex prefix); m = 2^b registers. Applies the standard
+    * linear-counting small-range correction (Flajolet §4: when the raw
+    * estimate ≤ 2.5·m and empty registers remain, use m·ln(m/V)). The
+    * correction's ln() is engine-stable here because its input domain is
+    * the 2^b−1 rationals m/V — verified exhaustively (JVM Math.log vs
+    * DuckDB ln agree on floor(1000·m·ln(m/V)) for every V at b=8). */
   def hllDistinct(df: DataFrame, keyCol: String, groupCol: String,
                   b: Int = 8): DataFrame = {
     val est = hllEstimateFromRegisters(
@@ -124,18 +126,12 @@ object Sketches {
       .withColumn("bucket", cmsBucket(col("token"), col("j"), w).cast("int"))
   }
 
-  /** Per-occurrence CMS bucket rows `(j, bucket)` over the tokenized
-    * text — the stream the streaming register twin folds with `+`. */
-  def cmsBucketRows(df: DataFrame, textCol: String, idCol: String,
-                    d: Int, w: Int): DataFrame =
-    cmsBuckets(TextAnalysis.tokenRows(df, textCol, idCol), d, w)
-      .select(col("j"), col("bucket"))
-
   /** The CMS register table over `(token, cnt)` rows: `(j, bucket) → Σ
     * cnt` — fixed d×w rows, mergeable by addition across
     * partitions/batches/days. Counts-first: it hashes the vocabulary, not
     * every occurrence, and Σcnt per bucket equals the per-occurrence
-    * register table. */
+    * register table. The streaming twin is this function run in Update
+    * mode on a stream of `(token, cnt = 1)` rows, one per occurrence. */
   def cmsRegisters(tokenCounts: DataFrame, d: Int = 4, w: Int = 512): DataFrame =
     cmsBuckets(tokenCounts, d, w)
       .groupBy(col("j"), col("bucket"))

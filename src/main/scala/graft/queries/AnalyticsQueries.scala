@@ -45,13 +45,7 @@ object AnalyticsQueries {
     "q204_bootstrap_ci" -> ((s, d) => {
       val base = ExtQueries.docProfile(s, d)
         .select(col("doc_id"), col("source"), col("quality"))
-      val reps = base
-        .withColumn("b", explode(sequence(lit(0), lit(63))))
-        .withColumn("w", graft.ext.Sampling.poissonWeight(
-          concat(col("doc_id").cast("string"), lit("|"), col("b").cast("string"))))
-      val repMeans = reps.groupBy(col("source"), col("b"))
-        .agg(sum(col("w") * (col("quality") + lit(50L))).as("swq50"),
-          sum(col("w")).as("sw"))
+      val repMeans = graft.ext.Sampling.bootstrapRegisters(base, 64)
         .select(col("source"),
           (expr("CAST((1000 * swq50) DIV sw AS BIGINT)") - lit(50000L))
             .as("mean_q"))
@@ -241,7 +235,7 @@ object AnalyticsQueries {
     "q91_daily_gapfill" -> ((s, d) => {
       // ONE scan of the fact: bounds and the type set derive from the
       // tiny persisted daily aggregate, not from re-reading events
-      val daily = graft.ops.TransientCache.persist(dailyAgg(s, d))
+      val daily = graft.ops.TransientCache.persist(dailyAgg(Tables.events(s, d)))
       // one-row bounds × tiny calendar: both sides of the grid broadcast
       val cal = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
@@ -353,7 +347,7 @@ object AnalyticsQueries {
     // densification comes first).
     "q95_rolling_7d" -> ((s, d) => {
       // same one-fact-scan shape as q91
-      val daily = graft.ops.TransientCache.persist(dailyAgg(s, d))
+      val daily = graft.ops.TransientCache.persist(dailyAgg(Tables.events(s, d)))
       val cal = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
       val grid = daily.select(col("event_type")).distinct().crossJoin(cal)
@@ -687,11 +681,9 @@ object AnalyticsQueries {
     // pair×lag table is tiny at any corpus scale; the one real pass is
     // the daily grain groupBy.
     "q215_leadlag" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type").as("typ"),
-          date_trunc("day", col("ts")).as("day"))
-        .agg(expr("CAST(sum(CAST(floor(value * 1000) AS BIGINT)) DIV 1000 AS BIGINT)")
-          .as("x"))
+      val daily = dailyAgg(Tables.events(s, d))
+        .select(col("event_type").as("typ"), col("day"),
+          expr("CAST(value_q DIV 1000 AS BIGINT)").as("x"))
       val anchors = daily.groupBy(col("typ"))
         .agg(expr("sum(x) div count(*)").as("ax"))
       val dv = graft.ops.TransientCache.persist(
@@ -743,12 +735,10 @@ object AnalyticsQueries {
     // stays (series, day), exactly like q215.
     "q227_theilsen" -> ((s, d) => {
       val daily = graft.ops.TransientCache.persist(
-        Tables.events(s, d)
-          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-          .agg(sum(expr("CAST(floor(value * 1000) AS BIGINT)")).as("vq"))
+        dailyAgg(Tables.events(s, d))
           .select(col("event_type"),
             expr("CAST(unix_micros(day) DIV 86400000000 AS BIGINT)").as("didx"),
-            col("vq")))
+            col("value_q").as("vq")))
       // Per-series anchors (min day, floor-mean value) keep the OLS
       // moments deviation-sized — the q90/q215 overflow discipline.
       val anch = daily.groupBy(col("event_type"))
@@ -1062,16 +1052,9 @@ object AnalyticsQueries {
     // The number a pipeline needs before it trusts a sampled dashboard
     // at 100 TB, measured instead of assumed.
     "q237_aqp_error" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
-        (substring(md5(col("event_id").cast("string").cast("binary")), 1, 1)
-          === lit("0")).as("in_sample"))
-      ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(col("cents")).as("sum_exact"),
-          (sum(when(col("in_sample"), 1L).otherwise(0L)) * 16L).as("n_est"),
-          (sum(when(col("in_sample"), col("cents")).otherwise(0L)) * 16L)
-            .as("sum_est"))
+      aqpRegisters(Tables.events(s, d))
+        .withColumn("n_est", col("n_sample") * 16L)
+        .withColumn("sum_est", col("sum_sample") * 16L)
         .withColumn("err_cnt_ppm",
           expr("(1000000 * abs(n_est - n_exact)) DIV n_exact"))
         .withColumn("err_sum_ppm",
@@ -2018,9 +2001,8 @@ object AnalyticsQueries {
     // forecasts are lag() windows over the daily grain, partition-
     // parallel per series.
     "q171_seasonal_naive_eval" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(floor(value * 1000) AS BIGINT)")).as("vq"))
+      val daily = dailyAgg(Tables.events(s, d))
+        .select(col("event_type"), col("day"), col("value_q").as("vq"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       daily
         .withColumn("f_seasonal", lag(col("vq"), 7).over(w))
@@ -2052,9 +2034,8 @@ object AnalyticsQueries {
     // at 100 TB the daily grain is time-bounded, types are enumerable,
     // and the heavy work is the one groupBy that builds the grain.
     "q209_ewma_anomaly" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(floor(value * 1000) AS BIGINT)")).as("vq"))
+      val daily = dailyAgg(Tables.events(s, d))
+        .select(col("event_type"), col("day"), col("value_q").as("vq"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val num = (1 to 8).map(g =>
         coalesce(lag(col("vq"), g).over(w), lit(0L)) * lit(1L << (8 - g)))
@@ -2092,9 +2073,8 @@ object AnalyticsQueries {
       // pressure; sibling q171, same shape without the persist, did
       // not. Deriving the total from the finer grain removes both the
       // persist and the second aggregate of `daily`.)
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(floor(value * 1000) AS BIGINT)")).as("vq"))
+      val daily = dailyAgg(Tables.events(s, d))
+        .select(col("event_type"), col("day"), col("value_q").as("vq"))
       val byDow = daily
         .withColumn("dow", dayofweek(col("day")).cast("int"))
         .groupBy(col("event_type"), col("dow"))
@@ -2849,9 +2829,8 @@ object AnalyticsQueries {
     // the upward level shift is largest (ties break to the earliest
     // day). Series partition-parallel at any cardinality.
     "q161_cusum_changepoint" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
+      val daily = dailyAgg(Tables.events(s, d))
+        .select(col("event_type"), col("day"), col("n_events").as("x"))
       val st = daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("t"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -2875,15 +2854,11 @@ object AnalyticsQueries {
     // a groupBy-sum over the union). The oracle recomputes from scratch:
     // equality proves the incremental identity.
     "q106_incremental_agg" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type"),
-        date_trunc("day", col("ts")).as("day"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("vq"))
+      val ev = Tables.events(s, d)
+      // a midnight cutoff: ts < cutoff iff its day < cutoff
       val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
-      def agg(part: DataFrame): DataFrame =
-        part.groupBy(col("event_type"), col("day"))
-          .agg(count(lit(1)).as("n_events"), sum(col("vq")).as("value_q"))
-      val oldAgg = agg(ev.where(col("day") < cutoff))   // the persisted table
-      val delta = agg(ev.where(col("day") >= cutoff))   // today's load
+      val oldAgg = dailyAgg(ev.where(col("ts") < cutoff))   // the persisted table
+      val delta = dailyAgg(ev.where(col("ts") >= cutoff))   // today's load
       oldAgg.unionByName(delta)
         .groupBy(col("event_type"), col("day"))
         .agg(sum(col("n_events")).as("n_events"), sum(col("value_q")).as("value_q"))
@@ -3097,7 +3072,7 @@ object AnalyticsQueries {
     }),
 
     "q111_range_frame" -> ((s, d) => {
-      val daily = dailyAgg(s, d)
+      val daily = dailyAgg(Tables.events(s, d))
         .withColumn("day_num",
           expr("CAST(datediff(CAST(day AS DATE), DATE '1970-01-01') AS BIGINT)"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day_num"))
@@ -3118,7 +3093,7 @@ object AnalyticsQueries {
     "q112_snapshot_reconcile" -> ((s, d) => {
       // both join branches read the aggregate: persisted, one fact scan
       val daily = graft.ops.TransientCache.persist(
-        dailyAgg(s, d).select(col("event_type"), col("day"),
+        dailyAgg(Tables.events(s, d)).select(col("event_type"), col("day"),
           col("n_events").as("n")))
       val cutA = lit("2024-01-21 00:00:00").cast("timestamp")
       val cutB = lit("2024-01-11 00:00:00").cast("timestamp")
@@ -3346,7 +3321,7 @@ object AnalyticsQueries {
       val b = v.agg(min(col("x")).as("gmin"), max(col("x")).as("gmax"))
       val binned = v.crossJoin(b)
         .withColumn("w", expr("greatest((gmax - gmin + 63) div 64, 1)"))
-        .withColumn("bin", expr("least((x - gmin) div w, 63)"))
+        .withColumn("bin", psiBin(col("x"), col("gmin"), col("w"), 64))
         .withColumn("pop",
           when(col("doc_id") % 2 === 0, lit("ref")).otherwise(lit("cur")))
       val counts = binned.groupBy(col("bin"))
@@ -3524,19 +3499,49 @@ object AnalyticsQueries {
     })
   )
 
-  /** THE (event_type, day, n_events, value_q) daily aggregate — q91,
-    * q95, q111 and q112 all consume this one construction (day =
-    * date_trunc, value quantized ×1000 to BIGINT), so the
-    * quantization/truncation convention cannot fork between the
-    * gap-fill, rolling, RANGE-frame and reconciliation queries. NOT
-    * persisted here — single-consumer queries (q111) use it lazily;
-    * multi-consumer ones persist at their use site. */
-  private def dailyAgg(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
+  /** THE (event_type, day, n_events, value_q) daily aggregate over an
+    * events frame — every daily-grain query (q91, q95, q106, q111,
+    * q112, q161, q171, q172, q209, q215, q227) consumes this one
+    * construction (day = date_trunc, value quantized ×1000 to BIGINT),
+    * so the quantization/truncation convention cannot fork between
+    * them. Both columns fold with `+`, so the same function run on an
+    * events stream in Update mode is the daily register table kept at
+    * ingest (StreamingSpec-pinned, across batches and a checkpoint
+    * restart). NOT persisted here — single-consumer queries use it
+    * lazily; multi-consumer ones persist at their use site. */
+  private[graft] def dailyAgg(events: DataFrame): DataFrame =
+    events
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         expr("CAST(floor(value * 1000) AS BIGINT)").as("vq"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n_events"), sum(col("vq")).as("value_q"))
+
+  /** q237's two AQP legs per event_type, unscaled: the exact (n, Σcents)
+    * and the 1/16 md5-nibble sample's (n, Σcents). All four fold with
+    * `+`, so the same function run on an events stream in Update mode
+    * keeps the registers at ingest, and a dashboard reads the ×16
+    * Horvitz-Thompson estimates from them with no event re-scan. */
+  private[graft] def aqpRegisters(events: DataFrame): DataFrame = {
+    val inSample =
+      substring(md5(col("event_id").cast("string").cast("binary")), 1, 1) === lit("0")
+    events.select(col("event_type"),
+        expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
+        inSample.as("in_sample"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_exact"),
+        sum(col("cents")).as("sum_exact"),
+        sum(when(col("in_sample"), 1L).otherwise(0L)).as("n_sample"),
+        sum(when(col("in_sample"), col("cents")).otherwise(0L)).as("sum_sample"))
+  }
+
+  /** The PSI bin of value `x` over `nBins` bins of `width` from `gmin`,
+    * clamped into [0, nBins − 1] — q119's binning and its streaming
+    * twin's ([[graft.streaming.DocumentsStream.psiBinUpdates]]), whose
+    * frozen edges must absorb drifted tails on both sides. */
+  private[graft] def psiBin(x: Column, gmin: Column, width: Column,
+                            nBins: Int): Column =
+    least(greatest(call_function("div", x - gmin, width), lit(0L)),
+      lit(nBins - 1L))
 
   /** THE SCD-2 priority-dimension builder — q98's published dimension,
     * q102's lookup side, and the stream-static enrichment twin

@@ -160,6 +160,20 @@ object ExtQueries {
       TextAnalysis.withTokenProfile(
         graft.ops.Fanout.byKey(Tables.documents(s, d), col("doc_id")), "text"))
 
+  /** Per-(label, dim) centroid registers over `(label, embedding)` rows:
+    * the Σ of the dim's component quantized floor(x·1000) and the count
+    * of vectors that have the dim — q188's centroid operands. Integer
+    * sums commute, so the same function run on an embedding stream in
+    * Update mode keeps the registers at ingest (labels × dims
+    * state-store rows), and the centroids and drift distances stay
+    * query-time math over them. */
+  private[graft] def centroidRegisters(vecs: DataFrame): DataFrame =
+    vecs.select(col("label"), posexplode(expr(
+        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
+        .as(Seq("pos", "x")))
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+
   /** Shared per-session POSITIONAL postings `(doc, pos, token)` — the
     * phrase/proximity index under q146/q156 and the relevance legs of
     * the retrieval audits (q187 MRR, q206 nDCG). One corpus tokenize
@@ -1535,13 +1549,11 @@ object ExtQueries {
     // centroid table is labels×dims = model-sized, so the pair join
     // never touches vector rows.
     "q188_centroid_drift" -> ((s, d) => {
-      val qe = graft.ops.TransientCache.persist(
-        Tables.embeddings(s, d).select(col("label"),
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
-            .as("q")))
-      val n = qe.groupBy(col("label")).agg(count(lit(1)).as("n"))
-      val cent = qe.select(col("label"), posexplode(col("q")).as(Seq("pos", "x")))
-        .groupBy(col("label"), col("pos")).agg(sum(col("x")).as("sx"))
+      val vecs = graft.ops.TransientCache.persist(
+        Tables.embeddings(s, d).select(col("label"), col("embedding")))
+      // per-label vector count: a null or short vector still counts
+      val n = vecs.groupBy(col("label")).agg(count(lit(1)).as("n"))
+      val cent = centroidRegisters(vecs).select(col("label"), col("pos"), col("sx"))
         .join(n, "label")
         .select(col("label"), col("pos"),
           floor(lit(1000.0) * col("sx").cast("double") / col("n").cast("double"))

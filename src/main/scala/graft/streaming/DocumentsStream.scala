@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.TextAnalysis
+import graft.queries.AnalyticsQueries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -10,28 +11,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * encoder codegen, like [[SessionState]]. */
 final case class SeenContent(canonicalId: Long)
 
-/** One HLL register (max rank seen for a (group, bucket) key) — the
-  * streaming-sketch state, and the update record it emits. */
-final case class RegState(r: Int)
-final case class RegUpdate(g: String, bucket: Int, r: Int)
-final case class CmsState(n: Long)
-final case class CmsUpdate(j: Int, bucket: Int, n: Long)
-final case class PsiBinState(n: Long)
-final case class PsiBinUpdate(bin: Long, n: Long)
-
 /** First claimer of an LSH band bucket (streaming near-dup state; one
   * long per distinct bucket) and the match event a later collision
   * emits. Top-level + public for Spark's state encoder codegen. */
 final case class BandClaim(firstDoc: Long)
 final case class BandMatch(band: Int, key: String, doc_id: Long,
                            first_doc: Long)
-
-/** Per-(label, dim) centroid register (running component sum + vector
-  * count) and the update record it emits — the streaming-drift state
-  * behind the q188 centroid monitor. Top-level + public for Spark's
-  * state encoder codegen. */
-final case class CentroidState(sx: Long, n: Long)
-final case class CentroidUpdate(label: Int, pos: Int, sx: Long, n: Long)
 
 /** First claimer of a SimHash pigeonhole band bucket — doc id PLUS the
   * full 64-bit signature, so a later collision verifies its exact
@@ -65,13 +50,6 @@ final case class GramC12Update(s: String, c1: Long, c2: Long)
   * Top-level + public for Spark's state encoder codegen. */
 final case class ClaimMaintEvent(s: String, doc_id: Long, kind: String)
 
-/** Per-(source, replicate) Poisson-bootstrap register (shifted weighted
-  * quality sum + weight sum) and the update record it emits — the
-  * streaming face of the q204 bootstrap CI. Top-level + public for
-  * Spark's state encoder codegen. */
-final case class BootState(swq50: Long, sw: Long)
-final case class BootUpdate(source: String, b: Int, swq50: Long, sw: Long)
-
 /** First claimer of an audio landmark key (streaming fingerprint state;
   * one long per distinct landmark) and the match event a later
   * collision emits. Top-level + public for Spark's state encoder
@@ -89,90 +67,6 @@ object DocumentsStream {
 
   final case class CanonicalDoc(content_hash: String, canonical_id: Long)
 
-  /** Streaming centroid registers — the incremental twin of the q188
-    * centroid-drift monitor: per-(label, dim) running (Σ quantized
-    * component, vector count) maintained as keyed state; the centroid
-    * and any pairwise drift distance stay query-time register math over
-    * the maintained sums — exactly the PSI/HLL/CMS register contract.
-    * Quantization is q188's floor(x·1000) so the registers are the
-    * batch aggregate's operands verbatim; integer sums commute, so the
-    * registers after ANY batch split equal the batch per-(label, dim)
-    * aggregate over the same rows (StreamingSpec-pinned). State is
-    * labels × dims longs — hard-capped like the HLL registers, no TTL
-    * needed. */
-  def centroidRegisterUpdates(spark: SparkSession, vecs: DataFrame,
-                              labelCol: String = "label",
-                              embCol: String = "embedding"): Dataset[CentroidUpdate] = {
-    import spark.implicits._
-    vecs.select(col(labelCol).cast("int").as("label"),
-        posexplode(expr(
-          s"transform($embCol, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
-          .as(Seq("pos", "x")))
-      .as[(Int, Int, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroupsWithState[CentroidState, CentroidUpdate](GroupStateTimeout.NoTimeout()) {
-        case ((label, pos), it, state: GroupState[CentroidState]) =>
-          var sx = state.getOption.map(_.sx).getOrElse(0L)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          it.foreach { t => sx += t._3; n += 1L }
-          state.update(CentroidState(sx, n))
-          CentroidUpdate(label, pos, sx, n)
-      }
-  }
-
-  /** Streaming HyperLogLog — the incremental twin of
-    * [[graft.ext.Sketches.hllDistinct]] (q81), and the operator that
-    * makes the sketch worth having on a stream: registers fold with
-    * `max`, which is commutative/idempotent, so the streaming registers
-    * after ANY batch split equal the batch registers over the same rows
-    * (StreamingSpec-pinned) — and therefore yield the identical estimate.
-    *
-    * State is one int per non-empty `(group, bucket)` key — hard-capped
-    * at groups × 2^b regardless of stream length (the reason this needs
-    * no TTL, unlike [[dedupDocuments]]). Emits the updated register per
-    * key per micro-batch (Update output mode); the estimate is computed
-    * from the final registers by the batch-side formula. */
-  def hllRegisterUpdates(spark: SparkSession, docs: DataFrame,
-                         keyCol: String = "text",
-                         groupCol: String = "source",
-                         b: Int = 8): Dataset[RegUpdate] = {
-    import spark.implicits._
-    graft.ext.Sketches.registerRows(docs, keyCol, groupCol, b)
-      .as[(String, Int, Int)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroupsWithState[RegState, RegUpdate](GroupStateTimeout.NoTimeout()) {
-        case ((g, bucket), it, state: GroupState[RegState]) =>
-          var r = state.getOption.map(_.r).getOrElse(0)
-          it.foreach(t => if (t._3 > r) r = t._3)
-          state.update(RegState(r))
-          RegUpdate(g, bucket, r)
-      }
-  }
-
-  /** Streaming count-min-sketch registers — the incremental twin of the
-    * batch CMS (q104 / [[graft.ext.Sketches.cmsRegisters]]): keyed state
-    * per `(j, bucket)` accumulates occurrence counts with `+`, the same
-    * associative fold the batch register table uses, so the registers
-    * after ANY batch split equal the batch sketch over the same rows
-    * (StreamingSpec-pinned). State is hard-capped at d×w longs
-    * regardless of stream length — like [[hllRegisterUpdates]], no TTL
-    * needed. */
-  def cmsRegisterUpdates(spark: SparkSession, docs: DataFrame,
-                         textCol: String = "text",
-                         idCol: String = "doc_id",
-                         d: Int = 4, w: Int = 512): Dataset[CmsUpdate] = {
-    import spark.implicits._
-    graft.ext.Sketches.cmsBucketRows(docs, textCol, idCol, d, w)
-      .as[(Int, Int)]
-      .groupByKey(identity)
-      .mapGroupsWithState[CmsState, CmsUpdate](GroupStateTimeout.NoTimeout()) {
-        case ((j, bucket), it, state: GroupState[CmsState]) =>
-          val n = state.getOption.map(_.n).getOrElse(0L) + it.size
-          state.update(CmsState(n))
-          CmsUpdate(j, bucket, n)
-      }
-  }
-
   /** Streaming drift-monitor registers — the incremental half of the
     * q119 PSI audit: the CURRENT population's histogram is maintained
     * per arriving document against FROZEN reference bin edges (`gmin`,
@@ -180,25 +74,16 @@ object DocumentsStream {
     * histogram is a calibrated artifact; q119's in-query min/max IS
     * that calibration run). Out-of-range values clamp into the edge
     * bins (a frozen range must absorb drifted tails, never drop them).
-    * State is one long per occupied bin (≤ `nBins`); the PSI itself
-    * stays query-time register math over (maintained cur counts, frozen
-    * ref counts) — exactly the HLL/CMS register-maintenance contract. */
-  def psiBinUpdates(spark: SparkSession, docs: DataFrame, valueCol: String,
-                    gmin: Long, binWidth: Long,
-                    nBins: Int = 64): Dataset[PsiBinUpdate] = {
-    import spark.implicits._
+    * The bin is q119's [[AnalyticsQueries.psiBin]]; run on a stream in
+    * Update mode, the built-in `count` keeps one state-store long per
+    * occupied bin (≤ `nBins`). The PSI itself stays query-time register
+    * math over (maintained cur counts, frozen ref counts). */
+  def psiBinUpdates(docs: DataFrame, valueCol: String, gmin: Long,
+                    binWidth: Long, nBins: Int = 64): DataFrame = {
     require(binWidth >= 1 && nBins >= 2)
-    docs.select(
-        expr(s"least(greatest((CAST($valueCol AS BIGINT) - $gmin) div $binWidth," +
-          s" CAST(0 AS BIGINT)), CAST(${nBins - 1} AS BIGINT))").as("bin"))
-      .as[Long]
-      .groupByKey(identity)
-      .mapGroupsWithState[PsiBinState, PsiBinUpdate](GroupStateTimeout.NoTimeout()) {
-        case (bin, it, state: GroupState[PsiBinState]) =>
-          val n = state.getOption.map(_.n).getOrElse(0L) + it.size
-          state.update(PsiBinState(n))
-          PsiBinUpdate(bin, n)
-      }
+    docs.groupBy(AnalyticsQueries.psiBin(col(valueCol).cast("long"),
+        lit(gmin), lit(binWidth), nBins).as("bin"))
+      .agg(count(lit(1)).as("n"))
   }
 
   /** Streaming exact dedup — the incremental twin of
@@ -344,41 +229,6 @@ object DocumentsStream {
     * against any target slice without touching the corpus again. */
   def dsirProfileUpdates(docs: DataFrame, buckets: Int = 512): DataFrame =
     graft.ext.Sampling.dsirBucketCountsLocal(docs, "text", "doc_id", buckets)
-
-  /** Streaming Poisson-bootstrap registers — the incremental face of the
-    * q204 confidence intervals, and the construction's whole point
-    * (Chamandy et al. 2012 built the Poisson(1) bootstrap FOR streams:
-    * each row's replicate weight is a pure per-row md5 draw, so every
-    * replicate's (Σ w·(q+50), Σ w) register folds with `+` under any
-    * batch split — no global n, no coordination). Quality comes from the
-    * same doc-local [[TextAnalysis.withTokenProfile]] pass the batch
-    * query reads (quality ≥ −50 by construction, so the shifted sum is
-    * monotone like every other register here). Keyed state is two longs
-    * per (source, replicate) — n_sources × nReps registers, fixed-size,
-    * no TTL. The replicate means and order-statistic CI stay query-time
-    * register math, exactly the HLL/CMS maintenance contract. */
-  def bootstrapRegisterUpdates(spark: SparkSession, docs: DataFrame,
-                               nReps: Int = 64): Dataset[BootUpdate] = {
-    import spark.implicits._
-    TextAnalysis.withTokenProfile(docs, "text")
-      .select(col("doc_id").cast("long").as("doc_id"), col("source"),
-        col("quality"))
-      .withColumn("b", explode(sequence(lit(0), lit(nReps - 1))))
-      .withColumn("w", graft.ext.Sampling.poissonWeight(
-        concat(col("doc_id").cast("string"), lit("|"), col("b").cast("string"))))
-      .select(col("source"), col("b").cast("int").as("b"),
-        (col("w") * (col("quality") + lit(50L))).as("wq50"), col("w"))
-      .as[(String, Int, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroupsWithState[BootState, BootUpdate](GroupStateTimeout.NoTimeout()) {
-        case ((src, b), it, state: GroupState[BootState]) =>
-          var swq50 = state.getOption.map(_.swq50).getOrElse(0L)
-          var sw = state.getOption.map(_.sw).getOrElse(0L)
-          it.foreach { t => swq50 += t._3; sw += t._4 }
-          state.update(BootState(swq50, sw))
-          BootUpdate(src, b, swq50, sw)
-      }
-  }
 
   /** Streaming near-dup DETECTION at ingest — the stateful half that
     * [[minhashSignatureUpdates]] deliberately leaves query-time, for

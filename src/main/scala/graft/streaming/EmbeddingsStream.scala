@@ -18,7 +18,7 @@ final case class QcMomentUpdate(grp: Int, n: Long, n_zero: Long,
 /** Streaming twins of the embedding-table operators.
   *
   * The scale story mirrors the sketch registers
-  * ([[DocumentsStream.hllRegisterUpdates]]): a 100 TB/day embedding
+  * ([[graft.ext.Sketches.hllRegisters]] run on a stream): a 100 TB/day embedding
   * ingest never re-reads yesterday's vectors — per-group moment
   * registers (count, zero-count, dim envelope, norm envelope, Σ‖x‖²,
   * per-dimension ΣX) are fixed-size (5 scalars + one d-vector per

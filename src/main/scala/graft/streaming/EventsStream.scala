@@ -4,15 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface over the `events` table (SURVEY.md §2.10
-  * Q5 — extension per BASELINE.json; the reference itself is batch/async
-  * only).
-  *
-  * Scale notes: watermark + tumbling window = bounded state; dedup keys
-  * expire with the watermark; sessionization state is per-user and
-  * emitted+dropped on event-time timeout — all three are the canonical
-  * unbounded-stream patterns that survive 100 TB/day ingest.
-  */
 /** Per-user open-session accumulator (flatMapGroupsWithState state). Kept
   * top-level and public: Spark's state encoder codegen needs accessible
   * constructor + accessors. Times in MICROseconds — `Timestamp.getTime`
@@ -37,14 +28,6 @@ final case class FunnelState(stageTimesUs: List[Long],
   * running statistic, its maximum, and the observation count — three
   * longs per series. Top-level + public for Spark's state encoder
   * codegen, like [[SessionState]]. */
-/** One daily-grain register ((type, day) → running quantized value sum
-  * + event count) and the update it emits — the maintained base of the
-  * q171/q172/q209 monitors. Top-level + public for Spark's state
-  * encoder codegen. */
-final case class DailyState(vq: Long, n: Long)
-final case class DailyUpdate(event_type: String, day: java.sql.Timestamp,
-                             vq: Long, n: Long)
-
 final case class CusumState(s: Long, smax: Long, n: Long)
 final case class CusumUpdate(event_type: String, n_seen: Long,
                              s: Long, s_max: Long)
@@ -66,15 +49,6 @@ final case class SkyUpdate(n_seen: Long, n_frontier: Int,
 final case class DgimState(idx: Long, packed: Seq[Long])
 final case class DgimUpdate(n_seen: Long, n_buckets: Int, estimate: Long)
 
-/** AQP register per event_type: exact and md5-nibble-sampled counters
-  * maintained together (q237's two legs as streaming state). All four
-  * folds are `+`, so registers after any batch split equal the batch
-  * conditional aggregate (StreamingSpec-pinned). */
-final case class AqpState(n: Long, sumC: Long, ns: Long, sumS: Long)
-final case class AqpUpdate(event_type: String, n_exact: Long,
-                           sum_exact: Long, n_sample: Long,
-                           sum_sample: Long)
-
 /** High-water-mark register per event_type — the streaming face of
   * q259's watermark-sizing audit: state is (hwm, n, three late
   * counters), O(1) per key at any scale. hwmUs = Long.MinValue encodes
@@ -85,11 +59,6 @@ final case class HwmUpdate(event_type: String, n_seen: Long, hwm_us: Long,
                            n_late_1s: Long, n_late_10s: Long,
                            n_late_60s: Long)
 
-/** Value-bucket count register — the streaming first stage of the
-  * q269 global-order-statistic discipline: one running count per value
-  * bucket, maintained at ingest. */
-final case class BucketCountUpdate(bucket: Long, n: Long)
-
 /** q-digest quantile register per event_type (the streaming face of
   * q275): `packed` flattens the ≤ 3k digest nodes as (node, count,
   * node, count, …) for the state encoder — bounded state whatever the
@@ -98,6 +67,15 @@ final case class QdState(n: Long, packed: Seq[Long])
 final case class QdUpdate(event_type: String, n_seen: Long, n_nodes: Int,
                           p50: Long, p95: Long, err_bound: Long)
 
+/** Structured Streaming surface over the `events` table (SURVEY.md §2.10
+  * Q5 — extension per BASELINE.json; the reference itself is batch/async
+  * only).
+  *
+  * Scale notes: watermark + tumbling window = bounded state; dedup keys
+  * expire with the watermark; sessionization state is per-user and
+  * emitted+dropped on event-time timeout — all three are the canonical
+  * unbounded-stream patterns that survive 100 TB/day ingest.
+  */
 object EventsStream {
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -200,78 +178,6 @@ object EventsStream {
         col("version"), col("priority"))
   }
 
-  /** Gap-based sessionization (30 min idle closes a session) with
-    * per-user state and event-time timeout. Sessions are emitted once
-    * closed (by a later event or by watermark passage). */
-  /** Streaming one-sided CUSUM drift registers (Page 1954) — the online
-    * sibling of q161's batch prefix-sum identity and the third member
-    * of the drift family beside the PSI bin registers: per series the
-    * classic per-observation recursion `S := max(0, S + (x − k))` folds
-    * arrivals against a FROZEN reference level `kMicro` (micro-units;
-    * in production k is a calibrated artifact exactly like the PSI
-    * reference bins — q161's in-query mean IS that calibration run).
-    * Arrivals fold in (ts, event_id) order within each micro-batch, so
-    * a single-batch run reproduces the ordered batch fold exactly
-    * (StreamingSpec-pinned); across batches the state carries the fold
-    * forward — three longs per series. Alarming is a downstream
-    * predicate on `s_max` (kept out of the register layer, like the
-    * PSI divergence computation). */
-  /** Streaming daily-grain registers — the maintained base under every
-    * daily monitor (q171 seasonal-naive, q172 day-of-week index, q209
-    * EWMA): keyed state per (event_type, day) accumulates the quantized
-    * value sum and event count with `+`, so registers after any batch
-    * split equal the batch daily groupBy (StreamingSpec-pinned) and the
-    * monitors stay query-time window math over the register table —
-    * no event re-scan when today's data keeps arriving. State is two
-    * longs per (series, day): time-bounded by construction. */
-  def dailyRegisters(spark: SparkSession, events: DataFrame)
-      : Dataset[DailyUpdate] = {
-    import spark.implicits._
-    events.select(col("event_type"),
-        date_trunc("day", col("ts")).as("day"),
-        expr("CAST(floor(value * 1000) AS BIGINT)").as("x"))
-      .as[(String, java.sql.Timestamp, Long)]
-      .groupByKey(t => (t._1, t._2.getTime))
-      .mapGroupsWithState[DailyState, DailyUpdate](GroupStateTimeout.NoTimeout()) {
-        case (_, it, state: GroupState[DailyState]) =>
-          val rows = it.toArray
-          var vq = state.getOption.map(_.vq).getOrElse(0L)
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          rows.foreach { r => vq += r._3; n += 1 }
-          state.update(DailyState(vq, n))
-          DailyUpdate(rows.head._1, rows.head._2, vq, n)
-      }
-  }
-
-  /** Streaming twin of the q237 AQP audit: per event_type, the exact
-    * (n, Σcents) and 1/16-sampled (n, Σcents) registers maintained at
-    * ingest. Sample membership is the SAME md5-nibble algebra as the
-    * batch query — computed with the SQL md5 before the typed fold, so
-    * membership is bit-identical whichever path sees the row first.
-    * A dashboard reads HT estimates (×16) from the register table with
-    * no event re-scan; the batch query stays the error auditor. */
-  def aqpRegisters(spark: SparkSession, events: DataFrame)
-      : Dataset[AqpUpdate] = {
-    import spark.implicits._
-    events.select(col("event_type"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
-        (substring(md5(col("event_id").cast("string").cast("binary")), 1, 1)
-          === lit("0")).as("in_sample"))
-      .as[(String, Long, Boolean)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[AqpState, AqpUpdate](GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[AqpState]) =>
-          var st = state.getOption.getOrElse(AqpState(0L, 0L, 0L, 0L))
-          it.foreach { r =>
-            st = AqpState(st.n + 1, st.sumC + r._2,
-              st.ns + (if (r._3) 1L else 0L),
-              st.sumS + (if (r._3) r._2 else 0L))
-          }
-          state.update(st)
-          AqpUpdate(typ, st.n, st.sumC, st.ns, st.sumS)
-      }
-  }
-
   /** Streaming twin of q233: maintain the (value, recency) Pareto
     * frontier of events as keyed state — each arrival is dropped if
     * dominated or inserted while pruning what it dominates
@@ -370,29 +276,20 @@ object EventsStream {
 
   /** Value-bucket count registers — the streaming face of q269's
     * global order statistics: the batch op's first stage is a
-    * bucket-count table, and that table is ADD-mergEABLE, so it can be
-    * maintained per arrival as one O(1) counter per bucket (key space
-    * bounded by value-range/width, the same bound the batch op relies
-    * on). Rank location — "which bucket holds the p-th value" — is
+    * bucket-count table, and that table is ADD-mergeable, so a built-in
+    * `count` run on a stream in Update mode maintains it per arrival as
+    * one O(1) state-store counter per bucket (key space bounded by
+    * value-range/width, the same bound the batch op relies on). Rank
+    * location — "which bucket holds the p-th value" — is
     * then query-time arithmetic over the register table, exactly the
     * batch bucket-prefix leg; only the within-bucket refinement still
     * reads data, and only the ONE host bucket. Order-invariant facts
     * only (counts), so arrival order cannot matter by construction. */
-  def valueBucketRegisters(spark: SparkSession, events: DataFrame,
-                           widthMilli: Long): Dataset[BucketCountUpdate] = {
-    import spark.implicits._
+  def valueBucketRegisters(events: DataFrame, widthMilli: Long): DataFrame =
     events
-      .select(expr(s"(CAST(floor(value * 1000) AS BIGINT)) div $widthMilli")
+      .groupBy(expr(s"(CAST(floor(value * 1000) AS BIGINT)) div $widthMilli")
         .as("bucket"))
-      .as[Long]
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, BucketCountUpdate](GroupStateTimeout.NoTimeout()) {
-        case (b, it, state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + it.size
-          state.update(n)
-          BucketCountUpdate(b, n)
-      }
-  }
+      .agg(count(lit(1)).as("n"))
 
   /** Per-event_type q-digest quantile registers — the streaming face of
     * q275: each arrival's micro-quantized value folds into the keyed
@@ -434,6 +331,19 @@ object EventsStream {
       }
   }
 
+  /** Streaming one-sided CUSUM drift registers (Page 1954) — the online
+    * sibling of q161's batch prefix-sum identity and the third member
+    * of the drift family beside the PSI bin registers: per series the
+    * classic per-observation recursion `S := max(0, S + (x − k))` folds
+    * arrivals against a FROZEN reference level `kMicro` (micro-units;
+    * in production k is a calibrated artifact exactly like the PSI
+    * reference bins — q161's in-query mean IS that calibration run).
+    * Arrivals fold in (ts, event_id) order within each micro-batch, so
+    * a single-batch run reproduces the ordered batch fold exactly
+    * (StreamingSpec-pinned); across batches the state carries the fold
+    * forward — three longs per series. Alarming is a downstream
+    * predicate on `s_max` (kept out of the register layer, like the
+    * PSI divergence computation). */
   def cusumRegisters(spark: SparkSession, events: DataFrame,
                      kMicro: Long): Dataset[CusumUpdate] = {
     import spark.implicits._
@@ -632,6 +542,9 @@ object EventsStream {
         col("purchase_id"), col("p_ts"), col("p_value"))
   }
 
+  /** Gap-based sessionization (30 min idle closes a session) with
+    * per-user state and event-time timeout. Sessions are emitted once
+    * closed (by a later event or by watermark passage). */
   def sessionize(spark: SparkSession, events: DataFrame,
                  gapMinutes: Int = 30): Dataset[Session] = {
     import spark.implicits._

@@ -53,6 +53,25 @@ class StreamingSpec extends AnyFunSuite {
     q.exception.foreach(e => fail(s"query $name failed during drain/stop", e))
   }
 
+  /** `parts` written one parquet file each (b1.parquet, b2.parquet, …)
+    * into a fresh directory, file i stamped with mtime i·10⁶ ms, so a
+    * stream with `maxFilesPerTrigger` 1 reads them as micro-batches in
+    * that order. Returns the directory. */
+  private def splitDir(prefix: String,
+                       parts: org.apache.spark.sql.DataFrame*): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    parts.zipWithIndex.foreach { case (df, i) =>
+      val tmp = java.nio.file.Files.createTempDirectory(s"${prefix}_part").toString
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.endsWith(".parquet")).head
+      val dst = dir.resolve(s"b${i + 1}.parquet")
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.setLastModified((i + 1) * 1000000L)
+    }
+    dir.toString
+  }
+
   test("streaming windowed stats equal the batch aggregation (complete mode)") {
     val stream = EventsStream.windowedStats(TableStream.read(spark, sf, "events"))
     runAvailableNow(stream, "win_stats", OutputMode.Complete())
@@ -266,33 +285,19 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming HLL registers equal the batch sketch (multi-batch merge)") {
-    import graft.streaming.DocumentsStream
-    import spark.implicits._
-    // two-batch split of the documents fixture (same writeAs shim as the
-    // dedup test, but over the real corpus rows)
-    val dir = java.nio.file.Files.createTempDirectory("docs_hll")
+    // two-batch split of the documents fixture
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
-    val updates = DocumentsStream.hllRegisterUpdates(spark,
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
-    runAvailableNow(updates.toDF(), "hll_regs", OutputMode.Update())
+    val dir = splitDir("docs_hll", a, bHalf)
+    val updates = graft.ext.Sketches.hllRegisters(
+      TableStream.read(spark, dir, "documents", Some(1)), "text", "source", 8)
+    runAvailableNow(updates, "hll_regs", OutputMode.Update())
     // registers are max-monotone, so the final value per key is the max
     // over all emitted updates
     val streamed = spark.table("hll_regs")
-      .groupBy(col("g"), col("bucket")).agg(max(col("r")).as("r"))
+      .groupBy(col("source"), col("bucket")).agg(max(col("r")).as("r"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
     val batch = graft.ext.Sketches.hllRegisters(docs, "text", "source", 8)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
@@ -300,30 +305,21 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CMS registers equal the batch sketch (multi-batch merge)") {
-    import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_cms")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
-    val updates = DocumentsStream.cmsRegisterUpdates(spark,
-      TableStream.read(spark, dir.toString, "documents", Some(1)), d = 4, w = 64)
-    runAvailableNow(updates.toDF(), "cms_regs", OutputMode.Update())
+    val dir = splitDir("docs_cms", a, bHalf)
+    // one (token, cnt = 1) row per occurrence
+    val occurrences = graft.ext.TextAnalysis.tokenRows(
+        TableStream.read(spark, dir, "documents", Some(1)), "text", "doc_id")
+      .withColumn("cnt", lit(1L))
+    val updates = graft.ext.Sketches.cmsRegisters(occurrences, 4, 64)
+    runAvailableNow(updates, "cms_regs", OutputMode.Update())
     // counts are add-monotone, so the final value per key is the max
     // over all emitted running totals
     val streamed = spark.table("cms_regs")
-      .groupBy(col("j"), col("bucket")).agg(max(col("n")).as("n"))
+      .groupBy(col("j"), col("bucket")).agg(max(col("bucket_sum")).as("n"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     val tokenCounts = graft.ext.TextAnalysis.tokenRows(docs, "text", "doc_id")
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -332,26 +328,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed == batch)
   }
   test("streaming bootstrap registers equal the batch replicate sums (q204 fold)") {
-    import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_boot")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
-    val updates = DocumentsStream.bootstrapRegisterUpdates(spark,
-      TableStream.read(spark, dir.toString, "documents", Some(1)), nReps = 16)
-    runAvailableNow(updates.toDF(), "boot_regs", OutputMode.Update())
+    val dir = splitDir("docs_boot", a, bHalf)
+    val updates = graft.ext.Sampling.bootstrapRegisters(
+      graft.ext.TextAnalysis.withTokenProfile(
+        TableStream.read(spark, dir, "documents", Some(1)), "text"), 16)
+    runAvailableNow(updates, "boot_regs", OutputMode.Update())
     // both registers are add-monotone (w >= 0, quality + 50 >= 0), so
     // the final value per key is the max over emitted running totals
     val streamed = spark.table("boot_regs")
@@ -359,15 +344,9 @@ class StreamingSpec extends AnyFunSuite {
       .agg(max(col("swq50")).as("swq50"), max(col("sw")).as("sw"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSet
-    // batch fold over the same rows: the q204 replicate-sum shape
-    val batch = graft.ext.TextAnalysis.withTokenProfile(docs, "text")
-      .select(col("doc_id").cast("long").as("doc_id"), col("source"), col("quality"))
-      .withColumn("b", explode(sequence(lit(0), lit(15))))
-      .withColumn("w", graft.ext.Sampling.poissonWeight(
-        concat(col("doc_id").cast("string"), lit("|"), col("b").cast("string"))))
-      .groupBy(col("source"), col("b"))
-      .agg(sum(col("w") * (col("quality") + lit(50L))).as("swq50"),
-        sum(col("w")).as("sw"))
+    // the same register function over the static rows (q204's replicate sums)
+    val batch = graft.ext.Sampling.bootstrapRegisters(
+        graft.ext.TextAnalysis.withTokenProfile(docs, "text"), 16)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSet
     assert(streamed.nonEmpty && streamed == batch)
@@ -376,24 +355,13 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming gram (c1,c2) registers equal the batch first/second occurrence") {
     import graft.streaming.DocumentsStream
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("docs_c12")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_c12", a, bHalf)
     val updates = DocumentsStream.gramC12AtIngest(spark,
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates.toDF(), "c12_regs", OutputMode.Update())
     // both registers are min-monotone (c2 via the MaxValue sentinel)
     val streamed = spark.table("c12_regs")
@@ -414,7 +382,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming PSI bin registers equal the batch histogram (q119 bin formula)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_psi")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
     // "cur" population = odd doc ids (q119's split), streamed in two
@@ -426,52 +393,27 @@ class StreamingSpec extends AnyFunSuite {
     val cur = docs.where(col("doc_id") % 2 === 1)
     val (a, bHalf) = (cur.where(col("doc_id") % 4 === 1),
       cur.where(col("doc_id") % 4 === 3))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
-    val updates = DocumentsStream.psiBinUpdates(spark,
-      TableStream.read(spark, dir.toString, "documents", Some(1)),
-      "n_chars", gmin, w)
-    runAvailableNow(updates.toDF(), "psi_regs", OutputMode.Update())
+    val dir = splitDir("docs_psi", a, bHalf)
+    val updates = DocumentsStream.psiBinUpdates(
+      TableStream.read(spark, dir, "documents", Some(1)), "n_chars", gmin, w)
+    runAvailableNow(updates, "psi_regs", OutputMode.Update())
     val streamed = spark.table("psi_regs")
       .groupBy(col("bin")).agg(max(col("n")).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = cur
-      .select(expr(s"least(greatest((CAST(n_chars AS BIGINT) - $gmin) div $w," +
-        " CAST(0 AS BIGINT)), CAST(63 AS BIGINT))").as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).as("n"))
+    val batch = DocumentsStream.psiBinUpdates(cur, "n_chars", gmin, w)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed.nonEmpty && streamed == batch)
   }
 
   test("streaming postings maintenance equals the batch inverted index (append-only)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_postings")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_postings", a, bHalf)
     val updates = DocumentsStream.postingsUpdates(
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates, "postings_appends", OutputMode.Append())
     val streamed = spark.table("postings_appends")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -483,24 +425,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming window-posting maintenance equals the batch span index (append-only)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_spanidx")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_spanidx", a, bHalf)
     val updates = DocumentsStream.windowPostingsUpdates(
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates, "spanidx_appends", OutputMode.Append())
     val streamed = spark.table("spanidx_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -512,24 +443,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming winnow fingerprint maintenance equals the batch winnow (append-only)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_winnow")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_winnow", a, bHalf)
     val updates = DocumentsStream.winnowFingerprintUpdates(
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates, "winnow_appends", OutputMode.Append())
     val streamed = spark.table("winnow_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -558,24 +478,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming MinHash signature maintenance equals the batch signatures (append-only)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_minhash")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_minhash", a, bHalf)
     val updates = DocumentsStream.minhashSignatureUpdates(
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates, "minhash_appends", OutputMode.Append())
     val streamed = spark.table("minhash_appends")
       .collect().map(_.toSeq.toList).toSet
@@ -586,24 +495,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming DSIR profile maintenance equals the batch bucket counts (append-only)") {
     import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_dsir")
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
     val (a, bHalf) = (docs.where(col("doc_id") % 2 === 0),
       docs.where(col("doc_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("docs_dsir", a, bHalf)
     val updates = DocumentsStream.dsirProfileUpdates(
-      TableStream.read(spark, dir.toString, "documents", Some(1)))
+      TableStream.read(spark, dir, "documents", Some(1)))
     runAvailableNow(updates, "dsir_appends", OutputMode.Append())
     val streamed = spark.table("dsir_appends")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -614,24 +512,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming QC moment registers equal the batch embedding QC (multi-batch merge)") {
     import graft.streaming.EmbeddingsStream
-    val dir = java.nio.file.Files.createTempDirectory("emb_qc")
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding"))
     val (a, bHalf) = (emb.where(col("vec_id") % 2 === 0),
       emb.where(col("vec_id") % 2 === 1))
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("emb_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, a)
-    dump("b2.parquet", 2000000L, bHalf)
+    val dir = splitDir("emb_qc", a, bHalf)
     val updates = EmbeddingsStream.qcMomentUpdates(spark,
-      TableStream.read(spark, dir.toString, "embeddings", Some(1)))
+      TableStream.read(spark, dir, "embeddings", Some(1)))
     runAvailableNow(updates.toDF(), "qc_regs", OutputMode.Update())
     // n is add-monotone over updates, so max_by(n) per group is the
     // final register; finish it into the batch QC schema.
@@ -911,21 +798,18 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming daily registers equal the batch daily grain (q171/q209 base)") {
-    import graft.streaming.EventsStream
-    val updates = EventsStream.dailyRegisters(
-      spark, TableStream.read(spark, sf, "events"))
-    runAvailableNow(updates.toDF(), "daily_regs", OutputMode.Update())
+    val updates = graft.queries.AnalyticsQueries.dailyAgg(
+      TableStream.read(spark, sf, "events"))
+    runAvailableNow(updates, "daily_regs", OutputMode.Update())
     // both registers are add-monotone: final value per key = max update
     val got = spark.table("daily_regs")
       .groupBy(col("event_type"), col("day"))
-      .agg(max(col("vq")).as("vq"), max(col("n")).as("n"))
+      .agg(max(col("value_q")).as("vq"), max(col("n_events")).as("n"))
       .collect()
       .map(r => ((r.getString(0), r.getTimestamp(1)), (r.getLong(2), r.getLong(3))))
       .toMap
-    val batch = Tables.events(spark, sf)
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(expr("CAST(floor(value * 1000) AS BIGINT)")).as("vq"),
-        count(lit(1)).as("n"))
+    val batch = graft.queries.AnalyticsQueries.dailyAgg(Tables.events(spark, sf))
+      .select(col("event_type"), col("day"), col("value_q"), col("n_events"))
       .collect()
       .map(r => ((r.getString(0), r.getTimestamp(1)), (r.getLong(2), r.getLong(3))))
       .toMap
@@ -978,10 +862,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("keyed state survives a query RESTART from checkpoint (daily registers)") {
-    import graft.streaming.EventsStream
     import spark.implicits._
     // Two separate query runs over one growing directory, sharing a
-    // checkpoint: run 2 must CONTINUE run 1's mapGroupsWithState state
+    // checkpoint: run 2 must CONTINUE run 1's aggregation state
     // (vq folds across the restart), not restart from zero — the
     // recovery contract every production register table depends on.
     val dir = java.nio.file.Files.createTempDirectory("events_ckpt")
@@ -1002,7 +885,7 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir.toString).schema
     def runOnce(): Unit = {
       val stream = spark.readStream.schema(schema).parquet(dir.toString)
-      val q = EventsStream.dailyRegisters(spark, stream).toDF()
+      val q = graft.queries.AnalyticsQueries.dailyAgg(stream)
         .writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.write.mode("append").parquet(out.toString): Unit
@@ -1014,13 +897,13 @@ class StreamingSpec extends AnyFunSuite {
     }
     runOnce()
     val r1 = spark.read.parquet(out.toString).collect()
-      .map(r => (r.getAs[Long]("vq"), r.getAs[Long]("n"))).toSet
+      .map(r => (r.getAs[Long]("value_q"), r.getAs[Long]("n_events"))).toSet
     assert(r1 == Set((1000L, 1L)), s"run 1 fold wrong: $r1")
     // the query is stopped; a new file lands; a NEW query resumes
     writeAs("b2.parquet", Seq((2L, day, 1L, "x", 2.0)))
     runOnce()
     val r2 = spark.read.parquet(out.toString).collect()
-      .map(r => (r.getAs[Long]("vq"), r.getAs[Long]("n"))).toSet
+      .map(r => (r.getAs[Long]("value_q"), r.getAs[Long]("n_events"))).toSet
     assert(r2 == Set((1000L, 1L), (3000L, 2L)),
       s"state did not survive the restart (expected cumulative 3000/2): $r2")
   }
@@ -1126,16 +1009,15 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     val w = 50000L
     val updates = EventsStream.valueBucketRegisters(
-      spark, TableStream.read(spark, sf, "events"), w)
-    runAvailableNow(updates.toDF(), "vb_regs", OutputMode.Update())
+      TableStream.read(spark, sf, "events"), w)
+    runAvailableNow(updates, "vb_regs", OutputMode.Update())
     // Registers are monotone counters: if the source split into several
     // micro-batches, the FINAL register per bucket is the max update.
     val got = spark.table("vb_regs").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).max }
-    val expected = Tables.events(spark, sf)
-      .groupBy(expr(s"(CAST(floor(value * 1000) AS BIGINT)) div $w").as("b"))
-      .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expected = EventsStream.valueBucketRegisters(Tables.events(spark, sf), w)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected && got.nonEmpty)
     // The register table must actually partition the range — a single
     // bucket would make the rank-location claim vacuous on this fixture.
@@ -1178,32 +1060,23 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val updates = EventsStream.valueBucketRegisters(spark, stream, 50000L)
-    runAvailableNow(updates.toDF(), "vb_2b", OutputMode.Update())
+    val updates = EventsStream.valueBucketRegisters(stream, 50000L)
+    runAvailableNow(updates, "vb_2b", OutputMode.Update())
     val got = spark.table("vb_2b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((0L, 1L), (1L, 1L), (0L, 2L)), s"register folds wrong: $got")
   }
 
   test("streaming AQP registers equal the batch q237 legs (HT estimate included)") {
-    import graft.streaming.EventsStream
-    val updates = EventsStream.aqpRegisters(
-      spark, TableStream.read(spark, sf, "events"))
-    runAvailableNow(updates.toDF(), "aqp_regs", OutputMode.Update())
+    val updates = graft.queries.AnalyticsQueries.aqpRegisters(
+      TableStream.read(spark, sf, "events"))
+    runAvailableNow(updates, "aqp_regs", OutputMode.Update())
     val got = spark.table("aqp_regs").collect()
       .map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    // Batch legs: the identical conditional aggregate q237 starts from.
-    val batch = Tables.events(spark, sf)
-      .select(col("event_type"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
-        (substring(md5(col("event_id").cast("string").cast("binary")), 1, 1)
-          === lit("0")).as("in_sample"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
-        sum(when(col("in_sample"), 1L).otherwise(0L)).as("ns"),
-        sum(when(col("in_sample"), col("cents")).otherwise(0L)).as("ss"))
+    // Batch legs: the register function q237 starts from, on the static table.
+    val batch = graft.queries.AnalyticsQueries.aqpRegisters(Tables.events(spark, sf))
       .collect()
       .map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
@@ -1444,23 +1317,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming centroid registers equal the batch per-(label,dim) sums across batches") {
-    import graft.streaming.DocumentsStream
-    val dir = java.nio.file.Files.createTempDirectory("emb_cent_2b")
     val vecs = Tables.embeddings(spark, sf)
-    def dump(name: String, mtime: Long, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("emb_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    dump("b1.parquet", 1000000L, vecs.where(col("vec_id") % 2 === 0))
-    dump("b2.parquet", 2000000L, vecs.where(col("vec_id") % 2 === 1))
-    val updates = DocumentsStream.centroidRegisterUpdates(spark,
-      TableStream.read(spark, dir.toString, "embeddings", Some(1)))
-    runAvailableNow(updates.toDF(), "centroid_regs", OutputMode.Update())
+    val dir = splitDir("emb_cent_2b", vecs.where(col("vec_id") % 2 === 0),
+      vecs.where(col("vec_id") % 2 === 1))
+    val updates = graft.queries.ExtQueries.centroidRegisters(
+      TableStream.read(spark, dir, "embeddings", Some(1)))
+    runAvailableNow(updates, "centroid_regs", OutputMode.Update())
     // n is monotone per key, so the row with max n is the final register
     val streamed = spark.table("centroid_regs")
       .groupBy(col("label"), col("pos"))
@@ -1468,13 +1330,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("label"), col("pos"), col("m.sx"), col("m.n"))
       .collect()
       .map(r => ((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getLong(3)))).toMap
-    val batch = vecs
-      .select(col("label").cast("int").as("label"),
-        posexplode(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
-          .as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+    val batch = graft.queries.ExtQueries.centroidRegisters(vecs)
       .collect()
       .map(r => ((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getLong(3)))).toMap
     assert(streamed.nonEmpty && streamed == batch)
