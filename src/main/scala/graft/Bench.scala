@@ -20,7 +20,9 @@ object Bench {
 
   /** bench.json layout version: 2 adds `schema_version`, `cpus` and the
     * per-query `records` of every pass (`warm_passes[].records`,
-    * `cold_records`). */
+    * `cold_records`). The `artifacts_stored_first_pass` and
+    * `artifacts_stored_cold` maps ([[jstored]]) are additive fields of
+    * the same version. */
   val schemaVersion = 2
 
   /** One completed stage; bytes are executor task-metric totals. `site`
@@ -85,11 +87,18 @@ object Bench {
     def wallS: Double = (constructNs + planNs + execNs) / 1e9
   }
 
+  /** How one session artifact is stored: the bytes and partitions of
+    * its cached batches, and whether a serving reader read it as one
+    * partition ([[graft.ops.SessionCache.Stored]]). */
+  final case class StoredArt(bytes: Long, partitions: Int, onePartition: Boolean)
+
   /** A thrown query must never masquerade as a timing (round-5 verdict
     * item 3: two analysis-time crashes looked like 15x speedups): it is
     * listed in `failed` and has no record. Failures are tracked PER PASS
-    * so a cold-only failure is distinguishable from a warm one. */
-  final case class Pass(order: String, recs: Seq[Rec], failed: Seq[String]) {
+    * so a cold-only failure is distinguishable from a warm one. `stored`
+    * holds every artifact that was live after some query of the pass. */
+  final case class Pass(order: String, recs: Seq[Rec], failed: Seq[String],
+                        stored: Map[String, StoredArt]) {
     def times: Seq[(String, Double)] = recs.map(r => r.name -> r.wallS)
     def artifacts: Map[String, Double] =
       recs.flatMap(_.built).groupMapReduce(_._1)(_._2)(_ + _)
@@ -118,6 +127,7 @@ object Bench {
   def runPass(spark: SparkSession, sfDir: String, queries: Seq[Query], cold: Boolean,
               order: String, rec: Recorder): Pass = {
     val failed = mutable.ArrayBuffer.empty[String]
+    val stored = mutable.Map.empty[String, StoredArt]
     val recs = queries.flatMap { case (name, fn) =>
       if (cold) {
         graft.ops.SessionCache.clear(spark)
@@ -152,11 +162,15 @@ object Bench {
         failed += name
         None
       } finally {
+        graft.ops.SessionCache.stored(spark).foreach { case (k, e) =>
+          val one = e.onePartition || stored.get(k).exists(_.onePartition)
+          stored(k) = StoredArt(e.bytes, e.partitions, one)
+        }
         graft.ops.TransientCache.releaseAll()
         spark.sparkContext.clearJobGroup()
       }
     }
-    Pass(order, recs, failed.toSeq)
+    Pass(order, recs, failed.toSeq, stored.toMap)
   }
 
   private def r3(v: Double): String = f"$v%.3f"
@@ -167,6 +181,11 @@ object Bench {
     "\"" + t.name + "\":{\"gc_ms\":" + t.gcMs + ",\"cpu_ms\":" + t.cpuMs + ",\"disk\":" + t.toDisk +
       ",\"rm\":" + t.removed + ",\"mem_mb\":" + r3(t.memMb) + ",\"miss\":" + t.miss +
       ",\"disk_mb\":" + r3(t.diskMb) + "}"
+  }.mkString("{", ",", "}")
+
+  /** The stored artifacts of a pass, by key. */
+  def jstored(p: Pass): String = p.stored.toSeq.sortBy(_._1).map { case (k, a) =>
+    s"""${Verify.q(k)}:{"bytes":${a.bytes},"partitions":${a.partitions},"one_partition":${a.onePartition}}"""
   }.mkString("{", ",", "}")
 
   /** Per-query records of a pass, with the listener's jobs and stages. */
@@ -262,6 +281,8 @@ object Bench {
          |"first_pass_artifact_build_s":${r3(firstPassArtifacts)},
          |"artifacts_first_pass":${jmap(perIter.headOption.getOrElse(cold).artifacts)},
          |"artifacts_cold":${jmap(cold.artifacts)},
+         |"artifacts_stored_first_pass":${jstored(perIter.headOption.getOrElse(cold))},
+         |"artifacts_stored_cold":${jstored(cold)},
          |"warm_passes":$warmPassesJson,
          |"telemetry_warm":${jtele(warmed)},
          |"telemetry_cold":${jtele(cold)},

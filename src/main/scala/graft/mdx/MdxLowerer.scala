@@ -261,10 +261,12 @@ object MdxLowerer {
 
   /** Session-materialized pre-aggregate of the cube's fact at one of its
     * declared grains (one fact scan per session per aggregate; every
-    * navigated pivot rolls up a dimension-bounded table). */
+    * navigated pivot rolls up a dimension-bounded table). A serving
+    * read: a small aggregate is one partition, so the roll-up is one
+    * Spark job with no Exchange. */
   private def preAggTable(spark: SparkSession, sfDir: String,
                           cube: CubeDef, pa: PreAggDef): DataFrame =
-    graft.ops.SessionCache.getOrBuild(spark, s"preagg:${cube.name}:${pa.name}:$sfDir") {
+    graft.ops.SessionCache.serve(spark, s"preagg:${cube.name}:${pa.name}:$sfDir") {
       preAggregateSlice(spark, sfDir, cube, pa, cube.fact(spark, sfDir))
     }
 

@@ -36,9 +36,11 @@ object MemberCatalog {
     * the reference's member-cache CSV (§4 "member-catalog disk cache";
     * ref `scanner/DGIS_SCAN_2_stable.py:681-714`). Dimension-sized by
     * contract (~1.7 M rows in the reference), so MEMORY_AND_DISK persist
-    * is safe and every downstream query skips the 6-branch derivation. */
+    * is safe and every downstream query skips the 6-branch derivation.
+    * A serving read: a small catalog is one partition, so a browse page
+    * or a DMV rowset over it is one Spark job. */
   def members(spark: SparkSession, sfDir: String): DataFrame =
-    graft.ops.SessionCache.getOrBuild(spark, s"members:$sfDir")(
+    graft.ops.SessionCache.serve(spark, s"members:$sfDir")(
       build(spark, sfDir))
 
   /** Full synthesized member catalog (all hierarchies, both variants). */

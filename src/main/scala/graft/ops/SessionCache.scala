@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Session-lifetime cache of persisted derived tables, keyed by
   * (session instance, logical key). The same contract as the member
@@ -28,13 +29,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * holds the checkpoint blocks of its label-propagation fixpoint, which
   * its builder takes: [[clear]] leaves them to the ContextCleaner too,
   * and a lost one cannot be recomputed. At cluster scale the entry would
-  * be a persisted table on storage. */
+  * be a persisted table on storage.
+  *
+  * Layout rule: an artifact is stored in the round-robin shuffle's
+  * partitions, and every reader reads those partitions — except the
+  * serving readers ([[serve]]: the navigated pre-aggregates and the
+  * member catalog), which read an artifact of at most [[SmallBytes]] as
+  * one partition. `coalesce(1)` over the cached leaf reports a single
+  * partition, so a roll-up over it plans its partial and final aggregate
+  * in one stage with no Exchange, and an ordered page needs no range
+  * shuffle: a covered pivot is one Spark job of one task. Nothing is
+  * stored twice. Only the serving readers do this, because a consumer
+  * that relies on the stored partitions for parallel work downstream
+  * loses it on a one-partition input: coalescing every small artifact
+  * made q183's simhash stage lose its `hashpartitioning(simhash…)`
+  * exchange and cut q198 from 93 tasks to 18, slower (1.49 → 1.64 s). */
 object SessionCache {
 
-  /** (persisted Dataset, consumer leaf) per key: consumers get the
-    * leaf, [[clear]] unpersists the persisted Dataset. */
+  /** The largest artifact a serving reader reads as one partition:
+    * 5 MiB. Measured on 4 cores at sf0.1 with the `base` pre-aggregate
+    * replicated to 1–33 MB stored, a per-request nation roll-up and a
+    * region × year roll-up, one-task against stored-partition reads. A
+    * lone client's one-task read is faster at 1–4 MB (0.66–1.00 of the
+    * stored-partition median) and crosses over between 5 and 7 MB
+    * (0.73–1.21); four concurrent clients keep it faster up to 16 MB
+    * (0.54–0.90) and cross over near 33 MB. The saturated sf0.1 pre-aggregate grain
+    * (25 nations × 25 brands × 84 months) stores about 4.4 MB. */
+  val SmallBytes: Long = 5L << 20
+
+  /** One stored artifact: the persisted Dataset [[clear]] unpersists,
+    * the leaf every consumer reads, and what the eager count stored —
+    * the cached batches' bytes and partition count, read once, when the
+    * entry is made. */
+  final class Stored private[SessionCache] (private[SessionCache] val persisted: DataFrame,
+                                            val leaf: DataFrame, val bytes: Long, val partitions: Int) {
+    @volatile private var servedOnce = false
+
+    /** The leaf as a serving reader reads it ([[serve]]): one partition
+      * when the artifact is at most [[SmallBytes]], the stored partitions
+      * otherwise. Built once per entry. */
+    lazy val served: DataFrame = {
+      servedOnce = true
+      if (bytes <= SmallBytes) leaf.coalesce(1) else leaf
+    }
+
+    /** Whether a serving reader has read this artifact as one partition. */
+    def onePartition: Boolean = servedOnce && bytes <= SmallBytes
+  }
+
   private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Stored]
 
   /** Per-session log of cache-miss build cost (key -> cumulative
     * EXCLUSIVE seconds). Artifact builds are the one cross-query cost in
@@ -79,10 +123,23 @@ object SessionCache {
   def drainBuildLog(spark: SparkSession): Map[String, Double] =
     buildLog.remove(spark).map(_.toMap).getOrElse(Map.empty)
 
-  def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+  def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    entry(spark, key)(build).leaf
+
+  /** [[getOrBuild]] for a serving reader — an interactive request that
+    * rolls up, pages or filters the artifact and collects a bounded
+    * result: a small artifact is read as one partition ([[Stored.served]]). */
+  def serve(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    entry(spark, key)(build).served
+
+  /** The live entries of `spark` by key. */
+  def stored(spark: SparkSession): Map[String, Stored] =
+    cache.collect { case ((s, k), e) if s eq spark => k -> e }.toMap
+
+  private def entry(spark: SparkSession, key: String)(build: => DataFrame): Stored = {
     cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
     cache.get((spark, key)) match {
-      case Some((_, leaf)) => leaf
+      case Some(e) => e
       case None =>
         // Not getOrElseUpdate: TrieMap may evaluate the builder in two
         // racing threads and only store one. The loser must NOT
@@ -113,10 +170,14 @@ object SessionCache {
           p.count()
           p
         }
-        val entry = (persisted, org.apache.spark.sql.CachedLeaf.of(persisted))
-        val winner = cache.putIfAbsent((spark, key), entry).getOrElse(entry)
-        if (winner eq entry) recordBuild(spark, key, secs)
-        winner._2
+        val leaf = org.apache.spark.sql.CachedLeaf.of(persisted)
+        // The count has run, so the relation's size accumulator is exact.
+        val rel = leaf.queryExecution.analyzed.collectFirst { case r: InMemoryRelation => r }.get
+        val e = new Stored(persisted, leaf, rel.cacheBuilder.sizeInBytesStats.value,
+          rel.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+        val winner = cache.putIfAbsent((spark, key), e).getOrElse(e)
+        if (winner eq e) recordBuild(spark, key, secs)
+        winner
     }
   }
 
@@ -165,7 +226,7 @@ object SessionCache {
     * `spark.catalog.clearCache()` (Bench's cold pass does). */
   def clear(spark: SparkSession): Unit = {
     cache.keys.filter(_._1 eq spark).foreach { k =>
-      cache.remove(k).foreach(_._1.unpersist(blocking = false))
+      cache.remove(k).foreach(_.persisted.unpersist(blocking = false))
     }
     values.keys.filter(_._1 eq spark).foreach(values.remove)
   }

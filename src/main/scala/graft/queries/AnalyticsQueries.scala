@@ -2308,8 +2308,8 @@ object AnalyticsQueries {
       val v = Tables.documents(s, d).select(col("lang"), col("n_chars").as("x"))
       val b = v.agg(min(col("x")).as("gmin"), max(col("x")).as("gmax"))
       val binned = v.crossJoin(b)
-        .withColumn("w", expr("greatest((gmax - gmin + 63) div 64, 1)"))
-        .withColumn("bin", expr("least((x - gmin) div w, 63)"))
+        .withColumn("w", psiWidth(col("gmin"), col("gmax"), 64))
+        .withColumn("bin", psiBin(col("x"), col("gmin"), col("w"), 64))
       val hist = binned.groupBy(col("lang"), col("gmin"), col("w"), col("bin"))
         .agg(count(lit(1)).as("bn"))
       val cum = hist
@@ -3320,7 +3320,7 @@ object AnalyticsQueries {
       val v = Tables.documents(s, d).select(col("doc_id"), col("n_chars").as("x"))
       val b = v.agg(min(col("x")).as("gmin"), max(col("x")).as("gmax"))
       val binned = v.crossJoin(b)
-        .withColumn("w", expr("greatest((gmax - gmin + 63) div 64, 1)"))
+        .withColumn("w", psiWidth(col("gmin"), col("gmax"), 64))
         .withColumn("bin", psiBin(col("x"), col("gmin"), col("w"), 64))
         .withColumn("pop",
           when(col("doc_id") % 2 === 0, lit("ref")).otherwise(lit("cur")))
@@ -3534,14 +3534,20 @@ object AnalyticsQueries {
         sum(when(col("in_sample"), col("cents")).otherwise(0L)).as("sum_sample"))
   }
 
-  /** The PSI bin of value `x` over `nBins` bins of `width` from `gmin`,
-    * clamped into [0, nBins − 1] — q119's binning and its streaming
-    * twin's ([[graft.streaming.DocumentsStream.psiBinUpdates]]), whose
-    * frozen edges must absorb drifted tails on both sides. */
+  /** The bin of value `x` over `nBins` bins of `width` from `gmin`,
+    * clamped into [0, nBins − 1] — the equi-width histogram of q99 and
+    * q119 and of q119's streaming twin
+    * ([[graft.streaming.DocumentsStream.psiBinUpdates]]), whose frozen
+    * edges must absorb drifted tails on both sides. */
   private[graft] def psiBin(x: Column, gmin: Column, width: Column,
                             nBins: Int): Column =
     least(greatest(call_function("div", x - gmin, width), lit(0L)),
       lit(nBins - 1L))
+
+  /** The integer width of `nBins` equal bins spanning [gmin, gmax], at
+    * least 1 — the [[psiBin]] width of q99 and q119. */
+  private def psiWidth(gmin: Column, gmax: Column, nBins: Int): Column =
+    greatest(call_function("div", gmax - gmin + lit(nBins - 1), lit(nBins)), lit(1))
 
   /** THE SCD-2 priority-dimension builder — q98's published dimension,
     * q102's lookup side, and the stream-static enrichment twin

@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -68,9 +68,12 @@ object Sinks {
     * link and see the old generation or the new one, never a mix. A
     * crash at any point leaves `live` whole; what it can leave beside it
     * (a generation nothing points at, a superseded generation, a temp
-    * link) is garbage the next publish sweeps. The link swap is the
-    * local-FS stand-in for a table-format transactional commit
-    * (Delta/Iceberg). */
+    * link) is garbage the next publish sweeps. A `live` that is still a
+    * plain directory (written before this layout) cannot be renamed
+    * over, so it is first retired under a fresh generation name, which
+    * the sweep then removes; readers miss it only between those two
+    * renames. The link swap is the local-FS stand-in for a table-format
+    * transactional commit (Delta/Iceberg). */
   def publish(live: String, tag: String): Unit = {
     val gen = generation(live, tag)
     if (!gen.isDirectory) throw new java.io.IOException(s"no generation $gen to publish")
@@ -78,6 +81,9 @@ object Sinks {
     val name = dir.getFileName.toString
     val link = dir.resolveSibling(s"$name.link-${UUID.randomUUID()}")
     Files.createSymbolicLink(link, Paths.get(gen.getName))
+    if (Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS))
+      Files.move(dir, generation(dir.toString, UUID.randomUUID().toString).toPath,
+        StandardCopyOption.ATOMIC_MOVE)
     Files.move(link, dir, StandardCopyOption.ATOMIC_MOVE)
     Option(dir.getParent.toFile.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
       val n = f.getName

@@ -75,6 +75,16 @@ class BenchSpec extends AnyFunSuite {
           s"${r.name}: ledger ${r.built} exceeds construction ${r.constructNs / 1e9} s")
       }
       assert(cold("q01_pricing_summary").built.isEmpty)
+      // Stored layout: q02 reads the base pre-aggregate through a serving
+      // reader, which reads it as one partition; q65's artifacts are read
+      // in their stored partitions.
+      passes.foreach { p =>
+        val stored = json.readTree(Bench.jstored(p))
+        val base = stored.get(s"preagg:Sales:base:$sf")
+        assert(base.get("bytes").asLong > 0 && base.get("partitions").asInt > 1)
+        assert(base.get("one_partition").asBoolean)
+        assert(!stored.get(s"tok_counts:$sf").get("one_partition").asBoolean)
+      }
     }
   }
 

@@ -260,6 +260,19 @@ class ServiceSpec extends AnyFunSuite {
     assert(left.toSeq == Seq(LinkTarget(path)), s"upsert left ${left.toSeq}")
   }
 
+  test("upsertParquet onto a dataset written as a plain parquet directory") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_plain").toString
+    val path = s"$dir/up"
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(path)
+    Sinks.upsertParquet(Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), path, Seq("k"))
+    val up = spark.read.parquet(path).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(up == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
+    // The plain directory was retired as a generation and swept.
+    val left = new java.io.File(dir).list().filter(_ != "up")
+    assert(left.toSeq == Seq(LinkTarget(path)), s"upsert left ${left.toSeq}")
+  }
+
   test("schema evolution: mergeSchema unifies accreted generations; old rows null new columns") {
     // The data-lake reality at 100 TB: a column lands mid-stream and the
     // table's older files simply don't have it. mergeSchema reads must

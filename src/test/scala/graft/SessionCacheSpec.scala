@@ -1,17 +1,26 @@
 package graft
 
-import graft.ops.SessionCache
+import graft.ops.{MemberOps, SessionCache}
+import graft.service.QueryService
+import graft.service.QueryService.{QueryRequest, RowSpec}
 import org.apache.spark.SparkEnv
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.RDDBlockId
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Contract tests for the session-lifetime cache: build-once sharing,
   * the clear() cold-measurement hook, memo's single-build race
   * semantics, the exclusive build ledger, recovery of lost artifact
-  * blocks, and census visibility into artifact builds.
+  * blocks, census visibility into artifact builds, and the serving
+  * readers' one-partition reads of small artifacts.
   *
   * Runs against a PRIVATE `newSession()` (SessionCache keys by session
   * instance): sbt runs suites in parallel in one JVM, and a clear() of
@@ -19,8 +28,30 @@ import org.scalatest.funsuite.AnyFunSuite
   * mid-flight — in particular it would flip CodegenCensusSpec's pinned
   * warm-state plans to their cold shapes. The toy range(5) plans here
   * collide with nobody through the plan-equality CacheManager either. */
-class SessionCacheSpec extends AnyFunSuite {
+class SessionCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark.newSession()
+  val sf = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `body` runs on this thread, and the task count of
+    * each of their stages, read through a job group. A sentinel job of
+    * another group runs after `body`: the listener bus is FIFO, so once
+    * the sentinel's stage is seen, every event of `body` has been too. */
+  private def jobsOf(s: SparkSession)(body: => Unit): (Int, Seq[Int]) = {
+    val rec = new Bench.Recorder
+    val sc = s.sparkContext
+    sc.addSparkListener(rec)
+    val group = s"sessioncachespec-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds)))(assert(rec.stats(sentinel)._2.nonEmpty))
+      val (jobs, stages) = rec.stats(group)
+      (jobs, stages.map(_.tasks))
+    } finally sc.removeSparkListener(rec)
+  }
 
   test("getOrBuild builds once, shares, and rebuilds after clear") {
     var builds = 0
@@ -111,6 +142,62 @@ class SessionCacheSpec extends AnyFunSuite {
       s"artifact build plan not visible to the consumer:\n$plan")
     assert(WindowAudit.windowShapes(plan).count(_.arity == 0) >= 1,
       s"serial window inside the artifact not counted:\n$plan")
+    SessionCache.clear(s)
+  }
+
+  test("a covered pivot runs one Spark job and plans no Exchange") {
+    val req = QueryRequest("Sales", Seq("sum_qty", "count_order"),
+      Seq(RowSpec("[Customer]", "[Customer].[Geo]", "Nation")))
+    QueryService.executeForGrid(spark, sf, req) // builds the pre-aggregate
+    val (jobs, tasks) = jobsOf(spark)(assert(QueryService.executeForGrid(spark, sf, req).rowCount == 25))
+    assert(jobs == 1 && tasks == Seq(1), s"$jobs jobs, tasks per stage $tasks")
+    val df = QueryService.execute(spark, sf, req).limit(1000)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"covered pivot plans an Exchange:\n$plan")
+    val stored = SessionCache.stored(spark).collect { case (k, e) if k.startsWith("preagg:Sales:base:") => e }
+    assert(stored.size == 1 && stored.head.onePartition && stored.head.partitions > 1,
+      "the pre-aggregate is stored in its partitions and served as one")
+  }
+
+  test("a keyset page over the member catalog runs one Spark job") {
+    graft.model.MemberCatalog.members(spark, sf).count()
+    val (jobs, tasks) = jobsOf(spark) {
+      val page = MemberOps.keysetPage(graft.model.MemberCatalog.members(spark, sf), None, None, 100)
+      assert(page.collect().length == 100)
+    }
+    assert(jobs == 1 && tasks == Seq(1), s"$jobs jobs, tasks per stage $tasks")
+  }
+
+  test("an artifact above the bound keeps its stored partitions and gets no Coalesce") {
+    // Two uncompressible double columns: 16 bytes a row stored.
+    val rows = SessionCache.SmallBytes / 16 * 5 / 4
+    val big = SessionCache.serve(spark, "sessioncachespec:big")(
+      spark.range(0, rows, 1, 4).select(rand(1).as("a"), rand(2).as("b")))
+    val e = SessionCache.stored(spark)("sessioncachespec:big")
+    assert(e.bytes > SessionCache.SmallBytes && e.partitions > 1 && !e.onePartition)
+    val plan = big.groupBy().agg(sum(col("a"))).queryExecution.executedPlan
+    assert(collect(plan) { case c: CoalesceExec => c }.isEmpty, s"a large artifact is coalesced:\n$plan")
+    assert(big.rdd.getNumPartitions == e.partitions)
+    val small = SessionCache.serve(spark, "sessioncachespec:small")(spark.range(0, 100, 1, 4).toDF("n"))
+    assert(small.rdd.getNumPartitions == 1 && SessionCache.stored(spark)("sessioncachespec:small").onePartition)
+    SessionCache.clear(spark)
+  }
+
+  test("a join of the served pre-aggregate with lineitem keeps the fact side parallel") {
+    // Own session: no broadcast and no AQE coalescing, so the join is a
+    // shuffle join whose partition count the one-partition side could
+    // otherwise drag down to one.
+    val s = SparkTestSession.spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val cube = graft.mdx.SalesCube.cube
+    val agg = graft.mdx.MdxLowerer.coveringAggregate(s, sf, cube, Seq("order_year", "order_month")).get
+      .groupBy("order_year").agg(sum("count_order").as("n_year"))
+    val fact = Tables.lineitem(s, sf).select(year(col("l_shipdate")).as("order_year"), col("l_quantity"))
+    val joined = fact.join(agg, "order_year")
+    val (_, tasks) = jobsOf(s)(assert(joined.count() > 0))
+    assert(tasks.exists(_ > 1), s"the join ran in one task: tasks per stage $tasks")
     SessionCache.clear(s)
   }
 }
