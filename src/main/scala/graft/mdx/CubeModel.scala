@@ -34,7 +34,7 @@ final case class HierarchyDef(
     hier: String,  // "[Customer].[Geo]"
     levels: Seq[LevelDef],
     units: Seq[String],                          // join units to attach to the fact
-    members: (SparkSession, String) => DataFrame // dim-side member source (all level cols)
+    members: (SparkSession, String) => DataFrame // dim-side rows holding every level column
 ) {
   def level(name: String): Option[LevelDef] =
     levels.find(_.name.equalsIgnoreCase(name))
@@ -61,7 +61,9 @@ final case class MeasureDef(name: String, aggregator: String, agg: Column)
   * worth it. Instead each aggregate stays dimension-bounded and the
   * lowerer picks the narrowest one that covers the query; queries no
   * aggregate covers (part leaf — leaf grain would approach fact
-  * cardinality) fall back to the raw-fact path automatically. */
+  * cardinality) fall back to the raw-fact path automatically. It is
+  * keyed by what it holds ([[MdxLowerer.preAggKey]]), never the cube, so
+  * cubes over the same fact share one stored artifact per grain. */
 final case class PreAggDef(name: String, units: Seq[String], grainCols: Seq[String])
 
 final case class CubeDef(
@@ -70,7 +72,7 @@ final case class CubeDef(
     joinUnits: Seq[JoinUnit],
     hierarchies: Seq[HierarchyDef],
     measures: Seq[MeasureDef],
-    preAggs: Seq[PreAggDef] = Nil) {
+    preAggs: Seq[PreAggDef]) {
   def hierarchy(dim: String, hier: String): Option[HierarchyDef] =
     hierarchies.find(h =>
       h.dim.equalsIgnoreCase(dim) && h.hier.equalsIgnoreCase(hier))
@@ -114,16 +116,13 @@ object SalesCube {
         units = Seq("orders", "custgeo"),
         members = (s, d) =>
           Tables.nation(s, d).join(broadcast(Tables.region(s, d)),
-            col("n_regionkey") === col("r_regionkey"))
-            .select(col("r_regionkey"), col("r_name"),
-              col("n_nationkey"), col("n_name"))),
+            col("n_regionkey") === col("r_regionkey"))),
       HierarchyDef("[Part]", "[Part].[ByBrand]",
         levels = Seq(
           LevelDef("Brand", 1, "brand", Seq("p_brand"), "p_brand"),
           LevelDef("Part", 2, "part_name", Seq("p_brand", "p_partkey"), "p_name")),
         units = Seq("part"),
-        members = (s, d) =>
-          Tables.part(s, d).select(col("p_brand"), col("p_partkey"), col("p_name"))),
+        members = (s, d) => Tables.part(s, d)),
       HierarchyDef("[Time]", "[Time].[OrderDate]",
         levels = Seq(
           LevelDef("Year", 1, "order_year", Seq("order_year"), "order_year"),
@@ -132,7 +131,7 @@ object SalesCube {
         members = (s, d) =>
           Tables.orders(s, d).select(
             year(col("o_orderdate")).as("order_year"),
-            month(col("o_orderdate")).as("order_month")).distinct()),
+            month(col("o_orderdate")).as("order_month"))),
       HierarchyDef("[Supplier]", "[Supplier].[Geo]",
         levels = Seq(
           LevelDef("Nation", 1, "supp_nation", Seq("sn_nationkey"), "sn_name")),
@@ -141,7 +140,7 @@ object SalesCube {
           Tables.supplier(s, d).join(Tables.nation(s, d),
             col("s_nationkey") === col("n_nationkey"))
             .select(col("n_nationkey").as("sn_nationkey"),
-              col("n_name").as("sn_name")).distinct())
+              col("n_name").as("sn_name")))
     ),
     measures = Seq(
       MeasureDef("sum_qty", "SUM", sum(dec(col("l_quantity")))),
@@ -172,18 +171,15 @@ object SalesCube {
   /** Old-generation cube: the same fact but addressed through a
     * no-level-segment hierarchy with synthesized `"Nivel N"` names (the
     * X1 fallback taxonomy; ref `scanner/DGIS_SCAN_2_stable.py:722-743`).
-    * Member literals resolve by key depth, levels by `Levels(n)`. */
+    * Member literals resolve by key depth, levels by `Levels(n)`. It
+    * keeps the cube's pre-aggregates, and since an aggregate is keyed by
+    * what it holds, its pivots roll up the same session artifacts. */
   val oldCube: CubeDef = cube.copy(
     name = "SalesOld",
-    // No pre-agg: the legacy cube serves one addressing-compat query;
-    // building another session pre-agg would cost more than it saves.
-    preAggs = Nil,
     hierarchies = Seq(
       cube.hierarchies.head.copy(
         hier = "[Customer].[GeoOld]",
-        levels = Seq(
-          LevelDef("Nivel 1", 1, "region", Seq("r_regionkey"), "r_name"),
-          LevelDef("Nivel 2", 2, "nation", Seq("r_regionkey", "n_nationkey"), "n_name"))),
+        levels = cube.hierarchies.head.levels.map(l => l.copy(name = s"Nivel ${l.number}"))),
       cube.hierarchies(2)) // keep [Time].[OrderDate] for slicers
   )
 

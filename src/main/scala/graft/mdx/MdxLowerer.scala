@@ -111,14 +111,19 @@ object MdxLowerer {
         .orderBy(keyCols.map(col): _*).select(outCols: _*)
     } else {
       // NON EMPTY off: full member cross product, LEFT JOIN aggregated fact.
+      // Each side is a served member set keyed by the columns it holds, so
+      // a level of [Customer].[Geo] and of [Customer].[GeoOld] share one.
       val memberSides = axisDims.map { ad =>
         val pcols = (ad.level.keyCols ++
           propsFor(ad.h.hier).map(_.level.captionCol) :+ ad.level.captionCol).distinct
-        val m = ad.h.members(spark, sfDir).select(pcols.map(col): _*).distinct()
+        val m = graft.ops.SessionCache.serve(spark, s"memberset:${pcols.mkString(",")}:$sfDir")(
+          ad.h.members(spark, sfDir).select(pcols.map(col): _*).distinct())
         ad.filter.map(m.where).getOrElse(m)
       }
       val cross = memberSides.reduce(_.crossJoin(_))
-      cross.join(aggregate(fact, keyCols, measures, mAgg), keyCols, "left")
+      // A hash join on the keys, not a broadcast of the aggregate: over
+      // one-partition served sides it runs in the final stage, no job added.
+      cross.join(aggregate(fact, keyCols, measures, mAgg).hint("shuffle_hash"), keyCols, "left")
         .orderBy(keyCols.map(col): _*)
         .select(outCols: _*)
     }
@@ -261,14 +266,21 @@ object MdxLowerer {
 
   /** Session-materialized pre-aggregate of the cube's fact at one of its
     * declared grains (one fact scan per session per aggregate; every
-    * navigated pivot rolls up a dimension-bounded table). A serving
-    * read: a small aggregate is one partition, so the roll-up is one
-    * Spark job with no Exchange. */
+    * navigated pivot rolls up a dimension-bounded table). Keyed by
+    * [[preAggKey]], so every cube over the same fact shares it. A
+    * serving read: a small aggregate is one partition, so the roll-up is
+    * one Spark job with no Exchange. */
   private def preAggTable(spark: SparkSession, sfDir: String,
                           cube: CubeDef, pa: PreAggDef): DataFrame =
-    graft.ops.SessionCache.serve(spark, s"preagg:${cube.name}:${pa.name}:$sfDir") {
+    graft.ops.SessionCache.serve(spark, s"preagg:${preAggKey(cube, pa)}:$sfDir") {
       preAggregateSlice(spark, sfDir, cube, pa, cube.fact(spark, sfDir))
     }
+
+  /** What a pre-aggregate holds: the join units attached to the fact,
+    * the grain and the measure columns. The cube's name is not part of
+    * it, so the old-generation cube reads the artifacts of `Sales`. */
+  private[graft] def preAggKey(cube: CubeDef, pa: PreAggDef): String =
+    s"${pa.units.mkString("+")}:${(pa.grainCols ++ cube.measures.map(_.name)).mkString(",")}"
 
   /** Pre-aggregate an arbitrary fact SLICE at `pa`'s grain — the partial
     * form shared by session materialization and incremental maintenance:

@@ -33,12 +33,13 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   *
   * Layout rule: an artifact is stored in the round-robin shuffle's
   * partitions, and every reader reads those partitions — except the
-  * serving readers ([[serve]]: the navigated pre-aggregates and the
-  * member catalog), which read an artifact of at most [[SmallBytes]] as
-  * one partition. `coalesce(1)` over the cached leaf reports a single
-  * partition, so a roll-up over it plans its partial and final aggregate
-  * in one stage with no Exchange, and an ordered page needs no range
-  * shuffle: a covered pivot is one Spark job of one task. Nothing is
+  * serving readers ([[serve]]: the navigated pre-aggregates, the NON
+  * EMPTY-off member sets and the member catalog), which read an
+  * artifact of at most [[SmallBytes]] as one partition. `coalesce(1)`
+  * over the cached leaf reports a single partition, so a roll-up over it
+  * plans its partial and final aggregate in one stage with no Exchange,
+  * and an ordered page needs no range shuffle: a covered pivot is one
+  * Spark job of one task. Nothing is
   * stored twice. Only the serving readers do this, because a consumer
   * that relies on the stored partitions for parallel work downstream
   * loses it on a one-partition input: coalescing every small artifact
@@ -77,8 +78,22 @@ object SessionCache {
     def onePartition: Boolean = servedOnce && bytes <= SmallBytes
   }
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Stored]
+  /** One key's value, built at most once: the first caller runs the
+    * build, and a caller that arrives while it runs waits for that build
+    * instead of starting its own (two racing builds of one artifact would
+    * persist one plan twice). A build that throws leaves nothing built;
+    * [[once]] then drops the slot, so the next caller builds afresh. */
+  private final class Slot[T](build: => T) {
+    @volatile var built: Option[T] = None
+    def value: T = built.getOrElse(synchronized {
+      if (built.isEmpty) built = Some(build)
+      built.get
+    })
+  }
+
+  private type Slots[T] = scala.collection.concurrent.TrieMap[(SparkSession, String), Slot[T]]
+
+  private val cache: Slots[Stored] = scala.collection.concurrent.TrieMap.empty
 
   /** Per-session log of cache-miss build cost (key -> cumulative
     * EXCLUSIVE seconds). Artifact builds are the one cross-query cost in
@@ -132,87 +147,62 @@ object SessionCache {
   def serve(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     entry(spark, key)(build).served
 
-  /** The live entries of `spark` by key. */
+  /** The built entries of `spark` by key. */
   def stored(spark: SparkSession): Map[String, Stored] =
-    cache.collect { case ((s, k), e) if s eq spark => k -> e }.toMap
+    cache.collect { case ((s, k), slot) if s eq spark => slot.built.map(k -> _) }.flatten.toMap
 
-  private def entry(spark: SparkSession, key: String)(build: => DataFrame): Stored = {
-    cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
-    cache.get((spark, key)) match {
-      case Some(e) => e
-      case None =>
-        // Not getOrElseUpdate: TrieMap may evaluate the builder in two
-        // racing threads and only store one. The loser must NOT
-        // unpersist its build: Spark's CacheManager registers cache
-        // entries by logical-plan equality, so unpersisting the loser's
-        // (identical) plan would evict the WINNER's entry. The loser's
-        // persist was a no-op on the already-cached plan, so dropping
-        // its reference leaks nothing.
-        //
-        // Stored once: persist + count writes the column batches, and
-        // the eager count lands the full build cost inside this timed
-        // window instead of in whichever consumer touches the artifact
-        // first. Consumers get the cache entry's InMemoryRelation leaf,
-        // not the build plan: a one-node tree to analyze, pruned
-        // columnar reads, and the actual materialized size driving
-        // broadcast decisions.
-        //
-        // The batches are written from a round-robin shuffle. Every
-        // consumer task carries the cached RDD's lineage back to its
-        // last shuffle, which is what lets it recompute a lost block;
-        // without the shuffle that lineage is the build's whole final
-        // stage, generated code included (measured on the sf0.01
-        // pre-aggregate: a 117 KB serialized scan RDD instead of 16 KB,
-        // and pivot requests about 15 % slower on 4 cores).
-        val (persisted, secs) = exclusive {
-          val p = build.repartition()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          p.count()
-          p
-        }
-        val leaf = org.apache.spark.sql.CachedLeaf.of(persisted)
-        // The count has run, so the relation's size accumulator is exact.
-        val rel = leaf.queryExecution.analyzed.collectFirst { case r: InMemoryRelation => r }.get
-        val e = new Stored(persisted, leaf, rel.cacheBuilder.sizeInBytesStats.value,
-          rel.cacheBuilder.cachedColumnBuffers.getNumPartitions)
-        val winner = cache.putIfAbsent((spark, key), e).getOrElse(e)
-        if (winner eq e) recordBuild(spark, key, secs)
-        winner
-    }
+  /** The value of `key` in `slots`, built once per session: a miss runs
+    * `build` in the key's [[Slot]] and logs its exclusive seconds. Racing
+    * misses may each make a Slot, but the map keeps one for both. */
+  private def once[T](slots: Slots[T], spark: SparkSession, key: String)(build: => T): T = {
+    slots.keys.filter(_._1.sparkContext.isStopped).foreach(slots.remove)
+    val k = (spark, key)
+    val slot = slots.getOrElseUpdate(k, new Slot({
+      val (v, secs) = exclusive(build)
+      recordBuild(spark, key, secs)
+      v
+    }))
+    try slot.value
+    catch { case t: Throwable => slots.remove(k, slot); throw t }
   }
+
+  private def entry(spark: SparkSession, key: String)(build: => DataFrame): Stored =
+    once(cache, spark, key) {
+      // Stored once: persist + count writes the column batches, and
+      // the eager count lands the full build cost inside this timed
+      // window instead of in whichever consumer touches the artifact
+      // first. Consumers get the cache entry's InMemoryRelation leaf,
+      // not the build plan: a one-node tree to analyze, pruned
+      // columnar reads, and the actual materialized size driving
+      // broadcast decisions.
+      //
+      // The batches are written from a round-robin shuffle. Every
+      // consumer task carries the cached RDD's lineage back to its
+      // last shuffle, which is what lets it recompute a lost block;
+      // without the shuffle that lineage is the build's whole final
+      // stage, generated code included (measured on the sf0.01
+      // pre-aggregate: a 117 KB serialized scan RDD instead of 16 KB,
+      // and pivot requests about 15 % slower on 4 cores).
+      val persisted = build.repartition()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      persisted.count()
+      val leaf = org.apache.spark.sql.CachedLeaf.of(persisted)
+      // The count has run, so the relation's size accumulator is exact.
+      val rel = leaf.queryExecution.analyzed.collectFirst { case r: InMemoryRelation => r }.get
+      new Stored(persisted, leaf, rel.cacheBuilder.sizeInBytesStats.value,
+        rel.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+    }
 
   /** Session-keyed memo for an arbitrary trained-model value (codebooks,
     * LUT plans, driver-side state) — the [[getOrBuild]] pattern without
     * persist management: the builder owns any persistence of the
-    * DataFrames it embeds. Same race contract: losers drop their build
-    * without touching caches.
-    *
-    * BUILDER CONTRACT (required for the race to be leak-free): for a
-    * given key, every invocation of the builder must produce DataFrames
-    * whose logical plans CANONICALIZE EQUAL (deterministic build from the
-    * same inputs). Spark's CacheManager registers persisted entries by
-    * plan equality, so a race loser's persist() is then a no-op on the
-    * winner's entry and dropping the loser leaks nothing. A builder with
-    * nondeterministic plans (fresh random seeds, current-time literals)
-    * would leak the loser's cached blocks for the session — don't memo
-    * such builds. Every current builder (PQ codebooks, kNN graph,
-    * simhash signatures) is plan-deterministic by construction. */
-  private val values =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Any]
+    * DataFrames it embeds. Model builders run their own actions (k-means
+    * fits, codebook training), so timing the build captures the real
+    * cost. */
+  private val values: Slots[Any] = scala.collection.concurrent.TrieMap.empty
 
-  def memo[T](spark: SparkSession, key: String)(build: => T): T = {
-    values.keys.filter(_._1.sparkContext.isStopped).foreach(values.remove)
-    values.get((spark, key)) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        // Model builders run their own actions (k-means fits, codebook
-        // training), so timing the closure captures the real cost.
-        val (built, secs) = exclusive(build)
-        val prior = values.putIfAbsent((spark, key), built)
-        if (prior.isEmpty) recordBuild(spark, key, secs)
-        prior.map(_.asInstanceOf[T]).getOrElse(built)
-    }
-  }
+  def memo[T](spark: SparkSession, key: String)(build: => T): T =
+    once(values, spark, key)(build).asInstanceOf[T]
 
   /** Evict every entry belonging to `spark`, unpersisting cached tables —
     * the cold-measurement hook behind Bench's cold pass: with the cache
@@ -226,7 +216,7 @@ object SessionCache {
     * `spark.catalog.clearCache()` (Bench's cold pass does). */
   def clear(spark: SparkSession): Unit = {
     cache.keys.filter(_._1 eq spark).foreach { k =>
-      cache.remove(k).foreach(_.persisted.unpersist(blocking = false))
+      cache.remove(k).flatMap(_.built).foreach(_.persisted.unpersist(blocking = false))
     }
     values.keys.filter(_._1 eq spark).foreach(values.remove)
   }

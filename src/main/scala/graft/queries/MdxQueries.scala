@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * parser → analyzer → lowerer, each hash-matched against a DuckDB oracle
   * expressing the identical relational semantics.
   *
-  * Scale notes: every lowered plan is filter → (broadcast) dim joins →
+  * Scale notes: an uncovered plan is filter → (broadcast) dim joins →
   * partial+final hash agg on a handful of keys — the 100 TB shape is a
   * map-side-combined shuffle of a few hundred groups. The NON-EMPTY-off
-  * path builds the member cross product dim-side (tiny) and left-joins the
-  * aggregated fact, never the raw fact.
+  * path crosses served member-set artifacts (dimension-sized) and
+  * left-joins the aggregated fact, never the raw fact.
   */
 object MdxQueries {
 
@@ -106,7 +106,7 @@ object MdxQueries {
       // form of this fold, durable across restarts, is
       // PreAggMaintainer.fold.
       val hist = graft.ops.SessionCache.getOrBuild(s,
-        s"preagg_hist:${cube.name}:${pa.name}:$d")(
+        s"preagg_hist:${MdxLowerer.preAggKey(cube, pa)}:$d")(
         MdxLowerer.preAggregateSlice(s, d, cube, pa,
           fact.where(col("l_orderkey") % 7 =!= 0)))
       val parts = Seq(

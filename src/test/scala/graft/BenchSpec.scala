@@ -80,7 +80,9 @@ class BenchSpec extends AnyFunSuite {
       // in their stored partitions.
       passes.foreach { p =>
         val stored = json.readTree(Bench.jstored(p))
-        val base = stored.get(s"preagg:Sales:base:$sf")
+        val cube = graft.mdx.SalesCube.cube
+        val pa = cube.preAggs.find(_.name == "base").get
+        val base = stored.get(s"preagg:${graft.mdx.MdxLowerer.preAggKey(cube, pa)}:$sf")
         assert(base.get("bytes").asLong > 0 && base.get("partitions").asInt > 1)
         assert(base.get("one_partition").asBoolean)
         assert(!stored.get(s"tok_counts:$sf").get("one_partition").asBoolean)

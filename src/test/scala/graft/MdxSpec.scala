@@ -188,8 +188,8 @@ class MdxLowererSpec extends AnyFunSuite {
       // Time alone fits both grains: the narrower suppgeo wins.
       ("q36", q("q36_mdx_month_drill"), Seq("order_year", "order_month"), "suppgeo"),
       ("q37", q("q37_mdx_supplier_nation"), Seq("sn_nationkey", "sn_name"), "suppgeo"),
-      // SalesOld declares no pre-aggregate; the part leaf fits no grain.
-      ("q38", q("q38_mdx_oldcube"), geo, "lineitem"),
+      // SalesOld rolls up the same base artifact; the part leaf fits no grain.
+      ("q38", q("q38_mdx_oldcube"), geo, "base"),
       ("part leaf", partLeaf, Seq("p_brand", "p_partkey", "p_name"), "lineitem"))
     cases.foreach { case (label, df, cols, want) =>
       assert(factSources(df) == Set(want), s"$label scans ${factSources(df)}")
@@ -198,5 +198,34 @@ class MdxLowererSpec extends AnyFunSuite {
       assert(covering.map(factSources).getOrElse(Set("lineitem")) == Set(want),
         s"$label: coveringAggregate disagrees with lower")
     }
+  }
+
+  test("a repeated NON EMPTY-off pivot reads only cached relations") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case q: QueryStageExec => leaves(q.plan)
+      case _ if p.children.isEmpty => Seq(p)
+      case _ => p.children.flatMap(leaves)
+    }
+    def q33() = SparkEntry.queries("q33_mdx_nonempty_off")(spark, sf)
+    q33().collect()
+    val again = q33()
+    again.collect()
+    val ls = leaves(again.queryExecution.executedPlan)
+    assert(ls.nonEmpty && ls.forall(_.isInstanceOf[InMemoryTableScanExec]),
+      s"q33 reads more than session artifacts: ${ls.map(_.nodeName)}\n${again.queryExecution.executedPlan}")
+  }
+
+  test("both cubes share one base pre-aggregate") {
+    val s = SparkTestSession.spark.newSession()
+    Seq("q30_mdx_nation_revenue", "q38_mdx_oldcube").foreach(SparkEntry.queries(_)(s, sf).collect())
+    val base = SalesCube.cube.preAggs.find(_.name == "base").get
+    val grain = base.grainCols.mkString(",")
+    val keys = graft.ops.SessionCache.stored(s).keySet.filter(_.contains(grain))
+    assert(keys == Set(s"preagg:${MdxLowerer.preAggKey(SalesCube.cube, base)}:$sf"), s"base entries: $keys")
+    graft.ops.SessionCache.clear(s)
   }
 }

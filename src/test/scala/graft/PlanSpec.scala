@@ -78,15 +78,22 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("MDX non-navigated path attaches only referenced join units + broadcasts") {
-    // The old-generation cube declares no aggregates -> raw-fact path:
-    // only the custgeo/orders units' scans, dims broadcast, no
-    // unreferenced tables (part, supplier).
-    val p = plan("q38_mdx_oldcube")
+    // Customer nation x supplier nation fits no declared grain (base has
+    // no supplier geo, suppgeo no customer geo) -> raw-fact path: only the
+    // orders/custgeo/suppgeo/orderdate units' scans, dims broadcast, no
+    // unreferenced table (part).
+    val p = graft.mdx.MdxLowerer.run(spark, sf,
+      """SELECT {[Measures].[sum_qty]} ON COLUMNS,
+        | NON EMPTY CROSSJOIN([Customer].[Geo].[Nation].MEMBERS,
+        |   [Supplier].[Geo].[Nation].MEMBERS) ON ROWS
+        |FROM [Sales]
+        |WHERE ([Time].[OrderDate].[Year].&[1996])""".stripMargin)
+      .queryExecution.executedPlan.toString
     assert(!readsArtifact(p),
-      s"oldCube has no pre-aggregate to navigate to:\n$p")
+      s"an uncovered pivot has no pre-aggregate to navigate to:\n$p")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("partial_"), s"no partial (map-side) aggregation:\n$p")
-    assert(!p.contains("part.parquet") && !p.contains("supplier.parquet"),
+    assert(!p.contains("part.parquet"),
       s"unreferenced dimension scanned:\n$p")
   }
 

@@ -17,10 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 /** Contract tests for the session-lifetime cache: build-once sharing,
-  * the clear() cold-measurement hook, memo's single-build race
-  * semantics, the exclusive build ledger, recovery of lost artifact
-  * blocks, census visibility into artifact builds, and the serving
-  * readers' one-partition reads of small artifacts.
+  * the clear() cold-measurement hook, single-flight builds of a key
+  * that racing threads miss, the exclusive build ledger, recovery of
+  * lost artifact blocks, census visibility into artifact builds, and the
+  * serving readers' one-partition reads of small artifacts.
   *
   * Runs against a PRIVATE `newSession()` (SessionCache keys by session
   * instance): sbt runs suites in parallel in one JVM, and a clear() of
@@ -75,6 +75,35 @@ class SessionCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(v() == 42 && v() == 42 && builds == 1)
     SessionCache.clear(spark)
     assert(v() == 42 && builds == 2, "clear() must evict memo values")
+    SessionCache.clear(spark)
+  }
+
+  test("two threads that miss one key at once run its build once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val latch = new java.util.concurrent.CountDownLatch(2)
+    val key = "sessioncachespec:race"
+    // Each build waits for a second one: racing builds meet at the latch
+    // and both finish; a single-flight build times out alone.
+    def build() = {
+      builds.incrementAndGet()
+      latch.countDown()
+      latch.await(3, java.util.concurrent.TimeUnit.SECONDS)
+      spark.range(5).toDF("n")
+    }
+    val threads = Seq.fill(2)(new Thread(() => SessionCache.getOrBuild(spark, key)(build()).count()))
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(builds.get == 1, s"${builds.get} builds of one key")
+    assert(SessionCache.stored(spark).contains(key))
+    SessionCache.clear(spark)
+  }
+
+  test("a build that throws leaves no entry, and the next caller builds") {
+    val key = "sessioncachespec:throws"
+    assertThrows[IllegalStateException](
+      SessionCache.getOrBuild(spark, key)(throw new IllegalStateException("build failed")))
+    assert(!SessionCache.stored(spark).contains(key))
+    assert(SessionCache.getOrBuild(spark, key)(spark.range(3).toDF("n")).count() == 3)
     SessionCache.clear(spark)
   }
 
@@ -155,7 +184,9 @@ class SessionCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     df.collect()
     val plan = df.queryExecution.executedPlan
     assert(collect(plan) { case e: Exchange => e }.isEmpty, s"covered pivot plans an Exchange:\n$plan")
-    val stored = SessionCache.stored(spark).collect { case (k, e) if k.startsWith("preagg:Sales:base:") => e }
+    val base = graft.mdx.SalesCube.cube.preAggs.find(_.name == "base").get
+    val baseKey = s"preagg:${graft.mdx.MdxLowerer.preAggKey(graft.mdx.SalesCube.cube, base)}:$sf"
+    val stored = SessionCache.stored(spark).collect { case (k, e) if k == baseKey => e }
     assert(stored.size == 1 && stored.head.onePartition && stored.head.partitions > 1,
       "the pre-aggregate is stored in its partitions and served as one")
   }
