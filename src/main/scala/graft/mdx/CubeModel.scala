@@ -59,9 +59,10 @@ final case class MeasureDef(name: String, aggregator: String, agg: Column)
   * second geography into the base grain would multiply its cardinality
   * toward the fact's, destroying the invariance that makes navigation
   * worth it. Instead each aggregate stays dimension-bounded and the
-  * lowerer picks the narrowest one that covers the query; queries no
-  * aggregate covers (part leaf — leaf grain would approach fact
-  * cardinality) fall back to the raw-fact path automatically. It is
+  * lowerer picks the narrowest one that covers the query; a pivot over
+  * both geographies reads the customer × supplier nation grain, and
+  * queries no aggregate covers (part leaf — leaf grain would approach
+  * fact cardinality) fall back to the raw-fact path automatically. It is
   * keyed by what it holds ([[MdxLowerer.preAggKey]]), never the cube, so
   * cubes over the same fact share one stored artifact per grain. */
 final case class PreAggDef(name: String, units: Seq[String], grainCols: Seq[String])
@@ -152,8 +153,10 @@ object SalesCube {
     // Base grain: customer-geo × part-brand × order year/month (and their
     // captions), ~52 k rows. Part LEAF (p_partkey) is deliberately
     // excluded — leaf grain would approach fact cardinality; leaf queries
-    // fall back. Supplier geo lives in its OWN aggregate below: folding
-    // it here would multiply the base grain ×25 toward fact cardinality.
+    // fall back. Supplier geo lives in aggregates of its own below:
+    // folding it here would multiply the base grain ×25 toward fact
+    // cardinality. `base` stays first: q126 and the maintenance specs
+    // take `preAggs.head`.
     preAggs = Seq(
       PreAggDef("base",
         units = Seq("orders", "custgeo", "part", "orderdate"),
@@ -165,7 +168,15 @@ object SalesCube {
       PreAggDef("suppgeo",
         units = Seq("suppgeo", "orders", "orderdate"),
         grainCols = Seq("sn_nationkey", "sn_name",
-          "order_year", "order_month")))
+          "order_year", "order_month")),
+      // Customer-geo × supplier-geo × time grain (25 × 25 nations × 84
+      // months ≤ 52.5 k rows, base's bound): a pivot over both
+      // geographies rolls it up instead of scanning the fact through six
+      // joins. It is the widest grain, so it serves only such pivots.
+      PreAggDef("custsupp",
+        units = Seq("orders", "custgeo", "suppgeo", "orderdate"),
+        grainCols = Seq("r_regionkey", "r_name", "n_nationkey", "n_name",
+          "sn_nationkey", "sn_name", "order_year", "order_month")))
   )
 
   /** Old-generation cube: the same fact but addressed through a

@@ -169,6 +169,28 @@ class MdxLowererSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan).toSet
   }
 
+  /** Customer nation × Supplier nation within a year: the shape of the
+    * job path's MDX exports, which only the widest grain covers. */
+  private val custSuppMdx =
+    """SELECT {[Measures].[sum_qty], [Measures].[sum_disc_price], [Measures].[count_order]} ON COLUMNS,
+      | NON EMPTY CROSSJOIN([Customer].[Geo].[Nation].MEMBERS,
+      |   [Supplier].[Geo].[Nation].MEMBERS) ON ROWS
+      |FROM [Sales]
+      |WHERE ([Time].[OrderDate].[Year].&[1996])""".stripMargin
+
+  /** The leaves of `df`'s executed plan, through AQE stages. */
+  private def leaves(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _ if p.children.isEmpty => Seq(p)
+      case _ => p.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
   test("the navigator serves each pivot from the narrowest covering pre-aggregate") {
     val partLeaf = MdxLowerer.run(spark, sf,
       """SELECT {[Measures].[sum_qty]} ON COLUMNS,
@@ -190,7 +212,11 @@ class MdxLowererSpec extends AnyFunSuite {
       ("q37", q("q37_mdx_supplier_nation"), Seq("sn_nationkey", "sn_name"), "suppgeo"),
       // SalesOld rolls up the same base artifact; the part leaf fits no grain.
       ("q38", q("q38_mdx_oldcube"), geo, "base"),
-      ("part leaf", partLeaf, Seq("p_brand", "p_partkey", "p_name"), "lineitem"))
+      ("part leaf", partLeaf, Seq("p_brand", "p_partkey", "p_name"), "lineitem"),
+      // Both geographies fit only the customer × supplier grain.
+      ("cust x supp", MdxLowerer.run(spark, sf, custSuppMdx),
+        Seq("r_regionkey", "n_nationkey", "n_name", "sn_nationkey", "sn_name", "order_year"),
+        "custsupp"))
     cases.foreach { case (label, df, cols, want) =>
       assert(factSources(df) == Set(want), s"$label scans ${factSources(df)}")
       val cube = if (label == "q38") SalesCube.oldCube else SalesCube.cube
@@ -201,22 +227,37 @@ class MdxLowererSpec extends AnyFunSuite {
   }
 
   test("a repeated NON EMPTY-off pivot reads only cached relations") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan)
-      case _ if p.children.isEmpty => Seq(p)
-      case _ => p.children.flatMap(leaves)
-    }
     def q33() = SparkEntry.queries("q33_mdx_nonempty_off")(spark, sf)
     q33().collect()
     val again = q33()
     again.collect()
-    val ls = leaves(again.queryExecution.executedPlan)
+    val ls = leaves(again)
     assert(ls.nonEmpty && ls.forall(_.isInstanceOf[InMemoryTableScanExec]),
       s"q33 reads more than session artifacts: ${ls.map(_.nodeName)}\n${again.queryExecution.executedPlan}")
+  }
+
+  test("a repeated Customer x Supplier pivot reads only cached relations") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    MdxLowerer.run(spark, sf, custSuppMdx).collect()
+    val again = MdxLowerer.run(spark, sf, custSuppMdx)
+    again.collect()
+    val ls = leaves(again)
+    assert(ls.nonEmpty && ls.forall(_.isInstanceOf[InMemoryTableScanExec]),
+      s"the pivot reads more than session artifacts: ${ls.map(_.nodeName)}\n${again.queryExecution.executedPlan}")
+  }
+
+  test("a Customer x Supplier pivot rolled up from custsupp equals the raw-fact answer") {
+    val cube = SalesCube.cube
+    val raw = cube.copy(preAggs = cube.preAggs.filterNot(_.name == "custsupp"))
+    val served = MdxLowerer.run(spark, sf, custSuppMdx)
+    val scanned = MdxLowerer.run(spark, sf, custSuppMdx, registry = Map("Sales" -> raw))
+    assert(factSources(served) == Set("custsupp") && factSources(scanned) == Set("lineitem"))
+    val rows = served.collect().toSeq
+    assert(rows.nonEmpty)
+    // SUM partials re-aggregate decimal-exact and COUNT partials sum, so
+    // the roll-up equals the fact scan value for value, in the same order.
+    assert(rows == scanned.collect().toSeq)
   }
 
   test("both cubes share one base pre-aggregate") {

@@ -78,22 +78,22 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("MDX non-navigated path attaches only referenced join units + broadcasts") {
-    // Customer nation x supplier nation fits no declared grain (base has
-    // no supplier geo, suppgeo no customer geo) -> raw-fact path: only the
-    // orders/custgeo/suppgeo/orderdate units' scans, dims broadcast, no
-    // unreferenced table (part).
+    // Part leaf x supplier nation within one brand fits no declared grain
+    // (no grain holds the part leaf) -> raw-fact path: only the part and
+    // suppgeo units' scans, dims broadcast, no unreferenced table
+    // (customer).
     val p = graft.mdx.MdxLowerer.run(spark, sf,
       """SELECT {[Measures].[sum_qty]} ON COLUMNS,
-        | NON EMPTY CROSSJOIN([Customer].[Geo].[Nation].MEMBERS,
+        | NON EMPTY CROSSJOIN([Part].[ByBrand].[Part].MEMBERS,
         |   [Supplier].[Geo].[Nation].MEMBERS) ON ROWS
         |FROM [Sales]
-        |WHERE ([Time].[OrderDate].[Year].&[1996])""".stripMargin)
+        |WHERE ([Part].[ByBrand].[Brand].&[Brand#13])""".stripMargin)
       .queryExecution.executedPlan.toString
     assert(!readsArtifact(p),
       s"an uncovered pivot has no pre-aggregate to navigate to:\n$p")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("partial_"), s"no partial (map-side) aggregation:\n$p")
-    assert(!p.contains("part.parquet"),
+    assert(!p.contains("customer.parquet"),
       s"unreferenced dimension scanned:\n$p")
   }
 

@@ -88,6 +88,21 @@ class ServiceSpec extends AnyFunSuite {
     assert(result.count() == 5)
   }
 
+  test("an MDX job over both geographies runs at most 2 Spark jobs once its pre-aggregate is built") {
+    val s = spark.newSession()
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_custsupp").toString
+    val mdx = "SELECT {[Measures].[sum_qty], [Measures].[count_order]} ON COLUMNS, " +
+      "NON EMPTY CROSSJOIN([Customer].[Geo].[Nation].MEMBERS, [Supplier].[Geo].[Nation].MEMBERS) " +
+      "ON ROWS FROM [Sales] WHERE ([Time].[OrderDate].[Year].&[1996])"
+    val want = graft.mdx.MdxLowerer.run(s, sf, mdx).collect().toSeq // builds the artifact
+    val id = JobService.submit(s, root, "SALES", mdx)
+    val jobs = SparkJobCount(s)(assert(JobService.runPending(s, root, sf) == 1))
+    assert(JobService.status(s, root, id).get.status == JobService.Completed)
+    assert(jobs <= 2, s"$jobs Spark jobs from runPending to COMPLETED")
+    assert(JobService.result(s, root, id).collect().toSeq == want)
+    graft.ops.SessionCache.clear(s)
+  }
+
   test("a poll opens only its own job's files, whatever else the log holds") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs_garbage_others").toString
     val id = JobService.submit(spark, root, "SALES",
