@@ -41,6 +41,19 @@ object Similarity {
   /** Squared L2 norm of a quantized vector. */
   def normQ(a: Column): Column = dotQ(a, a)
 
+  /** Cosine from an exact integer dot product and the two squared
+    * norms: the IEEE-exact `dot / sqrt(na*nb)` every ranking here
+    * (and its oracle) uses. */
+  private def cosine(dot: Column, na: Column, nb: Column): Column =
+    dot.cast("double") / sqrt(na.cast("double") * nb.cast("double"))
+
+  /** The top-k tail: per `part`, rank rows by (cos desc, `id`) and keep
+    * rank <= k. */
+  private def topK(scored: DataFrame, part: String, id: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col(part)).orderBy(desc("cos"), col(id))))
+      .where(col("rank") <= k)
+
   /** Deterministic ±1 hyperplane weights, derived from md5 so any engine
     * can rebuild them: weight(plane, dim) = +1 iff the first hex digit of
     * md5("plane_dim") has its high bit set. */
@@ -97,11 +110,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         dotQ(col("qpv"), col("pv")).as("dot"),
         normQ(col("qpv")).as("nq"), normQ(col("pv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
+    topK(scored, "query_id", "vec_id", k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("dot"))
   }
 
@@ -118,11 +128,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         dotQ(col("qv"), col("cv")).as("dot"),
         normQ(col("qv")).as("nq"), normQ(col("cv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
+    topK(scored, "query_id", "vec_id", k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("dot"))
   }
 
@@ -152,11 +159,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("neg_label"),
         dotQ(col("qv"), col("cv")).as("dot"),
         normQ(col("qv")).as("nq"), normQ(col("cv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
+    topK(scored, "query_id", "vec_id", k)
       .select(col("query_id"), col("rank"), col("vec_id"),
         col("neg_label"), col("dot"))
   }
@@ -238,38 +242,32 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         dotQ(col("qqv"), col("qv")).as("dot"),
         normQ(col("qqv")).as("nq"), normQ(col("qv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
+    topK(scored, "query_id", "vec_id", k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("dot"))
   }
 
-  /** IVF (inverted-file) ANN: vectors are partitioned into `nlist` cells
-    * by nearest centroid; a query probes its `nprobe` closest cells and
-    * ranks only their members. The classic trade: recall vs a 2-3
-    * order-of-magnitude candidate cut — at 100 TB the cell assignment is
-    * a partitioning key and each probe is a partition-pruned scan.
-    *
-    * Centroids here are the `nlist` lowest-id vectors (deterministic —
-    * any engine reproduces the structure exactly; a production build
-    * would k-means them, which only changes centroid quality, not the
-    * operator shape). */
-  /** Deterministic IVF structure shared by [[ivfTopK]] and [[knnGraph]]:
-    * centroids = the `nlist` lowest-id vectors; per-vector scores against
-    * every centroid (ccos = exact-integer dot / sqrt of exact norms —
-    * the parity-critical contract mirrored by the qe/cent oracle CTEs). */
+  /** Deterministic IVF structure shared by [[ivfTopK]], [[knnGraph]] and
+    * the cell audits: centroids = the `nlist` lowest-id vectors. */
   private def centroids(e: DataFrame, nlist: Int): DataFrame =
     e.orderBy("vec_id").limit(nlist)
       .select(col("vec_id").as("cid"), col("qv").as("cv"))
 
-  private def cellScores(src: DataFrame, cent: DataFrame): DataFrame =
+  /** Each `src` vector's centroids ranked by `ccos` ([[cosine]] of the
+    * exact-integer dot and norms — the parity-critical contract mirrored
+    * by the qe/cent oracle CTEs), ties toward the lower cid: rn = 1 is
+    * the vector's assignment cell. */
+  private def cellRanks(src: DataFrame, cent: DataFrame): DataFrame =
     src.crossJoin(broadcast(cent))
       .select(src("vec_id"), src("qv"), col("cid"),
-        (dotQ(col("qv"), col("cv")).cast("double") /
-          sqrt(normQ(col("qv")).cast("double") * normQ(col("cv")).cast("double")))
+        cosine(dotQ(col("qv"), col("cv")), normQ(col("qv")), normQ(col("cv")))
           .as("ccos"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))))
+
+  /** The IVF coarse assignment: each vector with its rn = 1 cell. */
+  private def assigned(e: DataFrame, cent: DataFrame): DataFrame =
+    cellRanks(e, cent).where(col("rn") === 1)
 
   /** The IVF coarse assignment `(vec_id, cid)` under the shared
     * deterministic-centroid convention — exposed so index-health audits
@@ -280,11 +278,7 @@ object Similarity {
                      nlist: Int = 16): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"), quantize(col(embCol)).as("qv"))
-    val cent = centroids(e, nlist)
-    val byCell = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
-    cellScores(e, cent)
-      .withColumn("rn", row_number().over(byCell)).where(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
+    assigned(e, centroids(e, nlist)).select(col("vec_id"), col("cid"))
   }
 
   /** Each QUERY vector's centroid ranking `(query_id, cid, rn)` under
@@ -297,35 +291,35 @@ object Similarity {
                      isQuery: Column, nlist: Int = 16): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"), quantize(col(embCol)).as("qv"))
-    val cent = centroids(e, nlist)
-    val byCell = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
-    cellScores(e.where(isQuery), cent)
-      .withColumn("rn", row_number().over(byCell))
+    cellRanks(e.where(isQuery), centroids(e, nlist))
       .select(col("vec_id").as("query_id"), col("cid"), col("rn"))
   }
 
+  /** IVF (inverted-file) ANN: vectors are partitioned into `nlist` cells
+    * by nearest centroid; a query probes its `nprobe` closest cells and
+    * ranks only their members. The classic trade: recall vs a 2-3
+    * order-of-magnitude candidate cut — at 100 TB the cell assignment is
+    * a partitioning key and each probe is a partition-pruned scan.
+    *
+    * Centroids here are the `nlist` lowest-id vectors (deterministic —
+    * any engine reproduces the structure exactly; a production build
+    * would k-means them, which only changes centroid quality, not the
+    * operator shape). */
   def ivfTopK(emb: DataFrame, idCol: String, embCol: String,
               isQuery: Column, k: Int = 3, nlist: Int = 16, nprobe: Int = 2): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"), quantize(col(embCol)).as("qv"))
     val cent = centroids(e, nlist)
-    val byCell = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
-    val assignment = cellScores(e, cent)
-      .withColumn("rn", row_number().over(byCell)).where(col("rn") === 1)
-      .select(col("vec_id"), col("qv"), col("cid"))
-    val probes = cellScores(e.where(isQuery), cent)
-      .withColumn("rn", row_number().over(byCell)).where(col("rn") <= nprobe)
+    val assignment = assigned(e, cent).select(col("vec_id"), col("qv"), col("cid"))
+    val probes = cellRanks(e.where(isQuery), cent).where(col("rn") <= nprobe)
       .select(col("vec_id").as("query_id"), col("qv").as("qqv"), col("cid"))
     val scored = probes.join(assignment, Seq("cid"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         dotQ(col("qqv"), col("qv")).as("dot"),
         normQ(col("qqv")).as("nq"), normQ(col("qv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
+    topK(scored, "query_id", "vec_id", k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("dot"))
   }
 
@@ -342,26 +336,20 @@ object Similarity {
                k: Int = 3, nlist: Int = 16): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"), quantize(col(embCol)).as("qv"))
-    val cent = centroids(e, nlist)
-    val byCell = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
     // The persisted assignment carries each vector's norm: inside the
     // all-pairs cell join a per-pair normQ would re-run the O(d) dot
     // twice per pair — on Σ|cell|² pairs that's 3× the necessary
     // arithmetic (the oracle's nrm CTE shape, precomputed per vector).
     val assignment = graft.ops.TransientCache.persist(
-      cellScores(e, cent)
-        .withColumn("rn", row_number().over(byCell)).where(col("rn") === 1)
+      assigned(e, centroids(e, nlist))
         .select(col("vec_id"), col("qv"), col("cid"), normQ(col("qv")).as("n")))
     val scored = assignment.as("a").join(assignment.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr_id"),
         dotQ(col("a.qv"), col("b.qv")).as("dot"),
         col("a.n").as("na"), col("b.n").as("nb"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("na").cast("double") * col("nb").cast("double")))
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cos"), col("nbr_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .withColumn("cos", cosine(col("dot"), col("na"), col("nb")))
+    topK(scored, "vec_id", "nbr_id", k)
       .select(col("vec_id"), col("rank"), col("nbr_id"), col("dot"))
   }
 
@@ -410,8 +398,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         dotQ(col("qqv"), col("qv")).as("dot"),
         normQ(col("qqv")).as("nq"), normQ(col("qv")).as("nc"))
-      .withColumn("cos", col("dot").cast("double") /
-        sqrt(col("nq").cast("double") * col("nc").cast("double")))
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
       .select(col("query_id"), col("vec_id"), col("dot"), col("cos"))
     val wq = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("vec_id"))
     // The edge table joins into every round — materialize it once (in
@@ -441,8 +428,7 @@ object Similarity {
     }
     val explored = scored.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_explored"))
-    scored.withColumn("rank", row_number().over(wq))
-      .where(col("rank") <= k)
+    topK(scored, "query_id", "vec_id", k)
       .join(broadcast(explored), Seq("query_id"))
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("vec_id"), col("dot"), col("n_explored"))
@@ -463,14 +449,12 @@ object Similarity {
                   nlist: Int = 16, nCells: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col(idCol).as("vec_id"), quantize(col(embCol)).as("qv"))
-    val cent = centroids(e, nlist)
-    val byCell = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
     // One centroid-scoring pass serves both legs (top-nCells bridges
     // AND the rn=1 assignment the min-member table reads) — the
-    // assignment convention is byCell rn=1, identical to
+    // assignment convention is cellRanks rn=1, identical to
     // ivfAssignments, just not re-scored.
     val ranked = graft.ops.TransientCache.persist(
-      cellScores(e, cent).withColumn("rn", row_number().over(byCell))
+      cellRanks(e, centroids(e, nlist))
         .select(col("vec_id"), col("cid"), col("rn")))
     val top = ranked.where(col("rn") <= nCells).select(col("vec_id"), col("cid"))
     val minMember = ranked.where(col("rn") === 1)
@@ -736,8 +720,7 @@ object Similarity {
           bit_count(col("s1").bitwiseXOR(col("t1")))).cast("int").as("hamming"),
         dotQ(col("qqv"), col("qv")).as("dot"),
         normQ(col("qqv")).as("nq"), normQ(col("qv")).as("nc"))
-      .withColumn("cos",
-        col("dot").cast("double") / sqrt(col("nq").cast("double") * col("nc").cast("double")))
+      .withColumn("cos", cosine(col("dot"), col("nq"), col("nc")))
     val wh = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming"), col("vec_id"))
     val we = Window.partitionBy(col("query_id"))

@@ -6,15 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** First-seen canonical id per content hash (streaming-dedup state; one
-  * long per distinct content). Top-level + public for Spark's state
-  * encoder codegen, like [[SessionState]]. */
-final case class SeenContent(canonicalId: Long)
-
-/** First claimer of an LSH band bucket (streaming near-dup state; one
-  * long per distinct bucket) and the match event a later collision
-  * emits. Top-level + public for Spark's state encoder codegen. */
-final case class BandClaim(firstDoc: Long)
+/** The match event a later collision in a claimed LSH band bucket
+  * emits. Top-level + public for Spark's encoder codegen. */
 final case class BandMatch(band: Int, key: String, doc_id: Long,
                            first_doc: Long)
 
@@ -28,11 +21,8 @@ final case class SimhashClaim(firstDoc: Long, sig: Long)
 final case class SimhashMatch(band: Int, bkey: Long, doc_id: Long,
                               first_doc: Long, hamming: Int)
 
-/** First claimer of a trigram (streaming first-occurrence state; one
-  * long per distinct gram) and the claim event emitted the moment a
-  * gram enters the corpus. Top-level + public for Spark's state encoder
-  * codegen. */
-final case class GramClaim(firstDoc: Long)
+/** The claim event emitted the moment a trigram enters the corpus.
+  * Top-level + public for Spark's encoder codegen. */
 final case class GramClaimEvent(s: String, doc_id: Long)
 
 /** Per-gram (first, second) occurrence registers — the q207
@@ -50,11 +40,8 @@ final case class GramC12Update(s: String, c1: Long, c2: Long)
   * Top-level + public for Spark's state encoder codegen. */
 final case class ClaimMaintEvent(s: String, doc_id: Long, kind: String)
 
-/** First claimer of an audio landmark key (streaming fingerprint state;
-  * one long per distinct landmark) and the match event a later
-  * collision emits. Top-level + public for Spark's state encoder
-  * codegen. */
-final case class LandmarkClaim(firstMedia: Long)
+/** The match event a later collision on a claimed audio landmark key
+  * emits. Top-level + public for Spark's encoder codegen. */
 final case class LandmarkMatch(key: String, media_id: Long,
                                first_media: Long)
 
@@ -97,64 +84,28 @@ object DocumentsStream {
     * [[EventsStream.attributeClicks]]).
     *
     * Documented divergence from the batch twin: NULL-text/-id rows are
-    * dropped here (no content to dedup under, and keyed state cannot
-    * group on a null key), while the batch operator emits a null-hash
-    * group for them.
+    * dropped here (a null text has a null hash, and the fold drops null
+    * keys and ids), while the batch operator emits a null-hash group
+    * for them.
     *
-    * State is ONE long per distinct content hash — O(distinct docs),
-    * the keyed-state analogue of the batch hash-groupBy's shuffle key
-    * set. At 100 TB/day ingest the state store is RocksDB-backed and the
-    * hash key is already uniform (md5), so state partitions stay
-    * balanced — but O(distinct docs) still grows without bound over the
-    * stream's lifetime. `stateTtl` bounds it: a hash idle for longer than
-    * the TTL is evicted (processing-time timeout, refreshed on every
-    * re-arrival), turning exact lifetime dedup into sliding-window dedup —
-    * a re-arrival AFTER eviction is treated as new content and re-emitted.
-    * That is the standard state-compaction contract for an unbounded
-    * ingest; leave it None for exact dedup over a bounded backfill.
-    *
-    * Trigger caveat (applies to every stateTtl operator in this
-    * package): a processing-time timeout means the query ALWAYS has
-    * potential future work (FlatMapGroupsWithStateExec
-    * .shouldRunAnotherBatch is unconditionally true under
-    * ProcessingTimeTimeout), so a Trigger.AvailableNow run never
-    * self-terminates — it idles in no-data batches waiting for the TTL
-    * clock. TTL'd queries belong on a continuous trigger; a bounded
-    * drain must use processAllAvailable() + stop() (StreamingSpec's
-    * drainAndStop). */
+    * A [[FirstClaims.fold]] keyed on the content hash: ONE long per
+    * distinct content — O(distinct docs), the keyed-state analogue of
+    * the batch hash-groupBy's shuffle key set; the md5 key keeps state
+    * partitions balanced. `stateTtl` turns lifetime dedup into
+    * sliding-window dedup: a re-arrival after eviction is re-emitted as
+    * new content (the fold's TTL and trigger contract). */
   def dedupDocuments(spark: SparkSession, docs: DataFrame,
                      textCol: String = "text",
                      idCol: String = "doc_id",
                      stateTtl: Option[java.time.Duration] = None): Dataset[CanonicalDoc] = {
     import spark.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs
-      .where(col(textCol).isNotNull && col(idCol).isNotNull)
-      .select(
+    FirstClaims.fold[(String, Long), String, Claim, CanonicalDoc](
+      docs.select(
         md5(TextAnalysis.normalize(col(textCol)).cast("binary")).as("content_hash"),
-        col(idCol).cast("long").as("doc_id"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SeenContent, CanonicalDoc](
-        OutputMode.Append(), timeoutConf) {
-        case (hash, it, state: GroupState[SeenContent]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (state.exists) {
-            // re-arrival of known content: suppress, refresh the TTL clock
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            Iterator.empty
-          } else {
-            var minId = Long.MaxValue
-            it.foreach(p => if (p._2 < minId) minId = p._2)
-            state.update(SeenContent(minId))
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            Iterator(CanonicalDoc(hash, minId))
-          }
-      }
+        col(idCol).cast("long").as("doc_id")), stateTtl)(
+      _._1, _._2, r => Claim(r._2)) { (r, claimant) =>
+      Option.when(claimant.isEmpty)(CanonicalDoc(r._1, r._2))
+    }
   }
 
   /** Streaming inverted-index maintenance — the incremental twin of the
@@ -247,12 +198,12 @@ object DocumentsStream {
     * downstream, joining the match events to the maintained signature
     * table.
     *
-    * State is ONE long per distinct non-empty (band, bucket) —
-    * O(distinct buckets) ≤ nBands·distinct-signatures, the keyed-state
-    * analogue of the batch band join's build side, uniform under the
-    * md5-derived keys. `stateTtl` turns lifetime detection into
-    * sliding-window detection, same eviction contract (and caveat) as
-    * [[dedupDocuments]]. */
+    * A [[FirstClaims.fold]] keyed on (band, bucket): ONE long per
+    * distinct non-empty bucket — O(distinct buckets) ≤
+    * nBands·distinct-signatures, the keyed-state analogue of the batch
+    * band join's build side, uniform under the md5-derived keys.
+    * `stateTtl` turns lifetime detection into sliding-window detection
+    * (the fold's TTL and trigger contract). */
   def lshNearDupAtIngest(spark: SparkSession, docs: DataFrame,
                          nHashes: Int = 8, bandSize: Int = 2,
                          stateTtl: Option[java.time.Duration] = None)
@@ -260,9 +211,6 @@ object DocumentsStream {
     import spark.implicits._
     require(nHashes % bandSize == 0, "bands must tile the signature")
     val nBands = nHashes / bandSize
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     val sigs = graft.ext.Dedup
       .minhashSignaturesTyped(docs, "text", "doc_id", nHashes)
     val bandStructs = (0 until nBands).map { b =>
@@ -270,32 +218,12 @@ object DocumentsStream {
         (0 until bandSize).map(r => col(s"h${b * bandSize + r}")): _*)
       struct(lit(b).as("band"), key.as("key"))
     }
-    sigs.select(col("doc"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc"))
-      .as[(Int, String, Long)]
-      .groupByKey(t => t._1 + "|" + t._2)
-      .flatMapGroupsWithState[BandClaim, BandMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (_, it, state: GroupState[BandClaim]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toArray.sortBy(_._3)
-            val (band, key) = (rows.head._1, rows.head._2)
-            val out =
-              if (state.exists)
-                rows.iterator.map(r =>
-                  BandMatch(band, key, r._3, state.get.firstDoc))
-              else {
-                state.update(BandClaim(rows.head._3))
-                rows.iterator.drop(1).map(r =>
-                  BandMatch(band, key, r._3, rows.head._3))
-              }
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            out
-          }
-      }
+    FirstClaims.fold[(Int, String, Long), String, Claim, BandMatch](
+      sigs.select(col("doc"), explode(array(bandStructs: _*)).as("bk"))
+        .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc")),
+      stateTtl)(t => t._1 + "|" + t._2, _._3, r => Claim(r._3)) { (r, claimant) =>
+      claimant.map(c => BandMatch(r._1, r._2, r._3, c.first))
+    }
   }
 
   /** Streaming SimHash near-dup detection at ingest — the streaming twin
@@ -330,8 +258,8 @@ object DocumentsStream {
     * NULL text/id rows are dropped (no content to band; keyed state
     * cannot group a null key), matching [[dedupDocuments]].
     *
-    * `stateTtl` gives the same sliding-window eviction contract (and
-    * AvailableNow caveat) as [[dedupDocuments]]. */
+    * A [[FirstClaims.fold]] whose claim state is [[SimhashClaim]];
+    * `stateTtl` gives its sliding-window eviction contract. */
   def simhashNearDupAtIngest(spark: SparkSession, docs: DataFrame,
                              textCol: String = "text",
                              idCol: String = "doc_id",
@@ -342,47 +270,24 @@ object DocumentsStream {
     val sigBits = 64
     val nBands = maxDist + 1
     val bounds = graft.ext.Dedup.bandBounds(sigBits, nBands)
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     val sigi = graft.ext.Dedup.sigInt(
       graft.ext.Dedup.simhash(col(textCol)), sigBits)
     val bandStructs = (0 until nBands).map { b =>
       struct(lit(b).as("band"),
         graft.ext.Dedup.bandKeyOf(col("sigi"), bounds, sigBits, b).as("bkey"))
     }
-    docs
-      .where(col(textCol).isNotNull && col(idCol).isNotNull)
+    val bands = docs
+      // simhash(null) is the all-zero signature, not null: drop here
+      .where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("doc"), sigi.as("sigi"))
       .select(col("doc"), col("sigi"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
         col("doc"), col("sigi"))
-      .as[(Int, Long, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState[SimhashClaim, SimhashMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (_, it, state: GroupState[SimhashClaim]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toArray.sortBy(_._3)
-            val (band, bkey) = (rows.head._1, rows.head._2)
-            val out =
-              if (state.exists) {
-                val c = state.get
-                rows.iterator.map(r => SimhashMatch(band, bkey, r._3,
-                  c.firstDoc, java.lang.Long.bitCount(r._4 ^ c.sig)))
-              } else {
-                val c0 = rows.head
-                state.update(SimhashClaim(c0._3, c0._4))
-                rows.iterator.drop(1).map(r => SimhashMatch(band, bkey, r._3,
-                  c0._3, java.lang.Long.bitCount(r._4 ^ c0._4)))
-              }
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            out
-          }
-      }
+    FirstClaims.fold[(Int, Long, Long, Long), (Int, Long), SimhashClaim, SimhashMatch](
+      bands, stateTtl)(t => (t._1, t._2), _._3, r => SimhashClaim(r._3, r._4)) {
+      (r, claimant) => claimant.map(c => SimhashMatch(r._1, r._2, r._3,
+        c.firstDoc, java.lang.Long.bitCount(r._4 ^ c.sig)))
+    }
   }
 
   /** Streaming first-occurrence gram claims at ingest — the incremental
@@ -398,37 +303,17 @@ object DocumentsStream {
     * — StreamingSpec-pinned. State is one long per distinct gram:
     * precisely the first-occurrence index the batch family's SCALE note
     * describes (a new shard's grams anti-join it); here that index is
-    * the keyed state itself, maintained per arrival. `stateTtl` gives
-    * the same sliding-window eviction contract as streaming exact
-    * dedup. */
+    * the keyed state itself — a [[FirstClaims.fold]] keyed on the gram,
+    * maintained per arrival, with its sliding-window `stateTtl`. */
   def gramClaimsAtIngest(spark: SparkSession, docs: DataFrame,
                          stateTtl: Option[java.time.Duration] = None)
       : Dataset[GramClaimEvent] = {
     import spark.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    graft.ext.Dedup.shingleRows(docs, "text", "doc_id", 3)
-      .as[(Long, String)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[GramClaim, GramClaimEvent](
-        OutputMode.Append(), timeoutConf) {
-        case (gram, it, state: GroupState[GramClaim]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val minDoc = it.map(_._1).min
-            val out =
-              if (state.exists) Iterator.empty
-              else {
-                state.update(GramClaim(minDoc))
-                Iterator.single(GramClaimEvent(gram, minDoc))
-              }
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            out
-          }
-      }
+    FirstClaims.fold[(Long, String), String, Claim, GramClaimEvent](
+      graft.ext.Dedup.shingleRows(docs, "text", "doc_id", 3), stateTtl)(
+      _._2, _._1, r => Claim(r._1)) { (r, claimant) =>
+      Option.when(claimant.isEmpty)(GramClaimEvent(r._2, r._1))
+    }
   }
 
   /** Streaming (first, second)-occurrence registers per gram — the
@@ -508,22 +393,22 @@ object DocumentsStream {
         }
       }
       .groupByKey(_._1)
-      .flatMapGroupsWithState[GramClaim, ClaimMaintEvent](
+      .flatMapGroupsWithState[Claim, ClaimMaintEvent](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (gram, it, state: GroupState[GramClaim]) =>
+        case (gram, it, state: GroupState[Claim]) =>
           val rows = it.toSeq
           val out = Seq.newBuilder[ClaimMaintEvent]
           // 1. tombstones retire the PRIOR holder only
           if (state.exists &&
-              rows.exists { case (_, doc, del) => del && doc == state.get.firstDoc }) {
-            out += ClaimMaintEvent(gram, state.get.firstDoc, "retired")
+              rows.exists { case (_, doc, del) => del && doc == state.get.first }) {
+            out += ClaimMaintEvent(gram, state.get.first, "retired")
             state.remove()
           }
           // 2. arrivals claim if unclaimed
           val adds = rows.collect { case (_, doc, false) => doc }
           if (!state.exists && adds.nonEmpty) {
             val minDoc = adds.min
-            state.update(GramClaim(minDoc))
+            state.update(Claim(minDoc))
             out += ClaimMaintEvent(gram, minDoc, "claim")
           }
           out.result().iterator
@@ -541,39 +426,21 @@ object DocumentsStream {
     * moment it lands. Candidate-grade, like [[lshNearDupAtIngest]]: the
     * >= 8-shared threshold and the 50-owner boilerplate cap are batch
     * contracts applied downstream over the maintained landmark table;
-    * this stage is the earliest-possible signal. State is one long per
-    * distinct landmark key; `stateTtl` gives the same sliding-window
-    * eviction contract as streaming exact dedup. */
+    * this stage is the earliest-possible signal. A [[FirstClaims.fold]]
+    * keyed on the landmark: one long per distinct key, with its
+    * sliding-window `stateTtl`. A null-id document is dropped before
+    * the typed decode. */
   def audioLandmarkMatchesAtIngest(spark: SparkSession, docs: DataFrame,
                                    stateTtl: Option[java.time.Duration] = None)
       : Dataset[LandmarkMatch] = {
     import spark.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    graft.ext.Multimodal.audioFromDocuments(docs)
+    val keys = graft.ext.Multimodal.audioFromDocuments(docs.where(col("doc_id").isNotNull))
       .as[graft.ext.Multimodal.MediaRecord]
       .flatMap(r => graft.ext.Multimodal.landmarkKeys(r.payload).iterator
         .map(k => (k, r.media_id)))
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LandmarkClaim, LandmarkMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (key, it, state: GroupState[LandmarkClaim]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toArray.sortBy(_._2)
-            val out =
-              if (state.exists)
-                rows.iterator.map(r => LandmarkMatch(key, r._2, state.get.firstMedia))
-              else {
-                state.update(LandmarkClaim(rows.head._2))
-                rows.iterator.drop(1).map(r => LandmarkMatch(key, r._2, rows.head._2))
-              }
-            stateTtl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            out
-          }
-      }
+    FirstClaims.fold[(String, Long), String, Claim, LandmarkMatch](keys, stateTtl)(
+      _._1, _._2, r => Claim(r._2)) { (r, claimant) =>
+      claimant.map(c => LandmarkMatch(r._1, r._2, c.first))
+    }
   }
 }

@@ -84,7 +84,6 @@ object EventsStream {
   final case class Session(user_id: Long, session_start: java.sql.Timestamp,
                            session_end: java.sql.Timestamp, n_events: Long)
 
-  final case class SeenUser(seen: Boolean)
   final case class FirstSeen(user_id: Long, first_day: java.sql.Timestamp)
 
   final case class Attribution(event_id: Long, user_id: Long,
@@ -109,11 +108,12 @@ object EventsStream {
 
   /** Streaming first-seen detection — the incremental twin of the q118
     * new-user curve's per-user minimum: one emitted row per user at
-    * first arrival, carrying that batch's earliest event day. State is
-    * one empty marker per seen user (O(distinct users), like
-    * [[graft.streaming.DocumentsStream.dedupDocuments]]); a single-batch
-    * run reproduces the batch first-seen table exactly
-    * (StreamingSpec-pinned).
+    * first arrival, carrying that batch's earliest event day. A
+    * [[FirstClaims.fold]] keyed on the user with the event day as the
+    * claim id: the earliest day claims, and state is that one long per
+    * seen user (O(distinct users)); a single-batch run reproduces the
+    * batch first-seen table exactly (StreamingSpec-pinned). Rows with a
+    * null user or day are dropped.
     *
     * Contract across batches is FIRST-ARRIVAL-WINS: an append-mode
     * stream cannot retract an emitted row, so a late batch carrying an
@@ -123,38 +123,19 @@ object EventsStream {
     * Downstreams needing corrected days should treat this stream as the
     * arrival log and re-derive min(day) in batch.
     *
-    * `stateTtl` bounds the otherwise O(distinct users)-forever state,
-    * same contract as [[DocumentsStream.dedupDocuments]]: a user idle
-    * past the TTL is evicted (processing-time timeout, refreshed on
-    * re-arrival) and would re-emit on return — lifetime first-seen
-    * becomes sliding-horizon first-seen. Leave None for a bounded
-    * backfill. */
+    * `stateTtl` bounds the otherwise O(distinct users)-forever state
+    * with the fold's contract: a user idle past the TTL is evicted and
+    * would re-emit on return — lifetime first-seen becomes
+    * sliding-horizon first-seen. */
   def firstSeenUsers(spark: SparkSession, events: DataFrame,
                      stateTtl: Option[java.time.Duration] = None): Dataset[FirstSeen] = {
     import spark.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.select(col("user_id").cast("long"),
-        date_trunc("day", col("ts")).as("day"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SeenUser, FirstSeen](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[SeenUser]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (user, it, state: GroupState[SeenUser]) =>
-          val out =
-            if (state.exists) Iterator.empty
-            else {
-              val firstDay = it.map(_._2).minBy(_.getTime)
-              state.update(SeenUser(true))
-              Iterator(FirstSeen(user, firstDay))
-            }
-          stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
-          out
-      }
+    FirstClaims.fold[(Long, java.sql.Timestamp), Long, Claim, FirstSeen](
+      events.select(col("user_id").cast("long"),
+        date_trunc("day", col("ts")).as("day")), stateTtl)(
+      _._1, _._2.getTime, r => Claim(r._2.getTime)) { (r, claimant) =>
+      Option.when(claimant.isEmpty)(FirstSeen(r._1, r._2))
+    }
   }
 
   /** Stream-static point-in-time dimension enrichment — the streaming

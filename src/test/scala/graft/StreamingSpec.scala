@@ -53,23 +53,40 @@ class StreamingSpec extends AnyFunSuite {
     q.exception.foreach(e => fail(s"query $name failed during drain/stop", e))
   }
 
-  /** `parts` written one parquet file each (b1.parquet, b2.parquet, …)
-    * into a fresh directory, file i stamped with mtime i·10⁶ ms, so a
-    * stream with `maxFilesPerTrigger` 1 reads them as micro-batches in
-    * that order. Returns the directory. */
+  /** `df` written as one parquet file `b<i>.parquet` into `dir`, stamped
+    * with mtime i·10⁶ ms, so a stream with `maxFilesPerTrigger` 1 reads
+    * a directory's files as micro-batches in index order. */
+  private def writeBatch(dir: String, i: Int,
+                         df: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("batch_part").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(f => f.getName.endsWith(".parquet")).head
+    val dst = java.nio.file.Paths.get(dir, s"b$i.parquet")
+    java.nio.file.Files.move(part.toPath, dst)
+    dst.toFile.setLastModified(i * 1000000L)
+  }
+
+  /** `parts` written as b1.parquet, b2.parquet, … ([[writeBatch]]) into
+    * a fresh directory. Returns the directory. */
   private def splitDir(prefix: String,
                        parts: org.apache.spark.sql.DataFrame*): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    parts.zipWithIndex.foreach { case (df, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"${prefix}_part").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(s"b${i + 1}.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified((i + 1) * 1000000L)
-    }
-    dir.toString
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    parts.zipWithIndex.foreach { case (df, i) => writeBatch(dir, i + 1, df) }
+    dir
+  }
+
+  /** `documents`-shaped rows `(doc_id, text)`. */
+  private def docRows(rows: (Long, String)*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  /** `events`-shaped rows `(event_id, ts, user_id, event_type, value)`. */
+  private def eventRows(rows: (Long, java.sql.Timestamp, Long, String, Double)*)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
   }
 
   test("streaming windowed stats equal the batch aggregation (complete mode)") {
@@ -250,21 +267,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming exact dedup suppresses cross-batch duplicates") {
     import graft.streaming.DocumentsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_2batch")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     // batch 1: two contents; batch 2 (newer file): one dup of batch 1
     // (higher id — must NOT re-emit) + one new content
-    writeAs("b1.parquet", 1000000L, Seq(1L -> "alpha beta", 2L -> "gamma"))
-    writeAs("b2.parquet", 2000000L, Seq(3L -> "alpha beta", 4L -> "delta"))
+    val dir = splitDir("docs_2batch",
+      docRows(1L -> "alpha beta", 2L -> "gamma"),
+      docRows(3L -> "alpha beta", 4L -> "delta"))
     val dd = DocumentsStream.dedupDocuments(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(dd.toDF(), "doc_dedup_2b", OutputMode.Append())
@@ -663,23 +670,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming LSH near-dup detection flags a cross-batch re-crawl against the original") {
     import graft.streaming.DocumentsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_lsh_2b")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     val a = "the quick brown fox jumps over the lazy dog again and again"
     val b = "completely different content with no overlap whatsoever here now"
     // batch 2: doc 3 = re-crawl of doc 1 (identical shingles -> identical
     // signature -> collides in ALL 4 bands, partner = original doc 1)
-    writeAs("b1.parquet", 1000000L, Seq(1L -> a, 2L -> b))
-    writeAs("b2.parquet", 2000000L, Seq(3L -> a))
+    val dir = splitDir("docs_lsh_2b", docRows(1L -> a, 2L -> b), docRows(3L -> a))
     val matches = DocumentsStream.lshNearDupAtIngest(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "lsh_ingest_2b", OutputMode.Append())
@@ -687,6 +682,22 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3))).toSet
     assert(got == (0 until 4).map(band => (band, 3L, 1L)).toSet,
       s"expected doc 3 to match doc 1 in all bands, got $got")
+  }
+
+  test("streaming LSH near-dup detection: an unexpired state TTL changes no cross-batch match") {
+    import graft.streaming.DocumentsStream
+    val a = "the quick brown fox jumps over the lazy dog again and again"
+    val b = "completely different content with no overlap whatsoever here now"
+    val dir = splitDir("docs_lsh_ttl", docRows(1L -> a, 2L -> b), docRows(3L -> a))
+    def matches(ttl: Option[java.time.Duration]) = DocumentsStream.lshNearDupAtIngest(
+      spark, TableStream.read(spark, dir, "documents", Some(1)), stateTtl = ttl).toDF()
+    runAvailableNow(matches(None), "lsh_2b_no_ttl", OutputMode.Append())
+    val noTtl = spark.table("lsh_2b_no_ttl").collect().map(_.toString).toSet
+    // the ProcessingTimeTimeout path: an AvailableNow run never ends
+    drainAndStop(matches(Some(java.time.Duration.ofHours(1))), "lsh_2b_ttl",
+      OutputMode.Append(), minRows = noTtl.size.toLong)
+    val ttl = spark.table("lsh_2b_ttl").collect().map(_.toString).toSet
+    assert(noTtl.nonEmpty && ttl == noTtl, s"TTL path diverged: $ttl vs $noTtl")
   }
 
   // JVM-side recompute of the simhash ingest contract, shared by both
@@ -763,17 +774,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming simhash near-dup detection flags a cross-batch re-crawl with exact distance") {
     import graft.streaming.DocumentsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_sim_2b")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     val a = "the quick brown fox jumps over the lazy dog again and again"
     val b = "completely different content with no overlap whatsoever here now"
     val b1 = Seq(1L -> a, 2L -> b)
@@ -781,8 +781,7 @@ class StreamingSpec extends AnyFunSuite {
     // signature -> collides in ALL 5 bands at hamming 0, partner = the
     // ORIGINAL doc 1 held in state across the batch boundary)
     val b2 = Seq(3L -> a)
-    writeAs("b1.parquet", 1000000L, b1)
-    writeAs("b2.parquet", 2000000L, b2)
+    val dir = splitDir("docs_sim_2b", docRows(b1: _*), docRows(b2: _*))
     val matches = DocumentsStream.simhashNearDupAtIngest(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "simhash_ingest_2b", OutputMode.Append())
@@ -818,33 +817,18 @@ class StreamingSpec extends AnyFunSuite {
 
   test("watermark drops cross-batch late data from an Append windowed agg") {
     import graft.streaming.EventsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("events_late")
-    def writeAs(name: String,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("ev_part").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      val m = Map("b1.parquet" -> 1000000L, "b2.parquet" -> 2000000L,
-        "b3.parquet" -> 3000000L)
-      dst.toFile.setLastModified(m(name))
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
-    // b1: one event in hour 0, one at hour 10 (the hour-10 event sets
-    // the watermark to 9h once the batch commits)
-    writeAs("b1.parquet", Seq((1L, t(1800), 1L, "view", 1.0),
-      (2L, t(36000), 1L, "view", 1.0)))
-    // b2: a fresh on-time event — the batch that runs WITH the 9h
-    // watermark, closing and emitting hour 0's window at count 1
-    writeAs("b2.parquet", Seq((3L, t(36600), 1L, "view", 1.0)))
-    // b3: an event back in hour 0 — far below the watermark; the Append
-    // contract is that the finalized window is never reopened and the
-    // late row is dropped, not silently double-counted or re-emitted
-    writeAs("b3.parquet", Seq((4L, t(2400), 1L, "view", 1.0)))
+    val dir = splitDir("events_late",
+      // b1: one event in hour 0, one at hour 10 (the hour-10 event sets
+      // the watermark to 9h once the batch commits)
+      eventRows((1L, t(1800), 1L, "view", 1.0), (2L, t(36000), 1L, "view", 1.0)),
+      // b2: a fresh on-time event — the batch that runs WITH the 9h
+      // watermark, closing and emitting hour 0's window at count 1
+      eventRows((3L, t(36600), 1L, "view", 1.0)),
+      // b3: an event back in hour 0 — far below the watermark; the Append
+      // contract is that the finalized window is never reopened and the
+      // late row is dropped, not silently double-counted or re-emitted
+      eventRows((4L, t(2400), 1L, "view", 1.0)))
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
@@ -862,25 +846,14 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("keyed state survives a query RESTART from checkpoint (daily registers)") {
-    import spark.implicits._
     // Two separate query runs over one growing directory, sharing a
     // checkpoint: run 2 must CONTINUE run 1's aggregation state
     // (vq folds across the restart), not restart from zero — the
     // recovery contract every production register table depends on.
-    val dir = java.nio.file.Files.createTempDirectory("events_ckpt")
     val ckpt = java.nio.file.Files.createTempDirectory("events_ckpt_meta")
-    def writeAs(name: String,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("ev_part").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, dir.resolve(name))
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
     val day = t(86400) // all events on one day
-    writeAs("b1.parquet", Seq((1L, day, 1L, "x", 1.0)))
+    val dir = splitDir("events_ckpt", eventRows((1L, day, 1L, "x", 1.0)))
     val out = java.nio.file.Files.createTempDirectory("events_ckpt_out")
     val schema = spark.read.parquet(dir.toString).schema
     def runOnce(): Unit = {
@@ -900,7 +873,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("value_q"), r.getAs[Long]("n_events"))).toSet
     assert(r1 == Set((1000L, 1L)), s"run 1 fold wrong: $r1")
     // the query is stopped; a new file lands; a NEW query resumes
-    writeAs("b2.parquet", Seq((2L, day, 1L, "x", 2.0)))
+    writeBatch(dir, 2, eventRows((2L, day, 1L, "x", 2.0)))
     runOnce()
     val r2 = spark.read.parquet(out.toString).collect()
       .map(r => (r.getAs[Long]("value_q"), r.getAs[Long]("n_events"))).toSet
@@ -971,28 +944,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming HWM registers carry state across micro-batches") {
     import graft.streaming.EventsStream
-    val dir = java.nio.file.Files.createTempDirectory("hwm_2b")
-    def writeAs(name: String, mtime: Long,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("hwm_w")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
-    // Block 0, md5-order: md5("1") < md5("2") → id 1 (ts 200) arrives
-    // BEFORE id 2 (ts 100): id 2 is 100 s late (all three counters).
-    writeAs("b1.parquet", 1000000L,
-      Seq((1L, t(200), 1L, "drift", 1.0), (2L, t(100), 1L, "drift", 1.0)))
-    // Batch 2 continues against the CARRIED hwm (200 s): id 3 (ts 150)
-    // is 50 s late — 1 s and 10 s counters only.
-    writeAs("b2.parquet", 2000000L,
-      Seq((3L, t(150), 1L, "drift", 1.0)))
+    val dir = splitDir("hwm_2b",
+      // Block 0, md5-order: md5("1") < md5("2") → id 1 (ts 200) arrives
+      // BEFORE id 2 (ts 100): id 2 is 100 s late (all three counters).
+      eventRows((1L, t(200), 1L, "drift", 1.0), (2L, t(100), 1L, "drift", 1.0)),
+      // Batch 2 continues against the CARRIED hwm (200 s): id 3 (ts 150)
+      // is 50 s late — 1 s and 10 s counters only.
+      eventRows((3L, t(150), 1L, "drift", 1.0)))
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
@@ -1037,26 +996,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming value-bucket registers carry counts across micro-batches") {
     import graft.streaming.EventsStream
-    val dir = java.nio.file.Files.createTempDirectory("vb_2b")
-    def writeAs(name: String, mtime: Long,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("vb_w")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
-    // Batch 1: buckets 0 (value 1.0) and 1 (value 60.0) open at 1 each.
-    writeAs("b1.parquet", 1000000L,
-      Seq((1L, t(100), 1L, "drift", 1.0), (2L, t(200), 1L, "drift", 60.0)))
-    // Batch 2: bucket 0 increments against CARRIED state -> 2.
-    writeAs("b2.parquet", 2000000L,
-      Seq((3L, t(300), 1L, "drift", 1.5)))
+    val dir = splitDir("vb_2b",
+      // Batch 1: buckets 0 (value 1.0) and 1 (value 60.0) open at 1 each.
+      eventRows((1L, t(100), 1L, "drift", 1.0), (2L, t(200), 1L, "drift", 60.0)),
+      // Batch 2: bucket 0 increments against CARRIED state -> 2.
+      eventRows((3L, t(300), 1L, "drift", 1.5)))
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
@@ -1128,24 +1073,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming CUSUM carries the fold across micro-batches") {
     import graft.streaming.EventsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("events_cusum_2b")
-    def writeAs(name: String, mtime: Long,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("ev_part").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
-    writeAs("b1.parquet", 1000000L,
-      Seq((1L, t(100), 1L, "drift", 3.0), (2L, t(200), 1L, "drift", 0.0)))
-    writeAs("b2.parquet", 2000000L,
-      Seq((3L, t(300), 1L, "drift", 2.5)))
+    val dir = splitDir("events_cusum_2b",
+      eventRows((1L, t(100), 1L, "drift", 3.0), (2L, t(200), 1L, "drift", 0.0)),
+      eventRows((3L, t(300), 1L, "drift", 2.5)))
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
@@ -1182,27 +1113,17 @@ class StreamingSpec extends AnyFunSuite {
     "against the original the moment it lands") {
     import graft.streaming.DocumentsStream
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_audio_2b")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text", "source").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     // a varied melody (repeats would collapse under the landmark
     // distinct()) shared at DIFFERENT offsets across the two batches
     val melody = "the same loud melody RISES and FALLS exactly here " +
       "Xylophones Quiver Zealously while Jazz Drums THUMP and ring " +
       "a Golden Trumpet BLARES over Violins Weeping in Minor keys"
-    writeAs("b1.parquet", 1000000L,
+    val dir = splitDir("docs_audio_2b",
       Seq((1L, "quiet intro then " + melody, "s"),
-          (2L, "totally unrelated content with no shared phrases at all", "s")))
-    writeAs("b2.parquet", 2000000L,
-      Seq((3L, melody + " and a very different long outro follows", "s")))
+          (2L, "totally unrelated content with no shared phrases at all", "s"))
+        .toDF("doc_id", "text", "source"),
+      Seq((3L, melody + " and a very different long outro follows", "s"))
+        .toDF("doc_id", "text", "source"))
     val matches = DocumentsStream.audioLandmarkMatchesAtIngest(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(matches.toDF(), "audio_ingest_2b", OutputMode.Append())
@@ -1214,6 +1135,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.nonEmpty, "no landmark collisions emitted")
     assert(got.forall(_ == ((3L, 1L))), s"unexpected matches: ${got.distinct.toSeq}")
     assert(got.length >= 8, s"re-recording shares only ${got.length} landmarks")
+  }
+
+  test("first-seen users and landmark matching drop a null-id row, not the stream") {
+    import graft.streaming.DocumentsStream
+    import spark.implicits._
+    val day = new java.sql.Timestamp(86400L * 1000)
+    val events = splitDir("events_null_user",
+      Seq((1L, day, Option(7L), "view", 1.0), (2L, day, Option.empty[Long], "view", 1.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value"))
+    runAvailableNow(EventsStream.firstSeenUsers(spark,
+      TableStream.read(spark, events, "events")).toDF(), "first_seen_null", OutputMode.Append())
+    val users = spark.table("first_seen_null").collect().map(_.getLong(0)).toSeq
+    assert(users == Seq(7L), s"expected only user 7, got $users")
+    val melody = "the same loud melody RISES and FALLS exactly here " +
+      "Xylophones Quiver Zealously while Jazz Drums THUMP and ring"
+    val docs = splitDir("docs_null_id",
+      Seq((Option(1L), melody, "s"), (Option.empty[Long], melody, "s"),
+        (Option(3L), melody, "s")).toDF("doc_id", "text", "source"))
+    runAvailableNow(DocumentsStream.audioLandmarkMatchesAtIngest(spark,
+      TableStream.read(spark, docs, "documents")).toDF(), "audio_null_id", OutputMode.Append())
+    val got = spark.table("audio_null_id").collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(got.nonEmpty && got.forall(_ == ((3L, 1L))), s"unexpected matches: ${got.toSeq}")
   }
 
   test("streaming gram claims: single batch equals batch q184 first-occurrence") {
@@ -1239,23 +1182,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming gram claims: a cross-batch re-appearance claims nothing") {
     import graft.streaming.DocumentsStream
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_gram_2b")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     // batch 2: doc 3 repeats doc 1's text exactly (zero novel grams) and
     // doc 4 brings one genuinely new trigram alongside a repeated one
     val a = "alpha beta gamma delta epsilon"
-    writeAs("b1.parquet", 1000000L, Seq(1L -> a))
-    writeAs("b2.parquet", 2000000L,
-      Seq(3L -> a, 4L -> "alpha beta gamma zeta eta theta"))
+    val dir = splitDir("docs_gram_2b", docRows(1L -> a),
+      docRows(3L -> a, 4L -> "alpha beta gamma zeta eta theta"))
     val claims = DocumentsStream.gramClaimsAtIngest(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(claims.toDF(), "gram_claims_2b", OutputMode.Append())
@@ -1273,27 +1204,15 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming claim maintenance: a tombstone retires exactly the holder's claims, and retired grams re-claim") {
     import graft.streaming.DocumentsStream
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_claim_del")
-    def writeAs(name: String, mtime: Long, rows: Seq[(Long, String, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("docs_part").toString
-      rows.toDF("doc_id", "text", "op").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     // b1: docs 1 and 2 arrive (sharing "beta gamma delta"); b2: doc 1 is
     // tombstoned — exactly doc 1's claims retire (q201's affected set),
     // doc 2's claims survive; b3: doc 5 re-claims one retired gram.
-    writeAs("b1.parquet", 1000000L, Seq(
-      (1L, "alpha beta gamma delta", "add"),
-      (2L, "beta gamma delta epsilon", "add")))
-    writeAs("b2.parquet", 2000000L, Seq(
-      (1L, "alpha beta gamma delta", "del")))
-    writeAs("b3.parquet", 3000000L, Seq(
-      (5L, "alpha beta gamma", "add"),
-      (2L, "beta gamma delta epsilon", "del")))
+    val dir = splitDir("docs_claim_del",
+      Seq((1L, "alpha beta gamma delta", "add"),
+        (2L, "beta gamma delta epsilon", "add")).toDF("doc_id", "text", "op"),
+      Seq((1L, "alpha beta gamma delta", "del")).toDF("doc_id", "text", "op"),
+      Seq((5L, "alpha beta gamma", "add"),
+        (2L, "beta gamma delta epsilon", "del")).toDF("doc_id", "text", "op"))
     val events = DocumentsStream.claimMaintAtIngest(spark,
       TableStream.read(spark, dir.toString, "documents", Some(1)))
     runAvailableNow(events.toDF(), "claim_maint", OutputMode.Append())
@@ -1400,28 +1319,14 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming q-digest registers carry the digest across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("qd_2b")
-    def writeAs(name: String, mtime: Long,
-                rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): Unit = {
-      import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("qd_w")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
-    // Batch 1: three 1.0s — p50 register answers 1e6 at n=3.
-    writeAs("b1.parquet", 1000000L,
-      Seq((1L, t(100), 1L, "drift", 1.0), (2L, t(200), 1L, "drift", 1.0),
-        (3L, t(300), 1L, "drift", 1.0)))
-    // Batch 2: two 2.0s fold against CARRIED state — n=5, median still
-    // 1e6, p95 (target rank 5) now 2e6. thr = n/k = 0: digest exact.
-    writeAs("b2.parquet", 2000000L,
-      Seq((4L, t(400), 1L, "drift", 2.0), (5L, t(500), 1L, "drift", 2.0)))
+    val dir = splitDir("qd_2b",
+      // Batch 1: three 1.0s — p50 register answers 1e6 at n=3.
+      eventRows((1L, t(100), 1L, "drift", 1.0), (2L, t(200), 1L, "drift", 1.0),
+        (3L, t(300), 1L, "drift", 1.0)),
+      // Batch 2: two 2.0s fold against CARRIED state — n=5, median still
+      // 1e6, p95 (target rank 5) now 2e6. thr = n/k = 0: digest exact.
+      eventRows((4L, t(400), 1L, "drift", 2.0), (5L, t(500), 1L, "drift", 2.0)))
     val schema = spark.read.parquet(dir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
